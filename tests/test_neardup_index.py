@@ -182,3 +182,19 @@ def test_neardup_skew_guard_off_below_threshold(spark, docs, tmp_path):
     assert idx.last_skew["max_bucket_docs"] < idx.salt_threshold
     one = NearDupIndex(spark, str(tmp_path / "ref"), salt_threshold=None)
     assert base == _pairs(one.apply_batch(docs))
+
+
+def test_batch_frees_band_rows_checkpoint(spark, docs, tmp_path):
+    """A batch leaves exactly one checkpoint behind — the returned pairs
+    — so a long stream does not accumulate every batch's band rows
+    until ContextCleaner happens to run."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    idx = NearDupIndex(spark, str(tmp_path / "free"), n_buckets=4)
+    before = persisted()
+    out = idx.apply_batch(docs.limit(100))
+    assert len(persisted() - before) == 1
+    assert out.count() >= 0   # the pairs stay readable

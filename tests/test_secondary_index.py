@@ -1,6 +1,8 @@
 """SecondaryIndex — CDC-maintained value→pk index; lookups read only the
 probed values' buckets and maintenance converges to the fact state."""
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -228,3 +230,198 @@ def test_first_batch_with_stale_old_images_bootstraps(spark, tmp_path):
     ix2.apply_delta(_fact(spark, [(1, "paid", 11)]),
                     f_old.localCheckpoint(True))
     assert _entries(ix2) == [("paid", 1)]
+
+
+# -- the Spark-free lookup path ----------------------------------------------
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _same_as_spark_path(spark, ix, values, monkeypatch):
+    """``ix.lookup(values)`` runs no Spark job and returns the rows and
+    schema of the same lookup with driver-side rendering disabled (the
+    probe rendered, routed and read through Spark)."""
+    fast, n_jobs = _jobs(spark, lambda: ix.lookup(values))
+    got, n_jobs2 = _jobs(spark, fast.collect)
+    assert n_jobs == n_jobs2 == 0
+    with monkeypatch.context() as m:
+        m.setattr(ix, "_probe_keys", lambda v: None)
+        slow = ix.lookup(values)
+    assert fast.schema == slow.schema
+    assert sorted(got) == sorted(slow.collect())
+    return got
+
+
+def test_fast_lookup_equals_spark_path(spark, tmp_path, monkeypatch):
+    """Nulls, multi-value probes, misses on absent buckets, several
+    files per bucket and the compacted layout: the driver path returns
+    the Spark path's rows and schema, without a Spark job."""
+    ix = _ix(spark, tmp_path, n_buckets=64)   # sparse: most dirs absent
+    rows = [(i, None if i % 9 == 0 else f"s{i % 13}", i) for i in range(200)]
+    ix.apply_delta(_fact(spark, rows), None)
+    probe = [None, "s1", "s7", "s7", "missing-a", "missing-b"]
+    got = _same_as_spark_path(spark, ix, probe, monkeypatch)
+    assert sorted(r.order_id for r in got) == sorted(
+        i for i, s, _ in rows if s in (None, "s1", "s7"))
+    assert _same_as_spark_path(spark, ix, ["missing-a"], monkeypatch) == []
+
+    # a second batch written at 3 rows per file: several files per bucket
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "3")
+    try:
+        ix.apply_delta(
+            _fact(spark, [(i, f"s{i % 5}", i) for i in range(200, 260)]),
+            None)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    probe = [None, "s1", "s2", "s3", "missing-a"]
+    before = _same_as_spark_path(spark, ix, probe, monkeypatch)
+    assert ix.view.compact(max_files_per_bucket=1) > 0
+    assert sorted(before) == sorted(
+        _same_as_spark_path(spark, ix, probe, monkeypatch))
+
+
+def test_fast_lookup_boolean_column(spark, tmp_path, monkeypatch):
+    rows = spark.createDataFrame(
+        [(1, True), (2, False), (3, None), (4, True)], "id long, flag boolean")
+    fx = SecondaryIndex(spark, str(tmp_path / "fx"), pk=["id"],
+                        col="flag", n_buckets=4)
+    fx.apply_delta(rows, None)
+    got = _same_as_spark_path(spark, fx, [True, None], monkeypatch)
+    assert sorted(r.id for r in got) == [1, 3, 4]
+
+
+def test_lookup_zero_jobs_for_hit_and_miss(spark, tmp_path):
+    ix = _ix(spark, tmp_path, n_buckets=8)
+    ix.apply_delta(_fact(spark, [(i, f"s{i % 4}", i) for i in range(40)]),
+                   None)
+    hit, n_hit = _jobs(spark, lambda: ix.lookup(["s2"]).collect())
+    miss, n_miss = _jobs(spark, lambda: ix.lookup(["nope"]).collect())
+    assert sorted(r.order_id for r in hit) == list(range(2, 40, 4))
+    assert miss == [] and n_hit == 0 and n_miss == 0
+
+
+def test_lookup_falls_back_for_unproven_column_types(spark, tmp_path):
+    """Double and timestamp probes keep the Spark rendering (Python's
+    str() disagrees with Spark's cast for both)."""
+    import datetime as dt
+    ts = [dt.datetime(2024, 1, 1, 12, 30), dt.datetime(1969, 12, 31, 23)]
+    rows = spark.createDataFrame(
+        [(1, 1.0e20, ts[0]), (2, 0.0001, ts[1]), (3, 1.0e20, None)],
+        "id long, score double, at timestamp")
+    for col, probe, want in (("score", [1.0e20], [1, 3]),
+                             ("at", [ts[1], None], [2, 3])):
+        ix = SecondaryIndex(spark, str(tmp_path / col), pk=["id"],
+                            col=col, n_buckets=4)
+        ix.apply_delta(rows.select("id", col), None)
+        assert ix._probe_keys(probe) is None
+        got, n_jobs = _jobs(spark, lambda: ix.lookup(probe).collect())
+        assert sorted(r.id for r in got) == want and n_jobs > 0
+
+
+def test_lookup_falls_back_over_threshold_and_without_schema(
+        spark, tmp_path):
+    """Touched files above spark.sql.autoBroadcastJoinThreshold, and a
+    store whose manifest has no stored schema, read through Spark and
+    return the same rows."""
+    import json
+    ix = _ix(spark, tmp_path, n_buckets=8)
+    ix.apply_delta(_fact(spark, [(i, f"s{i % 6}", i) for i in range(60)]),
+                   None)
+    want = sorted(ix.lookup(["s3", None]).collect())
+    assert want
+
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
+    try:
+        got, n_jobs = _jobs(spark, lambda: ix.lookup(["s3", None]).collect())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       str(64 * 1024 * 1024))
+    assert sorted(got) == want and n_jobs > 0
+
+    manifest = tmp_path / "ix" / "entries" / "_buckets.json"
+    doc = json.loads(manifest.read_text())
+    del doc["schema"]
+    manifest.write_text(json.dumps(doc))
+    got, n_jobs = _jobs(spark, lambda: ix.lookup(["s3", None]).collect())
+    assert sorted(got) == want and n_jobs > 0
+
+
+def test_filtered_read_of_widened_store_matches_spark(spark, tmp_path):
+    """read_touched(where=...) on a store widened by a later batch:
+    files written before the widening read the new columns as NULL,
+    with the Spark read's types and values (timestamp, decimal, double
+    and date included)."""
+    from ydb_cdc_processor_spark.operators.bucketed_view import (
+        BucketedMaterializedView)
+    v = BucketedMaterializedView(spark, str(tmp_path / "w"), ["k", "id"],
+                                 bucket_keys=["k"], n_buckets=4)
+    v.apply(spark.createDataFrame([(f"k{i % 5}", i) for i in range(20)],
+                                  "k string, id long"))
+    v.apply(spark.sql(
+        "SELECT 'k1' AS k, 100L AS id, TIMESTAMP'2024-03-01 10:00:00' AS at,"
+        " CAST(12.34 AS DECIMAL(10,2)) AS amt, 0.1D AS score,"
+        " DATE'1999-12-31' AS day"))
+    touched, where = list(range(4)), ("k", ["k1", "k2", "k4", None])
+    fast_df, n_jobs = _jobs(spark, lambda: v.read_touched(touched,
+                                                          where=where))
+    fast, n_jobs2 = _jobs(spark, fast_df.collect)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        slow_df = v.read_touched(touched, where=where)
+        slow = slow_df.collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       str(64 * 1024 * 1024))
+    assert n_jobs == n_jobs2 == 0
+    assert fast_df.schema == slow_df.schema
+    assert sorted(fast, key=str) == sorted(slow, key=str)
+    assert len(fast) == 13
+    new = [r for r in fast if r.id == 100]
+    assert new[0].amt is not None and new[0].at is not None
+    assert all(r.at is None for r in fast if r.id != 100)
+
+
+def test_lookup_after_torn_rebucket_routes_by_restored_layout(
+        spark, tmp_path, monkeypatch):
+    """A handle opened at 4 buckets; another handle rebuckets to 8, then
+    crashes between the two renames of a rebucket to 16.  The old
+    handle's lookup restores the 8-bucket layout and must route its
+    probes by it, not by the 4 buckets it last saw."""
+    from ydb_cdc_processor_spark import storage
+
+    ix = _ix(spark, tmp_path, n_buckets=4)
+    rows = [(i, f"s{i % 40}", i) for i in range(400)]
+    ix.apply_delta(_fact(spark, rows), None)
+    other = _ix(spark, tmp_path)
+    other.view.rebucket(8)
+
+    class Killed(BaseException):
+        pass
+
+    real = storage.rename
+
+    def rename(src, dst):
+        if dst == other.view.path:
+            raise Killed()
+        real(src, dst)
+
+    monkeypatch.setattr(storage, "rename", rename)
+    with pytest.raises(Killed):
+        other.view.rebucket(16)
+    monkeypatch.setattr(storage, "rename", real)
+    assert not (tmp_path / "ix" / "entries").exists()
+
+    values = [f"s{j}" for j in range(40)]
+    got = ix.lookup(values).collect()
+    assert ix.view.n_buckets == 8
+    assert sorted((r.status, r.order_id) for r in got) == sorted(
+        (s, i) for i, s, _ in rows)

@@ -143,30 +143,23 @@ def seq_hwm_violation(doc: dict, token: str) -> int | None:
 
 
 def rebalance_by_bucket(df: DataFrame) -> DataFrame:
-    """Partition a store write by ``_bucket``.
-
-    Two forms, switched by ``SPARK_GRAFT_WRITE_REBALANCE`` (default
-    off):
-
-    - ``repartition(BUCKET_COL)`` (default): plain hash exchange.  AQE
-      still coalesces it under ``InsertIntoHadoopFsRelation``, and the
-      round-15 A/B (runs=3 medians, sf0.1, uncontended) measured it
-      FASTER than the hint on the per-micro-batch write paths —
-      q_neardup_index_stream 12.4 s vs 19.4 s — and neutral everywhere
-      else (q_span_index 11.1 vs 10.8, q_range_partitioned 5.3 vs 5.2,
-      q_range_resharded 7.6 vs 8.5), matching the driver's round-14
-      finding that the hint regressed the stream/reshard paths.
-    - ``hint("rebalance", BUCKET_COL)`` (opt-in): AQE additionally
-      SPLITS a skewed bucket into advisory-sized write tasks.  At
-      100 TB a single hot bucket (stopword term, viral LSH bucket)
-      pins one task at full bucket size under plain repartition; the
-      hint is the §2.5/§6 remedy.  Deployments with hot buckets set
-      the env var; ``compact()`` bounds the resulting per-bucket file
-      count either way."""
-    if os.environ.get("SPARK_GRAFT_WRITE_REBALANCE", "").lower() in (
-            "1", "true", "yes"):
-        return df.hint("rebalance", BUCKET_COL)
+    """Partition a store write by ``_bucket``: a plain hash exchange,
+    one write task per bucket.  AQE still coalesces it under
+    ``InsertIntoHadoopFsRelation``.  The round-15 A/B (runs=3 medians,
+    sf0.1) measured it faster than the AQE ``rebalance`` hint on the
+    per-micro-batch write paths (q_neardup_index_stream 12.4 s vs
+    19.4 s) and neutral elsewhere."""
     return df.repartition(BUCKET_COL)
+
+
+def _byte_size(text: str) -> int:
+    """A Spark byte-size conf value (``67108864``, ``10MB``, ``1g``,
+    ``-1``) in bytes, read the way ``JavaUtils.byteStringAsBytes``
+    reads it: a bare number is bytes."""
+    m = re.fullmatch(r"\s*(-?\d+)\s*([kmgtp]?)b?\s*", text.lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {text!r}")
+    return int(m.group(1)) << (10 * " kmgtp".index(m.group(2) or " "))
 
 
 def with_empty_output_sentinel(spark: SparkSession,
@@ -515,16 +508,89 @@ class BucketedMaterializedView:
             reader = reader.schema(self._with_bucket_schema(stored))
         return reader.parquet(self.path)
 
-    def read_touched(self, touched: list[int],
-                     delta_schema=None) -> DataFrame:
+    def read_touched(self, touched: list[int], delta_schema=None,
+                     where: tuple[str, list] | None = None) -> DataFrame:
         """Public touched-bucket read: repair crash-torn buckets first
         (:meth:`recover`), then read ONLY the touched buckets by direct
         path (see :meth:`_read_touched`).  This is the read every
         derived index store should use — going straight to the private
         read skips the torn-bucket repair and a displaced bucket's rows
-        silently vanish (pinned by the torn-ingest query tests)."""
+        silently vanish (pinned by the torn-ingest query tests).
+
+        ``where=(col, values)`` keeps only rows whose ``col`` equals one
+        of ``values`` (Python values of ``col``'s type; None never
+        matches, as in SQL ``IN``).  Small filtered reads run WITHOUT a
+        Spark job — see :meth:`_read_touched_local`; the rest read
+        through Spark with the same filter."""
         self._recover()
-        return self._read_touched(touched, delta_schema)
+        if where is None:
+            return self._read_touched(touched, delta_schema)
+        col, values = where
+        values = [v for v in values if v is not None]
+        local = self._read_touched_local(touched, col, values)
+        if local is not None:
+            return local
+        return (self._read_touched(touched, delta_schema)
+                .where(F.col(col).isin(values)))
+
+    def _read_touched_local(self, touched: list[int], col: str,
+                            values: list) -> DataFrame | None:
+        """The filtered touched-bucket read on the driver: list the
+        touched buckets' data files through ``storage`` (``_``/``.``
+        names are sidecars), read them with ``pyarrow.dataset`` against
+        the manifest's stored schema (a file written before a widening
+        reads the missing column as NULL, like the Spark read), filter
+        on ``values``, and hand the rows to
+        ``spark.createDataFrame(arrow_table, schema)`` — a local
+        relation, so building and collecting the result runs no Spark
+        job.
+
+        None — the caller reads through Spark — when the store has no
+        stored schema (legacy stores infer it from the files), when a
+        stored column is nested (Arrow's nested field naming is not
+        pinned against Spark's parquet layout here), or when the touched
+        files exceed ``spark.sql.autoBroadcastJoinThreshold``: the same
+        "small enough to hold on the driver" bound Spark applies to a
+        broadcast side, so there is no separate knob."""
+        from pyspark.sql import types as T
+        stored = self._stored_schema()
+        if stored is None or any(
+                isinstance(f.dataType, (T.ArrayType, T.MapType,
+                                        T.StructType, T.UserDefinedType))
+                for f in stored.fields):
+            return None
+        files, size = [], 0
+        for b in touched:
+            d = os.path.join(self.path, f"{BUCKET_COL}={b}")
+            if not storage.is_dir(d):
+                continue
+            for name in storage.listdir(d):
+                if not name.startswith(("_", ".")):
+                    files.append(os.path.join(d, name))
+                    size += storage.file_size(files[-1])
+        if size > _byte_size(self.spark.conf.get(
+                "spark.sql.autoBroadcastJoinThreshold")):
+            return None
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+        schema = self._with_bucket_schema(stored)
+        arrow_schema = to_arrow_schema(schema)
+        if files and values:
+            table = ds.dataset(
+                files, schema=arrow_schema, format="parquet",
+                filesystem=storage.arrow_filesystem(),
+                partitioning=ds.partitioning(
+                    pa.schema([arrow_schema.field(BUCKET_COL)]),
+                    flavor="hive"),
+                partition_base_dir=self.path,
+            ).to_table(filter=ds.field(col).isin(values)).combine_chunks()
+            # ONE chunk: the table has a chunk per file, and PySpark's
+            # Arrow stream stops reading at the first EMPTY batch, which
+            # silently dropped the rows of every later file
+        else:
+            table = arrow_schema.empty_table()
+        return self.spark.createDataFrame(table, schema=schema)
 
     def _read_touched(self, touched: list[int],
                       delta_schema) -> DataFrame:

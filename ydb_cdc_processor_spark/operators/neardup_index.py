@@ -48,6 +48,13 @@ from ydb_cdc_processor_spark.operators.bucketed_view import (
 from ydb_cdc_processor_spark.operators.dedup import minhash_signatures
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind an eager ``localCheckpoint``.
+    ``DataFrame.unpersist`` does not reach them: they belong to the RDD
+    under the frame's ``LogicalRDD`` leaf, not to the cache manager."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 class NearDupIndex:
     """Persistent banded-MinHash index with per-batch candidate lookup."""
 
@@ -158,6 +165,10 @@ class NearDupIndex:
         out = pairs.localCheckpoint(eager=True)
         if persisted is not None:
             persisted.unpersist()
+        # free the band rows' blocks now (``out`` no longer reads them)
+        # rather than whenever ContextCleaner notices the frame is gone:
+        # on a stream they would pile up one micro-batch at a time
+        _release_checkpoint(band)
         return out
 
     def _store_join(self, band: DataFrame, stored: DataFrame) -> DataFrame:

@@ -24,6 +24,19 @@ The entry schema is persisted beside the store on first build, so a
 lookup that misses every stored bucket (value not in the index) types
 its empty result correctly instead of guessing.
 
+Serving runs no Spark job when the indexed column is integral, string or
+boolean — the reference's keyed point read, answered by the YDB server
+without a job.  The driver renders each probe exactly as Spark's
+cast-to-string (NULL as ``NULL_KEY``), routes it with a Spark-exact
+``pmod(xxhash64(_ixv), n)`` (functions/spark_hash.py), and reads the
+probed buckets' files with pyarrow into a local relation
+(``BucketedMaterializedView.read_touched(where=...)``).  Other column
+types render through Spark as before.  The read goes through Spark when
+the touched files exceed ``spark.sql.autoBroadcastJoinThreshold`` (the
+bound Spark already uses for "small enough for the driver"), when the
+store predates the manifest's stored schema, or when a stored column is
+nested.  Both paths return the same rows and schema.
+
 Maintenance is delete-stale + upsert (idempotent keyed ops), so R1
 retries and checkpoint replays converge without a token fence.
 """
@@ -39,6 +52,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ydb_cdc_processor_spark import storage
+from ydb_cdc_processor_spark.functions.spark_hash import (
+    bucket_of, cast_to_string)
 from ydb_cdc_processor_spark.operators.bucketed_view import (
     BUCKET_COL, BucketedMaterializedView)
 from ydb_cdc_processor_spark.operators.ivm_feed import (
@@ -157,17 +172,50 @@ class SecondaryIndex:
             out = out.unionByName(f)
         return out.distinct()
 
+    def _probe_keys(self, values: list) -> list[str] | None:
+        """The probes' stored key images rendered on the driver, or None
+        when the rendering or the routing is not proven for this store
+        (then :meth:`_probe_frame` renders them through Spark).  Proven:
+        an entry-schema column of integral, string or boolean type
+        (functions/spark_hash.cast_to_string), NULL as ``NULL_KEY``, and
+        a store bucketed on ``_ixv`` alone, whose bucket is then
+        ``pmod(xxhash64(key), n)`` of one string."""
+        schema = self._load_schema()
+        if schema is None or self.view.bucket_keys != [IXV]:
+            return None
+        col_type = schema[self.col].dataType
+        keys = set()
+        for v in values:
+            k = NULL_KEY if v is None else cast_to_string(v, col_type)
+            if k is None:
+                return None
+            keys.add(k)
+        return sorted(keys)
+
+    def _probe(self, values: list) -> list[str] | DataFrame:
+        keys = self._probe_keys(values)
+        return keys if keys is not None else self._probe_frame(values)
+
     def touched_buckets(self, values: list, _probe=None) -> list[int]:
         """The store buckets a :meth:`lookup` of ``values`` actually
-        reads — the serving path's EXACT pruning (recover first so a
-        crash-displaced bucket is restored, then drop directories that
-        genuinely hold nothing).  Public so observability/bench tooling
-        measures what serving does, not a private re-implementation."""
-        probe = self._probe_frame(values) if _probe is None else _probe
-        buckets = sorted({r[0] for r in probe.select(
-            self.view.bucket_expr().alias("_b")).distinct().collect()})
+        reads — the serving path's EXACT pruning (recover first, then
+        drop directories that genuinely hold nothing).  Public so
+        observability/bench tooling measures what serving does, not a
+        private re-implementation.
+
+        Recovery runs BEFORE hashing: it may restore a ``.old`` layout
+        whose n_buckets / bucket_keys differ from this handle's, and
+        :meth:`BucketedMaterializedView.recover` refreshes them.  Driver-
+        rendered probes (see :meth:`_probe_keys`) are routed on the
+        driver; the rest through one Spark job."""
         self.view.recover()
-        return [b for b in buckets
+        probe = self._probe(values) if _probe is None else _probe
+        if isinstance(probe, DataFrame):
+            buckets = {r[0] for r in probe.select(
+                self.view.bucket_expr().alias("_b")).distinct().collect()}
+        else:
+            buckets = {bucket_of(k, self.view.n_buckets) for k in probe}
+        return [b for b in sorted(buckets)
                 if storage.is_dir(os.path.join(
                     self.view.path, f"{BUCKET_COL}={b}"))]
 
@@ -177,11 +225,17 @@ class SecondaryIndex:
         is a bounded probe list (the point-lookup shape); use
         :meth:`read` for full scans/joins.  A miss — including probes
         whose bucket was never written — is an EMPTY result typed from
-        the persisted entry schema, never a crash."""
+        the persisted entry schema, never a crash.
+
+        Probes of an integral, string or boolean column run no Spark
+        job: the driver renders and routes them (:meth:`_probe_keys`)
+        and reads the probed buckets with pyarrow
+        (``read_touched(where=...)``), unless those files exceed
+        ``spark.sql.autoBroadcastJoinThreshold``."""
         if not self.view.exists():
             raise FileNotFoundError(
                 f"secondary index at {self.view.path} was never built")
-        probe = self._probe_frame(values)
+        probe = self._probe(values)
         present = self.touched_buckets(values, _probe=probe)
         if not present:
             schema = self._load_schema()
@@ -189,10 +243,17 @@ class SecondaryIndex:
                 raise FileNotFoundError(
                     f"secondary index at {self.view.path} has no entry "
                     "schema sidecar; re-apply a batch to heal")
-            return self.spark.createDataFrame([], schema)
-        rows = self.view.read_touched(present).drop(BUCKET_COL)
-        return (rows.join(F.broadcast(probe), on=IXV, how="left_semi")
-                .drop(IXV))
+            # from an empty Arrow table, not ``[]``: a local relation,
+            # where ``createDataFrame([], schema)`` scans an RDD (1 job)
+            from pyspark.sql.pandas.types import to_arrow_schema
+            return self.spark.createDataFrame(
+                to_arrow_schema(schema).empty_table(), schema)
+        if isinstance(probe, DataFrame):
+            rows = self.view.read_touched(present).drop(BUCKET_COL)
+            return (rows.join(F.broadcast(probe), on=IXV, how="left_semi")
+                    .drop(IXV))
+        return (self.view.read_touched(present, where=(IXV, probe))
+                .drop(BUCKET_COL, IXV))
 
     def read(self) -> DataFrame:
         """The full index relation ``(col, *pk)``."""

@@ -367,10 +367,11 @@ class TextIndex:
                     # the store merge — cache it so the explode+agg forest
                     # evaluates once.  A lazy persist (vs the former eager
                     # localCheckpoint) saves one whole Spark job per batch:
-                    # the stale probe's materialization below fills the
-                    # cache as a side effect, and ups's lineage never reads
-                    # the store directories the merge later promotes over,
-                    # so eagerness bought nothing.
+                    # the fused apply_batch's first job (its touched-bucket
+                    # distinct-collect over both sides) fills the cache,
+                    # and ups's lineage never reads the store directories
+                    # the merge later promotes over, so eagerness bought
+                    # nothing.
                     cached_ups = ups = ups.persist()
                 old_pairs = self._postings(old_rows).select("term", "doc")
                 if ups is not None:

@@ -71,7 +71,7 @@ __all__ = [
     "read_text", "write_text", "replace_text", "exists", "is_dir",
     "is_file", "listdir", "makedirs", "rename", "remove_tree",
     "remove_file", "walk", "file_size", "link_or_copy", "copy_file",
-    "copy_tree", "tmp_sibling",
+    "copy_tree", "tmp_sibling", "arrow_filesystem",
 ]
 
 
@@ -181,6 +181,12 @@ class StorageBackend(abc.ABC):
         return os.path.join(
             parent,
             f".{os.path.basename(path)}.{tag}-{uuid.uuid4().hex[:8]}")
+
+    def arrow_filesystem(self):
+        """The ``pyarrow.fs`` filesystem that reads this backend's data
+        files (driver-side parquet reads of small touched buckets)."""
+        from pyarrow import fs as pafs
+        return pafs.LocalFileSystem()
 
 
 class PosixStorage(StorageBackend):
@@ -358,6 +364,9 @@ class ArrowFsStorage(StorageBackend):
     def copy_file(self, src: str, dst: str) -> None:
         self.fs.copy_file(src, dst)
 
+    def arrow_filesystem(self):
+        return self.fs
+
 
 class ObjectStoreSimStorage(PosixStorage):
     """POSIX storage with the two object-store degradations ENFORCED —
@@ -480,3 +489,7 @@ def copy_tree(src: str, dst: str) -> None:
 
 def tmp_sibling(path: str, tag: str) -> str:
     return _BACKEND.tmp_sibling(path, tag)
+
+
+def arrow_filesystem():
+    return _BACKEND.arrow_filesystem()
