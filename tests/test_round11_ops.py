@@ -54,9 +54,9 @@ def test_old_image_feed_reads_only_touched_buckets(
     orig_touched = mv.read_touched
     orig_read = mv.read
 
-    def spy_touched(t, delta_schema=None):
+    def spy_touched(t, delta_schema=None, where=None):
         touched_calls.append(sorted(t))
-        return orig_touched(t, delta_schema)
+        return orig_touched(t, delta_schema, where=where)
 
     def spy_read():
         full_reads.append(1)
@@ -127,10 +127,10 @@ def test_old_image_feed_prunes_to_batch_key_buckets(
         finally:
             in_feed.pop()
 
-    def spy_touched(t, delta_schema=None):
+    def spy_touched(t, delta_schema=None, where=None):
         if in_feed:
             feed_buckets.append(sorted(t))
-        return orig_touched(t, delta_schema)
+        return orig_touched(t, delta_schema, where=where)
 
     eng._read_old_images = spy_feed
     mv.read_touched = spy_touched
@@ -154,8 +154,8 @@ def test_old_image_feed_prunes_to_batch_key_buckets(
 
 
 def test_old_image_feed_pruned_on_single_sink_paths(spark, sf_dir, tmp_path):
-    """The u-only and d-only engine routings (_apply_upserts /
-    _apply_deletes) ride the same pruned feed: with one sink configured
+    """The u-only and d-only engine routings (_apply_routed with one
+    side None) ride the same pruned feed: with one sink configured
     the old images still come from read_touched, and the rollup tracks
     the view."""
     import json
@@ -172,7 +172,7 @@ def test_old_image_feed_pruned_on_single_sink_paths(spark, sf_dir, tmp_path):
                 "update": {"ts": "2024-01-01T00:00:00Z", "user_id": 1,
                            "event_type": et, "value": v}}
 
-    # u-only pipeline (delete_sql unset → _apply_upserts, kind="u")
+    # u-only pipeline (delete_sql unset → kind="u")
     p_u = CdcPipeline(
         name="r11u", source_schema=schema, pk=pk,
         members=cdc_json.EVENTS_MEMBERS,
@@ -198,7 +198,7 @@ def test_old_image_feed_pruned_on_single_sink_paths(spark, sf_dir, tmp_path):
            for r in av.read().collect()}
     assert got == {("a", 19, 19.0), ("b", 1, 2.0)}
 
-    # d-only pipeline (update_sql unset → _apply_deletes, kind="d"):
+    # d-only pipeline (update_sql unset → kind="d"):
     # bootstrap the target through a sibling u-pipeline on the same path
     p_d = CdcPipeline(
         name="r11d", source_schema=schema, pk=pk,

@@ -12,9 +12,11 @@ sink is the keyed merge writer.
 from __future__ import annotations
 
 import contextlib
+import functools
 import logging
 import os
 import threading
+import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -24,12 +26,32 @@ from pyspark.sql import functions as F
 from ydb_cdc_processor_spark.operators import decode
 from ydb_cdc_processor_spark.operators.last_wins import (
     collapse_last_wins, split_upsert_delete)
-from ydb_cdc_processor_spark.operators.merge import ParquetMaterializedView
+from ydb_cdc_processor_spark.operators.merge import (
+    ParquetMaterializedView, StrictInsertError)
 from ydb_cdc_processor_spark.plans.pipeline import ActionMode, CdcPipeline
 
 logger = logging.getLogger(__name__)
 
 ROWS_VIEW = "rows"
+
+#: per-phase wall times every ``BatchStats.details`` carries (seconds;
+#: 0.0 for a phase the batch skipped), beside ``old_image_read`` (which
+#: old-image path ran: "driver", "spark", "full" or "none") and
+#: ``touched_buckets`` (target buckets the merge rewrote; 0 for a flat
+#: target)
+PHASE_KEYS = ("decode_s", "old_image_s", "fan_out_s", "target_write_s",
+              "promote_wait_s")
+
+
+def _driver_filterable(dtype) -> bool:
+    """Key types whose collected Python values select the same rows in
+    a pyarrow ``isin`` as in a Spark equi-join: integral, boolean and
+    default-collation strings (floats normalise -0.0/NaN in Spark joins,
+    timestamps collect as local wall-clock times)."""
+    from pyspark.sql import types as T
+    return (isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType,
+                               T.LongType, T.BooleanType))
+            or dtype == T.StringType())
 
 
 class BatchTimeoutError(RuntimeError):
@@ -108,7 +130,10 @@ def query_timeout(spark: SparkSession, seconds: int | None, desc: str = ""):
 @dataclass
 class BatchStats:
     """O1/O2 analogue of the writer's self-measurement
-    (YqlWriter.java:217-231, 36-37)."""
+    (YqlWriter.java:217-231, 36-37).  ``details`` always carries the
+    batch's per-phase wall times (:data:`PHASE_KEYS`), the old-image read
+    path (``old_image_read``) and ``touched_buckets``; measuring them
+    runs no Spark job."""
 
     upserted: int = 0
     deleted: int = 0
@@ -158,21 +183,6 @@ def two_phase(spark: SparkSession, batch_df: DataFrame, select_sql: str,
         mv = view_cls(spark, target_path, keys, schema=result.schema)
         mv.apply(result, action=action)
     return result
-
-
-def skip_messages(df: DataFrame, reason: str,
-                  stats: BatchStats | None = None) -> DataFrame:
-    """T3 — the skip operator (YqlQuery.java:168-183): when a kind has no
-    configured query, count and drop its messages (offsets still commit).
-
-    Standalone use counts with an explicit ``df.count()`` (one job — fine
-    for ad-hoc calls).  The engine's batch path never calls this: its skip
-    counts ride the decode ``Observation`` inside the one materialization
-    job per batch (see :meth:`CdcBatchEngine.apply_raw_batch`)."""
-    if stats is not None:
-        stats.details[f"skipped:{reason}"] = df.count()
-        stats.skipped += stats.details[f"skipped:{reason}"]
-    return df.limit(0)
 
 
 class CdcBatchEngine:
@@ -236,18 +246,27 @@ class CdcBatchEngine:
         fence) whose maintenance is a few small Spark jobs, so a serial
         loop leaves the cluster idle between jobs while wall-clock adds
         up per view; the Spark scheduler interleaves the threads' jobs.
-        1 restores the serial loop.  Convergence is unchanged: on any
-        failure every view either applied under the batch token or will
-        re-apply on the replay, exactly as in the serial order.
+        1 runs the stores one after another.  The bound counts stores
+        only: with ``agg_views`` attached, the target's merge runs on one
+        more worker of its own beside them and promotes only after every
+        store returned (see :meth:`_fan_out_views`).  Convergence is
+        unchanged: on any failure every view either applied under the
+        batch token or will re-apply on the replay, and the target stays
+        at its pre-batch state, so the replay reads the same old images.
 
         ``target_view``: a PRE-BUILT materialized view object to use as
         the merge target instead of the default flat/bucketed one — any
-        object with the view contract (``apply/apply_batch/read/exists``
-        + a ``schema`` attribute), e.g. a
+        object with the view contract (``apply_batch/read/exists`` + a
+        ``schema`` attribute), e.g. a
         :class:`~ydb_cdc_processor_spark.operators.range_view.
-        RangePartitionedView` for time-partitioned fact targets.  Its
-        path must equal ``target_path`` (enforced); ``n_buckets`` is
-        ignored (warned).
+        RangePartitionedView` for time-partitioned fact targets.  The
+        engine calls ``apply_batch(ups, dels, action=, small_delta=,
+        pre_commit=)`` with either side None for single-sink pipelines;
+        ``pre_commit`` (None, or a callable taking no arguments) must run
+        after the view has staged its output and before any of it
+        becomes visible, and an exception from it must leave the live
+        view untouched.  Its path must equal ``target_path`` (enforced);
+        ``n_buckets`` is ignored (warned).
 
         ``maintain_every``: every N successful ``apply_raw_batch``
         calls, run the between-batch housekeeping sawtooth — the
@@ -290,6 +309,7 @@ class CdcBatchEngine:
         self.target_bucket_bytes = target_bucket_bytes
         self._batches_applied = 0
         self._flat_old_image_warned = False
+        self._old_image_read = "none"
 
     #: flat-target old-image guard: when a FLAT (non-bucketed) target
     #: with attached derived views grows past this many on-disk bytes,
@@ -395,6 +415,8 @@ class CdcBatchEngine:
         from pyspark.sql import Observation
 
         stats = BatchStats()
+        stats.details.update(dict.fromkeys(PHASE_KEYS, 0.0),
+                             old_image_read="none", touched_buckets=0)
         # One decode pass per batch on the happy path: the malformed
         # count rides the typed materialization as an ``observe`` metric
         # (no separate job), and the collapsed typed rows are cached so
@@ -446,7 +468,9 @@ class CdcBatchEngine:
                  .alias("n_del")) \
             .persist()
         try:
+            t0 = time.perf_counter()
             typed.count()  # materialize: decode + collapse, fires both observes
+            stats.details["decode_s"] = time.perf_counter() - t0
             m = obs.get
             stats.malformed = int(m["malformed"] or 0)
             if skip_u:
@@ -470,99 +494,93 @@ class CdcBatchEngine:
             self._maintain_scd2_views(typed_all, order_col, batch_token,
                                       n_upserts=n_u_raw)
             ups, dels = split_upsert_delete(typed)
-            ups = ups.drop(order_col)
-            dels = dels.drop(order_col)
-            if not skip_u and not skip_d:
-                # both sinks configured → ONE read-merge-write pass over
-                # the target (sides are key-disjoint post-collapse); at
-                # scale the target IO dominates, so this halves it
-                self._apply_fused(ups, dels, stats, int(m2["n_up"] or 0),
-                                  int(m2["n_del"] or 0), batch_token)
-            else:
-                if not skip_u:
-                    self._apply_upserts(ups, stats, int(m2["n_up"] or 0),
-                                        batch_token)
-                if not skip_d:
-                    self._apply_deletes(dels, stats, int(m2["n_del"] or 0),
-                                        batch_token)
+            self._apply_routed(None if skip_u else ups.drop(order_col),
+                               None if skip_d else dels.drop(order_col),
+                               stats, int(m2["n_up"] or 0),
+                               int(m2["n_del"] or 0), batch_token)
         finally:
             typed.unpersist()
             if self.scd2_views:
                 typed_all.unpersist()
         return stats
 
-    def _apply_fused(self, ups: DataFrame, dels: DataFrame,
-                     stats: BatchStats, n_up: int, n_del: int,
-                     batch_token: str | None = None) -> None:
-        """Both sinks in one pass: transform each side, then a single
-        ``apply_batch`` (compose_merge) against the target — the view is
-        read once and rewritten once per batch (≙ the reference executing
-        its update-YQL and delete-YQL against the same server table; the
-        server, too, pays per-statement row IO — here we pay it once).
-        Aggregate rollups get ONE ±delta step: −old images over the union
-        of both sides' keys, +new over the upsert results."""
-        stats.upserted = n_up
-        stats.deleted = n_del
-        if n_up == 0 and n_del == 0 and self._target_exists():
-            return
-        result = run_transform(self.spark, ups, self.p.update_sql).persist()
-        try:
-            key_rows = run_transform(self.spark, dels, self.p.delete_sql)
-            action = ("upsertInto" if self.p.action_mode is ActionMode.DIRECT
-                      else self.p.action_mode.value)
-            keys = self.p.target_keys or self.p.pk
-            affected = (result.select(*keys)
-                        .unionByName(key_rows.select(*keys)))
-            self._maintain_agg_views(new_rows=result, affected_keys=affected,
-                                     batch_token=batch_token, kind="f")
-            self._target(result.schema).apply_batch(
-                result, key_rows, action=action,
-                small_delta=self.small_delta)
-        finally:
-            result.unpersist()
+    def _apply_routed(self, ups: DataFrame | None,
+                      dels: DataFrame | None, stats: BatchStats,
+                      n_up: int, n_del: int,
+                      batch_token: str | None = None) -> None:
+        """Transform the configured sides (None = that kind's query is
+        not configured) and apply them to the target in ONE
+        ``apply_batch`` pass: with both sides the view is read once and
+        rewritten once per batch (compose_merge; the sides are
+        key-disjoint post-collapse — ≙ the reference executing its
+        update-YQL and delete-YQL against the same server table).
+        Aggregate rollups get ONE ±delta step: −old images over the
+        union of both sides' keys, +new over the upsert results.  Their
+        replay fence is suffixed with the routing: "f" (both sides), "u"
+        (upserts only) or "d" (deletes only).
 
-    def _apply_upserts(self, ups: DataFrame, stats: BatchStats,
-                       n_rows: int, batch_token: str | None = None) -> None:
-        """``n_rows`` is the collapsed upsert-message count from the batch
-        Observation — the reference's per-message counter semantics
-        (printDebugStats, YqlWriter.java:217-231); for the row-wise
-        transforms CDC pipelines run it equals the transform's output
-        row count, without a second Spark action."""
-        if self.p.update_sql is None:
-            skip_messages(ups, "update query not configured", stats)
-            return
-        stats.upserted = n_rows
-        if n_rows == 0 and self._target_exists():
+        ``n_up`` / ``n_del`` are the collapsed message counts from the
+        batch Observation — the reference's per-message counter
+        semantics (printDebugStats, YqlWriter.java:217-231); for the
+        row-wise transforms CDC pipelines run they equal the transforms'
+        output row counts, without a second Spark action (an
+        unconfigured kind's messages are dropped before the collapse, so
+        its count is 0)."""
+        stats.upserted, stats.deleted = n_up, n_del
+        if n_up == 0 and n_del == 0 and self._target_exists():
             return  # nothing to merge; skip the rewrite entirely
-        # persist the transform result: the merge evaluates it twice
-        # (anti-join key-set + union)
-        result = run_transform(self.spark, ups, self.p.update_sql).persist()
+        kind = "u" if dels is None else "d" if ups is None else "f"
+        # persist the upsert result: the merge, the old-image key set and
+        # every rollup's +new evaluate it
+        result = (None if ups is None
+                  else run_transform(self.spark, ups, self.p.update_sql)
+                  .persist())
         try:
-            action = ("upsertInto" if self.p.action_mode is ActionMode.DIRECT
-                      else self.p.action_mode.value)
-            self._maintain_agg_views(new_rows=result, affected_keys=result,
-                                     batch_token=batch_token, kind="u")
+            key_rows = (None if dels is None
+                        else run_transform(self.spark, dels,
+                                           self.p.delete_sql))
+            keys = self.p.target_keys or self.p.pk
             # K5 DIRECT: the inline body's SELECT result IS the upsert
             # payload (README.md:93-100 — `$q = SELECT …; UPSERT INTO …
-            # SELECT * FROM $q`).
-            self._target(result.schema).apply(result, action=action,
-                                              small_delta=self.small_delta)
-        finally:
-            result.unpersist()
+            # SELECT * FROM $q`)
+            action = ("upsertInto" if self.p.action_mode is ActionMode.DIRECT
+                      else self.p.action_mode.value)
+            mv = self._target((key_rows if result is None else result).schema)
+            d = stats.details
 
-    def _apply_deletes(self, dels: DataFrame, stats: BatchStats,
-                       n_rows: int, batch_token: str | None = None) -> None:
-        if self.p.delete_sql is None:
-            skip_messages(dels, "delete query not configured", stats)
-            return
-        stats.deleted = n_rows
-        if n_rows == 0 and self._target_exists():
-            return  # no deletions; skip the anti-join rewrite entirely
-        key_rows = run_transform(self.spark, dels, self.p.delete_sql)
-        self._maintain_agg_views(new_rows=None, affected_keys=key_rows,
-                                 batch_token=batch_token, kind="d")
-        self._target(key_rows.schema).apply(key_rows, action="deleteFrom",
-                                            small_delta=self.small_delta)
+            def write_target(pre_commit=None) -> None:
+                t0 = time.perf_counter()
+                wait = 0.0
+
+                def timed_pre_commit() -> None:
+                    nonlocal wait
+                    t = time.perf_counter()
+                    try:
+                        pre_commit()
+                    finally:
+                        wait = time.perf_counter() - t
+                touched = mv.apply_batch(
+                    result, key_rows, action=action,
+                    small_delta=self.small_delta,
+                    pre_commit=pre_commit and timed_pre_commit)
+                d["promote_wait_s"] = wait
+                d["target_write_s"] = time.perf_counter() - t0 - wait
+                if isinstance(touched, list):  # bucketed layouts
+                    d["touched_buckets"] = len(touched)
+
+            if not self.agg_views:
+                write_target()
+                return
+            affected = functools.reduce(DataFrame.unionByName, [
+                f.select(*keys) for f in (result, key_rows) if f is not None])
+            self._maintain_agg_views(
+                new_rows=result, affected_keys=affected,
+                batch_token=batch_token, kind=kind,
+                write_target=write_target,
+                strict_insert=action == "insertInto", details=d)
+        finally:
+            if result is not None:
+                result.unpersist()
 
     def _maintain_scd2_views(self, typed_all, order_col: str,
                              batch_token: str | None = None,
@@ -587,69 +605,111 @@ class CdcBatchEngine:
                                 versions, batch_token=batch_token))
 
     def _maintain_agg_views(self, new_rows, affected_keys,
-                            batch_token: str | None = None,
-                            kind: str = "u") -> None:
-        """Feed each attached AggregateView its ±contributions BEFORE the
-        row merge swaps the view: old images are the CURRENT view rows
-        whose keys the batch touches (key-pruned semi-join), checkpointed
-        eagerly because the lazy plan would otherwise list the SWAPPED
-        directory at evaluation time and read post-merge rows.
+                            batch_token: str | None, kind: str,
+                            write_target, strict_insert: bool,
+                            details: dict) -> None:
+        """Feed each attached AggregateView its ±contributions and write
+        the target beside them, promoting it LAST.  The old images are
+        the CURRENT target rows whose keys the batch touches
+        (:meth:`_read_old_images`), materialized before any task starts
+        — a local relation or an eager checkpoint — so no store reads a
+        target file lazily.  ``write_target(pre_commit)`` (the target
+        merge) runs in the same :meth:`_fan_out_views` and its
+        ``pre_commit`` holds every target bucket or flat swap back until
+        all stores have returned: a store that fails leaves the target
+        at its pre-batch state, and the replay reads the same old images
+        again.
 
-        When the target is bucketed (or range-partitioned) the old
-        images come from ``read_touched`` over ONLY the buckets the
-        batch keys hash to — O(touched buckets), never a full view read
-        (the secondary_index pattern): a flat-view ``read()`` here was
-        the last O(|view|) step in the IVM maintenance path, paid per
-        micro-batch by every attached rollup regardless of how well the
-        stores themselves pruned.  Correctness is identical — a key's
-        row lives in exactly its hash bucket, so the semi-join over the
-        touched buckets sees every old image the full read would.
+        ``strict_insert``: under ``insertInto`` a batch key that already
+        has an old image is a collision.  It raises
+        :class:`~ydb_cdc_processor_spark.operators.merge.StrictInsertError`
+        BEFORE the fan-out, so no store applies a batch the target will
+        refuse.
 
         ``kind`` suffixes the replay fence and is exactly ONE of "u"
         (upsert-only batch), "d" (delete-only batch) or "f" (fused
-        batch: both sides in one ±delta step) — the `_apply_raw_batch`
+        batch: both sides in one ±delta step) — the `_apply_routed`
         routing guarantees at most one ``apply_delta`` per batch per
-        rollup, so each rollup swap persists exactly one token."""
-        if not self.agg_views:
-            return
+        rollup, so each rollup swap persists exactly one token.
+
+        ``details``: the batch's ``BatchStats.details``; the old-image
+        read and the fan-out record their wall times and the read path
+        there."""
+        d = details
         keys = self.p.target_keys or self.p.pk
         old = None
+        t0 = time.perf_counter()
         if self._target_exists():
-            old = (self._read_old_images(affected_keys.select(*keys), keys)
-                   .localCheckpoint(eager=True))
+            old = self._read_old_images(affected_keys.select(*keys), keys)
+            d["old_image_read"] = self._old_image_read
+        d["old_image_s"] = time.perf_counter() - t0
+        if strict_insert and old is not None and new_rows is not None:
+            n = old.join(new_rows.select(*keys), on=keys,
+                         how="left_semi").count()
+            if n:
+                raise StrictInsertError(
+                    f"{n} rows collide with existing primary keys")
         token = None if batch_token is None else f"{batch_token}:{kind}"
+        t0 = time.perf_counter()
         self._fan_out_views(self.agg_views,
                             lambda av: av.apply_delta(
                                 new_rows=new_rows, old_rows=old,
-                                batch_token=token))
+                                batch_token=token),
+                            write_target=write_target)
+        d["fan_out_s"] = time.perf_counter() - t0
 
     def _read_old_images(self, key_rows: DataFrame,
                          keys: list[str]) -> DataFrame:
-        """The batch keys' CURRENT target rows, read as cheaply as the
-        target's layout allows.
+        """The batch keys' CURRENT target rows, materialized and read as
+        cheaply as the target's layout allows; the path taken is left in
+        ``_old_image_read``.
 
         Bucketed/range targets (anything exposing ``bucket_expr`` +
-        ``read_touched``): hash the key frame through the view's OWN
-        bucket expression, collect the distinct bucket ids (bounded by
-        min(|batch keys|, n_buckets) — the same driver-side collect the
-        store's merge already does), and semi-join against only those
-        directories.  Flat targets fall back to the full read.  The key
-        frame is eagerly checkpointed because it feeds two evaluations
-        (the bucket collect and the semi-join) and its lineage may
-        include the not-yet-persisted delete-side transform."""
+        ``read_touched``): ONE job collects the batch's ``(keys,
+        bucket)`` pairs, hashed through the view's OWN bucket
+        expression, and only the touched buckets are read.
+
+        - "driver": a one-column key of integral, boolean or plain
+          string type (values that filter the same in pyarrow as in a
+          Spark equi-join) reads ``read_touched(touched, where=(key,
+          values))`` — files read with pyarrow into a local relation, so
+          no semi-join, no listing job and no checkpoint.
+        - "spark": other keys, stores without a stored schema and
+          touched files above ``spark.sql.autoBroadcastJoinThreshold``
+          read through Spark (key filter or semi-join) and are eagerly
+          checkpointed: every store would otherwise re-read the target,
+          and a plan evaluated after the target promoted would read
+          post-merge rows.  A key frame that is semi-joined is
+          checkpointed first, because it feeds two evaluations and its
+          lineage may include the not-yet-persisted delete-side
+          transform.
+        - "full": flat targets read the whole view (semi-join +
+          checkpoint)."""
+        from ydb_cdc_processor_spark.operators.bucketed_view import BUCKET_COL
         tgt = self._target(None)
         if not (hasattr(tgt, "bucket_expr") and hasattr(tgt, "read_touched")):
             self._warn_flat_old_image(tgt)
-            return tgt.read().join(key_rows, on=keys, how="left_semi")
-        key_rows = key_rows.localCheckpoint(eager=True)
-        touched = sorted({r[0] for r in key_rows.select(
-            tgt.bucket_expr().alias("_b")).distinct().collect()})
-        if not touched:  # empty key frame — nothing to prune against
-            return tgt.read().join(key_rows, on=keys,
-                                   how="left_semi").limit(0)
-        from ydb_cdc_processor_spark.operators.bucketed_view import BUCKET_COL
-        return (tgt.read_touched(touched).drop(BUCKET_COL)
-                .join(key_rows, on=keys, how="left_semi"))
+            self._old_image_read = "full"
+            return (tgt.read().join(key_rows, on=keys, how="left_semi")
+                    .localCheckpoint(eager=True))
+        single = (len(keys) == 1
+                  and _driver_filterable(key_rows.schema[keys[0]].dataType))
+        if not single:
+            key_rows = key_rows.localCheckpoint(eager=True)
+        rows = key_rows.select(
+            *keys, tgt.bucket_expr().alias(BUCKET_COL)).collect()
+        touched = sorted({r[-1] for r in rows})
+        if single:
+            old = tgt.read_touched(touched, where=(
+                keys[0], list({r[0] for r in rows})))
+            if old.isLocal():
+                self._old_image_read = "driver"
+                return old.drop(BUCKET_COL)
+        else:
+            old = tgt.read_touched(touched).join(key_rows, on=keys,
+                                                 how="left_semi")
+        self._old_image_read = "spark"
+        return old.drop(BUCKET_COL).localCheckpoint(eager=True)
 
     def _warn_flat_old_image(self, tgt) -> None:
         """Named guard on the flat-target old-image fallback (round-11
@@ -685,33 +745,44 @@ class CdcBatchEngine:
                 "touched buckets.", self.p.name, path, total / (1 << 20),
                 len(self.agg_views))
 
-    def _fan_out_views(self, views: list, apply_one) -> None:
+    def _fan_out_views(self, views: list, apply_one,
+                       write_target=None) -> None:
         """Maintain independent derived views CONCURRENTLY (bounded by
         ``max_parallel_views``).  Each view owns its store path and its
         replay fence, so the only shared state is the already-
-        checkpointed input frames — concurrent Spark job submission
+        materialized input frames — concurrent Spark job submission
         from multiple driver threads is the supported way to overlap
         independent work on one session, and on a real cluster it keeps
         executors busy through each view's driver-side planning gaps.
 
+        ``write_target(pre_commit)``: the target merge, submitted FIRST
+        on a worker of its own outside the ``max_parallel_views`` bound,
+        so its temp write overlaps the stores.  Its ``pre_commit`` waits
+        for every store task and re-raises the first store error; the
+        view runs it between its temp write and its promotion, so no
+        target bucket or flat swap becomes visible before every store
+        has returned, and a store failure discards the staged output
+        (the reference commits only after the write succeeds,
+        YqlWriter.java:181-206).
+
         The caller's job group (R5 timeout cancellation) is re-pinned
-        inside every worker thread: Spark job-group/interrupt flags are
-        THREAD-local properties, so without the copy a timeout's
-        ``cancelJobGroup`` would miss every job the workers submitted
-        and the batch would overrun its budget (pinned by
-        test_timeout_cancels_parallel_view_jobs).
+        inside every worker thread, the target's included: Spark
+        job-group/interrupt flags are THREAD-local properties, so
+        without the copy a timeout's ``cancelJobGroup`` would miss every
+        job the workers submitted and the batch would overrun its budget
+        (pinned by test_timeout_cancels_parallel_view_jobs).
 
         Failure semantics match the serial loop: every view's attempt
-        runs to completion, the first error re-raises, and the R1
-        retry/checkpoint replay re-applies the batch — views that
-        already promoted under the token fence it out, the failed one
-        re-applies.  (The serial loop skipped views AFTER the failed
-        one; here they complete in the same attempt — both converge,
-        this way with less replay work.)"""
-        if not views:
+        runs to completion, the first error re-raises (a store's before
+        the target's), and the R1 retry/checkpoint replay re-applies the
+        batch — views that already promoted under the token fence it
+        out, the failed one re-applies.  (The serial loop skipped views
+        AFTER the failed one; here they complete in the same attempt —
+        both converge, this way with less replay work.)"""
+        if not views and write_target is None:
             return
         workers = min(len(views), max(1, self.max_parallel_views))
-        if workers == 1:
+        if workers <= 1 and write_target is None:
             for v in views:
                 apply_one(v)
             return
@@ -721,17 +792,38 @@ class CdcBatchEngine:
         group = sc.getLocalProperty("spark.jobGroup.id")
         interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
 
-        def run(v) -> None:
+        def pinned(fn, *a) -> None:
             if group is not None:
                 sc.setLocalProperty("spark.jobGroup.id", group)
                 sc.setLocalProperty("spark.job.interruptOnCancel",
                                     interrupt or "false")
-            apply_one(v)
+            fn(*a)
 
-        with ThreadPoolExecutor(max_workers=workers,
-                                thread_name_prefix="view-maint") as ex:
-            errs = [f.exception()
-                    for f in [ex.submit(run, v) for v in views]]
+        futs: list = []
+        submitted = threading.Event()
+
+        def pre_commit() -> None:
+            submitted.wait()
+            for f in futs:
+                if f.exception() is not None:
+                    raise f.exception()
+
+        target = None
+        with ThreadPoolExecutor(
+                max_workers=workers + (write_target is not None),
+                thread_name_prefix="view-maint") as ex:
+            try:
+                if write_target is not None:
+                    target = ex.submit(pinned, write_target, pre_commit)
+                futs.extend(ex.submit(pinned, apply_one, v) for v in views)
+            finally:
+                submitted.set()
+        errs = [f.exception() for f in futs]
+        if target is not None and all(target.exception() is not e
+                                      for e in errs):
+            # a store error re-raised through pre_commit is not a second
+            # failure
+            errs.append(target.exception())
         errs = [e for e in errs if e is not None]
         for e in errs[1:]:
             # only the first error propagates (it drives the R1 retry);

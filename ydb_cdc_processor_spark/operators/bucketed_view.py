@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.merge import (
-    MERGE_FNS, compose_merge, merge_delete, merge_insert,
+    MERGE_FNS, chain_hooks, compose_merge, merge_delete, merge_insert,
     raise_on_collisions, widen_to_union)
 
 logger = logging.getLogger(__name__)
@@ -781,16 +781,25 @@ class BucketedMaterializedView:
 
     def apply(self, delta: DataFrame, action: str = "upsertInto",
               order_col: str | None = None,
-              small_delta: bool | None = None) -> list[int]:
+              small_delta: bool | None = None,
+              pre_commit=None) -> list[int]:
         """Merge ``delta`` into the view.  Returns the TOUCHED bucket
         ids — the same list the merge collected anyway — so a caller
         whose next step reads the batch's buckets (index lookups over
         just-ingested rows) reuses it instead of paying a second
-        driver-side distinct-collect over the delta."""
+        driver-side distinct-collect over the delta.
+
+        ``pre_commit``: optional callable run after the temp write and
+        before the first bucket promotes (chained after the strict-insert
+        check into :meth:`_overwrite_touched`'s ``pre_promote``); if it
+        raises, the temp output is discarded and no bucket changes.  A
+        batch that touches no bucket promotes nothing and skips it."""
         existed = self.exists()
         if not existed and action == "deleteFrom":
             if self.schema is None:
                 raise FileNotFoundError(self.path)
+            if pre_commit is not None:
+                pre_commit()
             # deleting from nothing → materialize the empty view
             self._write_full(self.spark.createDataFrame([], self.schema))
             return []
@@ -831,7 +840,8 @@ class BucketedMaterializedView:
             else:
                 merged = MERGE_FNS[action](target, delta, keys_b, order_col,
                                            small_delta)
-            self._overwrite_touched(merged, touched, pre_promote=pre)
+            self._overwrite_touched(merged, touched,
+                                    pre_promote=chain_hooks(pre, pre_commit))
             if not existed:
                 self._write_manifest()
             return touched
@@ -841,20 +851,21 @@ class BucketedMaterializedView:
     def apply_batch(self, ups: DataFrame | None, dels: DataFrame | None,
                     action: str = "upsertInto",
                     order_col: str | None = None,
-                    small_delta: bool | None = None) -> list[int]:
+                    small_delta: bool | None = None,
+                    pre_commit=None) -> list[int]:
         """One batch's upsert + delete sides in a SINGLE touched-bucket
         read → merge → dynamic-overwrite pass (sides are key-disjoint by
         the engine's last-wins routing — see merge.compose_merge).
         Halves per-batch bucket IO vs two apply() calls.  Returns the
-        touched bucket ids (see :meth:`apply`)."""
+        touched bucket ids; ``pre_commit`` as in :meth:`apply`."""
         if ups is None and dels is None:
             return []
         if ups is None:
             return self.apply(dels, action="deleteFrom",
-                              small_delta=small_delta)
+                              small_delta=small_delta, pre_commit=pre_commit)
         if dels is None:
             return self.apply(ups, action=action, order_col=order_col,
-                              small_delta=small_delta)
+                              small_delta=small_delta, pre_commit=pre_commit)
 
         existed = self.exists()
         ups = self._with_bucket(ups).persist()
@@ -888,7 +899,8 @@ class BucketedMaterializedView:
             merged = compose_merge(target, ups, dels, keys_b, action,
                                    order_col, small_delta,
                                    collision_obs=obs)
-            self._overwrite_touched(merged, touched, pre_promote=pre)
+            self._overwrite_touched(merged, touched,
+                                    pre_promote=chain_hooks(pre, pre_commit))
             if not existed:
                 self._write_manifest()
             return touched

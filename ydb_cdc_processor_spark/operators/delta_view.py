@@ -131,7 +131,13 @@ class DeltaMaterializedView:
 
     def apply(self, delta_df: DataFrame, action: str = "upsertInto",
               order_col: str | None = None,
-              small_delta: bool | None = None) -> None:
+              small_delta: bool | None = None,
+              pre_commit=None) -> None:
+        """``pre_commit``: optional callable run before the Delta
+        transaction starts.  A Delta MERGE writes and commits in one
+        ``execute()``, with no staged output to hold back, so the hook
+        cannot overlap the write here; it still runs before anything
+        commits, and if it raises nothing does."""
         if action != "deleteFrom":
             if order_col and order_col in delta_df.columns:
                 delta_df = collapse_last_wins(
@@ -139,23 +145,23 @@ class DeltaMaterializedView:
             else:
                 delta_df = delta_df.dropDuplicates(self.keys)
         if not self.exists():
-            if action == "deleteFrom":
-                if self.schema is None:
-                    raise FileNotFoundError(self.path)
-                self.overwrite(self.spark.createDataFrame([], self.schema))
-                return
-            self.overwrite(delta_df)
+            if action == "deleteFrom" and self.schema is None:
+                raise FileNotFoundError(self.path)
+            if pre_commit is not None:
+                pre_commit()
+            self.overwrite(self.spark.createDataFrame([], self.schema)
+                           if action == "deleteFrom" else delta_df)
             return
 
         cond = merge_condition(self.keys)
         m = (self._table().alias("t")
              .merge(delta_df.alias("s"), cond))
         if action == "upsertInto":
-            m.whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
+            m = m.whenMatchedUpdateAll().whenNotMatchedInsertAll()
         elif action == "updateOn":
-            m.whenMatchedUpdateAll().execute()
+            m = m.whenMatchedUpdateAll()
         elif action == "deleteFrom":
-            m.whenMatchedDelete().execute()
+            m = m.whenMatchedDelete()
         elif action == "insertInto":
             # Delta MERGE has no fail-on-match clause; the strict
             # collision probe is a separate (key-pruned) job here —
@@ -166,29 +172,36 @@ class DeltaMaterializedView:
             if n:
                 raise StrictInsertError(
                     f"{n} rows collide with existing primary keys")
-            m.whenNotMatchedInsertAll().execute()
+            m = m.whenNotMatchedInsertAll()
         else:
             raise ValueError(f"unknown action {action!r}")
+        if pre_commit is not None:
+            pre_commit()
+        m.execute()
 
     def apply_batch(self, ups: DataFrame | None, dels: DataFrame | None,
                     action: str = "upsertInto",
                     order_col: str | None = None,
-                    small_delta: bool | None = None) -> None:
+                    small_delta: bool | None = None,
+                    pre_commit=None) -> None:
         """Both sides in ONE Delta MERGE transaction: the sides are
         key-disjoint (engine last-wins routing), so the source carries a
         ``_is_delete`` marker and the matched clauses dispatch on it —
         one target scan/commit per batch, same IO shape as
-        merge.compose_merge."""
+        merge.compose_merge.  ``pre_commit`` as in :meth:`apply`."""
         from pyspark.sql import functions as F
 
         if ups is None and dels is None:
             return
         if ups is None:
-            return self.apply(dels, action="deleteFrom")
+            return self.apply(dels, action="deleteFrom",
+                              pre_commit=pre_commit)
         if dels is None:
-            return self.apply(ups, action=action, order_col=order_col)
+            return self.apply(ups, action=action, order_col=order_col,
+                              pre_commit=pre_commit)
         if not self.exists():
-            self.apply(ups, action=action, order_col=order_col)
+            self.apply(ups, action=action, order_col=order_col,
+                       pre_commit=pre_commit)
             return self.apply(dels, action="deleteFrom")
 
         if order_col and order_col in ups.columns:
@@ -222,4 +235,6 @@ class DeltaMaterializedView:
             m = m.whenNotMatchedInsert(
                 condition="NOT s._is_delete",
                 values={c: f"s.`{c}`" for c in cols})
+        if pre_commit is not None:
+            pre_commit()
         m.execute()

@@ -162,8 +162,8 @@ class HllView:
         counts.  The check is on CONTENT, not presence — the engine's
         ``_maintain_agg_views`` hands every post-bootstrap batch a
         key-pruned old-image frame that is empty whenever the source is
-        insert-only, and an eagerly-checkpointed empty frame costs one
-        cheap isEmpty (advisor finding: presence-keyed refusal broke
+        insert-only, and an empty materialized frame (local relation or
+        checkpoint) costs at most one cheap isEmpty (advisor finding: presence-keyed refusal broke
         the documented insert-only engine feed).  On a store that does
         not exist yet, non-empty old images are tolerated for engine
         bootstrap but logged loudly — a genuinely rewrite-bearing first

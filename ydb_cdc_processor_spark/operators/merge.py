@@ -145,6 +145,20 @@ def raise_on_collisions(collision_obs) -> None:
             f"{n} rows collide with existing primary keys")
 
 
+def chain_hooks(*hooks):
+    """One callable that runs every non-None hook in order, or None when
+    there is none — how a view combines its own pre-promotion check
+    (strict-insert collisions) with a caller's ``pre_commit``."""
+    hooks = [h for h in hooks if h is not None]
+    if not hooks:
+        return None
+
+    def run() -> None:
+        for h in hooks:
+            h()
+    return run
+
+
 MERGE_FNS = {
     "upsertInto": merge_upsert,
     "deleteFrom": merge_delete,
@@ -320,9 +334,19 @@ class ParquetMaterializedView:
         from pyspark.sql import Observation
         return Observation(f"strict_insert_{uuid.uuid4().hex[:8]}")
 
+    @staticmethod
+    def _collision_check(obs):
+        return None if obs is None else (lambda: raise_on_collisions(obs))
+
     def apply(self, delta: DataFrame, action: str = "upsertInto",
               order_col: str | None = None,
-              small_delta: bool | None = None) -> None:
+              small_delta: bool | None = None,
+              pre_commit=None) -> None:
+        """Merge ``delta`` into the view.  ``pre_commit``: optional
+        callable run after the temp write and before the swap (chained
+        after the strict-insert check into :meth:`overwrite`'s
+        ``pre_swap``); if it raises, the temp output is discarded and the
+        live view stays untouched."""
         target = self.read()
         if action != "deleteFrom":   # delete side is keys-only
             target, delta = widen_to_union(target, delta)
@@ -341,21 +365,23 @@ class ParquetMaterializedView:
         # only then swaps — one materialization total.  (The bucketed view
         # can't do this: dynamic partition overwrite writes into the same
         # directory tree it reads, so it localCheckpoints first.)
-        self.overwrite(merged, pre_swap=None if obs is None
-                       else (lambda: raise_on_collisions(obs)))
+        self.overwrite(merged, pre_swap=chain_hooks(
+            self._collision_check(obs), pre_commit))
 
     def apply_batch(self, ups: DataFrame | None, dels: DataFrame | None,
                     action: str = "upsertInto",
                     order_col: str | None = None,
-                    small_delta: bool | None = None) -> None:
+                    small_delta: bool | None = None,
+                    pre_commit=None) -> None:
         """One batch's upsert + delete sides in a SINGLE read→merge→write
         pass (see :func:`compose_merge`; sides are key-disjoint by the
-        engine's last-wins routing)."""
+        engine's last-wins routing).  ``pre_commit`` as in
+        :meth:`apply`."""
         obs = self._insert_obs(action, ups)
         target = self.read()
         if ups is not None:
             target, ups = widen_to_union(target, ups)
         merged = compose_merge(target, ups, dels, self.keys, action,
                                order_col, small_delta, collision_obs=obs)
-        self.overwrite(merged, pre_swap=None if obs is None
-                       else (lambda: raise_on_collisions(obs)))
+        self.overwrite(merged, pre_swap=chain_hooks(
+            self._collision_check(obs), pre_commit))

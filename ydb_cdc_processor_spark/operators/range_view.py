@@ -557,18 +557,22 @@ class RangePartitionedView(BucketedMaterializedView):
 
     def apply(self, delta: DataFrame, action: str = "upsertInto",
               order_col: str | None = None,
-              small_delta: bool | None = None) -> None:
-        super().apply(self._filter_retained(delta), action=action,
-                      order_col=order_col, small_delta=small_delta)
+              small_delta: bool | None = None,
+              pre_commit=None) -> list[int]:
+        return super().apply(self._filter_retained(delta), action=action,
+                             order_col=order_col, small_delta=small_delta,
+                             pre_commit=pre_commit)
 
     def apply_batch(self, ups: DataFrame | None, dels: DataFrame | None,
                     action: str = "upsertInto",
                     order_col: str | None = None,
-                    small_delta: bool | None = None) -> None:
-        super().apply_batch(self._filter_retained(ups),
-                            self._filter_retained(dels),
-                            action=action, order_col=order_col,
-                            small_delta=small_delta)
+                    small_delta: bool | None = None,
+                    pre_commit=None) -> list[int]:
+        return super().apply_batch(self._filter_retained(ups),
+                                   self._filter_retained(dels),
+                                   action=action, order_col=order_col,
+                                   small_delta=small_delta,
+                                   pre_commit=pre_commit)
 
     def merge_touched(self, delta: DataFrame, merge_fn,
                       batch_token: str | None = None) -> bool:
