@@ -102,14 +102,25 @@ def test_driver_old_images_match_spark_path(spark, pipeline, tmp_path):
     eng = _engine(spark, pipeline, mv)
     keys = _local_keys(spark, [0, 1, 5, 6, 7, 33, 119, 500, None])
 
-    fast, n_jobs = _jobs(spark, lambda: eng._read_old_images(keys, ["k"]))
-    assert eng._old_image_read == "driver"
+    (fast, how), n_jobs = _jobs(
+        spark, lambda: eng._read_old_images(keys, ["k"]))
+    assert how == "driver"
     got, n_jobs2 = _jobs(spark, fast.collect)
     assert n_jobs == n_jobs2 == 0
 
-    slow, n_jobs = _jobs(spark, lambda: _spark_path(
+    wheres = []
+    real = mv.read_touched
+
+    def spy(touched, delta_schema=None, where=None):
+        wheres.append(where)
+        return real(touched, delta_schema, where=where)
+    mv.read_touched = spy
+    (slow, how), n_jobs = _jobs(spark, lambda: _spark_path(
         spark, lambda: eng._read_old_images(keys, ["k"])))
-    assert eng._old_image_read == "spark" and n_jobs > 0
+    del mv.read_touched
+    assert how == "spark" and n_jobs > 0
+    # over the threshold the keys are semi-joined, not an IN-list filter
+    assert wheres[-1] is None
     assert fast.schema == slow.schema
     assert sorted(got, key=str) == sorted(slow.collect(), key=str) \
         == _expected(mv, keys, ["k"])
@@ -119,7 +130,7 @@ def test_driver_old_images_match_spark_path(spark, pipeline, tmp_path):
 
     # no key at all: an empty local relation with the view's schema
     empty, n_jobs = _jobs(spark, lambda: eng._read_old_images(
-        _local_keys(spark, []), ["k"]).collect())
+        _local_keys(spark, []), ["k"])[0].collect())
     assert empty == [] and n_jobs == 0
 
 
@@ -131,8 +142,9 @@ def test_driver_old_images_string_key(spark, pipeline, tmp_path):
         "s string, x long"))
     eng = _engine(spark, pipeline, mv)
     keys = _local_keys(spark, ["k1", "k2", "k39", "nope"], pa.string(), "s")
-    got = eng._read_old_images(keys, ["s"]).collect()
-    assert eng._old_image_read == "driver"
+    old, how = eng._read_old_images(keys, ["s"])
+    got = old.collect()
+    assert how == "driver"
     assert sorted(got) == _expected(mv, keys, ["s"])
     assert len(got) == 3
 
@@ -146,8 +158,9 @@ def test_multi_column_key_falls_back_to_spark(spark, pipeline, tmp_path):
     eng = _engine(spark, pipeline, mv)
     keys = spark.createDataFrame([(1, 1), (2, 7), (3, 3), (9, 9)],
                                  "a long, b long")
-    got = eng._read_old_images(keys, ["a", "b"]).collect()
-    assert eng._old_image_read == "spark"
+    old, how = eng._read_old_images(keys, ["a", "b"])
+    got = old.collect()
+    assert how == "spark"
     assert sorted(got, key=str) == _expected(mv, keys, ["a", "b"])
     assert len(got) == 3
 
@@ -164,7 +177,8 @@ def test_store_without_stored_schema_falls_back_to_spark(
     mv = BucketedMaterializedView(spark, path, ["k"])
     eng = _engine(spark, pipeline, mv)
     keys = _local_keys(spark, [1, 2, 3, 77])
-    got = eng._read_old_images(keys, ["k"]).collect()
-    assert eng._old_image_read == "spark"
+    old, how = eng._read_old_images(keys, ["k"])
+    got = old.collect()
+    assert how == "spark"
     assert sorted(got, key=str) == _expected(mv, keys, ["k"])
     assert len(got) == 3

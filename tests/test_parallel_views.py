@@ -505,3 +505,61 @@ def test_fan_out_pre_commit_stress(spark, sf_dir, tmp_path):
             assert len(done) == 16
     finally:
         sys.setswitchinterval(old)
+
+
+@pytest.mark.parametrize("n_buckets", [8, None], ids=["bucketed", "flat"])
+def test_pipeline_with_neither_query_skips_every_message(
+        spark, sf_dir, tmp_path, n_buckets):
+    """With neither an update nor a delete query configured every
+    message is skipped: the batch counts them, and neither the target
+    nor any store is ever written — on a replay too."""
+    import os
+    schema, pk = describe_table(spark, sf_dir, "events")
+    p = CdcPipeline(name="par_none", source_schema=schema, pk=pk,
+                    members=cdc_json.EVENTS_MEMBERS).validate(spark)
+    stores = _stores(spark, tmp_path)
+    eng = CdcBatchEngine(spark, p, str(tmp_path / "view"),
+                         n_buckets=n_buckets, agg_views=stores)
+    raw = _raw_lines(spark, BOOT + BATCH)
+    for _ in range(2):
+        stats = eng.apply_raw_batch(raw, batch_token="none:0")
+        assert (stats.upserted, stats.deleted) == (0, 0)
+        assert stats.skipped == len(BOOT) + len(BATCH)
+    assert not os.path.exists(tmp_path / "view")
+    assert not os.path.exists(tmp_path / "by_type")
+    assert not os.path.exists(tmp_path / "ck")
+
+
+def test_aborted_store_submission_refuses_target(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A store submission that raises (executor shut down, interrupt)
+    after the target was submitted: the target's pre_commit refuses, so
+    it never promotes beside stores that did not run."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    eng = CdcBatchEngine(spark, _small_pipeline(spark, sf_dir),
+                         str(tmp_path / "view"))
+    real = ThreadPoolExecutor.submit
+    calls: list[int] = []
+
+    def submit(self, fn, *a, **kw):
+        calls.append(1)
+        if len(calls) == 3:  # the target and one store went through
+            raise RuntimeError("cannot schedule new futures")
+        return real(self, fn, *a, **kw)
+
+    seen: list[str] = []
+
+    def write_target(pre_commit):
+        try:
+            pre_commit()
+        except RuntimeError:
+            seen.append("refused")
+            raise
+        seen.append("promoted")
+
+    monkeypatch.setattr(ThreadPoolExecutor, "submit", submit)
+    with pytest.raises(RuntimeError, match="cannot schedule"):
+        eng._fan_out_views([0, 1, 2], lambda v: None,
+                           write_target=write_target)
+    assert seen == ["refused"]

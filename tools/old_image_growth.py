@@ -122,7 +122,7 @@ def main() -> None:
 
             # pruned formulation (what the engine now does)
             t0 = time.perf_counter()
-            pruned = eng._read_old_images(keys, ["k"]) \
+            pruned = eng._read_old_images(keys, ["k"])[0] \
                 .localCheckpoint(eager=True)
             pruned_sec = time.perf_counter() - t0
             touched = sorted({r[0] for r in keys.select(

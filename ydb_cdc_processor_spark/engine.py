@@ -309,7 +309,6 @@ class CdcBatchEngine:
         self.target_bucket_bytes = target_bucket_bytes
         self._batches_applied = 0
         self._flat_old_image_warned = False
-        self._old_image_read = "none"
 
     #: flat-target old-image guard: when a FLAT (non-bucketed) target
     #: with attached derived views grows past this many on-disk bytes,
@@ -527,6 +526,8 @@ class CdcBatchEngine:
         unconfigured kind's messages are dropped before the collapse, so
         its count is 0)."""
         stats.upserted, stats.deleted = n_up, n_del
+        if ups is None and dels is None:
+            return  # neither query configured: every message was skipped
         if n_up == 0 and n_del == 0 and self._target_exists():
             return  # nothing to merge; skip the rewrite entirely
         kind = "u" if dels is None else "d" if ups is None else "f"
@@ -640,8 +641,8 @@ class CdcBatchEngine:
         old = None
         t0 = time.perf_counter()
         if self._target_exists():
-            old = self._read_old_images(affected_keys.select(*keys), keys)
-            d["old_image_read"] = self._old_image_read
+            old, d["old_image_read"] = self._read_old_images(
+                affected_keys.select(*keys), keys)
         d["old_image_s"] = time.perf_counter() - t0
         if strict_insert and old is not None and new_rows is not None:
             n = old.join(new_rows.select(*keys), on=keys,
@@ -659,27 +660,27 @@ class CdcBatchEngine:
         d["fan_out_s"] = time.perf_counter() - t0
 
     def _read_old_images(self, key_rows: DataFrame,
-                         keys: list[str]) -> DataFrame:
+                         keys: list[str]) -> tuple[DataFrame, str]:
         """The batch keys' CURRENT target rows, materialized and read as
-        cheaply as the target's layout allows; the path taken is left in
-        ``_old_image_read``.
+        cheaply as the target's layout allows, with the path taken.
 
         Bucketed/range targets (anything exposing ``bucket_expr`` +
-        ``read_touched``): ONE job collects the batch's ``(keys,
-        bucket)`` pairs, hashed through the view's OWN bucket
-        expression, and only the touched buckets are read.
+        ``read_touched``): the key frame is hashed through the view's
+        OWN bucket expression and only the touched buckets are read.
 
         - "driver": a one-column key of integral, boolean or plain
           string type (values that filter the same in pyarrow as in a
-          Spark equi-join) reads ``read_touched(touched, where=(key,
-          values))`` — files read with pyarrow into a local relation, so
-          no semi-join, no listing job and no checkpoint.
-        - "spark": other keys, stores without a stored schema and
+          Spark equi-join).  ONE job collects the ``(key, bucket)``
+          pairs and ``read_touched(touched, where=(key, values))`` reads
+          the files with pyarrow into a local relation, so no
+          semi-join, no listing job and no checkpoint.
+        - "spark": other keys collect only the distinct bucket ids
+          (at most ``n_buckets``); stores without a stored schema and
           touched files above ``spark.sql.autoBroadcastJoinThreshold``
-          read through Spark (key filter or semi-join) and are eagerly
-          checkpointed: every store would otherwise re-read the target,
-          and a plan evaluated after the target promoted would read
-          post-merge rows.  A key frame that is semi-joined is
+          also land here.  The touched buckets are semi-joined with the
+          key frame and eagerly checkpointed: every store would
+          otherwise re-read the target, and a plan evaluated after the
+          target promoted would read post-merge rows.  The key frame is
           checkpointed first, because it feeds two evaluations and its
           lineage may include the not-yet-persisted delete-side
           transform.
@@ -689,27 +690,27 @@ class CdcBatchEngine:
         tgt = self._target(None)
         if not (hasattr(tgt, "bucket_expr") and hasattr(tgt, "read_touched")):
             self._warn_flat_old_image(tgt)
-            self._old_image_read = "full"
             return (tgt.read().join(key_rows, on=keys, how="left_semi")
-                    .localCheckpoint(eager=True))
-        single = (len(keys) == 1
-                  and _driver_filterable(key_rows.schema[keys[0]].dataType))
-        if not single:
-            key_rows = key_rows.localCheckpoint(eager=True)
-        rows = key_rows.select(
-            *keys, tgt.bucket_expr().alias(BUCKET_COL)).collect()
-        touched = sorted({r[-1] for r in rows})
-        if single:
+                    .localCheckpoint(eager=True)), "full"
+        bucket = tgt.bucket_expr().alias(BUCKET_COL)
+        if len(keys) == 1 and _driver_filterable(
+                key_rows.schema[keys[0]].dataType):
+            rows = key_rows.select(keys[0], bucket).collect()
+            touched = sorted({r[1] for r in rows})
             old = tgt.read_touched(touched, where=(
                 keys[0], list({r[0] for r in rows})))
             if old.isLocal():
-                self._old_image_read = "driver"
-                return old.drop(BUCKET_COL)
+                return old.drop(BUCKET_COL), "driver"
+            # too big for the driver: semi-join the key frame rather
+            # than filter on an IN list of every batch key
+            key_rows = key_rows.localCheckpoint(eager=True)
         else:
-            old = tgt.read_touched(touched).join(key_rows, on=keys,
-                                                 how="left_semi")
-        self._old_image_read = "spark"
-        return old.drop(BUCKET_COL).localCheckpoint(eager=True)
+            key_rows = key_rows.localCheckpoint(eager=True)
+            touched = sorted(r[0] for r in key_rows.select(bucket)
+                             .distinct().collect())
+        old = tgt.read_touched(touched).join(key_rows, on=keys,
+                                             how="left_semi")
+        return old.drop(BUCKET_COL).localCheckpoint(eager=True), "spark"
 
     def _warn_flat_old_image(self, tgt) -> None:
         """Named guard on the flat-target old-image fallback (round-11
@@ -801,9 +802,13 @@ class CdcBatchEngine:
 
         futs: list = []
         submitted = threading.Event()
+        aborted: list = []  # set when a store submission raised
 
         def pre_commit() -> None:
             submitted.wait()
+            if aborted:
+                raise RuntimeError("derived-store submission aborted; "
+                                   "the target is not promoted")
             for f in futs:
                 if f.exception() is not None:
                     raise f.exception()
@@ -816,6 +821,9 @@ class CdcBatchEngine:
                 if write_target is not None:
                     target = ex.submit(pinned, write_target, pre_commit)
                 futs.extend(ex.submit(pinned, apply_one, v) for v in views)
+            except BaseException:
+                aborted.append(True)
+                raise
             finally:
                 submitted.set()
         errs = [f.exception() for f in futs]
