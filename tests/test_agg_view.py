@@ -133,12 +133,14 @@ def test_agg_view_batch_token_replay_fence(spark, tmp_path):
 
 def test_agg_view_bucketed_per_bucket_fence(spark, tmp_path):
     """Bucketed backend exactly-once: full-replay skip, restart-object
-    skip, and — the case the flat atomic swap never faces — a crash MID-
-    PROMOTION (some buckets promoted under the new token, some still on
-    the old one): replay must re-apply ONLY the un-promoted buckets."""
-    import json
+    skip, and a crash at the commit point.  The fence is per batch now:
+    the crashed batch's buckets are written but none is visible (the
+    commit is one manifest replace), so the replay applies the whole
+    batch once — the bucket-level mix a per-bucket commit left behind
+    can no longer arise."""
     import os
-    import shutil
+
+    from ydb_cdc_processor_spark import storage
 
     path = str(tmp_path / "agg")
     rows = spark.range(0, 40).select(
@@ -160,44 +162,36 @@ def test_agg_view_bucketed_per_bucket_fence(spark, tmp_path):
     av2.apply_delta(new_rows=rows, old_rows=None, batch_token="b0")
     assert {(r.g, r.n_rows, r.sv) for r in av2.read().collect()} == b0
 
-    # apply b1, then SIMULATE a crash mid-promotion: restore one bucket
-    # to its pre-b1 content (with its b0 token) and roll the manifest's
-    # last_token back to b0 (the crash precedes the manifest write)
-    pre = str(tmp_path / "pre_b1")
-    shutil.copytree(path, pre)
-    av2.apply_delta(new_rows=rows, old_rows=None, batch_token="b1")
-    b1 = {(r.g, r.n_rows, r.sv) for r in av2.read().collect()}
-    assert b1 == {(g, 4, 4.0) for g in range(20)}
+    # b1 crashes at its commit: every touched bucket's new generation is
+    # on disk, the manifest replace never lands
+    real, man = storage.replace_text, os.path.join(path, "_buckets.json")
 
-    victim = next(e for e in sorted(os.listdir(pre))
-                  if e.startswith("_bucket="))
-    shutil.rmtree(os.path.join(path, victim))
-    shutil.copytree(os.path.join(pre, victim), os.path.join(path, victim))
-    mf = os.path.join(path, "_buckets.json")
-    doc = json.load(open(mf))
-    doc["last_token"] = "b0"
-    # last_token and applied_tokens are written in ONE atomic manifest
-    # replace — a crash that precedes it leaves b1 in neither
-    doc["applied_tokens"] = [t for t in doc.get("applied_tokens", [])
-                             if t != "b1"]
-    json.dump(doc, open(mf, "w"))
+    def crash(p, t):
+        if p == man:
+            raise RuntimeError("crash at the commit")
+        return real(p, t)
+    storage.replace_text = crash
+    try:
+        with pytest.raises(RuntimeError, match="crash at the commit"):
+            av2.apply_delta(new_rows=rows, old_rows=None, batch_token="b1")
+    finally:
+        storage.replace_text = real
+    assert {(r.g, r.n_rows, r.sv) for r in av2.read().collect()} == b0
 
-    # the torn state is visibly mixed (victim bucket back at b0 counts)
-    torn = {(r.g, r.n_rows, r.sv) for r in av2.read().collect()}
-    assert torn != b1
-
-    # replay b1 from a FRESH object (restart after the crash): only the
-    # un-promoted bucket is re-applied; promoted buckets must not double
+    # replay b1 from a FRESH object (restart after the crash): the whole
+    # batch applies once; a second replay is skipped
     av3 = AggregateView(spark, path, ["g"], {"sv": "v"},
                         backend="bucketed", n_buckets=8)
-    av3.apply_delta(new_rows=rows, old_rows=None, batch_token="b1")
-    assert {(r.g, r.n_rows, r.sv) for r in av3.read().collect()} == b1
+    for _ in range(2):
+        av3.apply_delta(new_rows=rows, old_rows=None, batch_token="b1")
+        assert {(r.g, r.n_rows, r.sv) for r in av3.read().collect()} == \
+            {(g, 4, 4.0) for g in range(20)}
 
 
 def test_agg_view_bucketed_rebucket_keeps_fence(spark, tmp_path):
-    """rebucket() re-seeds the per-bucket fence from the manifest's
-    last_token: a replay of the last batch AFTER a rebucket stays a
-    no-op, and new batches apply normally at the new bucket count."""
+    """rebucket() keeps the manifest's applied-token history: a replay
+    of the last batch AFTER a rebucket stays a no-op, and new batches
+    apply normally at the new bucket count."""
     path = str(tmp_path / "agg")
     rows = spark.range(0, 30).select(
         (F.col("id") % 15).alias("g"), F.lit(2.0).alias("v"))
@@ -209,7 +203,7 @@ def test_agg_view_bucketed_rebucket_keeps_fence(spark, tmp_path):
     av._store().rebucket(16)
     assert {(r.g, r.n_rows, r.sv) for r in av.read().collect()} == b0
 
-    # replay of b0 across the rebucket: still fenced (re-seeded tokens)
+    # replay of b0 across the rebucket: still fenced
     av2 = AggregateView(spark, path, ["g"], {"sv": "v"},
                         backend="bucketed")
     av2.apply_delta(new_rows=rows, old_rows=None, batch_token="b0")

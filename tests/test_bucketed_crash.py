@@ -1,18 +1,18 @@
 """Exhaustive tear-point sweep over the bucketed view's crash windows.
 
-The bucketed view's durability story rests on three claims
-(operators/bucketed_view.py):
+Every write path of the bucketed view (operators/bucketed_view.py)
+commits the same way: files move into a fresh generation one rename at
+a time, then ONE manifest replace publishes the batch.  So a crash at
+ANY rename/replace boundary must leave the store reading exactly its
+pre-batch rows (and its pre-batch layout), and re-running the same
+operation must equal the clean run:
 
-1. ``apply``'s per-bucket promotion — a crash between ANY two renames
-   leaves a mix of old/displaced/new buckets that ``_recover`` repairs,
-   and an idempotent replay of the same batch converges to the clean
-   result;
-2. ``merge_touched``'s token fencing — the same sweep for a
-   NON-idempotent (±delta) merge must be exactly-once: replayed deltas
-   apply only to buckets not yet promoted under the batch token;
-3. ``rebucket``'s swap — a crash between the two directory renames must
-   never lose the view; recovery restores the complete old layout and a
-   re-run completes the migration.
+- ``apply`` (idempotent upsert);
+- ``merge_touched`` with a NON-idempotent (±delta) merge under a batch
+  token — the replay lands exactly once, and a second replay is a
+  no-op;
+- ``rebucket``, ``compact``, ``rewrite_rows`` and the range view's
+  ``reshard_granule``.
 
 These tests kill the process surrogate (raise) at EVERY rename/replace
 boundary in turn — the same treatment the merge path's property tests
@@ -68,6 +68,35 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _sweep(tmp_path, pristine, open_view, run, tag):
+    """Kill ``run(view)`` at every rename/replace boundary of a copy of
+    ``pristine``.  At each kill point a fresh handle must read exactly
+    the pre-batch rows and manifest layout; re-running the operation on
+    it must then equal the clean run.  Returns the boundary count."""
+    clean = str(tmp_path / f"{tag}-clean")
+    shutil.copytree(pristine, clean)
+    with _RenameKiller(None) as rk:
+        run(open_view(clean))
+    n_renames = rk.calls
+    expected = _rows(open_view(clean).read())
+    before_view = open_view(pristine)
+    before = _rows(before_view.read())
+    before_gens = before_view._read_manifest_dict().get("gens")
+    assert n_renames >= 2, "sweep needs at least one file move + commit"
+    for kill_at in range(n_renames):
+        path = str(tmp_path / f"{tag}{kill_at}")
+        shutil.copytree(pristine, path)
+        with _RenameKiller(kill_at), pytest.raises(Killed):
+            run(open_view(path))
+        fresh = open_view(path)
+        assert _rows(fresh.read()) == before, f"torn read at {kill_at}"
+        assert fresh._read_manifest_dict().get("gens") == before_gens
+        run(fresh)
+        assert _rows(open_view(path).read()) == expected, \
+            f"diverged at tear {kill_at}"
+    return n_renames
+
+
 BASE = [(i, f"v{i}") for i in range(24)]
 DELTA = [(i, f"NEW{i}") for i in range(0, 24, 3)] + \
         [(100 + i, f"ins{i}") for i in range(4)]
@@ -85,27 +114,9 @@ def test_bucketed_crash_recovery_apply(spark, tmp_path):
     pristine = str(tmp_path / "pristine")
     _build_base(spark, pristine)
     delta_df = spark.createDataFrame(DELTA, "id long, v string")
-
-    # clean run on a copy → expected rows + the rename-call budget
-    clean = str(tmp_path / "clean")
-    shutil.copytree(pristine, clean)
-    with _RenameKiller(None) as rk:
-        v = BucketedMaterializedView(spark, clean, ["id"], n_buckets=4)
-        v.apply(delta_df, action="upsertInto")
-    n_renames = rk.calls
-    expected = _rows(v.read())
-    assert n_renames >= 2, "sweep needs at least one promotion boundary"
-
-    for kill_at in range(n_renames):
-        path = str(tmp_path / f"t{kill_at}")
-        shutil.copytree(pristine, path)
-        v = BucketedMaterializedView(spark, path, ["id"], n_buckets=4)
-        with _RenameKiller(kill_at), pytest.raises(Killed):
-            v.apply(delta_df, action="upsertInto")
-        # fresh instance = restart; replay the same batch
-        v2 = BucketedMaterializedView(spark, path, ["id"], n_buckets=4)
-        v2.apply(delta_df, action="upsertInto")
-        assert _rows(v2.read()) == expected, f"diverged at tear {kill_at}"
+    _sweep(tmp_path, pristine,
+           lambda p: BucketedMaterializedView(spark, p, ["id"], n_buckets=4),
+           lambda v: v.apply(delta_df, action="upsertInto"), "t")
 
 
 def test_bucketed_crash_recovery_merge_touched_exactly_once(spark, tmp_path):
@@ -121,61 +132,81 @@ def test_bucketed_crash_recovery_merge_touched_exactly_once(spark, tmp_path):
         return (t.unionByName(dd)
                 .groupBy("id", "_bucket").agg(F.sum("n").alias("n")))
 
-    def build(path):
-        v = BucketedMaterializedView(spark, path, ["id"], n_buckets=4)
-        v.apply(spark.createDataFrame(base, "id long, n long"))
-        return v
+    def open_view(path):
+        return BucketedMaterializedView(spark, path, ["id"], n_buckets=4)
 
     delta_df = spark.createDataFrame(delta, "id long, n long")
-    clean = str(tmp_path / "clean")
-    v = build(clean)
-    with _RenameKiller(None) as rk:
-        v.merge_touched(delta_df, merge_fn, batch_token="b1")
-    n_renames = rk.calls
-    expected = _rows(v.read())
-
     pristine = str(tmp_path / "pristine")
-    build(pristine)
-    for kill_at in range(n_renames):
-        path = str(tmp_path / f"m{kill_at}")
-        shutil.copytree(pristine, path)
-        v = BucketedMaterializedView(spark, path, ["id"], n_buckets=4)
-        with _RenameKiller(kill_at), pytest.raises(Killed):
-            v.merge_touched(delta_df, merge_fn, batch_token="b1")
-        v2 = BucketedMaterializedView(spark, path, ["id"], n_buckets=4)
-        v2.merge_touched(delta_df, merge_fn, batch_token="b1")
-        assert _rows(v2.read()) == expected, f"diverged at tear {kill_at}"
+    open_view(pristine).apply(spark.createDataFrame(base, "id long, n long"))
+    n = _sweep(tmp_path, pristine, open_view,
+               lambda v: v.merge_touched(delta_df, merge_fn,
+                                         batch_token="b1"), "m")
+    for kill_at in range(n):
         # a SECOND replay of the fully-applied token must be a no-op
-        assert v2.merge_touched(delta_df, merge_fn, batch_token="b1") is False
-        assert _rows(v2.read()) == expected
+        v = open_view(str(tmp_path / f"m{kill_at}"))
+        once = _rows(v.read())
+        assert v.merge_touched(delta_df, merge_fn, batch_token="b1") is False
+        assert _rows(v.read()) == once
 
 
 def test_bucketed_crash_recovery_rebucket(spark, tmp_path):
-    """Rebucket swap: kill at every rename boundary; the view must never
-    lose rows, and re-running the rebucket completes the migration."""
+    """Rebucket: kill at every rename boundary; the view keeps its old
+    layout and rows, and re-running the rebucket completes the
+    migration."""
     pristine = str(tmp_path / "pristine")
-    v = _build_base(spark, pristine)
-    expected = _rows(v.read())
+    _build_base(spark, pristine)
 
-    clean = str(tmp_path / "clean")
-    shutil.copytree(pristine, clean)
-    with _RenameKiller(None) as rk:
-        BucketedMaterializedView(spark, clean, ["id"]).rebucket(8)
-    n_renames = rk.calls
+    def open_view(path):
+        return BucketedMaterializedView(spark, path, ["id"])
 
-    for kill_at in range(n_renames):
-        path = str(tmp_path / f"r{kill_at}")
-        shutil.copytree(pristine, path)
-        v = BucketedMaterializedView(spark, path, ["id"])
-        with _RenameKiller(kill_at), pytest.raises(Killed):
-            v.rebucket(8)
-        # restart: content must be intact under whichever layout survived
-        v2 = BucketedMaterializedView(spark, path, ["id"])
-        assert _rows(v2.read()) == expected, f"lost rows at tear {kill_at}"
-        v2.rebucket(8)
-        v3 = BucketedMaterializedView(spark, path, ["id"])
-        assert v3.n_buckets == 8
-        assert _rows(v3.read()) == expected
+    n = _sweep(tmp_path, pristine, open_view, lambda v: v.rebucket(8), "r")
+    for kill_at in range(n):
+        assert open_view(str(tmp_path / f"r{kill_at}")).n_buckets == 8
+
+
+def test_bucketed_crash_recovery_compact(spark, tmp_path):
+    """compact(): a physical rewrite of every bucket; a kill anywhere
+    leaves the old generations serving."""
+    pristine = str(tmp_path / "pristine")
+    _build_base(spark, pristine)
+    _sweep(tmp_path, pristine,
+           lambda p: BucketedMaterializedView(spark, p, ["id"]),
+           lambda v: v.compact(max_files_per_bucket=0), "c")
+
+
+def test_bucketed_crash_recovery_rewrite_rows(spark, tmp_path):
+    """rewrite_rows(): a content-changing rewrite; a kill anywhere leaves
+    every pre-rewrite row visible, the re-run prunes exactly once."""
+    pristine = str(tmp_path / "pristine")
+    _build_base(spark, pristine)
+    _sweep(tmp_path, pristine,
+           lambda p: BucketedMaterializedView(spark, p, ["id"]),
+           lambda v: v.rewrite_rows(lambda r: r.where("id % 3 = 0")), "w")
+
+
+def test_range_crash_recovery_reshard_granule(spark, tmp_path):
+    """reshard_granule(): the granule's new block, the retirement of its
+    old ids and the split record commit together — a kill anywhere
+    leaves the old layout serving."""
+    import datetime as dt
+
+    from ydb_cdc_processor_spark.operators.range_view import (
+        RangePartitionedView)
+
+    def open_view(path):
+        return RangePartitionedView(spark, path, ["day", "id"],
+                                    part_col="day", n_sub=2)
+
+    pristine = str(tmp_path / "pristine")
+    open_view(pristine).apply(spark.createDataFrame(
+        [(dt.date(2024, 1, 1 + i % 3), i) for i in range(48)],
+        "day date, id long"))
+    n = _sweep(tmp_path, pristine, open_view,
+               lambda v: v.reshard_granule("2024-01-02", 8), "s")
+    pid = open_view(pristine).partition_id("2024-01-02")
+    for kill_at in range(n):
+        assert open_view(str(tmp_path / f"s{kill_at}")) \
+            .granule_n_sub(pid) == 8
 
 
 def test_flat_view_crash_recovery_sweep(spark, tmp_path):

@@ -165,11 +165,11 @@ def test_read_touched_probes_only_touched_dirs(spark, tmp_path, orders):
 
 
 def test_rebucket_crash_between_renames_recovers(spark, tmp_path, orders):
-    """A crash between rebucket()'s two renames leaves the view path
-    missing and the complete old layout at the deterministic .old
-    sibling; the next observation must restore it instead of treating
-    the view as never-written (which would silently rebuild it from one
-    delta)."""
+    """A crash between replace_with()'s two renames (the whole-store
+    swap an index retrain uses) leaves the view path missing and the
+    complete old layout at the deterministic .old sibling; the next
+    observation must restore it instead of treating the view as
+    never-written (which would silently rebuild it from one delta)."""
     import os
     _, buck = _mk(spark, tmp_path, orders, n_buckets=4)
     before = _rows(buck.read())
@@ -204,68 +204,41 @@ def test_rebucket_failure_keeps_n_buckets_consistent(
     assert _rows(buck.read()) != []
 
 
-def test_displaced_bucket_recovers(spark, tmp_path, orders):
-    """_overwrite_touched's crash window: a live bucket renamed aside to
-    .displaced-_bucket=N with no replacement promoted yet.  The next
-    observation restores the displaced copy (pre-batch rows are NOT
-    lost); a displaced leftover whose bucket was already promoted is
-    dropped."""
-    import os
-    import shutil
-    _, buck = _mk(spark, tmp_path, orders, n_buckets=4)
-    before = _rows(buck.read())
-    live = [e for e in os.listdir(buck.path)
-            if e.startswith(f"{BUCKET_COL}=")]
-    victim = os.path.join(buck.path, live[0])
-    disp = os.path.join(buck.path, f".displaced-{live[0]}")
-    # window (a): bucket renamed aside, replacement never landed
-    os.rename(victim, disp)
-    assert buck.exists() is True
-    assert _rows(buck.read()) == before       # restored, nothing lost
-    # window (b): crash after promotion — displaced leftover + live bucket
-    shutil.copytree(victim, disp)
-    assert buck.exists() is True
-    assert not os.path.exists(disp)           # leftover dropped
-    assert _rows(buck.read()) == before
-
-
 def test_compact_fragmented_buckets(spark, tmp_path):
     """compact() must rewrite ONLY over-fragmented buckets down to one
-    file each, preserve content and replay tokens exactly, and leave
-    healthy buckets' files untouched."""
-    import os
-
+    file each, preserve content and the replay history exactly, and
+    leave healthy buckets' files untouched."""
     from ydb_cdc_processor_spark.operators.bucketed_view import (
-        BUCKET_COL, BucketedMaterializedView)
+        BucketedMaterializedView)
 
     path = str(tmp_path / "view")
     view = BucketedMaterializedView(spark, path, ["id"], n_buckets=4)
-    view.apply(spark.createDataFrame([(i, f"v{i}") for i in range(64)],
-                                     "id long, v string"))
+    batch = spark.createDataFrame([(i, f"v{i}") for i in range(64)],
+                                  "id long, v string")
+    view.merge_touched(batch, lambda target, d: d.unionByName(target),
+                       batch_token="tok-keep")
     before = sorted(tuple(r) for r in view.read().collect())
 
-    # fragment one bucket the way an external appender would: same rows,
-    # many files
     def files_of(b):
-        d = os.path.join(path, f"{BUCKET_COL}={b}")
-        return [f for f in os.listdir(d) if not f.startswith((".", "_"))]
+        return sorted(view.bucket_files([b])[b])
 
-    frag = os.path.join(path, f"{BUCKET_COL}=0")
-    rows0 = spark.read.option("basePath", path).parquet(frag) \
-        .drop(BUCKET_COL).localCheckpoint(eager=True)
+    # fragment one bucket's live generation the way an external appender
+    # would: same rows, many files
+    frag = view._live_dirs([0])[0]
+    rows0 = spark.read.parquet(frag).localCheckpoint(eager=True)
     rows0.repartition(8).write.mode("overwrite").parquet(frag)
     assert len(files_of(0)) > 4
     healthy_before = files_of(1)
-    # seed a replay token on the fragmented bucket: compaction must carry it
-    with open(os.path.join(frag, "_token"), "w") as fh:
-        fh.write("tok-keep")
 
     n = view.compact(max_files_per_bucket=4)
     assert n == 1
     assert len(files_of(0)) == 1
     assert files_of(1) == healthy_before
-    assert view.bucket_token(0) == "tok-keep"
+    assert view.applied_tokens() == ["tok-keep"]
     assert sorted(tuple(r) for r in view.read().collect()) == before
+    # the replay fence survived the physical rewrite
+    assert view.merge_touched(batch, lambda t, d: d.unionByName(t),
+                              batch_token="tok-keep") is False
     # idempotent: nothing left to compact
     assert view.compact(max_files_per_bucket=4) == 0
 
@@ -296,10 +269,11 @@ def test_rebucket_preserves_bucket_keys_in_manifest(spark, tmp_path):
 
 def test_rewrite_rows_preserves_tokens_and_fences_empty_buckets(
         spark, tmp_path):
-    """rewrite_rows: in-place housekeeping rewrite — content transformed,
-    per-bucket replay tokens preserved, and a bucket whose rows are ALL
-    removed stays on disk as an empty token-bearing directory (dropping
-    it would un-fence a replay of the last batch that touched it)."""
+    """rewrite_rows: in-place housekeeping rewrite — content
+    transformed, the applied-token history preserved, and a bucket
+    whose rows are ALL removed is dropped from the manifest while the
+    replay of the last batch that touched it stays fenced (the fence
+    lives in the manifest, not in the bucket)."""
     import os
 
     from ydb_cdc_processor_spark.operators.bucketed_view import (
@@ -310,12 +284,8 @@ def test_rewrite_rows_preserves_tokens_and_fences_empty_buckets(
                                "id long, v long")
     mv.merge_touched(df, lambda target, d: d.unionByName(target),
                      batch_token="tok-a")
-    toks_before = {b: mv.bucket_token(b) for b in range(4)}
-    assert any(t == "tok-a" for t in toks_before.values())
+    assert mv.bucket_ids() == [0, 1, 2, 3]
 
-    # drop most rows; one bucket loses EVERYTHING (v-filter chosen so
-    # at least one bucket has no survivors is not guaranteed — force it
-    # by filtering a whole bucket out explicitly)
     victim = 0
     n = mv.rewrite_rows(
         lambda rows: rows.where((rows["v"] < 2)
@@ -327,10 +297,10 @@ def test_rewrite_rows_preserves_tokens_and_fences_empty_buckets(
         [(i, i % 10) for i in range(200)], "id long, v long") \
         .where("v < 2") \
         .withColumn("_b", mv.bucket_expr()).where(f"_b != {victim}").count()
-    # tokens survived the rewrite — including the emptied bucket's
-    for b in range(4):
-        assert mv.bucket_token(b) == toks_before[b]
-    assert os.path.isdir(os.path.join(path, f"{BUCKET_COL}={victim}"))
+    # the emptied bucket left the manifest and its directory was GC'd
+    assert victim not in mv.bucket_ids()
+    assert not os.path.isdir(os.path.join(path, f"{BUCKET_COL}={victim}"))
+    assert mv.applied_tokens() == ["tok-a"]
     # fence intact: replaying the original batch is still a no-op
     assert mv.merge_touched(df, lambda target, d: d.unionByName(target),
                             batch_token="tok-a") is False

@@ -182,17 +182,17 @@ def test_composed_layout_merge_parity_and_day_locality(spark, tmp_path):
                                   .cast("date")).limit(3)
     hot = spark.createDataFrame(hot.collect(), b1.schema)
     touched_lists = []
-    orig = rv._overwrite_touched
+    orig = rv._commit
 
-    def spy(merged, touched, token=None, pre_promote=None):
-        touched_lists.append(sorted(touched))
-        return orig(merged, touched, token=token, pre_promote=pre_promote)
+    def spy(rows, buckets, **kw):
+        touched_lists.append(sorted(buckets))
+        return orig(rows, buckets, **kw)
 
-    rv._overwrite_touched = spy
+    rv._commit = spy
     try:
         rv.apply(hot, action="upsertInto")
     finally:
-        rv._overwrite_touched = orig
+        rv._commit = orig
     fv.apply(hot, action="upsertInto")
     assert _res(rv.read()) == _res(fv.read())
 
@@ -290,14 +290,32 @@ def test_read_range_never_ingested_raises_cleanly(spark, tmp_path):
 
 
 def test_crash_torn_partition_recovers(spark, tmp_path):
-    """A partition left displaced by a mid-promotion crash is restored
-    by the next read (inherited recovery, re-pinned for this layout)."""
+    """A batch that crashed at its commit leaves its partitions' new
+    generations on disk; the next read serves the committed rows only,
+    and the replay lands the batch (the inherited commit protocol,
+    re-pinned for this layout)."""
+    from ydb_cdc_processor_spark import storage
     rv = RangePartitionedView(spark, str(tmp_path / "c"),
                               keys=["day", "id"], part_col="day",
                               granularity="month")
     full = _rows(spark, 0, 300)
     rv.apply(full, action="upsertInto")
-    pid = rv.existing_partitions()[0]
-    live = os.path.join(rv.path, f"_bucket={pid}")
-    os.rename(live, os.path.join(rv.path, f".displaced-_bucket={pid}"))
-    assert _res(rv.read().select("id", "day", "val")) == _res(full)
+    rewrite = full.withColumn("val", F.lit("new"))
+    real, man = storage.replace_text, rv._manifest_path()
+
+    def crash(path, text):
+        if path == man:
+            raise RuntimeError("crash at the commit")
+        return real(path, text)
+    storage.replace_text = crash
+    try:
+        with pytest.raises(RuntimeError, match="crash at the commit"):
+            rv.apply(rewrite, action="upsertInto")
+    finally:
+        storage.replace_text = real
+    assert os.listdir(os.path.join(rv.path, "_staging"))
+    fresh = RangePartitionedView(spark, str(tmp_path / "c"),
+                                 keys=["day", "id"], part_col="day")
+    assert _res(fresh.read().select("id", "day", "val")) == _res(full)
+    fresh.apply(rewrite, action="upsertInto")
+    assert _res(fresh.read().select("id", "day", "val")) == _res(rewrite)

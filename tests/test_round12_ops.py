@@ -1,22 +1,24 @@
-"""Round-12 operators: mechanical single-maintainer enforcement
-(maintenance epochs stamped into per-bucket replay-fence tokens), the
-applied-token convergence history, and rebucket's epoch bump.
+"""Round-12 operators: replays around out-of-band maintenance, the
+applied-token convergence history, and granule re-shards.
 
 The invariant under test (round-11 judge item #1): interleaving an
-out-of-band fence-rotating maintenance op (federated ``merge_from`` /
-``rebucket``) between a micro-batch's write and its checkpoint replay
-must either CONVERGE (committed batch → applied-token history skips the
-replay) or RAISE (torn batch → MaintenanceFenceError), never silently
-double-apply.  Reference anchor: the mechanical deferred-commit
-guarantee of YqlWriter.java:181-206.
+out-of-band maintenance op (federated ``merge_from`` / ``rebucket``)
+between a micro-batch's write and its checkpoint replay must never
+double-apply or drop the batch.  A committed batch's replay is skipped
+by the applied-token history; a batch torn before its commit is
+invisible (the commit is one manifest replace), so its replay applies
+it exactly once.  Reference anchor: the deferred-commit guarantee of
+YqlWriter.java:181-206.
 """
+
+import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
+from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.agg_view import AggregateView
-from ydb_cdc_processor_spark.operators.bucketed_view import (
-    MaintenanceFenceError)
 from ydb_cdc_processor_spark.operators.distinct_view import DistinctCountView
 
 
@@ -28,19 +30,26 @@ def _counts(dv):
     return {r.g: r.n_distinct for r in dv.read().collect()}
 
 
-def _suppress_commit(view):
-    """Simulate a crash between bucket promotion and the manifest
-    commit: the per-bucket token files land, ``last_token`` /
-    ``applied_tokens`` never do.  Returns a restore callable."""
-    orig = view._write_manifest
+class _Crash(BaseException):
+    """A hard crash (no library handler swallows a BaseException)."""
 
-    def torn(last_token=None):
-        if last_token is None:
-            return orig()
-        # the crash point: buckets promoted, manifest commit lost
 
-    view._write_manifest = torn
-    return lambda: setattr(view, "_write_manifest", orig)
+@contextmanager
+def _crash_at_commit(view):
+    """The batch run inside dies at its commit point: its generations
+    are written, the manifest replace never lands."""
+    real, man = storage.replace_text, view._manifest_path()
+
+    def crash(path, text):
+        if path == man:
+            raise _Crash()
+        return real(path, text)
+    storage.replace_text = crash
+    try:
+        with pytest.raises(_Crash):
+            yield
+    finally:
+        storage.replace_text = real
 
 
 # -- committed batch + merge_from + replay → converges ------------------------
@@ -63,9 +72,11 @@ def test_merge_from_after_committed_batch_converges(spark, tmp_path):
 
 
 def test_merge_from_after_torn_batch_refuses(spark, tmp_path):
-    """The judge's exact interleave: batch promoted, manifest commit
-    lost (crash), merge_from rotates the fences, replay arrives — the
-    replay must REFUSE, not double-apply."""
+    """The judge's exact interleave: batch written, manifest commit lost
+    (crash), merge_from runs, replay arrives.  The store used to refuse
+    the replay (a per-bucket commit left part of the batch visible);
+    the torn batch is now invisible, so the replay applies it exactly
+    once over the merged state."""
     a = DistinctCountView(spark, str(tmp_path / "a"), ["g"], "v",
                           n_buckets=4)
     b = DistinctCountView(spark, str(tmp_path / "b"), ["g"], "v",
@@ -73,73 +84,63 @@ def test_merge_from_after_torn_batch_refuses(spark, tmp_path):
     a.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="t0")
     b.apply_delta(_rows(spark, [("x", "2")]), None, batch_token="s0")
 
-    restore = _suppress_commit(a.view)
-    try:
+    with _crash_at_commit(a.view):
         a.apply_delta(_rows(spark, [("x", "1"), ("x", "9")]), None,
                       batch_token="t1")   # torn: buckets promoted, no commit
-    finally:
-        restore()
 
     a.merge_from(b, batch_token="m0")     # violates the quiesce window
-    with pytest.raises(MaintenanceFenceError):
+    assert _counts(a) == {"x": 2}         # t1 invisible
+    for _ in range(2):                    # the replay, then a re-replay
         a.apply_delta(_rows(spark, [("x", "1"), ("x", "9")]), None,
-                      batch_token="t1")   # the replay
+                      batch_token="t1")
+        assert _counts(a) == {"x": 3}     # {1, 2, 9}: once
 
 
 def test_torn_batch_replay_without_merge_still_converges(spark, tmp_path):
-    """Guard: the epoch fence must not break the normal crash replay —
-    with NO interleaved maintenance op, a torn batch's replay re-applies
-    the pending buckets and converges exactly-once."""
+    """The normal crash replay: with NO interleaved maintenance op, a
+    torn batch's replay applies the whole batch exactly once."""
     a = DistinctCountView(spark, str(tmp_path / "a"), ["g"], "v",
                           n_buckets=4)
     a.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="t0")
-    restore = _suppress_commit(a.view)
-    try:
+    with _crash_at_commit(a.view):
         a.apply_delta(_rows(spark, [("x", "2"), ("y", "7")]), None,
                       batch_token="t1")
-    finally:
-        restore()
     a.apply_delta(_rows(spark, [("x", "2"), ("y", "7")]), None,
-                  batch_token="t1")       # replay: pending-only, no double
+                  batch_token="t1")       # replay: whole batch, once
     assert _counts(a) == {"x": 2, "y": 1}
 
 
 def test_untokenized_merge_from_still_fences_torn_replay(spark, tmp_path):
-    """An UN-tokenized merge_from also rotates fences (its promotion
-    replaces the bucket dirs) — the synthetic out-of-band fence must
-    make a torn batch's replay refuse all the same."""
+    """An UN-tokenized merge_from between a torn batch and its replay:
+    the replay still applies the batch exactly once (its token was
+    never recorded, and none of it was visible)."""
     a = DistinctCountView(spark, str(tmp_path / "a"), ["g"], "v",
                           n_buckets=4)
     b = DistinctCountView(spark, str(tmp_path / "b"), ["g"], "v",
                           n_buckets=4)
     b.apply_delta(_rows(spark, [("x", "2")]), None, batch_token="s0")
-    restore = _suppress_commit(a.view)
-    try:
+    with _crash_at_commit(a.view):
         a.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="t0")
-    finally:
-        restore()
     a.merge_from(b)                        # no token at all
-    with pytest.raises(MaintenanceFenceError):
-        a.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="t0")
+    assert _counts(a) == {"x": 1}
+    a.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="t0")
+    assert _counts(a) == {"x": 2}
 
 
-# -- rebucket is an epoch bump too --------------------------------------------
+# -- rebucket between a torn batch and its replay ------------------------------
 
 def test_rebucket_after_torn_batch_refuses_replay(spark, tmp_path):
     av = AggregateView(spark, str(tmp_path / "agg"), ["g"], {},
                        count_col="n", backend="bucketed", n_buckets=4)
     av.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="b0")
     store = av.store()
-    restore = _suppress_commit(store)
-    try:
+    with _crash_at_commit(store):
         av.apply_delta(_rows(spark, [("x", "2"), ("y", "3")]), None,
                        batch_token="b1")   # torn
-    finally:
-        restore()
-    store.rebucket(8)                      # rotates every fence
-    with pytest.raises(MaintenanceFenceError):
-        av.apply_delta(_rows(spark, [("x", "2"), ("y", "3")]), None,
-                       batch_token="b1")
+    store.rebucket(8)                      # rewrites every bucket
+    av.apply_delta(_rows(spark, [("x", "2"), ("y", "3")]), None,
+                   batch_token="b1")       # the replay lands once
+    assert {r.g: r.n for r in av.read().collect()} == {"x": 2, "y": 1}
 
 
 def test_rebucket_after_committed_batch_replay_noop(spark, tmp_path):
@@ -168,11 +169,7 @@ def test_epoch_and_token_stamps(spark, tmp_path):
     b.apply_delta(_rows(spark, [("x", "2")]), None, batch_token="s0")
     a.merge_from(b, batch_token="m0")
     assert a.view.maintenance_epoch() == 1   # out-of-band bumped
-    # the merge's buckets are stamped at the new epoch
-    stamped = [a.view.bucket_token_epoch(bkt)
-               for bkt in range(4)
-               if a.view.bucket_token_epoch(bkt)[0] is not None]
-    assert stamped and all(e == 1 for _, e in stamped)
+    assert a.view.applied_tokens() == ["t0", "m0"]
 
 
 def test_flat_backend_token_history_skips_replay(spark, tmp_path):
@@ -190,20 +187,6 @@ def test_flat_backend_token_history_skips_replay(spark, tmp_path):
     av.apply_delta(rows, None, batch_token="t0")   # replay after merge
     got = {r.g: (r.n, r.s) for r in av.read().collect()}
     assert got == {"a": (3, 13.0), "b": (1, 5.0)}
-
-
-def test_compact_preserves_token_epoch(spark, tmp_path):
-    a = DistinctCountView(spark, str(tmp_path / "a"), ["g"], "v",
-                          n_buckets=2)
-    b = DistinctCountView(spark, str(tmp_path / "b"), ["g"], "v",
-                          n_buckets=2)
-    b.apply_delta(_rows(spark, [("x", "2")]), None, batch_token="s0")
-    a.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="t0")
-    a.merge_from(b, batch_token="m0")      # stamps epoch 1
-    before = {bkt: a.view.bucket_token_epoch(bkt) for bkt in range(2)}
-    a.view.compact(max_files_per_bucket=0)  # force a physical rewrite
-    after = {bkt: a.view.bucket_token_epoch(bkt) for bkt in range(2)}
-    assert after == before
 
 
 # -- granule-local re-shard (round-11 judge item #2) ---------------------------
@@ -241,37 +224,35 @@ def test_reshard_granule_locality_and_parity(spark, tmp_path):
 
     hot = "2024-01-03"
     pid = rv.partition_id(hot)
-    before_dirs = set(rv._existing_bucket_ids())
+    before_dirs = set(rv.bucket_ids())
     n = rv.reshard_granule(hot, 16)
     assert n == rv.granule_n_sub(pid) == 16 > 4
     assert _res(rv.read()) == _res(fv.read())          # parity after reshard
     # the hot day now serves from its alloc block; old composed ids gone
-    hot_ids = [b for b in rv._existing_bucket_ids()
-               if rv._id_to_pid(b) == pid]
+    hot_ids = [b for b in rv.bucket_ids() if rv._id_to_pid(b) == pid]
     assert all(b >= ALLOC_BASE for b in hot_ids)
-    assert not any(b // 4 == pid for b in rv._existing_bucket_ids()
+    assert not any(b // 4 == pid for b in rv.bucket_ids()
                    if b < ALLOC_BASE)
-    # other days' directories are untouched (O(granule) rewrite)
+    # other days' buckets are untouched (O(granule) rewrite)
     others = {b for b in before_dirs if b // 4 != pid}
-    assert others <= set(rv._existing_bucket_ids())
+    assert others <= set(rv.bucket_ids())
 
     # a single-day merge lists only the NEW sub-buckets of the hot day
     delta = _day_rows(spark, 0, 500, "hot").where(
         _F.col("day") == _F.lit(hot).cast("date")).limit(5)
     delta = spark.createDataFrame(delta.collect(), b1.schema)
     touched_lists = []
-    orig = rv._overwrite_touched
+    orig = rv._commit
 
-    def spy(merged, touched, token=None, pre_promote=None, token_epoch=0):
-        touched_lists.append(sorted(touched))
-        return orig(merged, touched, token=token, pre_promote=pre_promote,
-                    token_epoch=token_epoch)
+    def spy(rows, buckets, **kw):
+        touched_lists.append(sorted(buckets))
+        return orig(rows, buckets, **kw)
 
-    rv._overwrite_touched = spy
+    rv._commit = spy
     try:
         rv.apply(delta, action="upsertInto")
     finally:
-        rv._overwrite_touched = orig
+        rv._commit = orig
     fv.apply(delta, action="upsertInto")
     assert touched_lists and all(
         ALLOC_BASE <= b and rv._id_to_pid(b) == pid
@@ -307,7 +288,7 @@ def test_reshard_is_layout_metadata_and_guards(spark, tmp_path):
     assert _res(reopened.read()) == _res(rv.read())
     with pytest.raises(ValueError, match="only raises"):
         rv.reshard_granule("2024-01-02", 4)
-    # epoch bumped: the re-shard rotated the granule's fences
+    # counted as out-of-band maintenance
     assert rv.maintenance_epoch() >= 1
     # re-split allocates a fresh block and retires the old one
     old_alloc = rv._splits()[pid]["alloc"]
@@ -317,9 +298,9 @@ def test_reshard_is_layout_metadata_and_guards(spark, tmp_path):
 
 
 def test_reshard_crash_before_commit_serves_old_layout(spark, tmp_path):
-    """The manifest flip is the commit point: a crash after staging
-    leaves the old layout serving (staged block invisible), and a
-    re-run resumes the SAME allocation and completes."""
+    """The manifest replace is the commit point: a crash after staging
+    leaves the old layout serving (staged block invisible, no split
+    recorded), a re-run completes, and maintain() removes the strays."""
     rv = RangePartitionedView(spark, str(tmp_path / "rv"),
                               keys=["day", "id"], part_col="day",
                               granularity="day", n_sub=4)
@@ -327,39 +308,39 @@ def test_reshard_crash_before_commit_serves_old_layout(spark, tmp_path):
     rv.apply(full, action="upsertInto")
     want = _res(rv.read())
 
-    calls = {"n": 0}
-    orig = rv._mutate_manifest
+    real, man = storage.replace_text, rv._manifest_path()
 
-    def crash_on_commit(fn):
-        calls["n"] += 1
-        if calls["n"] == 2:     # 1 = reserve, 2 = commit
+    def crash_on_commit(path, text):
+        if path == man:
             raise RuntimeError("simulated crash before commit")
-        return orig(fn)
+        return real(path, text)
 
-    rv._mutate_manifest = crash_on_commit
+    storage.replace_text = crash_on_commit
     try:
         with pytest.raises(RuntimeError, match="simulated crash"):
             rv.reshard_granule("2024-01-04", 16)
     finally:
-        rv._mutate_manifest = orig
+        storage.replace_text = real
 
     pid = rv.partition_id("2024-01-04")
-    assert pid in rv._pending_splits() and pid not in rv._splits()
+    assert pid not in rv._splits()
     assert _res(rv.read()) == want            # old layout still serves
     assert rv.granule_n_sub(pid) == 4
 
-    alloc = rv._pending_splits()[pid]["alloc"]
-    rv.reshard_granule("2024-01-04", 16)      # resume
-    assert rv._splits()[pid] == {"alloc": alloc, "n_sub": 16}
+    rv.reshard_granule("2024-01-04", 16)      # re-run
+    assert rv._splits()[pid]["n_sub"] == 16
     assert _res(rv.read()) == want
-    # maintain() after the fact leaves the layout clean (no dead dirs)
+    # maintain() after the fact removes the crashed attempt's strays
     rv.maintain()
     assert _res(rv.read()) == want
+    on_disk = [g for e in os.listdir(rv.path) if e.startswith("_bucket=")
+               for g in os.listdir(os.path.join(rv.path, e))]
+    assert len(on_disk) == len(rv.bucket_ids())
 
 
 def test_reshard_with_retention_and_drop(spark, tmp_path):
     """drop_range interacts correctly with a re-sharded granule: the
-    block's directories expire with their granule."""
+    block's buckets expire with their granule."""
     rv = RangePartitionedView(spark, str(tmp_path / "rv"),
                               keys=["day", "id"], part_col="day",
                               granularity="day", n_sub=2)
@@ -371,8 +352,7 @@ def test_reshard_with_retention_and_drop(spark, tmp_path):
     exp = _res(full.where(_F.col("day") >= "2024-01-03"))
     assert got == exp
     pid = rv.partition_id("2024-01-02")
-    assert not any(rv._id_to_pid(b) == pid
-                   for b in rv._existing_bucket_ids())
+    assert not any(rv._id_to_pid(b) == pid for b in rv.bucket_ids())
 
 
 # -- flat-target old-image guard (round-11 judge item #4) ----------------------

@@ -3,12 +3,17 @@ advisor, high — natural directory ids past 2^28 on numeric-width
 granularities must stay LIVE, never swept), and the epoch fence
 extended to the index-family federation merges (round-12 judge item #1
 — TextIndex/VectorIndex replays after a merge_from must converge or
-refuse, never double-apply).
+refuse, never double-apply).  A bucketed store's batch torn before its
+commit is invisible, so its replay applies it exactly once.
 """
+
+import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
+from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.bucketed_view import (
     MaintenanceFenceError)
 from ydb_cdc_processor_spark.operators.range_view import (
@@ -33,20 +38,20 @@ def _res(df):
 def test_numeric_width_huge_ids_survive_housekeeping(spark, tmp_path):
     """The advisor's data-loss scenario: a numeric-width store whose
     composed ids exceed ALLOC_BASE must read, range-prune, retain and
-    maintain() without classifying anything dead."""
+    maintain() without losing a row."""
     rv = RangePartitionedView(spark, str(tmp_path / "rv"),
                               keys=["ts", "id"], part_col="ts",
                               granularity=3600, n_sub=1024)
     rows = _sec_rows(spark, 0, 60)
     rv.apply(rows, action="upsertInto")
-    ids = rv._existing_bucket_ids()
+    ids = rv.bucket_ids()
     assert ids and all(b >= ALLOC_BASE for b in ids)   # the hazard domain
     assert _res(rv.read().select("id", "ts", "val")) == _res(rows)
-    # every live id maps to its granule, none is dead
+    # every live id maps to its own granule
     lay = rv._layout()
-    assert all(rv._id_to_pid(b, lay) is not None for b in ids)
-    assert rv._sweep_dead() == 0
-    rv.maintain()                                      # sweep + compaction
+    assert all(rv._id_to_pid(b, lay) == b // 1024 for b in ids)
+    assert rv.vacuum() == 0
+    rv.maintain()                                      # GC + compaction
     assert _res(rv.read().select("id", "ts", "val")) == _res(rows)
     assert set(rv.existing_partitions()) == {
         rv.partition_id(1_770_000_000 + j * 3600) for j in range(5)}
@@ -93,7 +98,7 @@ def test_calendar_oversized_n_sub_refuses_reshard(spark, tmp_path):
     assert ok.reshard_supported()
 
 
-# -- aged-out token history (round-12 advisor: the 16-entry bound) -------------
+# -- torn batches replay once (round-12 advisor: the 16-entry bound) ----------
 
 from ydb_cdc_processor_spark.operators.distinct_view import (  # noqa: E402
     DistinctCountView)
@@ -103,74 +108,42 @@ def _rows(spark, pairs):
     return spark.createDataFrame(pairs, "g string, v string")
 
 
-def _suppress_commit(view):
-    orig = view._write_manifest
-
-    def torn(last_token=None):
-        if last_token is None:
-            return orig()
-
-    view._write_manifest = torn
-    return lambda: setattr(view, "_write_manifest", orig)
+class _Crash(BaseException):
+    """A hard crash (no library handler swallows a BaseException)."""
 
 
-def _age_out_token(view, token):
-    """Simulate the bounded token_epochs history evicting ``token``
-    (16+ later tokenized merges before the replay arrives)."""
-    def mutate(doc):
-        (doc.get("token_epochs") or {}).pop(token, None)
-    view._mutate_manifest(mutate)
+@contextmanager
+def _crash_at_commit(view):
+    """The batch run inside dies at its commit point: its generations
+    are written, the manifest replace never lands."""
+    real, man = storage.replace_text, view._manifest_path()
 
-
-def test_aged_out_torn_token_refuses_after_merge(spark, tmp_path):
-    """A torn batch whose token_epochs record aged out leaves only the
-    physical signature (buckets promoted under its token, no manifest
-    record); when the out-of-band merge did NOT re-promote all of them,
-    that evidence must make the replay REFUSE — the old code
-    re-recorded the token under the CURRENT epoch, the epoch-gap test
-    then passed, and the delta double-applied.  (When the merge
-    re-promotes EVERY torn bucket no evidence remains — the documented
-    TOKEN_HISTORY limit of the guarantee.)"""
-    a = DistinctCountView(spark, str(tmp_path / "a"), ["g"], "v",
-                          n_buckets=8)
-    b = DistinctCountView(spark, str(tmp_path / "b"), ["g"], "v",
-                          n_buckets=8)
-    a.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="t0")
-    b.apply_delta(_rows(spark, [("x", "2")]), None, batch_token="s0")
-    restore = _suppress_commit(a.view)
+    def crash(path, text):
+        if path == man:
+            raise _Crash()
+        return real(path, text)
+    storage.replace_text = crash
     try:
-        # torn batch spans groups so at least one of its buckets is NOT
-        # re-promoted by the x-only merge below (evidence survives)
-        torn = [(g, v) for g in
-                ("x", "z0", "z1", "z2", "z3", "z4", "z5", "z6", "z7")
-                for v in ("1", "9")]
-        a.apply_delta(_rows(spark, torn), None, batch_token="t1")
+        with pytest.raises(_Crash):
+            yield
     finally:
-        restore()
-    _age_out_token(a.view, "t1")             # 16+ merges later...
-    a.merge_from(b, batch_token="m0")        # fence rotation
-    with pytest.raises(MaintenanceFenceError, match="aged out"):
-        a.apply_delta(_rows(spark, torn), None,
-                      batch_token="t1")      # the ancient replay
+        storage.replace_text = real
 
 
 def test_aged_out_torn_token_without_epoch_history_converges(spark,
                                                              tmp_path):
-    """Guard: with NO out-of-band history (epoch 0) an aged-out torn
-    replay is the normal convergent crash replay — it must re-apply
-    the pending buckets, not refuse."""
+    """A torn batch leaves no record at all (aged out or not), and no
+    out-of-band history (epoch 0): its replay is the normal crash
+    replay and applies the whole batch once, never refused."""
     a = DistinctCountView(spark, str(tmp_path / "a"), ["g"], "v",
                           n_buckets=4)
     a.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="t0")
-    restore = _suppress_commit(a.view)
-    try:
+    with _crash_at_commit(a.view):
         a.apply_delta(_rows(spark, [("x", "2"), ("y", "7")]), None,
                       batch_token="t1")
-    finally:
-        restore()
-    _age_out_token(a.view, "t1")
+    assert "t1" not in a.view.applied_tokens()
     a.apply_delta(_rows(spark, [("x", "2"), ("y", "7")]), None,
-                  batch_token="t1")          # replay: pending-only
+                  batch_token="t1")          # replay: whole batch
     got = {r.g: r.n_distinct for r in a.read().collect()}
     assert got == {"x": 2, "y": 1}
 
@@ -317,22 +290,24 @@ def _vectors(spark, ids):
 
 def test_vector_index_merge_after_torn_add_batch_refuses(spark, tmp_path):
     """VectorIndex half of the judge's bar: a tokenized add_batch torn
-    mid-promotion, then a federation merge_from, then the replay — the
-    replay must refuse via the epoch fence (merge_from is out-of-band
-    now), not silently re-upsert over merged-in state."""
+    before its commit, then a federation merge_from, then the replay.
+    The store used to refuse it (part of the batch could be visible);
+    the torn batch is now invisible, so the replay lands it exactly
+    once and the index serves the union."""
     a = VectorIndex(spark, str(tmp_path / "a"), n_cells=4, n_buckets=4)
     a.build(_vectors(spark, range(20)))
     b = a.clone_empty(str(tmp_path / "b"))
     b.add_batch(_vectors(spark, range(100, 110)), batch_token="sb0")
 
-    restore = _suppress_commit(a.view)
-    try:
+    with _crash_at_commit(a.view):
         a.add_batch(_vectors(spark, range(30, 40)), batch_token="t1")
-    finally:
-        restore()
     a.merge_from(b, batch_token="m0")      # violates the quiesce window
-    with pytest.raises(MaintenanceFenceError):
+    assert a.view.read().count() == 30     # t1 invisible
+    for _ in range(2):                     # the replay, then a re-replay
         a.add_batch(_vectors(spark, range(30, 40)), batch_token="t1")
+    ids = [r.vec_id for r in a.view.read().select("vec_id").collect()]
+    assert sorted(ids) == sorted(set(range(20)) | set(range(30, 40))
+                                 | set(range(100, 110)))
 
 
 def test_vector_index_merge_after_committed_add_batch_converges(
@@ -357,9 +332,10 @@ def test_two_engine_federation_epoch_refusal(spark, sf_dir, tmp_path):
     """The composed lifecycle behind q_distinct_two_engine_federated,
     with the failure path asserted: two CdcStreamEngines each maintain
     a shard of one logical COUNT(DISTINCT) from their own changefeed;
-    a batch TORN between shard A's quiesce and the federation merge
-    must make the replay refuse (epoch fence), while the committed
-    stream batches replay as no-ops."""
+    a batch TORN between shard A's quiesce and the federation merge is
+    invisible, so its replay after the merge lands it exactly once (it
+    used to be refused) and the merged serve equals COUNT(DISTINCT)
+    over the union."""
     from pyspark.sql import types as T
 
     from ydb_cdc_processor_spark.plans.pipeline import CdcPipeline
@@ -402,20 +378,22 @@ def test_two_engine_federation_epoch_refusal(spark, sf_dir, tmp_path):
     a, b = shards["a"], shards["b"]
     # a maintenance batch tears between quiesce and the merge
     torn = ords.where(key % 2 == 0).limit(5).localCheckpoint(eager=True)
-    restore = _suppress_commit(a.view)
-    try:
+    with _crash_at_commit(a.view):
         a.apply_delta(torn.withColumn("o_custkey", F.lit(999_999)),
                       torn, batch_token="torn1")
-    finally:
-        restore()
     a.merge_from(b, batch_token="fed:union")   # the out-of-band merge
-    with pytest.raises(MaintenanceFenceError):
+    for _ in range(2):                         # the replay, then again
         a.apply_delta(torn.withColumn("o_custkey", F.lit(999_999)),
                       torn, batch_token="torn1")
-    # the merged serve equals plain COUNT(DISTINCT) over the union —
-    # shard A's counts still reflect the torn batch's promoted buckets,
-    # so recovery is recompute; here we assert the SHAPE of the refusal
-    # (no silent double-apply), which is the fence's whole contract
+    final = (ords.join(torn.select("o_orderkey", F.lit(1).alias("_t")),
+                       on="o_orderkey", how="left")
+             .withColumn("o_custkey", F.when(F.col("_t").isNotNull(),
+                                             F.lit(999_999))
+                         .otherwise(F.col("o_custkey"))))
+    want = {r[0]: r[1] for r in final.groupBy("o_orderpriority").agg(
+        F.countDistinct("o_custkey")).collect()}
+    assert {r.o_orderpriority: r.n_distinct
+            for r in a.read().collect()} == want
     assert a.view.maintenance_epoch() >= 1
 
 

@@ -27,6 +27,7 @@ import tempfile
 
 import pytest
 
+from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.bucketed_view import (
     MaintenanceFenceError, bump_seq_hwm, token_sequence)
 from ydb_cdc_processor_spark.operators.distinct_view import DistinctCountView
@@ -118,14 +119,19 @@ def test_torn_replay_still_converges_on_bucketed(spark, tmp_path):
     dv = DistinctCountView(spark, str(tmp_path / "dv"), ["g"], "v",
                            n_buckets=2)
     dv.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="s:0")
-    orig = dv.view._write_manifest
-    dv.view._write_manifest = (
-        lambda last_token=None: orig() if last_token is None else None)
+    real, man = storage.replace_text, dv.view._manifest_path()
+
+    def crash(path, text):
+        if path == man:
+            raise RuntimeError("crash at the commit")
+        return real(path, text)
+    storage.replace_text = crash
     try:
-        dv.apply_delta(_rows(spark, [("x", "2"), ("y", "7")]), None,
-                       batch_token="s:1")   # tears before the commit
+        with pytest.raises(RuntimeError, match="crash at the commit"):
+            dv.apply_delta(_rows(spark, [("x", "2"), ("y", "7")]), None,
+                           batch_token="s:1")   # tears before the commit
     finally:
-        dv.view._write_manifest = orig
+        storage.replace_text = real
     _age_out(dv.view, "s:1")                # even with the record gone
     dv.apply_delta(_rows(spark, [("x", "2"), ("y", "7")]), None,
                    batch_token="s:1")       # replay converges
@@ -215,39 +221,6 @@ def test_text_federated_merge_still_green_with_hwm(spark, tmp_path):
     a.merge_from(b, batch_token="fed")
     assert a.recompute_check(_docs(spark, [(1, "alpha beta beta"),
                                            (2, "alpha gamma")]))
-
-
-def test_aged_out_torn_replay_converges_when_stamps_prove_no_rotation(
-        spark, tmp_path):
-    """Round-13 advisor refinement: the conservative aged-out refusal
-    used to fire whenever the store had ANY maintenance history, even
-    when the only rotation predates the torn batch.  The torn batch's
-    own bucket stamps carry its start epoch; when every stamp equals
-    the CURRENT epoch, no rotation interleaved and the replay converges
-    on the pending remainder instead of refusing permanently."""
-    a = DistinctCountView(spark, str(tmp_path / "a"), ["g"], "v",
-                          n_buckets=8)
-    b = DistinctCountView(spark, str(tmp_path / "b"), ["g"], "v",
-                          n_buckets=8)
-    a.apply_delta(_rows(spark, [("x", "1")]), None, batch_token="tA")
-    b.apply_delta(_rows(spark, [("x", "2")]), None, batch_token="tB")
-    a.merge_from(b, batch_token="mA")        # history: epoch now > 0
-    orig = a.view._write_manifest
-    a.view._write_manifest = (
-        lambda last_token=None: orig() if last_token is None else None)
-    try:
-        torn = [(g, v) for g in ("x", "z0", "z1", "z2", "z3", "z4")
-                for v in ("1", "9")]
-        a.apply_delta(_rows(spark, torn), None, batch_token="tC")
-    finally:
-        a.view._write_manifest = orig
-    _age_out(a.view, "tC")
-    # replay AFTER the rotation that PREDATES the torn batch: stamps
-    # prove no rotation interleaved → converge (used to refuse)
-    a.apply_delta(_rows(spark, torn), None, batch_token="tC")
-    got = {r.g: r.n_distinct for r in a.read().collect()}
-    want = {"x": 3, **{f"z{i}": 2 for i in range(5)}}
-    assert got == want
 
 
 # -- property test: the fence state machine (round-13 judge item #4) ----------

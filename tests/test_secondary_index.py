@@ -393,9 +393,10 @@ def test_filtered_read_of_widened_store_matches_spark(spark, tmp_path):
 def test_lookup_after_torn_rebucket_routes_by_restored_layout(
         spark, tmp_path, monkeypatch):
     """A handle opened at 4 buckets; another handle rebuckets to 8, then
-    crashes between the two renames of a rebucket to 16.  The old
-    handle's lookup restores the 8-bucket layout and must route its
-    probes by it, not by the 4 buckets it last saw."""
+    crashes at the commit of a rebucket to 16 (its 16-bucket generations
+    are on disk, the manifest still says 8).  The old handle's lookup
+    must route its probes by the committed 8-bucket layout, not by the 4
+    buckets it last saw nor by the uncommitted 16."""
     from ydb_cdc_processor_spark import storage
 
     ix = _ix(spark, tmp_path, n_buckets=4)
@@ -407,18 +408,18 @@ def test_lookup_after_torn_rebucket_routes_by_restored_layout(
     class Killed(BaseException):
         pass
 
-    real = storage.rename
+    real = storage.replace_text
 
-    def rename(src, dst):
-        if dst == other.view.path:
+    def replace_text(path, text):
+        if path == other.view._manifest_path():
             raise Killed()
-        real(src, dst)
+        real(path, text)
 
-    monkeypatch.setattr(storage, "rename", rename)
+    monkeypatch.setattr(storage, "replace_text", replace_text)
     with pytest.raises(Killed):
         other.view.rebucket(16)
-    monkeypatch.setattr(storage, "rename", real)
-    assert not (tmp_path / "ix" / "entries").exists()
+    monkeypatch.setattr(storage, "replace_text", real)
+    assert (tmp_path / "ix" / "entries" / "_bucket=15").exists()
 
     values = [f"s{j}" for j in range(40)]
     got = ix.lookup(values).collect()

@@ -19,6 +19,28 @@ def _res(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+class _Crash(BaseException):
+    """A hard crash (no library handler swallows a BaseException)."""
+
+
+def _torn_add_batch(idx, vectors):
+    """add_batch dying at the commit point: the batch's generations are
+    written and staged, the list manifest is never replaced."""
+    from ydb_cdc_processor_spark import storage
+    real, man = storage.replace_text, idx.view._manifest_path()
+
+    def boom(path, text):
+        if path == man:
+            raise _Crash()
+        return real(path, text)
+    storage.replace_text = boom
+    try:
+        with pytest.raises(_Crash):
+            idx.add_batch(vectors, batch_token="torn:0")
+    finally:
+        storage.replace_text = real
+
+
 def test_incremental_add_equals_oneshot_build(spark, emb, tmp_path):
     """build(subset) + add_batch(rest) must serve the identical results
     as build(subset) with the rest ingested in the same build — the
@@ -85,28 +107,17 @@ def test_remove_batch_deletes_and_is_idempotent(spark, emb, tmp_path):
 
 
 def test_vector_index_query_after_torn_ingest(spark, emb, tmp_path):
-    """A crash between add_batch's two promotion renames leaves a bucket
-    displaced; a pure-read query() on restart must repair it first —
-    otherwise every vector in that bucket silently vanishes."""
-    import os
-
-    from ydb_cdc_processor_spark.operators.bucketed_view import (
-        BUCKET_COL, DISPLACED_PREFIX)
-
+    """A crash at add_batch's commit leaves a new generation in EVERY
+    bucket and a staged batch on disk; a pure-read query() on restart
+    must serve exactly the committed lists — no stray vector appears,
+    none vanishes."""
     idx = VectorIndex(spark, str(tmp_path / "torn"), n_cells=8,
                       n_buckets=4)
     idx.build(emb)
     probes = emb.where(F.col("vec_id") % 100 == 0) \
         .select(F.col("vec_id").alias("probe_id"), "embedding")
     expected = _res(idx.query(probes, k=5, n_probe=8))
-
-    # tear EVERY bucket mid-promotion: live dir renamed aside, no
-    # replacement yet (the displaced copy is the pre-crash bucket)
-    lists = idx.view.path
-    for e in list(os.listdir(lists)):
-        if e.startswith(f"{BUCKET_COL}="):
-            os.rename(os.path.join(lists, e),
-                      os.path.join(lists, f"{DISPLACED_PREFIX}{e}"))
+    _torn_add_batch(idx, emb.withColumn("vec_id", F.col("vec_id") + 10 ** 6))
 
     idx2 = VectorIndex(spark, str(tmp_path / "torn"), n_cells=8,
                        n_buckets=4)
@@ -571,26 +582,21 @@ def test_merge_from_shards_pq_mode(spark, emb, tmp_path):
 
 
 def test_clone_empty_skips_torn_donor_state(spark, emb, tmp_path):
-    """clone_empty must not ship crash-torn donor leftovers: a
-    '.displaced-_bucket=N' dir would be promoted into live list data by
-    the clone's first recover(), seeding the 'empty' shard with the
-    donor's vectors (review finding); _SUCCESS must not make the empty
-    clone report exists()."""
+    """clone_empty must not ship crash-torn donor leftovers: a stray
+    staged batch (or a generation nothing names) copied along would
+    seed the 'empty' shard with the donor's vectors (review finding),
+    and the donor's list pointers must not make the empty clone report
+    exists()."""
     import os
-    import shutil
 
     a = VectorIndex(spark, str(tmp_path / "donor"), n_cells=8)
     a.build(emb.where(F.col("vec_id") % 2 == 0))
-    lists = a.view.path
-    live = [e for e in os.listdir(lists) if e.startswith("_bucket=")]
-    # simulate a mid-promotion crash: one bucket displaced aside
-    shutil.copytree(os.path.join(lists, live[0]),
-                    os.path.join(lists, f".displaced-{live[0]}"))
+    live = a.view.read().count()
+    _torn_add_batch(a, emb.where(F.col("vec_id") % 2 == 1))
+    assert os.listdir(os.path.join(a.view.path, "_staging"))
     b = a.clone_empty(str(tmp_path / "shard"))
     entries = os.listdir(b.view.path)
     assert not any(e.startswith((".", "_bucket=")) for e in entries)
-    assert "_SUCCESS" not in entries
+    assert "_staging" not in entries
     assert not b.view.exists()
-    # donor itself was recovered (displaced dir healed, not leaked)
-    assert not any(e.startswith(".displaced-")
-                   for e in os.listdir(lists))
+    assert a.view.read().count() == live    # the donor is unchanged

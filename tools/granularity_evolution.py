@@ -41,8 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from ydb_cdc_processor_spark.operators.bucketed_view import (  # noqa: E402
-    BUCKET_COL)
 from ydb_cdc_processor_spark.operators.range_view import (  # noqa: E402
     RangePartitionedView)
 from ydb_cdc_processor_spark.session import get_spark  # noqa: E402
@@ -65,15 +63,11 @@ def _rows(spark, n: int):
 def _range_bytes(rv, lo, hi) -> tuple[int, int]:
     """(dirs, bytes) the pruned read of [lo, hi] touches."""
     lay = rv._layout()
-    ids = [b for b in rv._existing_bucket_ids()
-           if (p := rv._id_to_pid(b, lay)) is not None
-           and rv.partition_id(lo) <= p <= rv.partition_id(hi)]
-    total = 0
-    for b in ids:
-        d = os.path.join(rv.path, f"{BUCKET_COL}={b}")
-        total += sum(os.path.getsize(os.path.join(d, f))
-                     for f in os.listdir(d)
-                     if not f.startswith((".", "_")))
+    ids = [b for b in rv.bucket_ids()
+           if rv.partition_id(lo) <= rv._id_to_pid(b, lay)
+           <= rv.partition_id(hi)]
+    total = sum(os.path.getsize(f)
+                for files in rv.bucket_files(ids).values() for f in files)
     return len(ids), total
 
 

@@ -90,14 +90,10 @@ def main() -> None:
                 # batch reads and rewrites), from file metadata
                 touched = [r[0] for r in batch.select(
                     mv.bucket_expr().alias("b")).distinct().collect()]
-                touched_bytes = 0
-                for b in touched:
-                    d = os.path.join(path, f"_bucket={b}")
-                    if os.path.isdir(d):
-                        touched_bytes += sum(
-                            os.path.getsize(os.path.join(d, fn))
-                            for fn in os.listdir(d)
-                            if not fn.startswith((".", "_")))
+                touched_bytes = sum(
+                    os.path.getsize(f)
+                    for files in mv.bucket_files(touched).values()
+                    for f in files)
                 mv.apply(batch, small_delta=True)       # warm
                 samples = []
                 for _ in range(3):

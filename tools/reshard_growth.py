@@ -36,8 +36,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from ydb_cdc_processor_spark.operators.bucketed_view import (  # noqa: E402
-    BUCKET_COL)
 from ydb_cdc_processor_spark.operators.range_view import (  # noqa: E402
     RangePartitionedView)
 from ydb_cdc_processor_spark.session import get_spark  # noqa: E402
@@ -62,13 +60,8 @@ def _rows(spark, n_hot: int):
 def _touched_bytes(rv, batch) -> tuple[int, int]:
     ids = sorted({r[0] for r in batch.select(
         rv.bucket_expr().alias("b")).distinct().collect()})
-    total = 0
-    for b in ids:
-        d = os.path.join(rv.path, f"{BUCKET_COL}={b}")
-        if os.path.isdir(d):
-            total += sum(os.path.getsize(os.path.join(d, f))
-                         for f in os.listdir(d)
-                         if not f.startswith((".", "_")))
+    total = sum(os.path.getsize(f)
+                for files in rv.bucket_files(ids).values() for f in files)
     return len(ids), total
 
 

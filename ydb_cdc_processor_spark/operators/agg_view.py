@@ -103,10 +103,11 @@ class AggregateView:
       bucketed_view.BucketedMaterializedView` hash-partitioned on the
       group columns — per-batch cost O(delta + touched buckets), the
       bounded-maintenance shape a 10⁷+-group rollup (per-URL-domain
-      stats over a web corpus) needs.  The replay fence is PER-BUCKET
-      (token promoted atomically with each bucket), so exactly-once
-      holds even across a crash mid-promotion; bucket-count evolution
-      (``rebucket``/``maybe_rebucket``) re-seeds the fence.
+      stats over a web corpus) needs.  The batch token is recorded in
+      the same manifest replace that publishes the batch, so
+      exactly-once holds across a crash anywhere in the write; bucket-
+      count evolution (``rebucket``/``maybe_rebucket``) keeps the
+      token history.
     """
 
     #: compact-rollup guard (flat backend only): warn when the rollup's
@@ -217,10 +218,10 @@ class AggregateView:
         idempotent per key, but ±contribution deltas are NOT — re-applying
         one double-counts.  Flat backend: the token is persisted atomically
         WITH the rollup swap (overwrite ``meta``) and a matching delta is
-        skipped whole.  Bucketed backend: the token promotes atomically
-        with EACH touched bucket, so a replay after a crash mid-promotion
-        re-applies only the un-promoted buckets — still exactly-once,
-        without a view-wide atomic swap.
+        skipped whole.  Bucketed backend: the token commits in the same
+        manifest replace as the touched buckets, so a replay after a
+        crash re-applies the whole (invisible) batch once — still
+        exactly-once, without a view-wide rewrite.
         """
         parts = []
         if new_rows is not None:
@@ -355,7 +356,7 @@ class AggregateView:
         (counts and decimal sums are linear, so the merged state equals
         the one-shot rollup of the union; the HllView.merge_from
         argument, but for a non-idempotent monoid — pass ``batch_token``
-        when the caller may replay, the per-bucket fence applies).
+        when the caller may replay, the batch-token fence applies).
 
         ``rollup`` must be shaped like this view's own state: another
         shard's ``store().read()``, or any frame carrying the group
@@ -363,17 +364,13 @@ class AggregateView:
         plus their ``_nn_*`` non-null counters.  Cost: one
         touched-bucket merge, O(|rollup|) — raw shard data never moves.
 
-        Single-maintainer window — MECHANICALLY ENFORCED (round-12): run
-        ONLY between COMMITTED batches of any live feed.  The merge
-        promotes the touched buckets under ITS token, rotating each
-        bucket's replay-fence file; on the bucketed backend it also
-        bumps the store's maintenance epoch, so a replay of a torn
-        (never-committed) feed batch refuses with
-        :class:`~ydb_cdc_processor_spark.operators.bucketed_view.
-        MaintenanceFenceError` instead of silently double-applying,
-        while a replay of a COMMITTED batch converges via the
-        applied-token history.  (Flat backend: the swap is view-wide
-        atomic, so the bounded token history alone closes the window.)"""
+        Run between committed batches of any live feed.  On the
+        bucketed backend the merge is one out-of-band commit (it bumps
+        the store's ``epoch`` counter): a replay of a COMMITTED feed
+        batch is skipped by the applied-token history, and a torn one
+        was never visible, so it applies once.  (Flat backend: the swap
+        is view-wide atomic, so the bounded token history alone closes
+        the window.)"""
         need = [*self.group_cols, self.count_col]
         for out in self.sum_cols:
             need += [out, self._nn(out)]

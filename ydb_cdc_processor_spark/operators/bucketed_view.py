@@ -4,40 +4,52 @@
 rewrites the whole directory per batch: O(|view|) work for a 1000-row
 micro-batch (XmlConfig.java:18 default), which cannot survive a 100 TB
 view.  This variant hash-partitions the view by PK into ``n_buckets``
-directory partitions (``_bucket = pmod(xxhash64(pk...), n)``) so a batch:
+partitions (``_bucket = pmod(xxhash64(pk...), n)``) so a batch:
 
 1. computes the distinct buckets its keys touch — at most
    ``min(|delta|, n_buckets)``;
-2. reads ONLY those partitions — by DIRECT directory path, not a
-   filtered full-table scan: planning lists O(touched) directories, not
-   O(n_buckets) (the SCALING.md residual — at n_buckets ≈ 10⁴-10⁵ the
-   directory listing itself dominated per-batch time);
-3. merges and rewrites ONLY those partitions — written to a temp
-   sibling (the merge plan still lazily reads the old files, so ONE
-   materialization and no checkpoint) and promoted by per-bucket
-   rename, with emptied partitions dropped in the same pass.
+2. reads ONLY those buckets, by direct path planned from the manifest —
+   never a listing of all ``n_buckets`` partitions;
+3. merges and rewrites ONLY those buckets.
 
-Per-batch cost drops from O(|view|) to O(touched_buckets × bucket_size):
-with the default 1000-row batch and 1024 buckets over a 100 TB view,
-~1/1024th of the table is read and rewritten instead of all of it.  The
-same layout co-locates future PK merges and joins (bucket ≙ a fixed hash
-partitioning reused across batches).
+Per-batch cost drops from O(|view|) to O(touched_buckets × bucket_size).
 
-Bucket-count evolution (SCALING.md deployment rule: n_buckets ∝ |view| —
-a FIXED count degrades back toward O(|view|) per batch as the view
-grows): the count lives in a ``_buckets.json`` manifest next to the
-data, so every instance agrees on the on-disk layout, and
-:meth:`rebucket` rewrites the view at a new count (one full rewrite,
-amortized over the growth that triggered it).  :meth:`maybe_rebucket`
-applies the documented trigger — mean bucket size, measured from file
-metadata only (no Spark scan), exceeding ``target_bucket_bytes × 4``.
+Layout and commit protocol (one for every write path)::
 
-Delivery semantics match the flat view: merges are idempotent per key, so
-checkpoint replay after a mid-write crash converges (a torn dynamic
-overwrite is repaired by the replay rewriting the same buckets).  The
-touched-bucket read probes the filesystem per touched bucket, so a
-crash-torn state (bucket directory present/absent vs any cached
-expectation) is always re-observed, never assumed.
+    <path>/_buckets.json                 the manifest
+    <path>/_bucket=N/<gen>/part-*.parquet one generation per bucket
+    <path>/_staging/<gen>/               a batch being written
+
+The manifest is the single source of visibility.  Its ``gens`` map
+names each non-empty bucket's current generation; readers never list
+the store root.  A write stages the touched buckets' new rows under
+``_staging/<gen>``, moves the files into ``_bucket=N/<gen>/`` one file
+at a time (a generation nothing names yet is invisible), and then ONE
+``storage.replace_text`` of the manifest repoints the touched buckets,
+drops the emptied ones, records the batch token in ``applied_tokens``
+/ ``seq_hwm`` and, for a rebucket, sets the new ``n_buckets``.  The
+batch becomes visible whole or not at all — the reference's "offsets
+commit only after the write landed" rule (PAPER.md §0 step 5) holds
+per store.  Superseded generations are deleted after that write, as
+garbage collection; :meth:`vacuum` removes what a crash left behind.
+No path renames a directory, so the protocol runs unchanged on object
+stores (``storage.ObjectStoreSimStorage`` enforces this in the tests).
+
+Replay rule (:meth:`merge_touched`, the non-idempotent path):
+
+- a token already in ``applied_tokens`` is skipped;
+- a sequenced token at or below its feed's ``seq_hwm`` raises
+  :class:`MaintenanceFenceError` (committed, then evicted from the
+  bounded history);
+- any other token applies the whole batch — nothing of it is visible.
+
+``apply`` / ``apply_batch`` carry no token: every action mode is
+idempotent per key, so a replay converges by re-merging.
+
+Bucket-count evolution (SCALING.md: n_buckets ∝ |view|): the count is
+layout state in the manifest, :meth:`rebucket` rewrites the view at a
+new count in one commit, and :meth:`maybe_rebucket` applies the mean
+bucket size trigger from file metadata only.
 """
 
 from __future__ import annotations
@@ -60,29 +72,13 @@ logger = logging.getLogger(__name__)
 
 BUCKET_COL = "_bucket"
 MANIFEST = "_buckets.json"
-DISPLACED_PREFIX = ".displaced-"  # dot-prefixed → invisible to Spark scans
-TOKEN_FILE = "_token"             # underscore-prefixed → ignored by Spark
+STAGING = "_staging"   # underscore-prefixed: never a bucket, never read
 
-#: bounded manifest history of batch tokens (started + applied) — only
-#: the streaming checkpoint's LAST uncommitted batch can ever replay, so
-#: a short window is ample.  LIMIT OF THE GUARANTEE (round-12 advisor):
-#: a torn batch whose token ages out of ``token_epochs`` (16 LATER
-#: tokenized merges before its replay arrives) loses its first-seen
-#: epoch; the epoch-gap fence then cannot fire on the record alone.
-#: ``merge_touched`` closes the window with two further mechanisms:
-#: (a) a token with NO manifest record but WITH buckets already
-#: promoted under it (the physical signature a torn batch leaves)
-#: refuses whenever the store has a maintenance-epoch history; and
-#: (b) the per-feed SEQUENCE high-water mark (round-13 advisor):
-#: monotonic feed tokens (``stream-{batch_id}``, ``{pipe}:{batch_id}``)
-#: record their max COMMITTED sequence in the manifest, so a replayed
-#: token whose sequence is ≤ that mark yet has no manifest record is
-#: mechanically refused — on a serialized feed a later commit PROVES
-#: the earlier batch completed, so the missing record can only mean
-#: "committed then evicted", and re-applying would double-count.  The
-#: old "merge re-promoted every torn bucket" residual is thereby
-#: closed for every sequenced feed; only never-sequenced ad-hoc tokens
-#: retain the documented 16-commit contractual window.
+#: bounded manifest history of applied batch tokens — only the streaming
+#: checkpoint's LAST uncommitted batch can ever replay, so a short window
+#: is ample.  Sequenced feeds (see :func:`token_sequence`) are also
+#: covered past the window by the per-feed ``seq_hwm`` mark; ad-hoc
+#: unsequenced tokens rely on the window alone.
 TOKEN_HISTORY = 16
 
 _SEQ_TAIL = re.compile(r"^(?P<p>.+[:-])(?P<n>\d+)(?P<s>\D*)$")
@@ -131,8 +127,8 @@ def seq_hwm_violation(doc: dict, token: str) -> int | None:
     """The recorded high-water mark that proves ``token`` already
     committed (its feed's max committed sequence ≥ its own), or None
     when the mark says nothing.  Callers raise only when the token
-    ALSO has no applied/first-sighting record — together: a replay of
-    a committed-then-evicted batch, which must never re-apply."""
+    ALSO has no applied record — together: a replay of a
+    committed-then-evicted batch, which must never re-apply."""
     sq = token_sequence(token)
     if sq is None:
         return None
@@ -162,12 +158,16 @@ def _byte_size(text: str) -> int:
     return int(m.group(1)) << (10 * " kmgtp".index(m.group(2) or " "))
 
 
+def _is_data_file(name: str) -> bool:
+    return not name.startswith(("_", "."))
+
+
 def with_empty_output_sentinel(spark: SparkSession,
                                df: DataFrame) -> DataFrame:
     """Append ONE all-NULL row routed to the reserved bucket id ``-1``
-    — real buckets are ``pmod(...) >= 0``, promotion only ever moves
-    ids the delta touched, and the temp sibling is dropped whole, so
-    the sentinel never reaches the live store.  Its sole job is to
+    — real buckets are ``pmod(...) >= 0``, a commit only ever publishes
+    ids the delta touched, and the staging directory is dropped whole,
+    so the sentinel never reaches the live store.  Its sole job is to
     guarantee the written relation is never EMPTY: Spark 4.1's AQE
     propagates an all-empty output through the CollectMetrics stage and
     the ``Observation`` row becomes unreadable, which turned merge-
@@ -181,14 +181,14 @@ def with_empty_output_sentinel(spark: SparkSession,
 
 
 class MaintenanceFenceError(RuntimeError):
-    """A replayed non-idempotent delta hit a bucket whose replay fence
-    was rotated by a LATER out-of-band maintenance operation (federated
-    ``merge_from`` / ``rebucket``) — re-applying could double-count and
-    skipping could drop the delta, so the only safe answer is to refuse
+    """A replayed non-idempotent delta carries a feed sequence at or
+    below the committed high-water mark but is not in the bounded
+    applied-token history: the batch committed and its record was
+    evicted.  Re-applying would double-count and skipping cannot be
+    proven safe from the record alone, so the only answer is to refuse
     and converge via recompute.  The reference's deferred-commit
     guarantee (offsets committed only after the write,
-    YqlWriter.java:181-206) is mechanical; this error is our mechanical
-    analogue of the same invariant for out-of-band maintenance."""
+    YqlWriter.java:181-206) is mechanical; this error keeps it so."""
 
 
 class BucketedMaterializedView:
@@ -199,11 +199,11 @@ class BucketedMaterializedView:
                  bucket_keys: list[str] | None = None):
         """``bucket_keys``: the CO-LOCATION key — a subset of ``keys``
         to hash for bucket placement (default: all of ``keys``).  Rows
-        sharing the bucket_keys prefix land in the same directory
-        partition, so lookups by that prefix read O(touched) buckets
-        even though row identity (merge dedup) stays the full key — the
-        layout an index store needs (e.g. all signatures of one LSH
-        bucket co-located, identified per doc)."""
+        sharing the bucket_keys prefix land in the same bucket, so
+        lookups by that prefix read O(touched) buckets even though row
+        identity (merge dedup) stays the full key — the layout an index
+        store needs (e.g. all signatures of one LSH bucket co-located,
+        identified per doc)."""
         self.spark = spark
         self.path = path
         self.keys = keys
@@ -211,33 +211,27 @@ class BucketedMaterializedView:
             raise ValueError(f"bucket_keys {bucket_keys} must be a subset "
                              f"of keys {keys}")
         self.bucket_keys = list(bucket_keys) if bucket_keys else list(keys)
-        # recover BEFORE reading the manifest: a view torn mid-swap sits
-        # at the .old sibling, so the live path has no manifest and the
-        # constructor would silently adopt its own defaults — then the
-        # first read's recovery restores a layout whose n_buckets /
-        # bucket_keys disagree with the in-memory state, and every
-        # bucket probe hashes to the wrong directory (rows "vanish")
+        self.schema = schema
+        # recover BEFORE reading the manifest: a store torn mid
+        # replace_with sits at the .old sibling, so the live path has no
+        # manifest and the constructor would adopt its own defaults
         self._recover()
-        # like n_buckets, the co-location key is a property of the
-        # LAYOUT: the manifest wins over the constructor, so reopening a
-        # store without repeating bucket_keys= cannot mis-hash buckets
-        # (lookups probing the wrong directories, duplicate rows the
-        # per-bucket merge can never collapse)
-        stored_bk = self._read_manifest_dict().get("bucket_keys")
+        # n_buckets and the co-location key are properties of the
+        # LAYOUT: the manifest wins over the constructor, so a handle
+        # reopened with a stale default cannot mis-hash buckets
+        doc = self._read_manifest_dict()
+        stored_bk = doc.get("bucket_keys")
         if stored_bk is not None and list(stored_bk) != self.bucket_keys:
             logger.info("bucketed view %s: manifest bucket_keys=%s "
                         "overrides constructor bucket_keys=%s", path,
                         stored_bk, self.bucket_keys)
             self.bucket_keys = list(stored_bk)
-        self.schema = schema
-        # the on-disk manifest wins over the constructor: bucket count is
-        # a property of the LAYOUT, not of whoever re-instantiated the
-        # view after a restart/rebucket with a stale default
-        stored = self._read_manifest()
-        if stored is not None and stored != n_buckets:
+        stored = doc.get("n_buckets")
+        if stored is not None and int(stored) != n_buckets:
             logger.info("bucketed view %s: manifest n_buckets=%d overrides "
-                        "constructor n_buckets=%d", path, stored, n_buckets)
-        self.n_buckets = stored if stored is not None else n_buckets
+                        "constructor n_buckets=%d", path, int(stored),
+                        n_buckets)
+        self.n_buckets = int(stored) if stored is not None else n_buckets
 
     # -- bucketing -----------------------------------------------------------
 
@@ -261,36 +255,9 @@ class BucketedMaterializedView:
             return {}
 
     def _read_manifest(self) -> int | None:
-        try:
-            return int(self._read_manifest_dict()["n_buckets"])
-        except (ValueError, KeyError, TypeError):
-            return None
-
-    def _write_manifest(self, last_token: str | None = None) -> None:
-        """Atomically persist the layout manifest.  ``last_token`` (when
-        given) records the most recent replay fence applied via
-        :meth:`apply_merge` — :meth:`rebucket` re-seeds the per-bucket
-        token files from it, since a rebucket rewrites the view from
-        state that already INCLUDES that batch.  A ``last_token`` is
-        also appended to the bounded ``applied_tokens`` history, so a
-        replay arriving AFTER a later maintenance op rotated
-        ``last_token`` away still short-circuits (converges) instead of
-        hitting the epoch fence."""
-        storage.makedirs(self.path)
-        doc = self._read_manifest_dict()
-        doc["n_buckets"] = self.n_buckets
-        doc["bucket_keys"] = self.bucket_keys
-        if last_token is not None:
-            doc["last_token"] = last_token
-            hist = [t for t in (doc.get("applied_tokens") or [])
-                    if t != last_token]
-            doc["applied_tokens"] = (hist + [last_token])[-TOKEN_HISTORY:]
-            # sequenced feeds advance their committed high-water mark in
-            # the SAME atomic write that records the applied token, so
-            # hwm ≥ seq ⟺ this sequence (or a later one) fully committed
-            bump_seq_hwm(doc, last_token)
-        # the storage seam's atomic-commit primitive (POSIX: tmp+replace)
-        storage.replace_text(self._manifest_path(), json.dumps(doc))
+        """The manifest's ``n_buckets`` (None before the first write)."""
+        n = self._read_manifest_dict().get("n_buckets")
+        return int(n) if n is not None else None
 
     def _mutate_manifest(self, mutate) -> None:
         """Read-modify-replace the manifest dict atomically (layout
@@ -302,81 +269,45 @@ class BucketedMaterializedView:
         mutate(doc)
         storage.replace_text(self._manifest_path(), json.dumps(doc))
 
-    # -- maintenance epochs (mechanical single-maintainer enforcement) --------
-
     def maintenance_epoch(self) -> int:
-        """The manifest's monotonically increasing maintenance epoch.
-        Bumped by every out-of-band fence-rotating operation (federated
-        ``merge_from`` via ``merge_touched(out_of_band=True)``,
-        :meth:`rebucket`); 0 on stores that never saw one."""
+        """How many out-of-band maintenance operations (federated
+        ``merge_touched(out_of_band=True)``, :meth:`rebucket`, a range
+        view's granule re-shard) have committed — an operator counter
+        shown on ``/status``; 0 on stores that never saw one."""
         try:
             return int(self._read_manifest_dict().get("epoch", 0))
         except (TypeError, ValueError):
             return 0
 
-    def _bump_epoch(self) -> int:
-        new = self.maintenance_epoch() + 1
-        self._mutate_manifest(lambda doc: doc.__setitem__("epoch", new))
-        return new
-
-    def _token_epoch_of(self, batch_token: str) -> int | None:
-        """The epoch ``batch_token`` was FIRST seen starting under (from
-        the bounded manifest history), or None when never recorded."""
-        te = self._read_manifest_dict().get("token_epochs") or {}
-        v = te.get(batch_token)
-        return int(v) if v is not None else None
-
-    def _record_token_epoch(self, batch_token: str, epoch: int) -> None:
-        def mutate(doc):
-            te = dict(doc.get("token_epochs") or {})
-            te[batch_token] = epoch
-            if len(te) > TOKEN_HISTORY:  # age out oldest insertions
-                for k in list(te)[:len(te) - TOKEN_HISTORY]:
-                    del te[k]
-            doc["token_epochs"] = te
-        self._mutate_manifest(mutate)
-
     def applied_tokens(self) -> list[str]:
-        """Bounded history of FULLY applied batch tokens (manifest
-        ``last_token`` values, oldest first)."""
+        """Bounded history of committed batch tokens, oldest first."""
         return list(self._read_manifest_dict().get("applied_tokens") or [])
 
-    def _stored_schema(self):
+    def _stored_schema(self, doc: dict | None = None):
         """Authoritative view schema (sans bucket column) from the
         manifest.  Reads apply it EXPLICITLY so buckets written before
         a widening still surface the union — a missing parquet column
         reads as NULL by name — without inference (which picks an
         arbitrary file's schema and silently hides evolved columns on
         mixed-schema stores) and without mergeSchema (per-file footer
-        merging at plan time, a non-starter at scale).  None on legacy
-        stores → inference, today's behavior."""
-        doc = self._read_manifest_dict().get("schema")
-        if not doc:
+        merging at plan time, a non-starter at scale)."""
+        doc = self._read_manifest_dict() if doc is None else doc
+        if not doc.get("schema"):
             return None
         from pyspark.sql import types as T
-        return T.StructType.fromJson(doc)
+        return T.StructType.fromJson(doc["schema"])
 
-    def _record_schema(self, schema) -> None:
-        """Persist the current merge's view schema into the manifest
-        when it WIDENS the stored one (new columns append after the
-        existing order).  Called BEFORE bucket promotion: a crash in
-        between leaves only an extra all-NULL column — benign — while
-        the opposite order would hide promoted data behind a stale
-        narrower schema."""
+    def _widen_schema(self, doc: dict, schema) -> None:
+        """Record ``schema`` in ``doc`` when it WIDENS the stored one
+        (new columns append after the existing order)."""
         from pyspark.sql import types as T
-        stored = self._stored_schema()
+        stored = self._stored_schema(doc)
         fields = [] if stored is None else list(stored.fields)
         names = {f.name for f in fields}
         new = [f for f in schema.fields
                if f.name != BUCKET_COL and f.name not in names]
-        if stored is not None and not new:
-            return
-        storage.makedirs(self.path)
-        doc = self._read_manifest_dict()
-        doc["schema"] = T.StructType(fields + new).jsonValue()
-        doc.setdefault("n_buckets", self.n_buckets)
-        doc.setdefault("bucket_keys", self.bucket_keys)
-        storage.replace_text(self._manifest_path(), json.dumps(doc))
+        if stored is None or new:
+            doc["schema"] = T.StructType(fields + new).jsonValue()
 
     def _with_bucket_schema(self, schema):
         """``schema`` + the bucket partition column (reads must name it
@@ -385,58 +316,177 @@ class BucketedMaterializedView:
         return T.StructType(list(schema.fields)
                             + [T.StructField(BUCKET_COL, T.IntegerType())])
 
-    # -- crash recovery ------------------------------------------------------
+    # -- generations ---------------------------------------------------------
+
+    def _gens(self, doc: dict | None = None) -> dict[int, str]:
+        """bucket id → its current generation, from the manifest."""
+        doc = self._read_manifest_dict() if doc is None else doc
+        return {int(b): g for b, g in (doc.get("gens") or {}).items()}
+
+    def _bucket_dir(self, b: int) -> str:
+        return os.path.join(self.path, f"{BUCKET_COL}={b}")
+
+    def _gen_dir(self, b: int, gen: str) -> str:
+        return os.path.join(self._bucket_dir(b), gen)
+
+    def _live_dirs(self, buckets, doc: dict | None = None) -> list[str]:
+        """The current generation directory of every non-empty bucket
+        in ``buckets`` — O(len(buckets)), no listing."""
+        gens = self._gens(doc)
+        return [self._gen_dir(b, gens[b]) for b in buckets if b in gens]
+
+    def bucket_ids(self) -> list[int]:
+        """The non-empty buckets, ascending — one manifest read.  The
+        read every caller composing its own bucket probes must use: a
+        directory on disk may hold a superseded or uncommitted
+        generation."""
+        self._recover()
+        return sorted(self._gens())
+
+    def bucket_files(self, buckets=None) -> dict[int, list[str]]:
+        """``{bucket: data files}`` of the live generations of
+        ``buckets`` (default: every non-empty bucket) — one listing per
+        bucket, no Spark job."""
+        self._recover()
+        gens = self._gens()
+        ids = sorted(gens) if buckets is None else \
+            [b for b in buckets if b in gens]
+        out = {}
+        for b in ids:
+            d = self._gen_dir(b, gens[b])
+            out[b] = [os.path.join(d, n) for n in storage.listdir(d)
+                      if _is_data_file(n)]
+        return out
+
+    def _commit(self, rows: DataFrame | None, buckets: list[int] | None,
+                *, keep_absent: bool = False, pre_commit=None,
+                token: str | None = None, out_of_band: bool = False,
+                mutate=None) -> None:
+        """THE commit protocol, shared by every write path.
+
+        ``rows`` (carrying ``_bucket``; None = drop only) are staged
+        under a fresh generation; files of the buckets in ``buckets``
+        move into ``_bucket=N/<gen>/``; then ONE manifest replace
+        repoints those buckets and drops the ones the staged output left
+        empty (unless ``keep_absent``: a physical rewrite never deletes
+        a bucket).  ``buckets=None`` replaces the whole map with what
+        was staged (a full rewrite).  The same write records ``token``
+        in ``applied_tokens``/``seq_hwm``, widens the stored schema,
+        bumps ``epoch`` for an out-of-band operation and applies
+        ``mutate(doc)`` (layout changes).
+
+        ``pre_commit`` runs after the staged write and before any file
+        moves; if it raises, the staging is discarded and nothing
+        changes.  Superseded generations are deleted only after the
+        manifest replace: a crash anywhere earlier leaves the store
+        exactly as it was, plus stray files for :meth:`vacuum`."""
+        gen = f"g-{uuid.uuid4().hex[:12]}"
+        staging = os.path.join(self.path, STAGING, gen)
+        placed: set[int] = set()
+        if rows is not None:
+            try:
+                (rebalance_by_bucket(rows).write.mode("overwrite")
+                 .partitionBy(BUCKET_COL).parquet(staging))
+                if pre_commit is not None:
+                    pre_commit()
+            except BaseException:
+                storage.remove_tree(staging)
+                raise
+            want = None if buckets is None else set(buckets)
+            for e in storage.listdir(staging):
+                if not e.startswith(f"{BUCKET_COL}="):
+                    continue
+                b = int(e.split("=", 1)[1])
+                if want is not None and b not in want:
+                    continue      # e.g. the -1 sentinel: never published
+                src, dst = os.path.join(staging, e), self._gen_dir(b, gen)
+                storage.makedirs(dst)
+                for n in storage.listdir(src):
+                    if _is_data_file(n):
+                        storage.rename(os.path.join(src, n),
+                                       os.path.join(dst, n))
+                placed.add(b)
+        elif pre_commit is not None:
+            pre_commit()
+
+        storage.makedirs(self.path)
+        doc = self._read_manifest_dict()
+        old = self._gens(doc)
+        gens = {} if buckets is None else dict(old)
+        for b in buckets or ():
+            if b not in placed and not keep_absent:
+                gens.pop(b, None)
+        for b in placed:
+            gens[b] = gen
+        doc["gens"] = {str(b): g for b, g in sorted(gens.items())}
+        doc.setdefault("n_buckets", self.n_buckets)
+        doc.setdefault("bucket_keys", self.bucket_keys)
+        if rows is not None:
+            self._widen_schema(doc, rows.schema)
+        if token is not None:
+            hist = [t for t in (doc.get("applied_tokens") or [])
+                    if t != token]
+            doc["applied_tokens"] = (hist + [token])[-TOKEN_HISTORY:]
+            bump_seq_hwm(doc, token)
+        if out_of_band:
+            doc["epoch"] = int(doc.get("epoch", 0)) + 1
+        if mutate is not None:
+            mutate(doc)
+        storage.replace_text(self._manifest_path(), json.dumps(doc))
+        # everything below is garbage collection: correctness no longer
+        # depends on any of it landing
+        if rows is not None:
+            storage.remove_tree(staging)
+        for b, g in old.items():
+            if b not in gens:
+                storage.remove_tree(self._bucket_dir(b))
+            elif gens[b] != g:
+                storage.remove_tree(self._gen_dir(b, g))
+
+    def vacuum(self) -> int:
+        """Remove every generation the manifest does not name — what a
+        crash before a commit left staged, or an old generation whose
+        post-commit delete failed — plus the staging area.  Pure GC:
+        no reader can reach these files.  Run between batches (the
+        staging area of an in-flight batch is removed too).  Returns
+        the number of generation directories removed."""
+        self._recover()
+        storage.remove_tree(os.path.join(self.path, STAGING))
+        if not storage.is_dir(self.path):
+            return 0
+        gens = self._gens()
+        removed = 0
+        for e in storage.listdir(self.path):
+            if not e.startswith(f"{BUCKET_COL}="):
+                continue
+            b = int(e.split("=", 1)[1])
+            d = os.path.join(self.path, e)
+            for g in storage.listdir(d):
+                if g != gens.get(b):
+                    storage.remove_tree(os.path.join(d, g))
+                    removed += 1
+            if b not in gens:
+                storage.remove_tree(d)
+        return removed
+
+    # -- whole-store replace (VectorIndex retrains) ---------------------------
 
     def _old_dir(self) -> str:
         parent = os.path.dirname(os.path.abspath(self.path)) or "."
         return os.path.join(parent, f".{os.path.basename(self.path)}.old")
 
     def _recover(self) -> None:
-        """Repair crash-torn on-disk state before it is observed.
-
-        Two windows exist (both narrowed to single renames):
-
-        1. :meth:`rebucket`'s swap — view renamed to the deterministic
-           ``.old`` sibling, crash before the new layout is renamed in.
-           The old layout is still complete: restore it.  (Same pattern
-           as ``ParquetMaterializedView._recover`` — without it a
-           streaming replay would see ``exists() == False`` and silently
-           rebuild the view from one delta, losing accumulated state.)
-        2. :meth:`_overwrite_touched`'s per-bucket promotion — a live
-           bucket renamed aside to ``.displaced-_bucket=N``, crash before
-           its replacement is renamed in.  The displaced copy is the
-           pre-batch bucket: restore it (checkpoint replay then re-merges
-           the same batch over it and converges).  A displaced dir whose
-           bucket DOES exist means the crash hit after promotion — the
-           new bucket is live, drop the leftover copy.
-        """
+        """Restore a store torn mid :meth:`replace_with`: the live path
+        was renamed to the ``.old`` sibling and the crash hit before the
+        staged store was renamed in.  The old store is complete."""
         old = self._old_dir()
         if storage.is_dir(old) and not storage.exists(self.path):
             storage.rename(old, self.path)
-        if not storage.is_dir(self.path):
-            return
-        for e in storage.listdir(self.path):
-            if not e.startswith(DISPLACED_PREFIX):
-                continue
-            disp = os.path.join(self.path, e)
-            live = os.path.join(self.path, e[len(DISPLACED_PREFIX):])
-            if storage.is_dir(live):
-                storage.remove_tree(disp)
-            else:
-                storage.rename(disp, live)
 
     def recover(self) -> None:
-        """Public crash-repair entry point: restore any state torn by a
-        crash mid-swap or mid-promotion (see :meth:`_recover`).  Every
-        public read on this class self-recovers; callers composing their
-        OWN reads of the view's directories (index stores probing bucket
-        paths) must call this first — a displaced bucket otherwise reads
-        as absent and its rows silently vanish.
-
-        After the restore, manifest-derived layout state is re-read: a
-        recovery that brought a layout back from the ``.old`` sibling
-        must also bring back that layout's n_buckets / bucket_keys, or
-        a long-lived handle keeps hashing probes with stale values."""
+        """Public crash-repair entry point (see :meth:`_recover`); then
+        re-read the manifest's layout state, so a long-lived handle
+        picks up a restored layout or another handle's rebucket."""
         self._recover()
         stored = self._read_manifest_dict()
         if stored.get("n_buckets") is not None:
@@ -446,11 +496,11 @@ class BucketedMaterializedView:
 
     def replace_with(self, staged_path: str) -> None:
         """Atomically adopt a fully-staged sibling directory as the
-        view's new on-disk state — the full-replace contract shared by
-        :meth:`rebucket` and index retrains (e.g. ``VectorIndex.build``).
+        view's new on-disk state — the full-replace contract index
+        retrains use (``VectorIndex.build``).
 
-        ``staged_path`` must be a COMPLETE layout (bucket partitions,
-        manifest, any sidecar files): the live view is renamed to the
+        ``staged_path`` must be a COMPLETE store (manifest, generations,
+        any sidecar files): the live view is renamed to the
         deterministic ``.old`` sibling, the staged dir renamed in, the
         old copy dropped.  A crash between the two renames is repaired
         by :meth:`recover`, which restores the complete old state.
@@ -482,40 +532,51 @@ class BucketedMaterializedView:
     # -- IO ------------------------------------------------------------------
 
     def exists(self) -> bool:
+        """True once any write committed (an empty view included)."""
         self._recover()
-        # the per-bucket-promotion committer does not emit _SUCCESS;
-        # presence of any bucket partition directory is the marker
-        if not storage.is_dir(self.path):
-            return False
-        if storage.exists(os.path.join(self.path, "_SUCCESS")):
-            return True
-        return any(e.startswith(f"{BUCKET_COL}=")
-                   for e in storage.listdir(self.path))
+        return "gens" in self._read_manifest_dict()
 
     def read(self) -> DataFrame:
         """Public read — bucket column hidden."""
         return self._read_raw().drop(BUCKET_COL)
 
+    def _empty(self, schema) -> DataFrame:
+        if schema is None:
+            raise FileNotFoundError(self.path)
+        return self._with_bucket(self.spark.createDataFrame([], schema))
+
     def _read_raw(self) -> DataFrame:
-        if not self.exists():
-            if self.schema is None:
-                raise FileNotFoundError(self.path)
-            return self._with_bucket(
-                self.spark.createDataFrame([], self.schema))
+        self._recover()
+        doc = self._read_manifest_dict()
+        return self._read_dirs(self._live_dirs(sorted(self._gens(doc)), doc),
+                               doc, self.schema)
+
+    def _read_dirs(self, dirs: list[str], doc: dict,
+                   fallback_schema) -> DataFrame:
+        stored = self._stored_schema(doc)
+        if not dirs:
+            schema = (stored if stored is not None
+                      else self.schema if self.schema is not None
+                      else fallback_schema)
+            if schema is None and doc.get("gens"):
+                # a manifest without a schema and a caller without one:
+                # infer it from the live files rather than fail
+                return self._read_dirs(
+                    self._live_dirs(sorted(self._gens(doc)), doc), doc,
+                    None).limit(0)
+            return self._empty(schema)
+        # basePath keeps _bucket=N (the generation's parent) as the
+        # partition column
         reader = self.spark.read.option("basePath", self.path)
-        stored = self._stored_schema()
         if stored is not None:
             reader = reader.schema(self._with_bucket_schema(stored))
-        return reader.parquet(self.path)
+        return reader.parquet(*dirs)
 
     def read_touched(self, touched: list[int], delta_schema=None,
                      where: tuple[str, list] | None = None) -> DataFrame:
-        """Public touched-bucket read: repair crash-torn buckets first
-        (:meth:`recover`), then read ONLY the touched buckets by direct
-        path (see :meth:`_read_touched`).  This is the read every
-        derived index store should use — going straight to the private
-        read skips the torn-bucket repair and a displaced bucket's rows
-        silently vanish (pinned by the torn-ingest query tests).
+        """Public touched-bucket read: ONLY the touched buckets' current
+        generations, planned from one manifest read (see
+        :meth:`_read_touched`).
 
         ``where=(col, values)`` keeps only rows whose ``col`` equals one
         of ``values`` (Python values of ``col``'s type; None never
@@ -536,21 +597,20 @@ class BucketedMaterializedView:
     def _read_touched_local(self, touched: list[int], col: str,
                             values: list) -> DataFrame | None:
         """The filtered touched-bucket read on the driver: list the
-        touched buckets' data files through ``storage`` (``_``/``.``
-        names are sidecars), read them with ``pyarrow.dataset`` against
-        the manifest's stored schema (a file written before a widening
-        reads the missing column as NULL, like the Spark read), filter
-        on ``values``, and hand the rows to
-        ``spark.createDataFrame(arrow_table, schema)`` — a local
+        touched buckets' live data files through ``storage``, read them
+        with ``pyarrow.dataset`` against the manifest's stored schema (a
+        file written before a widening reads the missing column as
+        NULL, like the Spark read), filter on ``values``, and hand the
+        rows to ``spark.createDataFrame(arrow_table, schema)`` — a local
         relation, so building and collecting the result runs no Spark
         job.
 
         None — the caller reads through Spark — when the store has no
-        stored schema (legacy stores infer it from the files), when a
-        stored column is nested (Arrow's nested field naming is not
-        pinned against Spark's parquet layout here), or when the touched
-        files exceed ``spark.sql.autoBroadcastJoinThreshold``: the same
-        "small enough to hold on the driver" bound Spark applies to a
+        stored schema, when a stored column is nested (Arrow's nested
+        field naming is not pinned against Spark's parquet layout
+        here), or when the touched files exceed
+        ``spark.sql.autoBroadcastJoinThreshold``: the same "small
+        enough to hold on the driver" bound Spark applies to a
         broadcast side, so there is no separate knob."""
         from pyspark.sql import types as T
         stored = self._stored_schema()
@@ -559,15 +619,8 @@ class BucketedMaterializedView:
                                         T.StructType, T.UserDefinedType))
                 for f in stored.fields):
             return None
-        files, size = [], 0
-        for b in touched:
-            d = os.path.join(self.path, f"{BUCKET_COL}={b}")
-            if not storage.is_dir(d):
-                continue
-            for name in storage.listdir(d):
-                if not name.startswith(("_", ".")):
-                    files.append(os.path.join(d, name))
-                    size += storage.file_size(files[-1])
+        files = [f for fs in self.bucket_files(touched).values() for f in fs]
+        size = sum(storage.file_size(f) for f in files)
         if size > _byte_size(self.spark.conf.get(
                 "spark.sql.autoBroadcastJoinThreshold")):
             return None
@@ -594,188 +647,14 @@ class BucketedMaterializedView:
 
     def _read_touched(self, touched: list[int],
                       delta_schema) -> DataFrame:
-        """Read ONLY the touched buckets, by direct directory path.
-
-        O(touched) filesystem probes + O(touched) directory listings at
-        plan time — never a listing of all ``n_buckets`` partitions (the
-        ``isin``-filter formulation prunes FILES but still lists every
-        partition directory to plan the scan).  Probing ``isdir`` per
-        bucket also makes the read crash-honest: a bucket emptied (or
-        never written) is simply absent."""
-        dirs = [os.path.join(self.path, f"{BUCKET_COL}={b}")
-                for b in touched]
-        dirs = [d for d in dirs if storage.is_dir(d)]
-        stored = self._stored_schema()
-        if not dirs:
-            base_schema = (stored if stored is not None
-                           else self.schema if self.schema is not None
-                           else delta_schema)
-            if base_schema is None:
-                # legacy store (no manifest schema) + caller with no
-                # schema in hand + every touched bucket absent: infer
-                # from the LIVE files instead of crashing on
-                # createDataFrame([], None) — the store exists, only
-                # the touched directories don't (review finding; the
-                # engine's old-image feed hits this on an all-new-keys
-                # batch against a pre-manifest-schema target)
-                return self._read_raw().limit(0)
-            return self._with_bucket(
-                self.spark.createDataFrame([], base_schema).limit(0))
-        # basePath keeps the _bucket=N directory name as a partition column
-        reader = self.spark.read.option("basePath", self.path)
-        if stored is not None:
-            reader = reader.schema(self._with_bucket_schema(stored))
-        return reader.parquet(*dirs)
-
-    # -- per-bucket replay tokens --------------------------------------------
-
-    def _token_payload(self, b: int) -> str | None:
-        """Raw token-file contents of bucket ``b`` (token + optional
-        epoch line) — preserved VERBATIM by physical rewrites
-        (:meth:`compact` / :meth:`rewrite_rows`)."""
-        try:
-            return storage.read_text(
-                os.path.join(self.path, f"{BUCKET_COL}={b}", TOKEN_FILE))
-        except OSError:
-            return None
-
-    def bucket_token(self, b: int) -> str | None:
-        """The replay-fence token promoted WITH bucket ``b`` (None when the
-        bucket is absent or was never written under a token).  Written into
-        the bucket directory in the temp sibling before promotion, so data
-        and token become visible in the same atomic rename — the unit of
-        exactly-once for non-idempotent (±delta) merges is the bucket."""
-        payload = self._token_payload(b)
-        return payload.split("\n", 1)[0] if payload is not None else None
-
-    def bucket_token_epoch(self, b: int) -> tuple[str | None, int]:
-        """``(token, epoch)`` of bucket ``b``'s replay fence — epoch 0
-        for legacy single-line token files and absent buckets.  The
-        epoch stamp is what lets a replayed delta detect that a LATER
-        out-of-band maintenance op rotated the fence (see
-        :class:`MaintenanceFenceError`)."""
-        payload = self._token_payload(b)
-        if payload is None:
-            return None, 0
-        parts = payload.split("\n")
-        try:
-            epoch = int(parts[1]) if len(parts) > 1 else 0
-        except ValueError:
-            epoch = 0
-        return parts[0], epoch
-
-    def last_token(self) -> str | None:
-        """Manifest fast-path: the token of the last FULLY promoted batch
-        (written after every touched bucket promoted).  Equality here means
-        the whole batch landed; inequality falls back to the per-bucket
-        check, which is what makes a mid-promotion crash recoverable."""
-        t = self._read_manifest_dict().get("last_token")
-        return str(t) if t is not None else None
-
-    def pending_buckets(self, touched: list[int],
-                        batch_token: str | None) -> list[int]:
-        """The subset of ``touched`` NOT yet promoted under ``batch_token``
-        — O(touched) driver-side file reads, no Spark job.  After a crash
-        mid-promotion this is exactly the un-promoted remainder, so a
-        replayed non-idempotent batch re-applies to those buckets only."""
-        if batch_token is None:
-            return list(touched)
-        return [b for b in touched if self.bucket_token(b) != batch_token]
-
-    def _write_full(self, df: DataFrame) -> None:
-        (rebalance_by_bucket(self._with_bucket(df))
-         .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(self.path))
-        # AFTER the write: Spark's overwrite truncates the directory,
-        # manifest included
-        self._write_manifest()
-        self._record_schema(df.schema)
-
-    def _overwrite_touched(self, merged: DataFrame, touched: list[int],
-                           token: str | None = None,
-                           pre_promote=None,
-                           token_epoch: int = 0) -> None:
-        """Replace the touched bucket partitions with ``merged``'s rows:
-        write to a TEMP sibling (``merged`` still lazily reads the OLD
-        partition files — no checkpoint needed, ONE materialization),
-        then promote per-bucket by rename.  A touched bucket absent from
-        the temp output was emptied by the merge — its old directory is
-        removed, which folds the emptied-bucket cleanup into the same
-        pass (no post-write distinct/collect jobs at all).
-
-        Promotion is per-bucket renames, not atomic across buckets —
-        the same visibility window Spark's dynamic partition overwrite
-        has (per-partition commit).  A crash mid-promotion leaves a mix
-        of old/new buckets; checkpoint replay re-merges the same batch
-        over that mix and converges, because every action mode is
-        idempotent per key.  Within a single bucket the live directory
-        is never deleted before its replacement is in place: it is
-        renamed ASIDE (``.displaced-…``, invisible to Spark) and only
-        dropped after the new bucket is promoted, so the one remaining
-        crash window — between the two renames — leaves a recoverable
-        copy that :meth:`_recover` restores on the next observation.
-
-        ``token``: optional replay-fence token dropped into every new
-        bucket directory BEFORE promotion — data and token promote in the
-        same rename, giving per-bucket exactly-once for callers whose
-        merge is NOT idempotent (the aggregate view's ±deltas; see
-        :meth:`bucket_token` / :meth:`pending_buckets`)."""
-        tmp = storage.tmp_sibling(self.path, "batch")
-        (rebalance_by_bucket(merged)
-         .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp))
-        if pre_promote is not None:
-            # checks riding the write's own materialization (single-pass
-            # strict-insert collisions): abort BEFORE any bucket promotes,
-            # discarding the temp output — the live view stays untouched
-            try:
-                pre_promote()
-            except BaseException:
-                storage.remove_tree(tmp)
-                raise
-        if token is not None:
-            for b in touched:
-                d = os.path.join(tmp, f"{BUCKET_COL}={b}")
-                if storage.is_dir(d):
-                    # plain write: the token is INSIDE the staged bucket
-                    # dir, promoted atomically with it by the rename
-                    storage.write_text(os.path.join(d, TOKEN_FILE),
-                                       f"{token}\n{token_epoch}")
-        # schema BEFORE promotion: a crash in between shows one extra
-        # all-NULL column (benign); the opposite order would hide
-        # promoted data behind a stale narrower stored schema
-        self._record_schema(merged.schema)
-        storage.makedirs(self.path)  # first batch: no root yet
-        for b in touched:
-            self._promote_bucket(tmp, b, drop_if_absent=True)
-        storage.remove_tree(tmp)
-
-    def _promote_bucket(self, tmp: str, b: int,
-                        drop_if_absent: bool) -> None:
-        """Promote ONE bucket from the temp sibling via the
-        displaced-rename dance — the single shared implementation of the
-        crash-recoverable sequence (live dir renamed ASIDE, replacement
-        renamed in, displaced copy dropped; the window between the two
-        renames is repaired by :meth:`_recover`, pinned by the tear
-        sweep in tests/test_bucketed_crash.py).
-
-        ``drop_if_absent``: a touched bucket missing from the temp
-        output was EMPTIED by a merge — drop its live directory; a
-        compaction pass instead leaves such buckets untouched."""
-        new_d = os.path.join(tmp, f"{BUCKET_COL}={b}")
-        old_d = os.path.join(self.path, f"{BUCKET_COL}={b}")
-        disp = os.path.join(self.path,
-                            f"{DISPLACED_PREFIX}{BUCKET_COL}={b}")
-        if not storage.is_dir(new_d):
-            if drop_if_absent:
-                storage.remove_tree(old_d)
-            return
-        storage.remove_tree(disp)  # stale leftover
-        displaced = False
-        if storage.is_dir(old_d):
-            storage.rename(old_d, disp)
-            displaced = True
-        storage.rename(new_d, old_d)
-        if displaced:
-            storage.remove_tree(disp)
+        """Read ONLY the touched buckets' current generations, by direct
+        path — O(touched) directory listings at plan time, never a
+        listing of all ``n_buckets`` partitions, and never a superseded
+        or uncommitted generation.  A bucket the manifest does not name
+        (emptied, or never written) is simply absent."""
+        doc = self._read_manifest_dict()
+        return self._read_dirs(self._live_dirs(touched, doc), doc,
+                               delta_schema)
 
     # -- the incremental merge ------------------------------------------------
 
@@ -789,19 +668,18 @@ class BucketedMaterializedView:
         just-ingested rows) reuses it instead of paying a second
         driver-side distinct-collect over the delta.
 
-        ``pre_commit``: optional callable run after the temp write and
-        before the first bucket promotes (chained after the strict-insert
-        check into :meth:`_overwrite_touched`'s ``pre_promote``); if it
-        raises, the temp output is discarded and no bucket changes.  A
-        batch that touches no bucket promotes nothing and skips it."""
+        ``pre_commit``: optional callable run after the staged write and
+        before the commit (chained after the strict-insert check); if
+        it raises, the staged output is discarded and no bucket
+        changes.  A batch that touches no bucket commits nothing and
+        skips it."""
         existed = self.exists()
         if not existed and action == "deleteFrom":
             if self.schema is None:
                 raise FileNotFoundError(self.path)
-            if pre_commit is not None:
-                pre_commit()
-            # deleting from nothing → materialize the empty view
-            self._write_full(self.spark.createDataFrame([], self.schema))
+            # deleting from nothing → commit the empty view
+            self._commit(None, [], pre_commit=pre_commit,
+                         mutate=lambda d: self._widen_schema(d, self.schema))
             return []
 
         delta = self._with_bucket(delta).persist()
@@ -810,18 +688,7 @@ class BucketedMaterializedView:
                        delta.select(BUCKET_COL).distinct().collect()]
             if not touched:
                 return touched
-            if existed:
-                # direct-path read of only the touched buckets
-                target = self._read_touched(touched, delta.drop(BUCKET_COL)
-                                            .schema)
-            else:
-                # first batch: merge against an empty target (keeps the
-                # per-action dedup/collision semantics)
-                base = (self.spark.createDataFrame([], self.schema)
-                        if self.schema is not None
-                        else delta.drop(BUCKET_COL).limit(0))
-                target = self._with_bucket(base)
-
+            target = self._base(existed, touched, delta)
             if action != "deleteFrom":   # delete side is keys-only
                 target, delta = widen_to_union(target, delta)
             keys_b = self.keys + [BUCKET_COL]
@@ -830,8 +697,8 @@ class BucketedMaterializedView:
                 merged = merge_delete(target, delta, keys_b,
                                       small_delta=small_delta)
             elif action == "insertInto":
-                # single-pass strict insert: collision count rides the
-                # bucket write, checked before any bucket promotes
+                # single-pass strict insert: the collision count rides
+                # the staged write, checked before the commit
                 from pyspark.sql import Observation
                 obs = Observation(f"strict_insert_{uuid.uuid4().hex[:8]}")
                 merged = merge_insert(target, delta, keys_b, strict=True,
@@ -840,13 +707,23 @@ class BucketedMaterializedView:
             else:
                 merged = MERGE_FNS[action](target, delta, keys_b, order_col,
                                            small_delta)
-            self._overwrite_touched(merged, touched,
-                                    pre_promote=chain_hooks(pre, pre_commit))
-            if not existed:
-                self._write_manifest()
+            self._commit(merged, touched,
+                         pre_commit=chain_hooks(pre, pre_commit))
             return touched
         finally:
             delta.unpersist()
+
+    def _base(self, existed: bool, touched: list[int],
+              delta: DataFrame) -> DataFrame:
+        """The merge target: the touched buckets, or — first batch — an
+        empty frame (keeps the per-action dedup/collision semantics)."""
+        schema = delta.drop(BUCKET_COL).schema
+        if existed:
+            return self._read_touched(touched, schema)
+        base = (self.spark.createDataFrame([], self.schema)
+                if self.schema is not None
+                else delta.drop(BUCKET_COL).limit(0))
+        return self._with_bucket(base)
 
     def apply_batch(self, ups: DataFrame | None, dels: DataFrame | None,
                     action: str = "upsertInto",
@@ -854,10 +731,10 @@ class BucketedMaterializedView:
                     small_delta: bool | None = None,
                     pre_commit=None) -> list[int]:
         """One batch's upsert + delete sides in a SINGLE touched-bucket
-        read → merge → dynamic-overwrite pass (sides are key-disjoint by
-        the engine's last-wins routing — see merge.compose_merge).
-        Halves per-batch bucket IO vs two apply() calls.  Returns the
-        touched bucket ids; ``pre_commit`` as in :meth:`apply`."""
+        read → merge → commit pass (sides are key-disjoint by the
+        engine's last-wins routing — see merge.compose_merge).  Halves
+        per-batch bucket IO vs two apply() calls.  Returns the touched
+        bucket ids; ``pre_commit`` as in :meth:`apply`."""
         if ups is None and dels is None:
             return []
         if ups is None:
@@ -879,16 +756,8 @@ class BucketedMaterializedView:
                            dels.select(BUCKET_COL)).distinct().collect()]
             if not touched:
                 return touched
-            if existed:
-                target = self._read_touched(
-                    touched, ups.drop(BUCKET_COL).schema)
-            else:
-                base = (self.spark.createDataFrame([], self.schema)
-                        if self.schema is not None
-                        else ups.drop(BUCKET_COL).limit(0))
-                target = self._with_bucket(base)
-
-            target, ups = widen_to_union(target, ups)
+            target, ups = widen_to_union(self._base(existed, touched, ups),
+                                         ups)
             keys_b = self.keys + [BUCKET_COL]
             pre = None
             obs = None
@@ -899,10 +768,8 @@ class BucketedMaterializedView:
             merged = compose_merge(target, ups, dels, keys_b, action,
                                    order_col, small_delta,
                                    collision_obs=obs)
-            self._overwrite_touched(merged, touched,
-                                    pre_promote=chain_hooks(pre, pre_commit))
-            if not existed:
-                self._write_manifest()
+            self._commit(merged, touched,
+                         pre_commit=chain_hooks(pre, pre_commit))
             return touched
         finally:
             ups.unpersist()
@@ -911,8 +778,8 @@ class BucketedMaterializedView:
     def merge_touched(self, delta: DataFrame, merge_fn,
                       batch_token: str | None = None,
                       out_of_band: bool = False) -> bool:
-        """Generic touched-bucket maintenance step with a per-bucket
-        replay fence — the primitive non-idempotent incremental view
+        """Generic touched-bucket maintenance step with a batch replay
+        fence — the primitive non-idempotent incremental view
         maintenance (the aggregate view's ±deltas) needs from a bucketed
         store.
 
@@ -920,162 +787,52 @@ class BucketedMaterializedView:
         rows and the delta rows, BOTH carrying ``_bucket``, and returns
         the touched buckets' NEW rows (still carrying ``_bucket``).
 
-        ``batch_token`` fencing is per-bucket (see
-        :meth:`_overwrite_touched`): a crash mid-promotion leaves some
-        buckets promoted under the token and some not; the replay
-        re-applies the delta ONLY to the un-promoted remainder — per-
-        bucket exactly-once, which composes to batch exactly-once because
-        a group lives in exactly one bucket.  The manifest ``last_token``
-        (written after full promotion) and the bounded ``applied_tokens``
-        history short-circuit a fully-applied replay without any Spark
-        job.
+        ``batch_token`` joins ``applied_tokens`` in the same manifest
+        replace that publishes the batch, so "token recorded" and
+        "batch visible" are one fact.  A replay is therefore decided
+        from the manifest alone, with no Spark job:
 
-        ``out_of_band=True`` marks a fence-ROTATING maintenance merge
-        (federated ``merge_from``): it bumps the manifest maintenance
-        epoch first, and its promotions stamp the new epoch into every
-        bucket token.  The single-maintainer window is then enforced
-        MECHANICALLY, not contractually: a replayed feed delta whose
-        token was first seen under an OLDER epoch finds pending buckets
-        stamped with a newer one and raises
-        :class:`MaintenanceFenceError` instead of silently
-        double-applying (the reference's deferred-commit analogue,
-        YqlWriter.java:181-206).  Fully-committed batches are unaffected
-        — their replay converges via the applied-token history.
+        - a token in ``applied_tokens`` is skipped (returns False);
+        - a sequenced token at or below its feed's ``seq_hwm`` raises
+          :class:`MaintenanceFenceError` — it committed and its record
+          was evicted from the bounded history;
+        - any other token applies the whole batch: none of it is
+          visible, whatever a crash interrupted.
 
-        Returns True when a merge ran, False when the batch was entirely
-        fenced out (or the delta was empty)."""
+        ``out_of_band=True`` marks a federated merge (``merge_from``):
+        it bumps the manifest's ``epoch`` counter in the same commit.
+
+        Returns True when a merge committed, False when the batch was
+        skipped as a replay (or the delta was empty)."""
+        self._recover()
         if batch_token is not None:
-            if self.last_token() == batch_token:
-                logger.info("bucketed view %s: batch token %r already fully "
+            doc = self._read_manifest_dict()
+            if batch_token in (doc.get("applied_tokens") or []):
+                logger.info("bucketed view %s: batch token %r already "
                             "applied; skipping replay", self.path,
                             batch_token)
                 return False
-            if batch_token in self.applied_tokens():
-                # fully applied earlier, then a LATER batch/maintenance op
-                # rotated last_token — still a pure replay: converge
-                logger.info("bucketed view %s: batch token %r found in "
-                            "applied-token history; skipping replay",
-                            self.path, batch_token)
-                return False
-        # repair crash-torn state BEFORE any bucket/token observation:
-        # unlike apply(), this path reads touched buckets by direct isdir
-        # probe without going through exists(), so a bucket left
-        # displaced by a mid-promotion crash would otherwise read as
-        # absent and its rows would be silently dropped from the merge
-        # (caught by test_bucketed_crash_recovery_merge_touched_exactly_once)
-        self._recover()
-        epoch = self._bump_epoch() if out_of_band else self.maintenance_epoch()
-        tok_epoch = epoch
-        fence_token = batch_token
-        first_seen_recorded = False
-        if batch_token is not None:
-            seen = self._token_epoch_of(batch_token)
-            first_seen_recorded = seen is not None
-            if seen is None:
-                # sequence high-water fence (round-13 advisor): a LATER
-                # sequence on this feed is recorded committed, yet this
-                # token has no applied record and no first-sighting —
-                # on a serialized feed that later commit PROVES this
-                # batch completed, so the only consistent history is
-                # "committed, then evicted from the bounded histories";
-                # re-applying would double-count.  Refuse mechanically.
-                mark = seq_hwm_violation(self._read_manifest_dict(),
-                                         batch_token)
-                if mark is not None:
-                    raise MaintenanceFenceError(
-                        f"bucketed view {self.path}: token "
-                        f"{batch_token!r} carries a feed sequence at or "
-                        f"below the committed high-water mark ({mark}) "
-                        "but has no applied/first-sighting record — a "
-                        "replay of a batch that committed and was "
-                        "evicted from the bounded token histories (or "
-                        "an out-of-order feed, a contract violation).  "
-                        "Re-applying could double-count; converge via "
-                        "recompute.")
-            if seen is not None:
-                tok_epoch = seen   # replay: stamp under the ORIGINAL epoch
-            # a first sighting is recorded BELOW, after the pending
-            # checks but before any promotion: a crash right after the
-            # record replays with tok_epoch == epoch (no maintenance op
-            # ran) and proceeds normally; if a maintenance op DID run in
-            # between, the epoch gap below refuses — and recording only
-            # on the non-refusing path keeps a REFUSED aged-out token
-            # from acquiring a fresh current-epoch record that would let
-            # its retry slip past the fence
-        elif out_of_band:
-            # an UN-tokenized out-of-band merge still rotates fences (its
-            # promotion replaces the bucket dirs, token files included) —
-            # stamp a synthetic fence so older tokens' replays refuse
-            # instead of double-applying over the merged-in state
-            fence_token = f"oob-{uuid.uuid4().hex[:8]}"
+            mark = seq_hwm_violation(doc, batch_token)
+            if mark is not None:
+                raise MaintenanceFenceError(
+                    f"bucketed view {self.path}: token {batch_token!r} "
+                    f"carries a feed sequence at or below the committed "
+                    f"high-water mark ({mark}) but is not in the applied-"
+                    "token history — a replay of a batch that committed "
+                    "and was evicted from the bounded history (or an "
+                    "out-of-order feed, a contract violation).  "
+                    "Re-applying could double-count; converge via "
+                    "recompute.")
         delta_b = self._with_bucket(delta).persist()
         try:
             touched = [r[0] for r in
                        delta_b.select(BUCKET_COL).distinct().collect()]
             if not touched:
                 return False
-            pending = self.pending_buckets(touched, batch_token)
-            if not pending:
-                # every touched bucket already promoted under this token —
-                # only the manifest write crashed; heal it
-                self._write_manifest(last_token=batch_token)
-                return False
-            if (batch_token is not None and not first_seen_recorded
-                    and len(pending) < len(touched)
-                    and self.maintenance_epoch() > 0):
-                # buckets promoted under this token, yet the manifest
-                # holds NO record of it (not applied, and its token_epochs
-                # entry aged out of the bounded history): an ancient torn
-                # batch replaying past 16 later tokenized merges.  Its
-                # first-seen epoch is not in the manifest — but the
-                # PHYSICAL stamps are: every bucket it promoted carries
-                # (token, epoch-at-batch-start).  If every such stamp
-                # equals the CURRENT epoch, no fence rotation interleaved
-                # (epochs only move forward) and the replay may converge
-                # on the pending remainder exactly like a normal torn
-                # replay (round-13 advisor: prove no rotation instead of
-                # refusing permanently).  Any stamp below the current
-                # epoch — or missing — leaves the interleaving
-                # undecidable: refuse, never re-record under the current
-                # epoch and double-apply over merged-in state.
-                stamps = [self.bucket_token_epoch(b)[1]
-                          for b in touched if b not in set(pending)]
-                if not (stamps and all(e == epoch for e in stamps)):
-                    raise MaintenanceFenceError(
-                        f"bucketed view {self.path}: batch token "
-                        f"{batch_token!r} has promoted buckets on disk but "
-                        f"no manifest record (token history aged out after "
-                        f"{TOKEN_HISTORY}+ later tokenized merges), and "
-                        "their epoch stamps predate the current "
-                        "maintenance epoch — a fence rotation may postdate "
-                        "this batch; re-applying could double-count.  "
-                        "Converge via recompute.")
-            if batch_token is not None and not first_seen_recorded:
-                self._record_token_epoch(batch_token, epoch)
-            if batch_token is not None:
-                for b in pending:
-                    t, e = self.bucket_token_epoch(b)
-                    if t is not None and t != batch_token and e > tok_epoch:
-                        raise MaintenanceFenceError(
-                            f"bucketed view {self.path}: replay of batch "
-                            f"token {batch_token!r} (first seen at "
-                            f"maintenance epoch {tok_epoch}) found bucket "
-                            f"{b} fenced by {t!r} at epoch {e} — an "
-                            "out-of-band maintenance operation (federated "
-                            "merge_from / rebucket) rotated the replay "
-                            "fence after this batch started; re-applying "
-                            "could double-count.  Converge via recompute "
-                            "(rebuild this view from the row store), or "
-                            "restore the pre-maintenance shard state and "
-                            "replay in order.")
-            target = self._read_touched(pending, delta.schema)
-            d = (delta_b if len(pending) == len(touched)
-                 else delta_b.where(
-                     F.col(BUCKET_COL).isin([int(b) for b in pending])))
-            merged = merge_fn(target, d)
-            self._overwrite_touched(merged, pending, token=fence_token,
-                                    token_epoch=tok_epoch)
-            self._write_manifest(last_token=batch_token)
+            merged = merge_fn(self._read_touched(touched, delta.schema),
+                              delta_b)
+            self._commit(merged, touched, token=batch_token,
+                         out_of_band=out_of_band)
             return True
         finally:
             delta_b.unpersist()
@@ -1083,89 +840,28 @@ class BucketedMaterializedView:
     # -- bucket-count evolution (SCALING.md: n_buckets ∝ |view|) -------------
 
     def total_bytes(self) -> int:
-        """On-disk data size from file METADATA only — no Spark scan, no
-        count job.  O(#files) driver-side stat calls."""
-        total = 0
-        for root, dirs, files in storage.walk(self.path):
-            # skip hidden/underscore SIDECAR subdirs (e.g. _centroids) —
-            # but the _bucket=N partition dirs themselves are of course
-            # data (Spark's scan is pointed at them explicitly; the
-            # hidden-file convention applies below the partition level)
-            dirs[:] = [d for d in dirs
-                       if d.startswith(f"{BUCKET_COL}=")
-                       or not d.startswith((".", "_"))]
-            for f in files:
-                if not f.startswith((".", "_")):
-                    total += storage.file_size(os.path.join(root, f))
-        return total
+        """On-disk size of the live generations from file METADATA only
+        — no Spark scan, no count job.  O(#files) driver-side stats."""
+        return sum(storage.file_size(f)
+                   for files in self.bucket_files().values() for f in files)
 
     def n_nonempty_buckets(self) -> int:
-        if not storage.is_dir(self.path):
-            return 0
-        return sum(1 for e in storage.listdir(self.path)
-                   if e.startswith(f"{BUCKET_COL}="))
+        return len(self.bucket_ids())
 
     def rebucket(self, n_buckets: int) -> None:
         """Rewrite the view at a new bucket count — ONE full O(|view|)
         rewrite, amortized over the growth that triggered it (vs paying
-        O(oversized bucket) on EVERY subsequent batch).  Swap is atomic:
-        written to a temp sibling while the old layout still serves, then
-        renamed into place."""
+        O(oversized bucket) on EVERY subsequent batch).  The new layout
+        stages while the old one serves; one manifest replace switches
+        ``n_buckets`` and every bucket pointer together.  Applied tokens
+        and sequence marks carry over untouched (the rewrite is built
+        from state that already includes every committed batch)."""
         if n_buckets == self.n_buckets:
             return
-        df = self.read()
-        tmp = storage.tmp_sibling(self.path, "rebucket")
-        (rebalance_by_bucket(self._with_bucket(df, n_buckets))
-         .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp))
-        # bucket_keys is LAYOUT state exactly like n_buckets: dropping it
-        # here would void the manifest-wins protection after a rebucket
-        # (a handle reopened without bucket_keys= would hash probes over
-        # the full key set and read the wrong directories)
-        manifest: dict = {"n_buckets": n_buckets,
-                          "bucket_keys": self.bucket_keys}
-        old_doc = self._read_manifest_dict()
-        stored = old_doc.get("schema")
-        if stored:
-            # the evolved schema is LAYOUT state too — a rebucket must
-            # not narrow reads back to per-file inference
-            manifest["schema"] = stored
-        # a rebucket rotates EVERY bucket's fence: bump the maintenance
-        # epoch so a replay of a torn (never-committed) batch refuses via
-        # MaintenanceFenceError instead of double-applying onto the
-        # rewritten layout; committed tokens keep converging through the
-        # carried applied-token history
-        new_epoch = self.maintenance_epoch() + 1
-        manifest["epoch"] = new_epoch
-        if old_doc.get("token_epochs"):
-            manifest["token_epochs"] = old_doc["token_epochs"]
-        if old_doc.get("applied_tokens"):
-            manifest["applied_tokens"] = old_doc["applied_tokens"]
-        if old_doc.get("seq_hwm"):
-            # the committed-sequence mark is fence state like the token
-            # histories: dropping it across a rebucket would let an
-            # ancient committed replay re-enter under the new layout
-            manifest["seq_hwm"] = old_doc["seq_hwm"]
-        last = self.last_token()
-        if last is not None:
-            # the rewrite was built from state that already INCLUDES the
-            # last fenced batch — re-seed every new bucket's token so a
-            # replay of that batch after the rebucket stays a no-op
-            manifest["last_token"] = last
-        seed = last if last is not None else f"rebucket-{uuid.uuid4().hex[:8]}"
-        # a synthetic seed (no committed token) still matters: it carries
-        # the bumped epoch, so a replay of a TORN never-committed batch
-        # hits the epoch fence instead of double-applying onto a layout
-        # rewritten from its partial promotions
-        for e in storage.listdir(tmp):
-            if e.startswith(f"{BUCKET_COL}="):
-                storage.write_text(os.path.join(tmp, e, TOKEN_FILE),
-                                   f"{seed}\n{new_epoch}")
-        storage.write_text(os.path.join(tmp, MANIFEST),
-                           json.dumps(manifest))
-        # the in-memory count mutates only AFTER the swap succeeds, so an
-        # exception here leaves self.n_buckets agreeing with the on-disk
-        # layout
-        self.replace_with(tmp)
+        self._commit(self._with_bucket(self.read(), n_buckets), None,
+                     out_of_band=True,
+                     mutate=lambda doc: doc.__setitem__("n_buckets",
+                                                        n_buckets))
         old_n, self.n_buckets = self.n_buckets, n_buckets
         logger.info("bucketed view %s: rebucketed %d → %d buckets",
                     self.path, old_n, n_buckets)
@@ -1176,52 +872,24 @@ class BucketedMaterializedView:
         other buckets untouched.
 
         Why it exists: each touched-bucket overwrite writes the bucket in
-        one task, but interleavings (crash replays, rebucket leftovers,
-        engines with differing shuffle partitioning) can accumulate
-        files; at 10⁴⁺ buckets the per-file open cost starts to dominate
-        reads long before size triggers :meth:`maybe_rebucket`.  The
-        fragmentation CHECK is file metadata only (no Spark job); the
-        rewrite reads and writes ONLY the fragmented buckets through the
-        same displaced-rename promotion as a merge batch, so a crash
-        mid-compaction is recovered by :meth:`_recover` and the view is
-        never unreadable.  Content and replay tokens are preserved
-        (compaction is a physical rewrite, not a logical change).
+        one task, but interleavings (engines with differing shuffle
+        partitioning, rebucket leftovers) can accumulate files; at 10⁴⁺
+        buckets the per-file open cost starts to dominate reads long
+        before size triggers :meth:`maybe_rebucket`.  The fragmentation
+        CHECK is file metadata only (no Spark job); the rewrite reads and
+        writes ONLY the fragmented buckets and commits like a batch.
+        Content and the replay history are preserved (compaction is a
+        physical rewrite, not a logical change).
 
         Returns the number of buckets compacted."""
-        self._recover()
-        if not storage.is_dir(self.path):
-            return 0
-        fragmented: list[int] = []
-        tokens: dict[int, str | None] = {}
-        for e in storage.listdir(self.path):
-            if not e.startswith(f"{BUCKET_COL}="):
-                continue
-            d = os.path.join(self.path, e)
-            n_files = sum(1 for f in storage.listdir(d)
-                          if not f.startswith((".", "_")))
-            if n_files > max_files_per_bucket:
-                b = int(e.split("=", 1)[1])
-                fragmented.append(b)
-                tokens[b] = self._token_payload(b)  # verbatim: token+epoch
+        fragmented = [b for b, files in self.bucket_files().items()
+                      if len(files) > max_files_per_bucket]
         if not fragmented:
             return 0
-        rows = (self._read_touched(fragmented, None)
-                .repartition(BUCKET_COL))
-        tmp = storage.tmp_sibling(self.path, "compact")
-        # coalesce(1) per bucket via partitionBy + one-task-per-bucket
-        # repartition: each bucket's rows land in one output file
-        rows.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        for b in fragmented:
-            d = os.path.join(tmp, f"{BUCKET_COL}={b}")
-            tok = tokens.get(b)
-            if tok is not None and storage.is_dir(d):
-                storage.write_text(os.path.join(d, TOKEN_FILE), tok)
-        for b in fragmented:
-            # a bucket absent from the temp output vanished mid-listing:
-            # leave it alone (drop_if_absent=False — compaction is a
-            # physical rewrite, never a deletion)
-            self._promote_bucket(tmp, b, drop_if_absent=False)
-        storage.remove_tree(tmp)
+        # one output file per bucket: the bucket-keyed exchange puts each
+        # bucket's rows in one task
+        self._commit(self._read_touched(fragmented, None), fragmented,
+                     keep_absent=True)
         logger.info("bucketed view %s: compacted %d fragmented bucket(s)",
                     self.path, len(fragmented))
         return len(fragmented)
@@ -1231,59 +899,36 @@ class BucketedMaterializedView:
         """Housekeeping rewrite of the given (default: every non-empty)
         buckets through ``transform_fn(rows) -> rows`` — the primitive a
         bounded view's PRUNE sweep needs.  Like :meth:`compact` it runs
-        OUTSIDE the batch/token protocol and preserves each bucket's
-        replay-fence token; unlike compact it may legitimately change row
-        CONTENT and even empty a bucket, in which case the bucket
-        directory is KEPT with only its token file — dropping the
-        directory would drop the fence and un-fence a replay of the last
-        batch that touched it (the drop_range retention-fence lesson,
-        round 10 advisor).
+        OUTSIDE the batch-token protocol and keeps the replay history;
+        unlike compact it may legitimately change row CONTENT and even
+        empty a bucket, which the commit then drops.
 
         ``transform_fn`` receives and must return rows carrying
         ``_bucket`` and MUST NOT move rows between buckets (a filter /
-        column rewrite, never a re-key).  Promotion is the same
-        displaced-rename dance as a merge batch, so a crash mid-rewrite
-        is repaired by :meth:`_recover`.  Returns the number of buckets
+        column rewrite, never a re-key).  Returns the number of buckets
         rewritten."""
-        self._recover()
-        if not storage.is_dir(self.path):
-            return 0
-        if buckets is None:
-            buckets = [int(e.split("=", 1)[1])
-                       for e in storage.listdir(self.path)
-                       if e.startswith(f"{BUCKET_COL}=")]
-        buckets = [b for b in buckets if storage.is_dir(
-            os.path.join(self.path, f"{BUCKET_COL}={b}"))]
+        live = self.bucket_ids()
+        if buckets is not None:
+            buckets = sorted(set(buckets) & set(live))
+        else:
+            buckets = live
         if not buckets:
             return 0
-        tokens = {b: self._token_payload(b) for b in buckets}  # verbatim
-        out = (transform_fn(self._read_touched(buckets, None))
-               .repartition(BUCKET_COL))
-        tmp = storage.tmp_sibling(self.path, "rewrite")
-        out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        for b in buckets:
-            d = os.path.join(tmp, f"{BUCKET_COL}={b}")
-            # a fully-pruned bucket is absent from the temp output:
-            # materialize it EMPTY so the promotion replaces the live
-            # data while the token file below keeps the replay fence
-            storage.makedirs(d)
-            tok = tokens.get(b)
-            if tok is not None:
-                storage.write_text(os.path.join(d, TOKEN_FILE), tok)
-        for b in buckets:
-            self._promote_bucket(tmp, b, drop_if_absent=False)
-        storage.remove_tree(tmp)
+        self._commit(transform_fn(self._read_touched(buckets, None)),
+                     buckets)
         logger.info("bucketed view %s: rewrote %d bucket(s) in place",
                     self.path, len(buckets))
         return len(buckets)
 
     def maintain(self, target_bucket_bytes: int = 128 << 20) -> None:
         """The standard between-batch housekeeping sawtooth in ONE
-        place: bucket-growth check, then small-file compaction when no
-        rebucket ran (a rebucket already rewrote every bucket to one
-        file).  Derived stores whose maintain() is exactly this should
-        delegate here rather than re-stating the policy (review
-        finding: the pair had been copy-pasted into eight operators)."""
+        place: crash-leftover GC, bucket-growth check, then small-file
+        compaction when no rebucket ran (a rebucket already rewrote
+        every bucket to one file).  Derived stores whose maintain() is
+        exactly this should delegate here rather than re-stating the
+        policy (review finding: the pair had been copy-pasted into
+        eight operators)."""
+        self.vacuum()
         if not self.maybe_rebucket(target_bucket_bytes=target_bucket_bytes):
             self.compact()
 

@@ -16,7 +16,7 @@ State: ``depth · 16^width_hex`` counter cells — FIXED size regardless
 of vocabulary (the |vocab|-independence that distinguishes it from the
 exact q_top_terms rollup), stored as a bucketed
 :class:`~ydb_cdc_processor_spark.operators.agg_view.AggregateView`
-keyed ``(_d, _b)`` under the standard per-bucket replay fence.
+keyed ``(_d, _b)`` under the standard batch-token replay fence.
 Per-batch cost: one map-side-combined ±contribution agg over the batch
 (exchange ≤ partitions·depth·width rows) + a merge touching only the
 batch cells' buckets.  Serving: point estimates for a probe term set
@@ -121,7 +121,7 @@ class CmsView:
         −1 per cell of each old image's value (a rewrite retracts the
         old value and contributes the new — the linear-sketch property;
         both sides ride AggregateView's signed merge under its
-        per-bucket token fence)."""
+        batch-token fence)."""
         if new_rows is None and old_rows is None:
             return
         self.counts.apply_delta(
@@ -139,13 +139,10 @@ class CmsView:
         agg_view.AggregateView.merge_rollup` (token-fenced: counter
         addition is not idempotent).
 
-        Single-maintainer window — MECHANICALLY ENFORCED (round-12, via
-        ``merge_rollup``'s epoch bump): run ONLY between COMMITTED
-        batches of any live feed; a replay of a torn (never-committed)
-        feed batch refuses with :class:`~ydb_cdc_processor_spark.
-        operators.bucketed_view.MaintenanceFenceError` instead of
-        silently double-applying, while a replay of a COMMITTED batch
-        converges via the applied-token history."""
+        Run between committed batches of any live feed (via
+        ``merge_rollup``): a replay of a COMMITTED feed batch is skipped
+        by the applied-token history, and a torn one was never visible,
+        so it applies once."""
         if other.value_col != self.value_col:
             raise ValueError(
                 f"value_col must match to merge ({other.value_col!r} vs "

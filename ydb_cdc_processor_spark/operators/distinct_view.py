@@ -25,11 +25,10 @@ group whose rows are all-NULL reports 0 via the group's row in the
 fact view, not this rollup — same convention as DuckDB/Spark).
 
 Replay fence: ±refcount deltas are NOT idempotent, so maintenance rides
-:meth:`BucketedMaterializedView.merge_touched`'s PER-BUCKET batch-token
-fence — a checkpoint replay after a crash mid-promotion re-applies the
-delta only to un-promoted buckets (exactly-once composes because a
-group lives in exactly one bucket; same contract as the bucketed
-AggregateView backend).
+:meth:`BucketedMaterializedView.merge_touched`'s batch-token fence —
+the token commits in the same manifest replace as the batch, so a
+checkpoint replay after a crash re-applies the whole (invisible) batch
+exactly once (same contract as the bucketed AggregateView backend).
 
 100 TB shape: contributions are one hash agg over the batch + its
 key-pruned old images (map-side combine → one row per touched
@@ -98,7 +97,7 @@ class DistinctCountView:
         rows (None for delete-only), ``old_rows`` = pre-merge images of
         every touched key (None before the fact view exists).  The
         per-(group, value) refcount delta merges into only the touched
-        buckets under the per-bucket token fence."""
+        buckets under the batch-token fence."""
         parts = []
         if new_rows is not None:
             parts.append(self._contrib(new_rows, +1))
@@ -134,14 +133,11 @@ class DistinctCountView:
         replay).  Cost: O(|other's live pairs|) through one
         touched-bucket merge.
 
-        Single-maintainer window — MECHANICALLY ENFORCED (round-12): run
-        ONLY between COMMITTED batches of any live feed.  The merge
-        bumps the store's maintenance epoch and promotes the touched
-        buckets under ITS token; a replay of a torn (never-committed)
-        feed batch then refuses with :class:`~ydb_cdc_processor_spark.
-        operators.bucketed_view.MaintenanceFenceError` instead of
-        silently double-applying, while a replay of a COMMITTED batch
-        converges via the applied-token history."""
+        Run between committed batches of any live feed.  The merge is
+        one out-of-band commit of the store (it bumps the ``epoch``
+        counter): a replay of a COMMITTED feed batch is skipped by the
+        applied-token history, and a torn one was never visible, so it
+        applies once."""
         if (list(other.group_cols) != list(self.group_cols)
                 or other.value_col != self.value_col):
             raise ValueError("group_cols and value_col must match to merge")

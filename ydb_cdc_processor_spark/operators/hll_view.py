@@ -90,9 +90,8 @@ class HllView:
         # layout's p — the VectorIndex n_cells/seed rule.  The meta is
         # written HERE, before any data, so no crash window can leave a
         # populated store without its geometry (review finding), and it
-        # lives OUTSIDE view.path — rebucket()'s whole-directory swap
-        # would silently destroy a file stored inside the bucket dir
-        # (review finding; CmsView's layout was already one level up).
+        # lives OUTSIDE view.path, which belongs to the bucketed store
+        # (CmsView's layout is one level up too).
         self.view.recover()
         stored = self._read_meta()
         if stored:

@@ -126,7 +126,7 @@ class NearDupIndex:
         lookup joins the batch's band rows against the touched store
         buckets — which now include the batch itself, so within-batch
         pairs surface in the same pass and the plan never references
-        pre-merge parquet files that the promotion just replaced."""
+        pre-merge parquet files that the commit just superseded."""
         band = self.band_rows(docs, id_col, text_col) \
             .localCheckpoint(eager=True)  # bounded: |batch| × bands rows
         touched = self.view.apply(band, action="upsertInto")
@@ -159,7 +159,7 @@ class NearDupIndex:
                       .alias("est_jaccard"))
                  .distinct())
         # materialize NOW: the lazy plan references the store's parquet
-        # files, which the NEXT apply_batch's rename-promotion deletes —
+        # files, which the NEXT apply_batch's commit garbage-collects —
         # a caller holding the un-forced frame across batches would hit
         # FileNotFound.  Bounded output (candidate pairs of one batch).
         out = pairs.localCheckpoint(eager=True)

@@ -29,7 +29,7 @@ Layout and fencing are exactly the distinct view's: a
 BucketedMaterializedView` keyed ``(group_cols…, value)`` and co-located
 on the group columns (maintenance touches only the batch's groups'
 buckets, a group's value set lives in one bucket), ±deltas under the
-per-bucket batch-token replay fence.
+batch-token replay fence.
 
 100 TB shape: per batch one map-side-combined hash agg over the batch +
 key-pruned old images, then a touched-bucket merge.  Store size is
@@ -136,14 +136,11 @@ class QuantileView:
         (group, value, weight) relation crosses).  NOT idempotent; pass
         ``batch_token`` when the caller may replay.
 
-        Single-maintainer window — MECHANICALLY ENFORCED (round-12): run
-        ONLY between COMMITTED batches of any live feed.  The merge
-        bumps the store's maintenance epoch and promotes the touched
-        buckets under ITS token; a replay of a torn (never-committed)
-        feed batch then refuses with :class:`~ydb_cdc_processor_spark.
-        operators.bucketed_view.MaintenanceFenceError` instead of
-        silently double-applying, while a replay of a COMMITTED batch
-        converges via the applied-token history."""
+        Run between committed batches of any live feed.  The merge is
+        one out-of-band commit of the store (it bumps the ``epoch``
+        counter): a replay of a COMMITTED feed batch is skipped by the
+        applied-token history, and a torn one was never visible, so it
+        applies once."""
         if (list(other.group_cols) != list(self.group_cols)
                 or other.value_col != self.value_col):
             raise ValueError("group_cols and value_col must match to merge")

@@ -36,10 +36,10 @@ persisted in the manifest at construction and a store reopened with a
 different granularity serves the layout's, not the constructor's.
 
 Everything else — touched-partition merge with the four action modes,
-per-partition promotion via displaced renames, crash recovery,
-compaction, schema widening, replay-fence tokens — is inherited
-verbatim from the bucketed view; the ONLY behavioral override is the
-partition function itself.
+the one-manifest-replace commit, compaction, schema widening, the
+replay fence — is inherited verbatim from the bucketed view; the ONLY
+behavioral override is the partition function itself (plus retention
+and granule re-shard, which are commits of the same protocol).
 
 Reference anchors: the maintained-store contract mirrors the
 reference's keyed UPSERT/DELETE sink (YqlWriter.java:181-206,
@@ -52,14 +52,13 @@ from __future__ import annotations
 
 import datetime as _dt
 import logging
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.bucketed_view import (
-    BUCKET_COL, TOKEN_FILE, BucketedMaterializedView, rebalance_by_bucket)
+    BUCKET_COL, BucketedMaterializedView)
 
 logger = logging.getLogger(__name__)
 
@@ -72,13 +71,9 @@ _CALENDAR = ("day", "week", "month", "year")
 #: directory-id floor for granule-local re-shard allocations.  Composed
 #: NATURAL ids are ``pid * n_sub + sub``; re-shard blocks allocate
 #: upward from here, contiguously, with the next free id recorded in
-#: the manifest (``next_alloc``).  Deadness of a directory id is ONLY
-#: ever inferred inside the allocated range ``[ALLOC_BASE,
-#: next_alloc)`` — a natural id at or above the floor (numeric-width
-#: granularities have an unbounded pid domain) is LIVE, never swept
-#: (round-12 advisor, high).  The two id spaces stay disjoint because
-#: :meth:`RangePartitionedView.reshard_granule` refuses stores whose
-#: natural ids could reach the floor (calendar granularities are
+#: the manifest (``next_alloc``).  The two id spaces stay disjoint
+#: because :meth:`RangePartitionedView.reshard_granule` refuses stores
+#: whose natural ids could reach the floor (calendar granularities are
 #: bounded through year 9999; numeric widths are refused outright).
 ALLOC_BASE = 1 << 28
 
@@ -92,9 +87,8 @@ class RangePartitionedView(BucketedMaterializedView):
     day, so one hot day's CDC merge reads O(touched hash buckets of
     that day), never the whole day.  The directory id stays a single
     int — ``id = pid * n_sub + pmod(xxhash64(hash_keys), n_sub)`` — so
-    every inherited mechanism (touched-bucket merge, displaced-rename
-    promotion, crash recovery, compaction, replay tokens) works
-    unchanged; only the id arithmetic knows about the composition.
+    every inherited mechanism (touched-bucket merge, the manifest
+    commit, compaction, replay tokens) works unchanged; only the id arithmetic knows about the composition.
     Range pruning decodes ``pid = id // n_sub`` (floor division, exact
     for negative pids too)."""
 
@@ -141,8 +135,8 @@ class RangePartitionedView(BucketedMaterializedView):
                          bucket_keys=[part_col])
         # granularity / n_sub / hash_keys are LAYOUT metadata: stored
         # wins over constructor, and the manifest is written at
-        # construction so no crash window can leave a populated store
-        # without its partition arithmetic
+        # construction so no populated store lacks its partition
+        # arithmetic
         doc = self._read_manifest_dict()
         stored = doc.get("range_layout")
         if stored:
@@ -170,20 +164,11 @@ class RangePartitionedView(BucketedMaterializedView):
                     "constructor hash_keys=%s", path, hk, self.hash_keys)
                 self.hash_keys = list(hk)
         else:
-            self._write_manifest()
+            self._mutate_manifest(lambda d: d.__setitem__("range_layout", {
+                "part_col": self.part_col, "granularity": self.granularity,
+                "n_sub": self.n_sub, "hash_keys": self.hash_keys}))
 
     # -- layout ---------------------------------------------------------------
-
-    def _write_manifest(self, last_token: str | None = None) -> None:
-        super()._write_manifest(last_token=last_token)
-        doc = self._read_manifest_dict()
-        if doc.get("range_layout") is None:
-            import json
-            doc["range_layout"] = {"part_col": self.part_col,
-                                   "granularity": self.granularity,
-                                   "n_sub": self.n_sub,
-                                   "hash_keys": self.hash_keys}
-            storage.replace_text(self._manifest_path(), json.dumps(doc))
 
     def _pid_expr(self) -> F.Column:
         """Time-granule partition id from the range column."""
@@ -243,21 +228,12 @@ class RangePartitionedView(BucketedMaterializedView):
         return {
             "splits": {int(p): ent
                        for p, ent in (doc.get("splits") or {}).items()},
-            "pending": {int(p): ent
-                        for p, ent in (doc.get("pending_splits")
-                                       or {}).items()},
             "next_alloc": int(doc.get("next_alloc", ALLOC_BASE)),
         }
 
     def _splits(self) -> dict[int, dict]:
-        """COMMITTED granule splits: ``{pid: {"alloc", "n_sub"}}``.
-        Pending (staged, uncommitted) splits live under a SEPARATE
-        manifest key so a re-split granule keeps serving its committed
-        block until the flip."""
+        """Committed granule splits: ``{pid: {"alloc", "n_sub"}}``."""
         return self._layout()["splits"]
-
-    def _pending_splits(self) -> dict[int, dict]:
-        return self._layout()["pending"]
 
     def granule_n_sub(self, pid: int) -> int:
         """The hash fan-out serving granule ``pid`` (its committed split
@@ -265,60 +241,21 @@ class RangePartitionedView(BucketedMaterializedView):
         ent = self._splits().get(int(pid))
         return int(ent["n_sub"]) if ent else self.n_sub
 
-    def _id_to_pid(self, b: int, lay: dict | None = None) -> int | None:
-        """Granule pid owning directory id ``b`` — None for DEAD ids:
-        reads must skip them.  Pruning stays performance-only
-        (read_range re-applies the bounds as a residual filter), and
-        deadness is exact and EXPLICIT — it is inferred only for
-
-        * the natural-id range of a granule with a COMMITTED split
-          (those directories hold only superseded copies), and
-        * allocated ids ``ALLOC_BASE <= b < next_alloc`` owned by no
-          committed split (an uncommitted pending block, or a block a
-          later re-split retired) — every id in that range was handed
-          out by a reserve, so "allocated but unowned" is exact.
-
-        A natural id at or above ``ALLOC_BASE`` on a store that never
-        allocated (``next_alloc`` absent ⇒ the range is empty) is LIVE:
-        numeric-width granularities legitimately compose ids past the
-        floor, and classifying them dead silently dropped — then swept
-        — real data (round-12 advisor, high).  Disjointness of the two
-        id spaces on stores that DID allocate is enforced up front by
-        :meth:`_check_reshard_supported`.
+    def _id_to_pid(self, b: int, lay: dict | None = None) -> int:
+        """Granule pid owning directory id ``b``: its committed split
+        block's granule, else ``b // n_sub`` (floor division, exact for
+        negative pids too).  Every id the manifest names is live — the
+        commit that publishes a split drops the granule's previous ids
+        in the same manifest replace.
 
         ``lay``: optional :meth:`_layout` snapshot — pass it when
         classifying many ids in one operation."""
         lay = lay if lay is not None else self._layout()
-        splits = lay["splits"]
-        for p, ent in splits.items():
+        for p, ent in lay["splits"].items():
             a, m = int(ent["alloc"]), int(ent["n_sub"])
             if a <= b < a + m:
                 return p
-        if ALLOC_BASE <= b < lay["next_alloc"]:
-            return None   # allocated but unowned: pending or retired block
-        p = b // self.n_sub
-        return None if p in splits else p
-
-    def _live_bucket_ids(self) -> list[int]:
-        lay = self._layout()
-        return [b for b in self._existing_bucket_ids()
-                if self._id_to_pid(b, lay) is not None]
-
-    def _sweep_dead(self) -> int:
-        """Remove directories whose id is DEAD (see :meth:`_id_to_pid`)
-        — the post-commit cleanup of :meth:`reshard_granule`, re-run
-        here so a crash between its commit and its cleanup leaves no
-        permanent garbage.  O(dead) directory removals, no Spark job."""
-        lay = self._layout()
-        dead = [b for b in self._existing_bucket_ids()
-                if self._id_to_pid(b, lay) is None]
-        for b in dead:
-            storage.remove_tree(os.path.join(self.path,
-                                             f"{BUCKET_COL}={b}"))
-        if dead:
-            logger.info("range view %s: swept %d dead director(ies) "
-                        "left by a granule re-shard", self.path, len(dead))
-        return len(dead)
+        return b // self.n_sub
 
     def reshard_supported(self) -> bool:
         """True iff this store's layout admits granule re-sharding —
@@ -334,8 +271,7 @@ class RangePartitionedView(BucketedMaterializedView):
         ids could reach :data:`ALLOC_BASE` — once a store allocates
         re-shard blocks, every id in ``[ALLOC_BASE, next_alloc)`` is
         classified by block membership, so a natural id landing there
-        would be misread (served under the wrong granule, or swept as
-        dead).  Calendar granularities are bounded: the largest pid is
+        would be misread (served under the wrong granule).  Calendar granularities are bounded: the largest pid is
         year 9999's, so ``(max_pid + 1) * n_sub <= ALLOC_BASE`` proves
         every future natural id stays below the floor.  Numeric widths
         have an unbounded pid domain and are refused outright — evolve
@@ -370,22 +306,16 @@ class RangePartitionedView(BucketedMaterializedView):
 
         ``value`` is a ``part_col`` value (date/ISO string/number, the
         :meth:`drop_range` convention); only that granule's directories
-        are rewritten — O(granule), never O(view).  The commit point is
-        ONE atomic manifest replace flipping the split from pending to
-        committed: until it, reads and merges serve the old layout and
-        the new block is invisible; after it, the granule serves from
-        its alloc block and the old directories are dead (swept here,
-        and by :meth:`maintain` after a crash).  A re-shard rotates the
-        granule's replay fences, so it bumps the maintenance epoch —
-        a REPLAY of a torn feed batch refuses via
-        :class:`~ydb_cdc_processor_spark.operators.bucketed_view.
-        MaintenanceFenceError` instead of double-applying (the same
-        single-maintainer mechanics as federated merges).  The fence
-        protects replays ONLY: a concurrent LIVE feed committing a
-        fresh batch into the old directories between the snapshot and
-        the manifest flip is swept with them — quiesce live writers
-        for the duration, exactly the :meth:`rebucket` contract
-        (single maintainer per store).
+        are rewritten — O(granule), never O(view).  The commit is the
+        store's ONE manifest replace: it publishes the new alloc block,
+        drops the granule's old ids and records the split together, so
+        reads and merges serve the old layout until it and the new one
+        after it; the old generations are then garbage.  It counts as
+        out-of-band maintenance (bumps ``epoch``).  A concurrent LIVE
+        feed committing into the granule between the read and the
+        commit would be overwritten — quiesce live writers for the
+        duration, exactly the :meth:`rebucket` contract (single
+        maintainer per store).
 
         Refused (``ValueError``) on stores whose natural id domain
         could collide with the allocation space — numeric-width
@@ -394,78 +324,44 @@ class RangePartitionedView(BucketedMaterializedView):
 
         Returns the number of sub-bucket directories the granule now
         has.  Re-sharding an already-split granule allocates a fresh
-        block (the old one goes dead); lowering the fan-out is refused
+        block (the old one is dropped); lowering the fan-out is refused
         — merge-back is a rebuild, not a split."""
         return self._reshard_pid(self.partition_id(value), n_sub_new)
 
     def _reshard_pid(self, pid: int, n_sub_new: int) -> int:
-        import uuid as _uuid
         self._check_reshard_supported()
         cur = self.granule_n_sub(pid)
         if n_sub_new <= cur:
             raise ValueError(
                 f"granule {pid} already serves n_sub={cur}; re-shard only "
                 f"raises fan-out (got {n_sub_new})")
-        self._recover()
-        self._sweep_dead()
-        # resume a torn re-shard of the SAME shape; otherwise allocate
-        pend = self._pending_splits().get(pid)
-        if pend is not None and int(pend["n_sub"]) == n_sub_new:
-            alloc = int(pend["alloc"])
-        else:
-            alloc = int(self._range_doc().get("next_alloc", ALLOC_BASE))
-
-            def reserve(doc):
-                rl = doc.setdefault("range_layout", {})
-                rl["next_alloc"] = alloc + n_sub_new
-                rl.setdefault("pending_splits", {})[str(pid)] = {
-                    "alloc": alloc, "n_sub": n_sub_new}
-            self._mutate_manifest(reserve)
         lay = self._layout()
-        old_ids = [b for b in self._existing_bucket_ids()
+        alloc = lay["next_alloc"]
+        old_ids = [b for b in self.bucket_ids()
                    if self._id_to_pid(b, lay) == pid]
-        new_epoch = self.maintenance_epoch() + 1
-        if old_ids:
-            rows = self._read_touched(old_ids, None).drop(BUCKET_COL)
-            sub = F.pmod(
-                F.xxhash64(*[F.col(k) for k in self.hash_keys]),
-                F.lit(n_sub_new)).cast("int")
-            out = rebalance_by_bucket(
-                rows.withColumn(BUCKET_COL,
-                                (F.lit(alloc) + sub).cast("int")))
-            tmp = storage.tmp_sibling(self.path, "reshard")
-            (out.write.mode("overwrite")
-             .partitionBy(BUCKET_COL).parquet(tmp))
-            # synthetic fence at the bumped epoch: the rewrite mixes rows
-            # across the granule's old buckets, so per-bucket tokens
-            # cannot carry over — a torn batch's replay must refuse
-            seed = f"reshard-{_uuid.uuid4().hex[:8]}\n{new_epoch}"
-            for j in range(n_sub_new):
-                d = os.path.join(tmp, f"{BUCKET_COL}={alloc + j}")
-                if storage.is_dir(d):
-                    storage.write_text(os.path.join(d, TOKEN_FILE), seed)
-            for j in range(n_sub_new):
-                # staged block is invisible until the manifest flip
-                # (_id_to_pid maps pending allocs to None), so promoting
-                # into the live path is read-safe
-                self._promote_bucket(tmp, alloc + j, drop_if_absent=False)
-            storage.remove_tree(tmp)
+        new_ids = list(range(alloc, alloc + n_sub_new))
+        sub = F.pmod(F.xxhash64(*[F.col(k) for k in self.hash_keys]),
+                     F.lit(n_sub_new)).cast("int")
+        rows = (self._read_touched(old_ids, None)
+                .withColumn(BUCKET_COL, (F.lit(alloc) + sub).cast("int"))
+                if old_ids else None)
 
-        def commit(doc):
+        def split(doc):
             rl = doc.setdefault("range_layout", {})
+            rl["next_alloc"] = alloc + n_sub_new
             rl.setdefault("splits", {})[str(pid)] = {
                 "alloc": alloc, "n_sub": n_sub_new}
-            (rl.get("pending_splits") or {}).pop(str(pid), None)
-            doc["epoch"] = new_epoch
-        self._mutate_manifest(commit)   # THE atomic visibility flip
-        swept = self._sweep_dead()      # old granule dirs are dead now
+        # ONE commit: the new block's pointers, the old ids' removal and
+        # the split record land together; before it nothing is visible
+        self._commit(rows, new_ids + old_ids, out_of_band=True,
+                     mutate=split)
         logger.info(
             "range view %s: granule %d re-sharded to n_sub=%d "
             "(alloc block %d..%d, %d old director(ies) retired)",
-            self.path, pid, n_sub_new, alloc, alloc + n_sub_new - 1, swept)
-        lay = self._layout()
-        return sum(1 for b in self._existing_bucket_ids()
-                   if self._id_to_pid(b, lay) == pid)
+            self.path, pid, n_sub_new, alloc, alloc + n_sub_new - 1,
+            len(old_ids))
+        return sum(1 for b in self.bucket_ids() if alloc <= b
+                   < alloc + n_sub_new)
 
     def partition_id(self, value) -> int:
         """Driver-side twin of :meth:`bucket_expr` for range pruning.
@@ -488,26 +384,6 @@ class RangePartitionedView(BucketedMaterializedView):
         return value.year - 1970
 
     # -- layout evolution: granularity is fixed --------------------------------
-
-    def _read_raw(self) -> DataFrame:
-        """Once any granule has been re-sharded (or a re-shard is
-        staged), a wholesale directory read could see a dead block's
-        superseded copies alongside the live ones — route full reads
-        through the LIVE directory ids instead (O(#dirs) listing, same
-        as the inherited planner's).  Split-free stores keep the
-        inherited wholesale read."""
-        lay = self._layout()
-        if not lay["splits"] and not lay["pending"]:
-            return super()._read_raw()
-        self._recover()
-        ids = self._live_bucket_ids()
-        if not ids:
-            # nothing live: schema-only (dead dirs carry the schema) or
-            # the inherited empty-store handling — never recurse back
-            # through this override
-            base = super()._read_raw()
-            return base.limit(0) if self.exists() else base
-        return self._read_touched(ids, None)
 
     def rebucket(self, n_buckets: int) -> None:
         raise NotImplementedError(
@@ -532,22 +408,13 @@ class RangePartitionedView(BucketedMaterializedView):
         cut = self._read_manifest_dict().get("retention_cut")
         return int(cut) if cut is not None else None
 
-    def _record_retention_cut(self, cut: int) -> None:
-        import json
-        doc = self._read_manifest_dict()
-        prev = doc.get("retention_cut")
-        doc["retention_cut"] = max(int(cut),
-                                   int(prev) if prev is not None else cut)
-        storage.makedirs(self.path)
-        storage.replace_text(self._manifest_path(), json.dumps(doc))
-
     def _filter_retained(self, delta: DataFrame | None) -> DataFrame | None:
         """Drop delta rows whose granule pid is below the recorded
         retention cutoff — without this, a crash replay of the last
         micro-batch that touched a since-expired partition would
-        re-apply its delta into a recreated directory, resurrecting a
-        partial slice of dropped rows (advisor finding: drop_range also
-        removes the per-bucket replay-fence tokens)."""
+        re-apply its delta into a recreated partition, resurrecting a
+        partial slice of dropped rows (advisor finding: retention ×
+        at-least-once)."""
         if delta is None:
             return None
         cut = self.retention_cut()
@@ -581,29 +448,12 @@ class RangePartitionedView(BucketedMaterializedView):
 
     # -- serving ----------------------------------------------------------------
 
-    def _existing_bucket_ids(self) -> list[int]:
-        """Raw directory ids present on disk (pid when ``n_sub == 1``,
-        composed pid×sub otherwise) — one listing, no Spark job."""
-        self._recover()
-        if not storage.is_dir(self.path):
-            return []
-        out = []
-        for e in storage.listdir(self.path):
-            if e.startswith(f"{BUCKET_COL}="):
-                try:
-                    out.append(int(e.split("=", 1)[1]))
-                except ValueError:
-                    pass
-        return sorted(out)
-
     def existing_partitions(self) -> list[int]:
-        """Granule partition ids present on disk (composed sub-buckets
-        and re-shard blocks collapse to their pid; dead directories are
-        excluded) — the observability surface."""
+        """Granule partition ids the manifest names (composed
+        sub-buckets and re-shard blocks collapse to their pid) — the
+        observability surface."""
         lay = self._layout()
-        return sorted({p for p in (self._id_to_pid(b, lay)
-                                   for b in self._existing_bucket_ids())
-                       if p is not None})
+        return sorted({self._id_to_pid(b, lay) for b in self.bucket_ids()})
 
     def read_range(self, lo=None, hi=None) -> DataFrame:
         """Rows with ``lo <= part_col <= hi`` (either bound optional),
@@ -619,11 +469,9 @@ class RangePartitionedView(BucketedMaterializedView):
         lo_id = self.partition_id(lo) if lo is not None else None
         hi_id = self.partition_id(hi) if hi is not None else None
         lay = self._layout()
-        pids = {b: self._id_to_pid(b, lay)
-                for b in self._existing_bucket_ids()}
+        pids = {b: self._id_to_pid(b, lay) for b in self.bucket_ids()}
         ids = [b for b, p in pids.items()
-               if p is not None
-               and (lo_id is None or p >= lo_id)
+               if (lo_id is None or p >= lo_id)
                and (hi_id is None or p <= hi_id)]
         if (not ids and self._stored_schema() is None
                 and self.schema is None):
@@ -640,48 +488,39 @@ class RangePartitionedView(BucketedMaterializedView):
         return df
 
     def drop_range(self, hi) -> int:
-        """Retention: drop every directory whose granule id is STRICTLY
-        below ``partition_id(hi)`` — O(dropped) directory removals, no
-        Spark job, surviving data untouched (the operation a 100 TB
-        table runs nightly; a delete-based expiry would rewrite every
-        touched partition instead).  Rows of the boundary granule are
-        kept even if individually older than ``hi`` — retention is
-        partition-granular by design.  The cutoff pid is recorded in
-        the manifest BEFORE any removal, so a crash replay of an old
-        batch cannot resurrect expired rows (see
-        :meth:`_filter_retained`).  Returns the number of directories
-        dropped."""
+        """Retention: drop every bucket whose granule id is STRICTLY
+        below ``partition_id(hi)`` — one manifest commit and O(dropped)
+        directory removals, no Spark job, surviving data untouched (the
+        operation a 100 TB table runs nightly; a delete-based expiry
+        would rewrite every touched partition instead).  Rows of the
+        boundary granule are kept even if individually older than
+        ``hi`` — retention is partition-granular by design.  The cutoff
+        pid is recorded in the same manifest replace that drops the
+        buckets, so a crash replay of an old batch cannot resurrect
+        expired rows (see :meth:`_filter_retained`).  Returns the number
+        of buckets dropped."""
         cut = self.partition_id(hi)
-        self._record_retention_cut(cut)
-        self._sweep_dead()   # re-shard leftovers expire with everything else
-        dropped = 0
         lay = self._layout()
-        for b in self._existing_bucket_ids():
-            p = self._id_to_pid(b, lay)
-            if p is not None and p < cut:
-                storage.remove_tree(
-                    os.path.join(self.path, f"{BUCKET_COL}={b}"))
-                dropped += 1
-        return dropped
+        gone = [b for b in self.bucket_ids()
+                if self._id_to_pid(b, lay) < cut]
+
+        def record(doc):
+            prev = doc.get("retention_cut")
+            doc["retention_cut"] = max(cut, int(prev)
+                                       if prev is not None else cut)
+        self._commit(None, gone, mutate=record)
+        return len(gone)
 
     def granule_bytes(self) -> dict[int, int]:
-        """On-disk bytes per LIVE granule, from file metadata only —
+        """On-disk bytes per live granule, from file metadata only —
         O(#files) driver-side stats, no Spark job.  The hot-granule
         detection input (the range twin of ``total_bytes``)."""
         sizes: dict[int, int] = {}
         lay = self._layout()
-        for b in self._existing_bucket_ids():
+        for b, files in self.bucket_files().items():
             p = self._id_to_pid(b, lay)
-            if p is None:
-                continue
-            d = os.path.join(self.path, f"{BUCKET_COL}={b}")
-            try:
-                n = sum(storage.file_size(os.path.join(d, f))
-                        for f in storage.listdir(d)
-                        if not f.startswith((".", "_")))
-            except OSError:
-                n = 0
-            sizes[p] = sizes.get(p, 0) + n
+            sizes[p] = sizes.get(p, 0) + sum(storage.file_size(f)
+                                             for f in files)
         return sizes
 
     def maybe_reshard_granules(self, target_bucket_bytes: int = 128 << 20,
@@ -727,12 +566,9 @@ class RangePartitionedView(BucketedMaterializedView):
         return out
 
     def maintain(self, target_bucket_bytes: int = 128 << 20) -> None:
-        """Between-batch housekeeping: sweep re-shard leftovers first
-        (a crash between a re-shard's commit and its cleanup leaves
-        dead directories), optionally the hot-granule re-shard trigger
-        (``auto_reshard=True``), then the inherited compaction
-        sawtooth."""
-        self._sweep_dead()
+        """Between-batch housekeeping: optionally the hot-granule
+        re-shard trigger (``auto_reshard=True``), then the inherited
+        GC + compaction sawtooth."""
         if self.auto_reshard:
             self.maybe_reshard_granules(
                 target_bucket_bytes=target_bucket_bytes)

@@ -199,9 +199,9 @@ class SecondaryIndex:
     def touched_buckets(self, values: list, _probe=None) -> list[int]:
         """The store buckets a :meth:`lookup` of ``values`` actually
         reads — the serving path's EXACT pruning (recover first, then
-        drop directories that genuinely hold nothing).  Public so
-        observability/bench tooling measures what serving does, not a
-        private re-implementation.
+        drop buckets the manifest does not name: they hold nothing).
+        Public so observability/bench tooling measures what serving
+        does, not a private re-implementation.
 
         Recovery runs BEFORE hashing: it may restore a ``.old`` layout
         whose n_buckets / bucket_keys differ from this handle's, and
@@ -215,9 +215,8 @@ class SecondaryIndex:
                 self.view.bucket_expr().alias("_b")).distinct().collect()}
         else:
             buckets = {bucket_of(k, self.view.n_buckets) for k in probe}
-        return [b for b in sorted(buckets)
-                if storage.is_dir(os.path.join(
-                    self.view.path, f"{BUCKET_COL}={b}"))]
+        live = set(self.view.bucket_ids())
+        return [b for b in sorted(buckets) if b in live]
 
     def lookup(self, values: list) -> DataFrame:
         """All ``(col, *pk)`` entries for the probed values, reading

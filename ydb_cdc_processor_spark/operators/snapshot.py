@@ -38,6 +38,8 @@ import uuid
 from pyspark.sql import DataFrame
 
 from ydb_cdc_processor_spark import storage
+from ydb_cdc_processor_spark.operators.bucketed_view import (
+    MANIFEST, BucketedMaterializedView)
 from ydb_cdc_processor_spark.operators.merge import ParquetMaterializedView
 
 _SNAP_META = "_snap.json"
@@ -79,11 +81,6 @@ class SnapshotView:
             for v in self.versions():
                 if v.get("label") == label:
                     return v["version"]
-        if hasattr(self.view, "recover"):
-            # bucketed views: repair any crash-torn bucket BEFORE the
-            # link walk — a snapshot of a displaced bucket would freeze
-            # the torn state forever
-            self.view.recover()
         if not self.view.exists():
             raise FileNotFoundError(
                 f"view at {self.view.path} has no state to snapshot")
@@ -92,23 +89,25 @@ class SnapshotView:
                           default=0)
         tmp = os.path.join(self.snap_dir,
                            f".v{version}.tmp-{uuid.uuid4().hex[:8]}")
-        # recursive link walk: a BUCKETED view's _bucket=N subdirs come
-        # along too, and buckets the next batches never touch keep
-        # pointing at the SAME inodes across versions — snapshot storage
-        # grows with churn, not with view size (the manifest-sharing
-        # property Delta/Iceberg get from immutable object keys).
+        # a BUCKETED view links its manifest and the files of the
+        # generations it names (never a superseded or staged one); buckets
+        # the next batches never touch keep pointing at the SAME inodes
+        # across versions — snapshot storage grows with churn, not with
+        # view size (the manifest-sharing property Delta/Iceberg get from
+        # immutable object keys).  A flat view links its whole directory.
         # link_or_copy is the seam primitive: hardlink on POSIX, byte
-        # copy on backends without links (HDFS/object stores — where
-        # the manifest-pointer snapshot design replaces this wholesale)
-        n_files = 0
-        for root, _dirs, files in storage.walk(self.view.path):
-            rel = os.path.relpath(root, self.view.path)
-            dst = tmp if rel == "." else os.path.join(tmp, rel)
-            storage.makedirs(dst)
-            for name in files:
-                storage.link_or_copy(os.path.join(root, name),
-                                     os.path.join(dst, name))
-                n_files += 1
+        # copy on backends without links (HDFS/object stores)
+        if isinstance(self.view, BucketedMaterializedView):
+            files = [os.path.join(self.view.path, MANIFEST)] + [
+                f for fs in self.view.bucket_files().values() for f in fs]
+        else:
+            files = [os.path.join(root, name) for root, _dirs, names
+                     in storage.walk(self.view.path) for name in names]
+        for f in files:
+            dst = os.path.join(tmp, os.path.relpath(f, self.view.path))
+            storage.makedirs(os.path.dirname(dst))
+            storage.link_or_copy(f, dst)
+        n_files = len(files)
         view_meta = (self.view.read_meta()
                      if hasattr(self.view, "read_meta") else {})
         storage.write_text(
@@ -141,8 +140,8 @@ class SnapshotView:
 
     def read_as_of(self, version: int) -> DataFrame:
         """The view exactly as it stood when ``version`` was taken.
-        Bucketed snapshots read their ``_bucket=N`` layout with the
-        snapshot root as basePath; the internal bucket column is
+        A bucketed snapshot reads through its own copy of the manifest
+        (only the generations it names); the internal bucket column is
         dropped, matching the live view's public ``read()``."""
         path = os.path.join(self.snap_dir, f"v{version}")
         if not storage.is_dir(path):
@@ -150,10 +149,7 @@ class SnapshotView:
             raise FileNotFoundError(
                 f"no snapshot v{version} at {self.snap_dir} "
                 f"(retained: {have} — keep_last={self.keep_last})")
-        df = (self.view.spark.read.option("basePath", path)
-              .parquet(path))
-        from ydb_cdc_processor_spark.operators.bucketed_view import (
-            BUCKET_COL)
-        if BUCKET_COL in df.columns:
-            df = df.drop(BUCKET_COL)
-        return df
+        if isinstance(self.view, BucketedMaterializedView):
+            return BucketedMaterializedView(self.view.spark, path,
+                                            self.view.keys).read()
+        return self.view.spark.read.parquet(path)

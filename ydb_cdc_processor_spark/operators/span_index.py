@@ -20,7 +20,7 @@ Design — a persistent gram-frequency store:
   count stays exact at a fraction of a posting list's footprint.
 - **Per batch**: +1 per distinct (doc, gram) of the new text, −1 per
   distinct (doc, gram) of the old images; the count delta merges into
-  only the touched digests' buckets under the per-bucket token fence.
+  only the touched digests' buckets under the batch-token fence.
   Then the batch's gram positions join against ONLY those buckets'
   counts, and windows with ``n_docs ≥ min_docs`` merge into maximal
   spans (dedup.merge_islands).
@@ -175,8 +175,8 @@ class SpanDupIndex:
         """Maintain the index from a STREAM of documents (foreachBatch):
         each micro-batch's spans append to a parquet sink tagged with
         the streaming batch id; the count update is fenced by it, so a
-        checkpoint replay neither double-counts (per-bucket token
-        fence) nor duplicates spans after :meth:`read_spans`'s
+        checkpoint replay neither double-counts (batch-token fence)
+        nor duplicates spans after :meth:`read_spans`'s
         collapse.  Returns the StreamingQuery."""
         def _batch(df, batch_id: int) -> None:
             (self.apply_batch(df, id_col=id_col, text_col=text_col,

@@ -18,9 +18,10 @@ shape).  Exact mode stays the default and the oracle-gated one.
 
 Maintenance is pure delegation to :class:`~ydb_cdc_processor_spark.
 operators.agg_view.AggregateView` (bucketed backend): each batch lands
-±count contributions via the per-bucket replay fence — deletes and
+±count contributions via the batch-token replay fence — deletes and
 rewrites retract exactly (Gupta–Mumick counting algorithm), a crash
-mid-promotion replays only un-promoted buckets.  The store is keyed
+before a batch's commit leaves none of it visible and its replay
+applies it once.  The store is keyed
 ``(group, value)`` but CO-LOCATED on group alone, so
 
 * :meth:`lookup` — "top-k for THIS group" — reads exactly one bucket
@@ -33,7 +34,7 @@ Ordering is deterministic: count DESC, value ASC tie-break — the same
 rule on the serving read, the oracle, and :meth:`recompute_check`.
 
 Reference anchors: maintained-store contract per YqlWriter.java:181-206
-(idempotent keyed merge + deferred commit ≙ per-bucket token fence);
+(idempotent keyed merge + deferred commit ≙ batch-token fence);
 counting IVM per Gupta & Mumick 1995 via agg_view.py.
 """
 
@@ -82,7 +83,7 @@ class TopKView:
                     batch_token: str | None = None) -> None:
         """±count maintenance: +1 per new row's (group, value), −1 per
         old image's — deletes and rewrites retract exactly; zero-count
-        pairs drop from the store.  ``batch_token`` is the per-bucket
+        pairs drop from the store.  ``batch_token`` is the batch
         replay fence (non-idempotent deltas NEED it under at-least-once
         feeds — same contract as every AggregateView).
 
@@ -113,14 +114,10 @@ class TopKView:
         never moves.  Bounded shards under-count per their own sweep
         history — merge bounds compose additively.
 
-        Single-maintainer window — MECHANICALLY ENFORCED (round-12,
-        via ``AggregateView.merge_rollup``'s epoch bump): run ONLY
-        between COMMITTED batches of any live feed; a replay of a torn
-        (never-committed) feed batch refuses with
-        :class:`~ydb_cdc_processor_spark.operators.bucketed_view.
-        MaintenanceFenceError` instead of silently double-applying,
-        while a replay of a COMMITTED batch converges via the
-        applied-token history."""
+        Run between committed batches of any live feed (via
+        ``AggregateView.merge_rollup``): a replay of a COMMITTED feed
+        batch is skipped by the applied-token history, and a torn one
+        was never visible, so it applies once."""
         if (list(other.group_cols) != list(self.group_cols)
                 or other.value_col != self.value_col):
             raise ValueError("group_cols and value_col must match to merge")
@@ -258,9 +255,9 @@ class TopKView:
 
         The sweep rides :meth:`~ydb_cdc_processor_spark.operators.
         bucketed_view.BucketedMaterializedView.rewrite_rows`, which
-        preserves per-bucket replay-fence tokens (a replay of the last
-        batch stays fenced out after a prune) and keeps fully-pruned
-        buckets as empty token-bearing directories."""
+        keeps the store's applied-token history (a replay of the last
+        batch stays fenced out after a prune) and drops fully-pruned
+        buckets in the same commit."""
         if self.prune_floor is None:
             return 0
         store = self.agg.store()

@@ -299,14 +299,12 @@ class VectorIndex:
 
         ``batch_token``: optional replay fence (round-12 judge item #1
         — at-least-once callers SHOULD pass it, the streaming drive
-        does).  The upsert itself is idempotent, so the token buys not
-        convergence but MECHANICAL single-maintainer enforcement: a
-        replay of a batch torn mid-promotion refuses with
-        :class:`~ydb_cdc_processor_spark.operators.bucketed_view.
-        MaintenanceFenceError` when a federated :meth:`merge_from`
-        rotated the fences in between (whether the merged-in shard
-        supersedes the torn rows is unknowable), while a committed
-        batch's replay short-circuits via the applied-token history."""
+        does).  The upsert itself is idempotent, so the token buys no
+        convergence; it makes a committed batch's replay a no-op (the
+        applied-token history), and a sequenced token evicted from that
+        history refuses with :class:`~ydb_cdc_processor_spark.operators.
+        bucketed_view.MaintenanceFenceError` — its feed's high-water
+        mark proves it already committed."""
         # codebook first: on a never-built PQ store this raises the
         # actionable "build() first" error before the centroid read
         # surfaces as a missing-path AnalysisException
@@ -368,46 +366,33 @@ class VectorIndex:
         union later with :meth:`merge_from`).  Copies only layout
         metadata (centroids, codebook/meta, bucket manifest) — never
         list data."""
-        # repair crash-torn donor state FIRST: a '.displaced-_bucket=N'
-        # left by a mid-promotion crash would not match the skip filter,
-        # and the clone's own first _recover() would then promote the
-        # donor's list data into the "empty" shard — violating the
-        # disjoint-ownership contract merge_from documents (review
-        # finding).  Skip dot-prefixed entries and _SUCCESS too: the
-        # clone must not report exists()==True while holding no lists.
+        from ydb_cdc_processor_spark.operators.bucketed_view import (
+            MANIFEST, STAGING)
         self.view.recover()
         src, dst = self.view.path, os.path.join(path, "lists")
         storage.makedirs(dst)
         for e in storage.listdir(src):
-            if (e.startswith(("_bucket=", ".")) or e == "_SUCCESS"):
-                continue   # list data / torn leftovers / marker stay behind
+            if e.startswith((f"{BUCKET_COL}=", ".")) or e == STAGING:
+                continue   # list data and staged batches stay behind
             s = os.path.join(src, e)
             d = os.path.join(dst, e)
             if storage.is_dir(s):
                 storage.copy_tree(s, d)
             else:
                 storage.copy_file(s, d)
-        # the copied bucket manifest carries the SOURCE's last_token —
-        # a clone starting life fenced against the donor's last batch
-        # would silently skip a same-named first batch; strip it
-        man = os.path.join(dst, "_buckets.json")
+        man = os.path.join(dst, MANIFEST)
         try:
             doc = json.loads(storage.read_text(man))
         except FileNotFoundError:
             doc = None
         if doc is not None:
-            doc.pop("last_token", None)
-            # the donor's epoch/token bookkeeping is its own maintenance
-            # history — a clone carrying applied_tokens would silently
-            # SKIP its own first batch whenever shard engines reuse the
-            # same deterministic token sequence (stream-0, batch-0:u …)
-            doc.pop("epoch", None)
-            doc.pop("token_epochs", None)
-            doc.pop("applied_tokens", None)
-            # the donor's committed-sequence marks too: shard engines
-            # reuse the same deterministic sequences (stream-0, …) and
-            # an inherited mark would refuse the clone's first batch
-            doc.pop("seq_hwm", None)
+            # keep the layout (n_buckets, bucket_keys, schema); drop the
+            # donor's list pointers and its history — a clone carrying
+            # applied_tokens / seq_hwm would SKIP or REFUSE its own first
+            # batch whenever shard engines reuse the same deterministic
+            # token sequence (stream-0, batch-0:u …)
+            for k in ("gens", "epoch", "applied_tokens", "seq_hwm"):
+                doc.pop(k, None)
             storage.replace_text(man, json.dumps(doc))
         return VectorIndex(self.spark, path)
 
@@ -426,15 +411,10 @@ class VectorIndex:
         violating (cell, vec_id) collisions resolve deterministically
         by payload order, never positionally.
 
-        Single-maintainer window — MECHANICALLY ENFORCED (round-12
-        judge item #1): the merge is out-of-band, so it bumps the list
-        store's maintenance epoch and stamps it into every promoted
-        bucket's fence; a replay of a TORN tokenized ``add_batch``
-        afterward refuses with :class:`~ydb_cdc_processor_spark.
-        operators.bucketed_view.MaintenanceFenceError` instead of
-        silently re-upserting over merged-in state, while a committed
-        batch's replay converges via the applied-token history.  Run
-        only between committed batches of any live feed."""
+        The merge commits as one out-of-band batch of the list store
+        (``merge_touched(out_of_band=True)`` bumps its ``epoch``
+        counter); a ``batch_token`` makes its replay a no-op.  Run only
+        between committed batches of any live feed."""
         if (self.n_cells, self.m_sub, self.n_codes) != \
                 (other.n_cells, other.m_sub, other.n_codes):
             raise ValueError(
@@ -543,10 +523,7 @@ class VectorIndex:
         pc = self._assign(p, cent, "probe_id", "_p", "_np", n_probe) \
             .select("probe_id", "_p", "_np", "cell")
 
-        # a pure-read path must repair crash-torn buckets BEFORE probing
-        # directories, or a displaced bucket reads as absent and its
-        # vectors silently vanish from results (same gap merge_touched
-        # had — see test_vector_index_query_after_torn_ingest)
+        # refresh the layout first: a retrain swap may have changed it
         self.view.recover()
         # one collect: (cell, store bucket) pairs straight off pc — no
         # driver-side re-materialization, and id_col-type-generic
@@ -554,11 +531,8 @@ class VectorIndex:
                                .alias("_b")).distinct().collect())
         cells = [r[0] for r in cell_rows]
         touched = sorted({r[1] for r in cell_rows})
-        from ydb_cdc_processor_spark.operators.bucketed_view import (
-            BUCKET_COL)
-        if not any(storage.is_dir(os.path.join(self.view.path,
-                                               f"{BUCKET_COL}={b}"))
-                   for b in touched):
+        live = set(self.view.bucket_ids())
+        if not any(b in live for b in touched):
             # every probed cell's bucket is absent (tiny or heavily-
             # deleted store): the correct answer is zero candidates, not
             # a schema-inference crash from an empty directory read.

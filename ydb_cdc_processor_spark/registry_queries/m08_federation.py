@@ -51,7 +51,7 @@ def q_topk_view(spark, sf_dir):
     """EXACT retractable top-k per group as a MAINTAINED store
     (operators/topk_view.TopKView): per-language top-10 terms kept
     current through three ingest batches plus a delete-then-restore
-    cycle (±count retraction via the per-bucket replay fence — the
+    cycle (±count retraction via the batch-token replay fence — the
     exact complement of q_cms_view's fixed-size approximate counters;
     state here is the full (lang, term) rollup, co-located on lang so
     a single-language probe reads ONE bucket).  The final state equals

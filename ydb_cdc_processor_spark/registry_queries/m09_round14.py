@@ -182,33 +182,38 @@ SELECT o_orderkey,
 FROM orders WHERE o_orderkey % 7 <> 0
 """)
 def q_generation_commit(spark, sf_dir):
-    """The object-store commit protocol under the oracle gate
-    (operators/generation_store.GenerationStore): a keyed view whose
-    ONLY commit primitive is one atomic manifest swap — no directory
-    rename anywhere — run END-TO-END on ObjectStoreSimStorage, which
-    RAISES on the rename object stores lack.  Three batches (base
-    upsert, partial status rewrite, keyed delete) plus a replay of the
-    middle batch that must skip whole via the applied-token history;
-    the served rows must equal the plain SQL merge of the same
-    batches.  The executed form of the SCALING.md round-14 design
-    note: the bucketed store's per-bucket rename promotion maps to
-    HDFS but not S3/GCS; this is the store shape that does."""
+    """The bucketed store's commit protocol under the oracle gate: every
+    batch is published by ONE manifest replace — no directory rename
+    anywhere — run END-TO-END on ObjectStoreSimStorage, which RAISES on
+    the rename object stores lack.  Three tokened batches (base upsert,
+    partial status rewrite, keyed delete) plus a replay of the middle
+    batch that must skip whole via the applied-token history; the
+    served rows must equal the plain SQL merge of the same batches."""
     from ydb_cdc_processor_spark import storage as _storage
-    from ydb_cdc_processor_spark.operators.generation_store import (
-        GenerationStore)
+    from ydb_cdc_processor_spark.operators.bucketed_view import (
+        BUCKET_COL, BucketedMaterializedView)
+    from ydb_cdc_processor_spark.operators.merge import (
+        merge_delete, merge_upsert)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_orderstatus").alias("status"),
         "o_totalprice")
+    keys = ["o_orderkey", BUCKET_COL]
+
+    def upsert(target, d):
+        return merge_upsert(target, d, keys)
+
+    def delete(target, d):
+        return merge_delete(target, d, keys)
     base = _scratch_dir("genstore_")
     with _storage.backend_scope(_storage.ObjectStoreSimStorage()):
-        gs = GenerationStore(spark, base + "/gs", ["o_orderkey"],
-                             n_buckets=8)
-        gs.apply(orders, batch_token="gc:0")
+        bv = BucketedMaterializedView(spark, base + "/bv", ["o_orderkey"],
+                                      n_buckets=8)
+        bv.merge_touched(orders, upsert, batch_token="gc:0")
         rewrite = (orders.where(F.col("o_orderkey") % 5 == 0)
                    .withColumn("status", F.lit("R")))
-        gs.apply(rewrite, batch_token="gc:1")
-        gs.apply(orders.where(F.col("o_orderkey") % 7 == 0)
-                 .select("o_orderkey"),
-                 action="deleteFrom", batch_token="gc:2")
-        gs.apply(rewrite, batch_token="gc:1")   # replay: must skip whole
-        return gs.read().select("o_orderkey", "status", "o_totalprice")
+        bv.merge_touched(rewrite, upsert, batch_token="gc:1")
+        bv.merge_touched(orders.where(F.col("o_orderkey") % 7 == 0)
+                         .select("o_orderkey"), delete, batch_token="gc:2")
+        # replay: must skip whole
+        bv.merge_touched(rewrite, upsert, batch_token="gc:1")
+        return bv.read().select("o_orderkey", "status", "o_totalprice")

@@ -99,8 +99,8 @@ class StorageBackend(abc.ABC):
     @abc.abstractmethod
     def write_text(self, path: str, text: str) -> None:
         """Plain (non-atomic) write — ONLY for files inside a staging
-        directory that a later :meth:`rename` promotes as a unit (the
-        per-bucket ``_token`` files)."""
+        directory that a later :meth:`rename` promotes as a unit (a
+        retrain's staged ``_index.json``)."""
 
     @abc.abstractmethod
     def replace_text(self, path: str, text: str) -> None:
@@ -381,7 +381,7 @@ class ObjectStoreSimStorage(PosixStorage):
 
     A store that passes its lifecycle under this backend demonstrably
     uses the manifest-pointer commit protocol rather than directory
-    promotion — see ``operators/generation_store.GenerationStore``."""
+    promotion — see ``operators/bucketed_view.BucketedMaterializedView``."""
 
     def rename(self, src: str, dst: str) -> None:
         if os.path.isdir(src):
