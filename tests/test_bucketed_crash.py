@@ -12,7 +12,14 @@ operation must equal the clean run:
   token — the replay lands exactly once, and a second replay is a
   no-op;
 - ``rebucket``, ``compact``, ``rewrite_rows`` and the range view's
-  ``reshard_granule``.
+  ``reshard_granule``;
+- ``VectorIndex.build`` (a retrain through ``replace_with``: lists and
+  quantizer switch in one replace) and ``TextIndex.apply_delta``
+  (postings and corpus scalars in one replace).
+
+The TopK counters commit inside the rollup's own replace; a kill at
+each ``storage.replace_text`` of a counted batch or sweep, then the
+replay, must leave ``stats()`` equal to an uninterrupted run.
 
 These tests kill the process surrogate (raise) at EVERY rename/replace
 boundary in turn — the same treatment the merge path's property tests
@@ -68,20 +75,29 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _sweep(tmp_path, pristine, open_view, run, tag):
+def _rows_of(view):
+    return _rows(view.read())
+
+
+def _manifest_of(view):
+    return view._read_manifest_dict()
+
+
+def _sweep(tmp_path, pristine, open_view, run, tag, state=_rows_of,
+           manifest=_manifest_of):
     """Kill ``run(view)`` at every rename/replace boundary of a copy of
-    ``pristine``.  At each kill point a fresh handle must read exactly
-    the pre-batch rows and manifest layout; re-running the operation on
+    ``pristine``.  At each kill point a fresh handle must serve exactly
+    the pre-batch ``state`` and manifest; re-running the operation on
     it must then equal the clean run.  Returns the boundary count."""
     clean = str(tmp_path / f"{tag}-clean")
     shutil.copytree(pristine, clean)
     with _RenameKiller(None) as rk:
         run(open_view(clean))
     n_renames = rk.calls
-    expected = _rows(open_view(clean).read())
+    expected = state(open_view(clean))
     before_view = open_view(pristine)
-    before = _rows(before_view.read())
-    before_gens = before_view._read_manifest_dict().get("gens")
+    before = state(before_view)
+    before_doc = manifest(before_view)
     assert n_renames >= 2, "sweep needs at least one file move + commit"
     for kill_at in range(n_renames):
         path = str(tmp_path / f"{tag}{kill_at}")
@@ -89,10 +105,10 @@ def _sweep(tmp_path, pristine, open_view, run, tag):
         with _RenameKiller(kill_at), pytest.raises(Killed):
             run(open_view(path))
         fresh = open_view(path)
-        assert _rows(fresh.read()) == before, f"torn read at {kill_at}"
-        assert fresh._read_manifest_dict().get("gens") == before_gens
+        assert state(fresh) == before, f"torn read at {kill_at}"
+        assert manifest(fresh) == before_doc
         run(fresh)
-        assert _rows(open_view(path).read()) == expected, \
+        assert state(open_view(path)) == expected, \
             f"diverged at tear {kill_at}"
     return n_renames
 
@@ -244,3 +260,111 @@ def test_flat_view_crash_recovery_sweep(spark, tmp_path):
         v2 = ParquetMaterializedView(spark, path, ["id"])
         v2.apply(delta_df)
         assert _rows(v2.read()) == expected, f"diverged at tear {kill_at}"
+
+
+def test_vector_index_crash_recovery_build(spark, tmp_path):
+    """A retrain (VectorIndex.build → replace_with): kill at every file
+    move and replace — including the staged store's own commits — and
+    a fresh handle serves exactly the pre-retrain lists AND quantizer;
+    the re-run retrain equals the clean one."""
+    from ydb_cdc_processor_spark.operators.vector_index import VectorIndex
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), 1.0]) for i in range(24)],
+        "vec_id long, embedding array<double>")
+
+    def open_ix(path):
+        return VectorIndex(spark, path, n_cells=3, n_buckets=2)
+
+    def state(ix):
+        return (_rows(ix.view.read()), _rows(ix._centroids()),
+                ix._read_index_meta())
+
+    pristine = str(tmp_path / "pristine")
+    open_ix(pristine).build(vecs.where("vec_id % 2 = 0"))
+    _sweep(tmp_path, pristine, open_ix, lambda ix: ix.build(vecs), "v",
+           state=state, manifest=lambda ix: ix.view._read_manifest_dict())
+
+
+def test_text_index_crash_recovery_apply_delta(spark, tmp_path):
+    """A tokenized TextIndex batch with old images (stale postings
+    delete, rewrites upsert, corpus scalars move): kill at every
+    boundary and a fresh handle serves the pre-batch postings AND
+    scalars; the replay applies the whole batch exactly once."""
+    from ydb_cdc_processor_spark.operators.text_index import TextIndex
+    schema = "doc_id long, text string"
+    base = spark.createDataFrame(
+        [(1, "red fox"), (2, "blue fox jumps"), (3, "green owl")], schema)
+    new = spark.createDataFrame([(2, "blue owl"), (4, "grey fox")], schema)
+
+    def open_ix(path):
+        return TextIndex(spark, path, n_buckets=2)
+
+    def state(ix):
+        return _rows(ix.read()), ix._corpus_stats()
+
+    pristine = str(tmp_path / "pristine")
+    open_ix(pristine).apply_delta(base, None, batch_token="t:0")
+    _sweep(tmp_path, pristine, open_ix,
+           lambda ix: ix.apply_delta(new, base.where("doc_id = 2"),
+                                     batch_token="t:1"), "x",
+           state=state, manifest=lambda ix: ix.view._read_manifest_dict())
+
+
+class _ReplaceKiller:
+    """Raises on the ``kill_at``-th ``storage.replace_text`` call (None:
+    count only)."""
+
+    def __init__(self, monkeypatch, kill_at):
+        from ydb_cdc_processor_spark import storage
+        self.calls, real = 0, storage.replace_text
+
+        def replace_text(path, text):
+            if self.calls == kill_at:
+                raise Killed()
+            self.calls += 1
+            return real(path, text)
+        monkeypatch.setattr(storage, "replace_text", replace_text)
+
+
+def test_topk_counters_commit_with_the_batch(spark, tmp_path, monkeypatch):
+    """A bounded TopKView's forfeiting batch and its prune sweep, each
+    killed at every ``storage.replace_text`` and then replayed: the
+    counters in stats() must equal an uninterrupted run.  (Counters
+    written in a second commit after the rollup's were lost when the
+    kill hit between the two: the replay was skipped as applied, or
+    the re-run sweep found nothing left to prune.)"""
+    from ydb_cdc_processor_spark.operators.topk_view import TopKView
+    schema = "g string, v string"
+    ingest = spark.createDataFrame(
+        [("a", "x")] * 5 + [("a", "y"), ("a", "z"), ("b", "x")], schema)
+    forfeit = spark.createDataFrame([("a", "y")], schema)   # pruned pair
+
+    def open_tk(path):
+        return TopKView(spark, path, ["g"], "v", k=1, n_buckets=2,
+                        prune_floor=3)
+
+    ops = [("sweep", lambda tk: tk.prune()),
+           ("forfeit", lambda tk: tk.apply_delta(None, forfeit,
+                                                 batch_token="d:1"))]
+    pristine = str(tmp_path / "pristine")
+    open_tk(pristine).apply_delta(ingest, None, batch_token="d:0")
+    for tag, run in ops:
+        clean = str(tmp_path / f"{tag}-clean")
+        shutil.copytree(pristine, clean)
+        counter = _ReplaceKiller(monkeypatch, None)
+        run(open_tk(clean))
+        monkeypatch.undo()
+        want = (open_tk(clean).stats(), _rows(open_tk(clean).counts()))
+        for kill_at in range(counter.calls):
+            path = str(tmp_path / f"{tag}{kill_at}")
+            shutil.copytree(pristine, path)
+            _ReplaceKiller(monkeypatch, kill_at)
+            with pytest.raises(Killed):
+                run(open_tk(path))
+            monkeypatch.undo()
+            run(open_tk(path))                  # the replay / re-run
+            assert (open_tk(path).stats(),
+                    _rows(open_tk(path).counts())) == want, (tag, kill_at)
+        pristine = clean                        # the next op builds on it
+    assert want[0] == {"pruned_forfeits": 1, "prune_sweeps": 1,
+                       "rows_pruned": 2}

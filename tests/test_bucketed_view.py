@@ -165,21 +165,49 @@ def test_read_touched_probes_only_touched_dirs(spark, tmp_path, orders):
 
 
 def test_rebucket_crash_between_renames_recovers(spark, tmp_path, orders):
-    """A crash between replace_with()'s two renames (the whole-store
-    swap an index retrain uses) leaves the view path missing and the
-    complete old layout at the deterministic .old sibling; the next
-    observation must restore it instead of treating the view as
-    never-written (which would silently rebuild it from one delta)."""
-    import os
+    """A whole-store rebuild at a new bucket count adopted through
+    replace_with() (the retrain contract) crashes at its ONE manifest
+    replace.  The test used to tear the swap between its two directory
+    renames and assert the next observation restored the complete old
+    layout from the ``.old`` sibling; now the staged generations have
+    moved in but nothing names them, so a reopened handle — even one
+    constructed with the NEW count — still serves the old rows and
+    layout, vacuum() drops the strays, and a re-staged rebuild lands."""
+    from ydb_cdc_processor_spark import storage
     _, buck = _mk(spark, tmp_path, orders, n_buckets=4)
     before = _rows(buck.read())
-    # simulate the torn swap: view renamed aside, new layout never landed
-    os.rename(buck.path, buck._old_dir())
+
+    def stage(tag):
+        staged = BucketedMaterializedView(
+            spark, str(tmp_path / tag), KEYS, schema=orders.schema,
+            n_buckets=16)
+        staged.apply(buck.read(), "upsertInto")
+        return staged.path
+
+    real, man = storage.replace_text, buck._manifest_path()
+
+    def crash(path, text):
+        if path == man:
+            raise RuntimeError("crash at the commit")
+        return real(path, text)
+    staged = stage("staged1")
+    storage.replace_text = crash
+    try:
+        with pytest.raises(RuntimeError, match="crash at the commit"):
+            buck.replace_with(staged)
+    finally:
+        storage.replace_text = real
     reopened = BucketedMaterializedView(
-        spark, str(tmp_path / "buck"), KEYS, n_buckets=4)
-    assert reopened.exists() is True          # _recover restored it
+        spark, str(tmp_path / "buck"), KEYS, n_buckets=16)
+    assert reopened.exists() is True
+    assert reopened.n_buckets == 4 and reopened._read_manifest() == 4
     assert _rows(reopened.read()) == before
-    assert reopened._read_manifest() == 4     # old layout, old count
+    assert reopened.vacuum() > 0              # the moved-in strays
+    assert _rows(reopened.read()) == before
+    reopened.replace_with(stage("staged2"))
+    assert reopened.n_buckets == 16
+    assert _rows(BucketedMaterializedView(
+        spark, str(tmp_path / "buck"), KEYS).read()) == before
 
 
 def test_rebucket_failure_keeps_n_buckets_consistent(

@@ -176,9 +176,11 @@ def test_reopen_reads_manifest_layout(spark, tmp_path, objstore):
 
 def test_every_batch_path_runs_without_directory_rename(
         spark, tmp_path, objstore):
-    """apply_batch, merge_touched, compact, rewrite_rows, rebucket and the
-    range view's reshard_granule / drop_range all commit through the
-    manifest, so each runs under the simulator's no-rename rule."""
+    """apply_batch, merge_touched, compact, rewrite_rows, rebucket,
+    replace_with, the range view's reshard_granule / drop_range, a
+    VectorIndex retrain and TextIndex apply_delta + merge_from all
+    commit through the manifest, so each runs under the simulator's
+    no-rename rule."""
     bv = BucketedMaterializedView(spark, str(tmp_path / "bv"), ["k"],
                                   n_buckets=4)
     bv.apply_batch(_rows(spark, [(i, "a", i) for i in range(40)]),
@@ -195,6 +197,12 @@ def test_every_batch_path_runs_without_directory_rename(
     bv.rebucket(8)
     again = BucketedMaterializedView(spark, bv.path, ["k"])
     assert again.n_buckets == 8 and dict(_kv(again.read())) == want
+    staged = BucketedMaterializedView(spark, str(tmp_path / "staged"),
+                                      ["k"], n_buckets=2)
+    staged.apply(_rows(spark, [(7, "s", 70), (8, "s", 80)]))
+    again.replace_with(staged.path)
+    assert again.n_buckets == 2
+    assert dict(_kv(again.read())) == {7: 70, 8: 80}
 
     rv = RangePartitionedView(spark, str(tmp_path / "rv"), ["d", "k"],
                               part_col="d", n_sub=2)
@@ -206,6 +214,30 @@ def test_every_batch_path_runs_without_directory_rename(
     assert rv.drop_range(days[1]) > 0
     assert sorted(r["k"] for r in rv.read().collect()) == \
         list(range(1, 40, 2))
+
+    from ydb_cdc_processor_spark.operators.text_index import TextIndex
+    from ydb_cdc_processor_spark.operators.vector_index import VectorIndex
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), 1.0]) for i in range(30)],
+        "vec_id long, embedding array<double>")
+    vx = VectorIndex(spark, str(tmp_path / "vx"), n_cells=4, n_buckets=2)
+    vx.build(vecs.where("vec_id < 20"))
+    vx.build(vecs)                          # the retrain replaces it
+    assert vx.view.read().count() == 30
+
+    docs = spark.createDataFrame([(1, "red fox"), (2, "blue fox")],
+                                 "doc_id long, text string")
+    tx = TextIndex(spark, str(tmp_path / "tx"), n_buckets=2)
+    tx.apply_delta(docs, None, batch_token="t:0")
+    owl = docs.where("doc_id = 2").withColumn("text", F.lit("owl"))
+    tx.apply_delta(owl, docs.where("doc_id = 2"), batch_token="t:1")
+    other = TextIndex(spark, str(tmp_path / "tx2"), n_buckets=2)
+    other.apply_delta(spark.createDataFrame(
+        [(3, "green owl")], "doc_id long, text string"), None)
+    tx.merge_from(other, batch_token="fed")
+    assert tx.recompute_check(spark.createDataFrame(
+        [(1, "red fox"), (2, "owl"), (3, "green owl")],
+        "doc_id long, text string"))
 
 
 # -- every reader plans from the manifest --------------------------------------

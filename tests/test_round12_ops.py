@@ -65,7 +65,7 @@ def test_merge_from_after_committed_batch_converges(spark, tmp_path):
                   None, batch_token="s0")
     a.merge_from(b, batch_token="m0")
     # checkpoint replay of the COMMITTED t0 lands AFTER the merge rotated
-    # last_token away — the applied-token history must skip it
+    # the newest token away — the applied-token history must skip it
     a.apply_delta(_rows(spark, [("x", "1"), ("x", "2"), ("y", "1")]),
                   None, batch_token="t0")
     assert _counts(a) == {"x": 3, "y": 1}

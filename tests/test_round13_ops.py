@@ -14,8 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_cdc_processor_spark import storage
-from ydb_cdc_processor_spark.operators.bucketed_view import (
-    MaintenanceFenceError)
 from ydb_cdc_processor_spark.operators.range_view import (
     ALLOC_BASE, RangePartitionedView)
 
@@ -240,42 +238,42 @@ def test_text_index_merge_after_committed_batch_converges(spark, tmp_path):
 
 
 def test_text_index_merge_after_torn_batch_refuses(spark, tmp_path):
-    """The round-12 interleave replicated for TextIndex (judge item #1
-    'done' bar): postings applied, stats commit lost (crash), merge_from
-    rotates the stats fence, the replay must REFUSE — silently
-    re-applying would corrupt BM25 idf."""
+    """The round-12 interleave replicated for TextIndex: a tokenized
+    ingest torn (crash) before its commit, then merge_from, then the
+    replay.  It used to assert a REFUSAL — postings and corpus scalars
+    committed separately, so the torn batch could be half visible and
+    a replay after the merge could double-apply the scalars.  Both now
+    commit in one manifest replace: the torn batch left nothing
+    visible, so its replay lands exactly once (a second replay is a
+    no-op) and the index equals the one-shot index of the union."""
     a = TextIndex(spark, str(tmp_path / "a"), n_buckets=4)
     b = TextIndex(spark, str(tmp_path / "b"), n_buckets=4)
     a.apply_delta(_docs(spark, [(1, "red fox")]), None, batch_token="t0")
     b.apply_delta(_docs(spark, [(10, "green owl")]), None,
                   batch_token="s0")
-    # torn batch: crash between the postings merge and the stats commit
-    orig = a._apply_stats_delta
-    a._apply_stats_delta = lambda *args, **kw: None
-    try:
+    with _crash_at_commit(a.view):
         a.apply_delta(_docs(spark, [(2, "blue fox jumps")]), None,
                       batch_token="t1")
-    finally:
-        a._apply_stats_delta = orig
+    assert a._corpus_stats() == (1, 2, 1)  # the torn batch is invisible
 
     a.merge_from(b, batch_token="m0")      # violates the quiesce window
-    with pytest.raises(MaintenanceFenceError, match="corrupt BM25"):
+    for _ in range(2):                     # the replay, then a re-replay
         a.apply_delta(_docs(spark, [(2, "blue fox jumps")]), None,
-                      batch_token="t1")    # the replay
+                      batch_token="t1")
+    assert a._corpus_stats() == (3, 7, 3)
+    assert a.recompute_check(_docs(spark, [
+        (1, "red fox"), (2, "blue fox jumps"), (10, "green owl")]))
 
 
 def test_text_index_torn_replay_without_merge_converges(spark, tmp_path):
-    """Guard: with no interleaved merge, a torn batch's replay lands
-    the stats exactly once (the normal crash-replay path)."""
+    """Guard: with no interleaved merge, a batch torn at its manifest
+    replace replays and lands postings and corpus stats exactly once
+    (the normal crash-replay path)."""
     a = TextIndex(spark, str(tmp_path / "a"), n_buckets=4)
     a.apply_delta(_docs(spark, [(1, "red fox")]), None, batch_token="t0")
-    orig = a._apply_stats_delta
-    a._apply_stats_delta = lambda *args, **kw: None
-    try:
+    with _crash_at_commit(a.view):
         a.apply_delta(_docs(spark, [(2, "blue owl")]), None,
                       batch_token="t1")
-    finally:
-        a._apply_stats_delta = orig
     a.apply_delta(_docs(spark, [(2, "blue owl")]), None, batch_token="t1")
     assert a._corpus_stats() == (2, 4, 2)
     assert a.recompute_check(_docs(spark, [(1, "red fox"),
@@ -400,9 +398,11 @@ def test_two_engine_federation_epoch_refusal(spark, sf_dir, tmp_path):
 # -- status surfaces both fence domains (observability completion) -------------
 
 def test_status_surfaces_stats_epoch(spark, sf_dir, tmp_path):
-    """A TextIndex riding an engine's agg_views surfaces BOTH epochs on
-    the status inventory — the postings store's maintenanceEpoch and
-    the corpus-scalar statsEpoch (round-13 fence domain)."""
+    """A TextIndex riding an engine's agg_views surfaces its ONE fence
+    domain on the status inventory: the postings store's
+    maintenanceEpoch, which now counts the merge_from that commits
+    postings and corpus scalars together (it used to also assert a
+    separate corpus-scalar statsEpoch)."""
     from ydb_cdc_processor_spark.engine import CdcBatchEngine
     from ydb_cdc_processor_spark.plans.pipeline import CdcPipeline
     from ydb_cdc_processor_spark.sources import cdc_json
@@ -429,9 +429,10 @@ def test_status_surfaces_stats_epoch(spark, sf_dir, tmp_path):
         spark.createDataFrame([(10**9, "zz-shard-term")],
                               "event_id long, event_type string"),
         None, batch_token="shard:0")
+    before = ix.view.maintenance_epoch()
     ix.merge_from(other, batch_token="sep:union")
     rows = {r["path"]: r for r in eng.status_dict()["derivedViews"]}
     row = rows[str(tmp_path / "tix")]
     assert row["type"] == "TextIndex"
-    assert row["maintenanceEpoch"] >= 1     # postings fence rotated
-    assert row["statsEpoch"] >= 1           # corpus-scalar fence rotated
+    assert row["maintenanceEpoch"] == before + 1    # the merge_from
+    assert "statsEpoch" not in row

@@ -12,10 +12,10 @@
    tests/test_round13_ops.py's aged-out interleaves.
 
 2. A hypothesis property test drives random commit / tear / merge /
-   replay / evict sequences against a pure-Python model of the stats
-   fence state machine, asserting every divergence is a refusal —
-   never a silent double-apply, never a silent drop (round-13 judge
-   item #4).
+   replay / evict sequences through the bucketed store's replay rule
+   (``skip_replay``) and its Spark-free manifest commit, asserting
+   every divergence is a refusal — never a silent double-apply, never
+   a silent drop.
 """
 
 from __future__ import annotations
@@ -29,7 +29,8 @@ import pytest
 
 from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.bucketed_view import (
-    MaintenanceFenceError, bump_seq_hwm, token_sequence)
+    BucketedMaterializedView, MaintenanceFenceError, bump_seq_hwm,
+    skip_replay, token_sequence)
 from ydb_cdc_processor_spark.operators.distinct_view import DistinctCountView
 from ydb_cdc_processor_spark.operators.text_index import TextIndex
 from ydb_cdc_processor_spark.operators.vector_index import VectorIndex
@@ -40,26 +41,13 @@ def _rows(spark, pairs):
 
 
 def _age_out(view, token):
-    """Evict ``token`` from BOTH bounded manifest histories — the
+    """Evict ``token`` from the bounded applied-token history — the
     16-later-commits scenario, compressed."""
     def mutate(doc):
-        (doc.get("token_epochs") or {}).pop(token, None)
         doc["applied_tokens"] = [t for t in
                                  (doc.get("applied_tokens") or [])
                                  if t != token]
-        if doc.get("last_token") == token:
-            doc.pop("last_token")
     view._mutate_manifest(mutate)
-
-
-def _age_out_stats(ix: TextIndex, token):
-    doc = ix._read_stats_doc()
-    (doc.get("token_epochs") or {}).pop(token, None)
-    doc["applied_tokens"] = [t for t in (doc.get("applied_tokens") or [])
-                             if t != token]
-    if doc.get("batch_token") == token:
-        doc.pop("batch_token")
-    ix._write_stats(doc)
 
 
 # -- token_sequence parsing ---------------------------------------------------
@@ -178,7 +166,7 @@ def test_text_stats_aged_out_committed_replay_refuses(spark, tmp_path):
     ix.apply_delta(b0, None, batch_token="tixs:0")
     ix.apply_delta(_docs(spark, [(3, "delta")]), None,
                    batch_token="tixs:1")
-    _age_out_stats(ix, "tixs:0:tix")
+    _age_out(ix.view, "tixs:0:tix")
     before = ix._read_stats()
     with pytest.raises(MaintenanceFenceError, match="high-water"):
         ix.apply_delta(b0, None, batch_token="tixs:0")
@@ -188,20 +176,28 @@ def test_text_stats_aged_out_committed_replay_refuses(spark, tmp_path):
 
 
 def test_text_stats_torn_replay_converges(spark, tmp_path):
-    """Control: a torn stats commit (sequence above the mark) replays
-    and lands exactly once — the mark must not block the normal
-    crash-recovery path."""
+    """Control: a batch torn at its commit (sequence above the mark)
+    replays and lands exactly once — the mark must not block the normal
+    crash-recovery path.  The tear used to drop only the separate stats
+    commit; postings and stats now commit in one manifest replace, so
+    the crash is raised there and loses both."""
     ix = TextIndex(spark, str(tmp_path / "tix"))
     ix.apply_delta(_docs(spark, [(1, "alpha beta")]), None,
                    batch_token="tixs:0")
     b1 = _docs(spark, [(2, "gamma delta epsilon")])
-    orig = ix._commit_stats
-    ix._commit_stats = lambda *a, **kw: None      # the torn commit
+    real, man = storage.replace_text, ix.view._manifest_path()
+
+    def crash(path, text):
+        if path == man:
+            raise RuntimeError("crash at the commit")
+        return real(path, text)
+    storage.replace_text = crash
     try:
-        ix.apply_delta(b1, None, batch_token="tixs:1")
+        with pytest.raises(RuntimeError, match="crash at the commit"):
+            ix.apply_delta(b1, None, batch_token="tixs:1")
     finally:
-        ix._commit_stats = orig
-    _age_out_stats(ix, "tixs:1:tix")              # record evicted too
+        storage.replace_text = real
+    _age_out(ix.view, "tixs:1:tix")               # record evicted too
     ix.apply_delta(b1, None, batch_token="tixs:1")
     st = ix._read_stats()
     assert (st["n_docs"], st["sum_dl"]) == (2, 5)
@@ -234,55 +230,50 @@ except ImportError:                     # pragma: no cover
 
 
 class _ScalarFenceHarness:
-    """Drives the REAL TextIndex stats fence (no Spark — the scalar
-    half is pure driver-side state) the way apply_delta does: check
-    the fence first, then commit the ±delta under the token."""
+    """Drives the REAL replay rule (``skip_replay``) and the REAL
+    manifest commit of a bucketed store with no Spark: a commit with
+    no rows (``_commit(None, [], token=, mutate=)``) is pure manifest
+    state, the way TextIndex commits its corpus scalars — decide the
+    replay first, then commit the ±delta under the token."""
 
     def __init__(self, path):
-        self.ix = TextIndex.__new__(TextIndex)
-        self.ix.path = path             # only the stats half is used
+        self.view = BucketedMaterializedView(None, path, ["term", "doc"])
 
     def value(self) -> int:
-        return self.ix._read_stats()["n_docs"]
+        return (self.view.manifest().get("corpus") or {}).get("n_docs", 0)
+
+    def _skip(self, token: str) -> bool:
+        return skip_replay(self.view.manifest(), token, self.view.path)
 
     def apply(self, token: str, delta: int) -> str:
         """One batch attempt.  Returns 'applied' / 'skipped' /
         'refused'."""
         try:
-            if self.ix._check_stats_fence(token):
+            if self._skip(token):
                 return "skipped"
         except MaintenanceFenceError:
             return "refused"
-        st_ = self.ix._read_stats()
-        self.ix._commit_stats(st_["n_docs"] + delta, 0, 0, token)
+        self.view._commit(None, [], token=token,
+                          mutate=TextIndex._add_corpus(delta, 0, 0))
         return "applied"
 
     def tear(self, token: str) -> str:
-        """A batch that records its first sighting then crashes before
-        the commit."""
+        """A batch that crashes before its commit."""
         try:
-            if self.ix._check_stats_fence(token):
+            if self._skip(token):
                 return "skipped"
         except MaintenanceFenceError:
             return "refused"
         return "torn"
 
     def merge(self, delta: int) -> None:
-        """Out-of-band fence rotation (federated merge_from's scalar
-        half): values change, epoch bumps, no batch token."""
-        st_ = self.ix._read_stats()
-        self.ix._commit_stats(st_["n_docs"] + delta, 0, 0, None,
-                              bump_epoch=True)
+        """An out-of-band commit (federated merge_from's scalar half):
+        values change, epoch bumps, no batch token."""
+        self.view._commit(None, [], out_of_band=True,
+                          mutate=TextIndex._add_corpus(delta, 0, 0))
 
     def evict(self, token: str) -> None:
-        doc = self.ix._read_stats_doc()
-        (doc.get("token_epochs") or {}).pop(token, None)
-        doc["applied_tokens"] = [t for t in
-                                 (doc.get("applied_tokens") or [])
-                                 if t != token]
-        if doc.get("batch_token") == token:
-            doc.pop("batch_token")
-        self.ix._write_stats(doc)
+        _age_out(self.view, token)
 
 
 if HAVE_HYPOTHESIS:

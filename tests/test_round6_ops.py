@@ -536,7 +536,7 @@ def test_checksum_view_empty_table_matches(spark, tmp_path):
 def test_checksum_replay_check_respects_format_fence(spark, tmp_path):
     """A replayed token against an OLD-FORMAT state file must raise (the
     fence), never silently skip and keep the incomparable digest alive
-    (found by review: _last_token bypassed the fence)."""
+    (found by review: a single-token shortcut bypassed the fence)."""
     import json as _json
     import os as _os
 

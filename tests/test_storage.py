@@ -36,7 +36,7 @@ def test_write_read_text_roundtrip(backend, tmp_path):
 
 def test_read_text_missing_raises_file_not_found(backend, tmp_path):
     # stores distinguish "no state yet" (bootstrap) from IO failure by
-    # exactly this exception type — text_index._read_stats_doc
+    # exactly this exception type — bucketed_view._read_manifest_dict
     with pytest.raises(FileNotFoundError):
         backend.read_text(str(tmp_path / "absent.json"))
 
@@ -234,6 +234,7 @@ def test_bucketed_view_lifecycle_runs_through_the_seam(spark, tmp_path):
         mv.apply(df, action="upsertInto")
         upd = spark.createDataFrame([(3, 999), (21, 210)], "k int, v int")
         mv.apply(upd, action="upsertInto")
+        mv.vacuum()            # between-batch GC: probes the store root
         got = {(r["k"], r["v"]) for r in mv.read().collect()}
     want = {(i, i * 10) for i in range(20) if i != 3} | {(3, 999), (21, 210)}
     assert got == want

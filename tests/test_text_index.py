@@ -114,6 +114,16 @@ def test_empty_and_null_text(spark, tmp_path):
     got = _rows(ix.topk(spark.createDataFrame(
         [("q", "words")], "qid string, term string")))
     assert [r[:2] for r in got] == [("q", 1)]
+    # a batch of ONLY token-less docs touches no postings bucket; its
+    # scalars and token still commit, once
+    for _ in range(2):
+        ix.apply_delta(_docs(spark, [(5, ""), (6, None)]), None,
+                       batch_token="b1")
+    assert ix._corpus_stats() == (6, 2, 1)
+    assert _rows(ix.read()) == [("two", 1, 1, 2), ("words", 1, 1, 2)]
+    fresh = TextIndex(spark, str(tmp_path / "fresh"))
+    fresh.apply_delta(_docs(spark, [(7, "")]), None, batch_token="c0")
+    assert fresh.recompute_check(_docs(spark, [(7, "")]))
 
 
 def test_unknown_terms_and_empty_store(spark, tmp_path):
@@ -386,10 +396,9 @@ def test_merge_from_untokenized_preserves_stats_fence(spark, tmp_path):
     b = TextIndex(spark, str(tmp_path / "fb"))
     a.apply_delta(docs.where("doc_id < 5"), None, batch_token="T")
     b.apply_delta(docs.where("doc_id >= 5"), None, batch_token="B")
-    fence = a._read_stats()["batch_token"]
-    assert fence is not None
+    assert a.view.applied_tokens() == ["T:tix"]
     a.merge_from(b)                       # no token
-    assert a._read_stats()["batch_token"] == fence   # fence preserved
+    assert a.view.applied_tokens() == ["T:tix"]      # fence preserved
     n_docs = a._read_stats()["n_docs"]
     # the replayed last ingest batch is still fenced out
     a.apply_delta(docs.where("doc_id < 5"), None, batch_token="T")

@@ -276,25 +276,35 @@ def test_cell_stats_bounded_and_complete(spark, emb, tmp_path):
 
 
 def test_reopen_torn_index_restores_layout_params(spark, emb, tmp_path):
-    """Reopening an index torn mid-retrain (lists renamed aside to .old)
-    with DIFFERENT constructor defaults must serve the restored layout's
+    """Reopening an index whose retrain crashed with DIFFERENT
+    constructor defaults must serve the committed layout's
     n_buckets/bucket_keys, not the constructor's — stale bucket hashing
     made every probe read the wrong directories (found by review,
-    repro-confirmed: queries returned 0 rows)."""
-    import os
+    repro-confirmed: queries returned 0 rows).  The tear used to rename
+    the live lists aside to a ``.old`` sibling; now the retrain's crash
+    is raised at its one manifest replace, after its files moved in."""
+    from ydb_cdc_processor_spark import storage
 
     path = str(tmp_path / "torn_reopen")
     idx = VectorIndex(spark, path, n_cells=8, n_buckets=32)
-    idx.build(emb)
+    idx.build(emb.where(F.col("vec_id") % 2 == 0))
     probes = emb.where(F.col("vec_id") % 100 == 0) \
         .select(F.col("vec_id").alias("probe_id"), "embedding")
     expected = _res(idx.query(probes, k=3, n_probe=8))
     assert expected
 
-    # tear: live lists renamed aside, as a crash between build()'s two
-    # swap renames leaves them
-    lists = idx.view.path
-    os.rename(lists, idx.view._old_dir())
+    real, man = storage.replace_text, idx.view._manifest_path()
+
+    def crash(p, text):
+        if p == man:
+            raise RuntimeError("crash at the commit")
+        return real(p, text)
+    storage.replace_text = crash
+    try:
+        with pytest.raises(RuntimeError, match="crash at the commit"):
+            idx.build(emb)                      # the torn retrain
+    finally:
+        storage.replace_text = real
 
     idx2 = VectorIndex(spark, path, n_cells=8)  # default n_buckets=8 != 32
     assert idx2.view.n_buckets == 32

@@ -10,13 +10,17 @@ stuck:
   build_sec    — the original day-granularity ingest (context)
   rebuild_sec  — staging the hour-granularity twin from the live store
                  (O(view) read + rewrite, the full price of evolving)
-  swap_sec     — ``replace_with``: the serve blackout, ONE directory
-                 rename regardless of size
+  swap_sec     — ``replace_with``: the staged store's data files move
+                 in one file rename at a time (invisible), then ONE
+                 manifest replace publishes them — the serve blackout
+                 is that replace alone, and the moves scale with the
+                 file count, not the bytes
   hour_read_*  — bytes a 1-hour range read touches BEFORE (whole-day
                  directory) vs AFTER (one hour directory) — the payoff
   serve_green  — the live store answered identically after the staged
-                 build completed but before the swap, and after it
-                 (readers never see a mix; replace_with is atomic)
+                 build completed but before the commit, and after it
+                 (readers never see a mix; the manifest replace is
+                 atomic)
 
 Read the BYTES columns (deterministic); rebuild wall seconds scale
 linearly with view size, which is exactly the judge-visible point: the
@@ -100,12 +104,12 @@ def main() -> None:
             hour.apply(day.read(), action="upsertInto")
             rebuild_sec = round(time.perf_counter() - t0, 3)
             staged_bytes = hour.total_bytes()
-            # mid-replacement: staged build complete, swap not yet run —
+            # mid-replacement: staged build complete, not yet committed —
             # the live path still serves the complete day layout
             serve_mid = day.read_range(lo, hi).count() == want
 
             t0 = time.perf_counter()
-            day.replace_with(tmp)                 # ONE atomic rename
+            day.replace_with(tmp)     # file moves + ONE manifest replace
             swap_sec = round(time.perf_counter() - t0, 4)
             after = RangePartitionedView(spark, path, keys=["ts", "id"],
                                          part_col="ts", granularity=HOUR)

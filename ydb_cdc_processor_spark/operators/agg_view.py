@@ -204,7 +204,7 @@ class AggregateView:
 
     def apply_delta(self, new_rows: DataFrame | None,
                     old_rows: DataFrame | None,
-                    batch_token: str | None = None) -> None:
+                    batch_token: str | None = None, mutate=None) -> None:
         """One maintenance step.
 
         ``new_rows``: post-transform rows being upserted (None for a
@@ -222,7 +222,14 @@ class AggregateView:
         manifest replace as the touched buckets, so a replay after a
         crash re-applies the whole (invisible) batch once — still
         exactly-once, without a view-wide rewrite.
+
+        ``mutate(doc)`` (bucketed backend only): state a wrapping store
+        keeps in the rollup manifest (``TopKView``'s counters), applied
+        in the batch's commit — :attr:`last_negative_drops` is already
+        set for this batch when it runs.
         """
+        if mutate is not None and self.backend != "bucketed":
+            raise ValueError("mutate needs the bucketed backend")
         parts = []
         if new_rows is not None:
             parts.append(self._contributions(new_rows, +1))
@@ -235,7 +242,7 @@ class AggregateView:
             contrib = contrib.unionByName(p)
         delta = self._reagg(contrib)
         if self.backend == "bucketed":
-            self._apply_delta_bucketed(delta, batch_token)
+            self._apply_delta_bucketed(delta, batch_token, mutate=mutate)
         else:
             self._apply_delta_flat(delta, batch_token)
 
@@ -298,7 +305,8 @@ class AggregateView:
 
     def _apply_delta_bucketed(self, delta: DataFrame,
                               batch_token: str | None,
-                              out_of_band: bool = False) -> None:
+                              out_of_band: bool = False,
+                              mutate=None) -> None:
         """O(delta + touched buckets) maintenance: the per-group delta is
         bucketed on the group columns, ONLY the touched buckets are read,
         re-aggregated with the delta, and promoted — never an O(|rollup|)
@@ -316,8 +324,10 @@ class AggregateView:
             BUCKET_COL, with_empty_output_sentinel)
         store = self._store(delta.schema)
         obs = Observation(f"agg_view_neg_{uuid.uuid4().hex[:8]}")
+        merged_rows = []   # non-empty once the merge ran
 
         def _merge(target, d):
+            merged_rows.append(True)
             merged = self._reagg(target.unionByName(d),
                                  extra_cols=(BUCKET_COL,))
             # negative-drop counter rides the merge's own materialization
@@ -333,10 +343,18 @@ class AggregateView:
             # keeps the counter exact (never promoted; bucket -1)
             return with_empty_output_sentinel(self.spark, kept)
 
+        def _drops() -> int:
+            # a merge that ran has written its rows by commit time
+            return _obs_metric(obs, "neg") if merged_rows else 0
+
+        def _on_commit(doc):
+            self.last_negative_drops = _drops()
+            mutate(doc)
+
         applied = store.merge_touched(
-            delta, _merge,
-            batch_token=batch_token, out_of_band=out_of_band)
-        self.last_negative_drops = _obs_metric(obs, "neg") if applied else 0
+            delta, _merge, batch_token=batch_token, out_of_band=out_of_band,
+            mutate=None if mutate is None else _on_commit)
+        self.last_negative_drops = _drops()
         if not applied and batch_token is not None:
             logger.info("agg view %s: batch token %r already applied; "
                         "skipping replay", self.path, batch_token)

@@ -18,24 +18,33 @@ Layout and commit protocol (one for every write path)::
 
     <path>/_buckets.json                 the manifest
     <path>/_bucket=N/<gen>/part-*.parquet one generation per bucket
+    <path>/<name>/<gen>/                 a named directory (``dirs``)
     <path>/_staging/<gen>/               a batch being written
 
-The manifest is the single source of visibility.  Its ``gens`` map
-names each non-empty bucket's current generation; readers never list
-the store root.  A write stages the touched buckets' new rows under
-``_staging/<gen>``, moves the files into ``_bucket=N/<gen>/`` one file
-at a time (a generation nothing names yet is invisible), and then ONE
+The manifest is the single source of visibility and the only place a
+store keeps committed state.  Its ``gens`` map names each non-empty
+bucket's current generation, its ``dirs`` map the current generation
+of any named directory (``VectorIndex`` keeps its quantizer there), and
+derived stores keep their scalars beside them (``TextIndex``'s corpus
+counts, ``TopKView``'s counters); readers never list the store root.  A
+write stages the touched buckets' new rows under ``_staging/<gen>``,
+moves the files into ``_bucket=N/<gen>/`` one file at a time (a
+generation nothing names yet is invisible), and then ONE
 ``storage.replace_text`` of the manifest repoints the touched buckets,
 drops the emptied ones, records the batch token in ``applied_tokens``
-/ ``seq_hwm`` and, for a rebucket, sets the new ``n_buckets``.  The
-batch becomes visible whole or not at all — the reference's "offsets
-commit only after the write landed" rule (PAPER.md §0 step 5) holds
-per store.  Superseded generations are deleted after that write, as
-garbage collection; :meth:`vacuum` removes what a crash left behind.
-No path renames a directory, so the protocol runs unchanged on object
-stores (``storage.ObjectStoreSimStorage`` enforces this in the tests).
+/ ``seq_hwm``, applies the caller's ``mutate`` (scalars, counters) and,
+for a rebucket, sets the new ``n_buckets``.  :meth:`replace_with`
+adopts a whole staged store the same way: its generation files move
+in, then one replace adopts its manifest.  The batch becomes visible
+whole or not at all — the reference's "offsets commit only after the
+write landed" rule (PAPER.md §0 step 5) holds per store.  Superseded
+generations are deleted after that write, as garbage collection;
+:meth:`vacuum` removes what a crash left behind.  No path renames a
+directory, so the protocol runs unchanged on object stores
+(``storage.ObjectStoreSimStorage`` enforces this in the tests).
 
-Replay rule (:meth:`merge_touched`, the non-idempotent path):
+Replay rule (:func:`skip_replay`, used by :meth:`merge_touched`, the
+non-idempotent path):
 
 - a token already in ``applied_tokens`` is skipped;
 - a sequenced token at or below its feed's ``seq_hwm`` raises
@@ -138,6 +147,45 @@ def seq_hwm_violation(doc: dict, token: str) -> int | None:
     return int(mark) if mark is not None and int(mark) >= n else None
 
 
+def skip_replay(doc: dict, token: str | None, where: str) -> bool:
+    """THE replay rule, decided from the manifest ``doc`` alone (no
+    Spark job): True when ``token`` is in ``applied_tokens`` — the batch
+    committed, skip it; :class:`MaintenanceFenceError` when it is a
+    sequenced token at or below its feed's ``seq_hwm`` — it committed
+    and its record was evicted from the bounded history; False
+    otherwise — apply the whole batch, none of it is visible."""
+    if token is None:
+        return False
+    if token in (doc.get("applied_tokens") or []):
+        logger.info("%s: batch token %r already applied; skipping "
+                    "replay", where, token)
+        return True
+    mark = seq_hwm_violation(doc, token)
+    if mark is not None:
+        raise MaintenanceFenceError(
+            f"{where}: token {token!r} carries a feed sequence at or "
+            f"below the committed high-water mark ({mark}) but is not in "
+            "the applied-token history — a replay of a batch that "
+            "committed and was evicted from the bounded history (or an "
+            "out-of-order feed, a contract violation).  Re-applying "
+            "could double-count; converge via recompute.")
+    return False
+
+
+def add_counters(doc: dict, key: str, **inc: int) -> None:
+    """Add ``inc`` to the integer counters under ``doc[key]`` — the
+    ``mutate`` body a derived store commits its counters with."""
+    c = dict(doc.get(key) or {})
+    for k, v in inc.items():
+        c[k] = int(c.get(k, 0)) + int(v)
+    doc[key] = c
+
+
+def new_generation() -> str:
+    """A fresh, unique generation name."""
+    return f"g-{uuid.uuid4().hex[:12]}"
+
+
 def rebalance_by_bucket(df: DataFrame) -> DataFrame:
     """Partition a store write by ``_bucket``: a plain hash exchange,
     one write task per bucket.  AQE still coalesces it under
@@ -160,6 +208,20 @@ def _byte_size(text: str) -> int:
 
 def _is_data_file(name: str) -> bool:
     return not name.startswith(("_", "."))
+
+
+def _move_tree(src: str, dst: str) -> None:
+    """Move every data file under ``src`` to the same relative path
+    under ``dst``, one file rename at a time — never a directory
+    rename."""
+    for root, _dirs, files in storage.walk(src):
+        rel = os.path.relpath(root, src)
+        d = dst if rel == "." else os.path.join(dst, rel)
+        moved = [n for n in files if _is_data_file(n)]
+        if moved:
+            storage.makedirs(d)
+        for n in moved:
+            storage.rename(os.path.join(root, n), os.path.join(d, n))
 
 
 def with_empty_output_sentinel(spark: SparkSession,
@@ -212,10 +274,6 @@ class BucketedMaterializedView:
                              f"of keys {keys}")
         self.bucket_keys = list(bucket_keys) if bucket_keys else list(keys)
         self.schema = schema
-        # recover BEFORE reading the manifest: a store torn mid
-        # replace_with sits at the .old sibling, so the live path has no
-        # manifest and the constructor would adopt its own defaults
-        self._recover()
         # n_buckets and the co-location key are properties of the
         # LAYOUT: the manifest wins over the constructor, so a handle
         # reopened with a stale default cannot mis-hash buckets
@@ -249,25 +307,23 @@ class BucketedMaterializedView:
         return os.path.join(self.path, MANIFEST)
 
     def _read_manifest_dict(self) -> dict:
+        # ONLY an absent manifest means "nothing committed yet": any
+        # other IO error propagates rather than read as an empty store
+        # (whose next commit would drop every bucket and scalar)
         try:
             return json.loads(storage.read_text(self._manifest_path()))
-        except (OSError, ValueError):
+        except FileNotFoundError:
             return {}
+
+    def manifest(self) -> dict:
+        """The committed manifest ({} before the first commit) — where
+        derived stores read the state they commit through ``mutate``."""
+        return self._read_manifest_dict()
 
     def _read_manifest(self) -> int | None:
         """The manifest's ``n_buckets`` (None before the first write)."""
         n = self._read_manifest_dict().get("n_buckets")
         return int(n) if n is not None else None
-
-    def _mutate_manifest(self, mutate) -> None:
-        """Read-modify-replace the manifest dict atomically (layout
-        identity fields preserved via setdefault — never clobbered)."""
-        storage.makedirs(self.path)
-        doc = self._read_manifest_dict()
-        doc.setdefault("n_buckets", self.n_buckets)
-        doc.setdefault("bucket_keys", self.bucket_keys)
-        mutate(doc)
-        storage.replace_text(self._manifest_path(), json.dumps(doc))
 
     def maintenance_epoch(self) -> int:
         """How many out-of-band maintenance operations (federated
@@ -340,14 +396,12 @@ class BucketedMaterializedView:
         read every caller composing its own bucket probes must use: a
         directory on disk may hold a superseded or uncommitted
         generation."""
-        self._recover()
         return sorted(self._gens())
 
     def bucket_files(self, buckets=None) -> dict[int, list[str]]:
         """``{bucket: data files}`` of the live generations of
         ``buckets`` (default: every non-empty bucket) — one listing per
         bucket, no Spark job."""
-        self._recover()
         gens = self._gens()
         ids = sorted(gens) if buckets is None else \
             [b for b in buckets if b in gens]
@@ -357,6 +411,46 @@ class BucketedMaterializedView:
             out[b] = [os.path.join(d, n) for n in storage.listdir(d)
                       if _is_data_file(n)]
         return out
+
+    def named_dir(self, name: str) -> str | None:
+        """The live generation directory of the named directory
+        ``name`` (the manifest's ``dirs`` map), or None when no commit
+        named one."""
+        gen = (self._read_manifest_dict().get("dirs") or {}).get(name)
+        return None if gen is None else os.path.join(self.path, name, gen)
+
+    def name_dir(self, name: str, gen: str) -> None:
+        """Commit ``<path>/<name>/<gen>/`` (already written) as the
+        named directory ``name`` — one manifest replace; the superseded
+        generation is garbage-collected."""
+        self._mutate_manifest(
+            lambda doc: doc.setdefault("dirs", {}).__setitem__(name, gen))
+
+    def _mutate_manifest(self, mutate) -> None:
+        """Read-modify-replace the manifest atomically — THE commit
+        point, and the only write of committed state (layout identity
+        fields preserved via setdefault — never clobbered) — then
+        garbage-collect every generation the old manifest named and the
+        new one no longer does."""
+        old = self._read_manifest_dict()
+        doc = json.loads(json.dumps(old))   # deep: mutate may nest
+        doc.setdefault("n_buckets", self.n_buckets)
+        doc.setdefault("bucket_keys", self.bucket_keys)
+        mutate(doc)
+        storage.makedirs(self.path)
+        storage.replace_text(self._manifest_path(), json.dumps(doc))
+        # everything below is garbage collection: correctness no longer
+        # depends on any of it landing
+        gens = self._gens(doc)
+        for b, g in self._gens(old).items():
+            if b not in gens:
+                storage.remove_tree(self._bucket_dir(b))
+            elif gens[b] != g:
+                storage.remove_tree(self._gen_dir(b, g))
+        dirs = doc.get("dirs") or {}
+        for name, g in (old.get("dirs") or {}).items():
+            if dirs.get(name) != g:
+                storage.remove_tree(os.path.join(self.path, name, g))
 
     def _commit(self, rows: DataFrame | None, buckets: list[int] | None,
                 *, keep_absent: bool = False, pre_commit=None,
@@ -373,14 +467,18 @@ class BucketedMaterializedView:
         was staged (a full rewrite).  The same write records ``token``
         in ``applied_tokens``/``seq_hwm``, widens the stored schema,
         bumps ``epoch`` for an out-of-band operation and applies
-        ``mutate(doc)`` (layout changes).
+        ``mutate(doc)`` (layout changes, a derived store's scalars and
+        counters — the staged write has run, so Observations riding
+        ``rows`` are readable there).
 
         ``pre_commit`` runs after the staged write and before any file
         moves; if it raises, the staging is discarded and nothing
         changes.  Superseded generations are deleted only after the
         manifest replace: a crash anywhere earlier leaves the store
-        exactly as it was, plus stray files for :meth:`vacuum`."""
-        gen = f"g-{uuid.uuid4().hex[:12]}"
+        exactly as it was, plus stray files for :meth:`vacuum`.  With
+        ``rows=None`` and ``buckets=[]`` no file moves and no Spark job
+        runs: only the token and ``mutate`` commit."""
+        gen = new_generation()
         staging = os.path.join(self.path, STAGING, gen)
         placed: set[int] = set()
         if rows is not None:
@@ -409,39 +507,29 @@ class BucketedMaterializedView:
         elif pre_commit is not None:
             pre_commit()
 
-        storage.makedirs(self.path)
-        doc = self._read_manifest_dict()
-        old = self._gens(doc)
-        gens = {} if buckets is None else dict(old)
-        for b in buckets or ():
-            if b not in placed and not keep_absent:
-                gens.pop(b, None)
-        for b in placed:
-            gens[b] = gen
-        doc["gens"] = {str(b): g for b, g in sorted(gens.items())}
-        doc.setdefault("n_buckets", self.n_buckets)
-        doc.setdefault("bucket_keys", self.bucket_keys)
-        if rows is not None:
-            self._widen_schema(doc, rows.schema)
-        if token is not None:
-            hist = [t for t in (doc.get("applied_tokens") or [])
-                    if t != token]
-            doc["applied_tokens"] = (hist + [token])[-TOKEN_HISTORY:]
-            bump_seq_hwm(doc, token)
-        if out_of_band:
-            doc["epoch"] = int(doc.get("epoch", 0)) + 1
-        if mutate is not None:
-            mutate(doc)
-        storage.replace_text(self._manifest_path(), json.dumps(doc))
-        # everything below is garbage collection: correctness no longer
-        # depends on any of it landing
+        def commit(doc: dict) -> None:
+            gens = {} if buckets is None else self._gens(doc)
+            for b in buckets or ():
+                if b not in placed and not keep_absent:
+                    gens.pop(b, None)
+            for b in placed:
+                gens[b] = gen
+            doc["gens"] = {str(b): g for b, g in sorted(gens.items())}
+            if rows is not None:
+                self._widen_schema(doc, rows.schema)
+            if token is not None:
+                hist = [t for t in (doc.get("applied_tokens") or [])
+                        if t != token]
+                doc["applied_tokens"] = (hist + [token])[-TOKEN_HISTORY:]
+                bump_seq_hwm(doc, token)
+            if out_of_band:
+                doc["epoch"] = int(doc.get("epoch", 0)) + 1
+            if mutate is not None:
+                mutate(doc)
+
+        self._mutate_manifest(commit)
         if rows is not None:
             storage.remove_tree(staging)
-        for b, g in old.items():
-            if b not in gens:
-                storage.remove_tree(self._bucket_dir(b))
-            elif gens[b] != g:
-                storage.remove_tree(self._gen_dir(b, g))
 
     def vacuum(self) -> int:
         """Remove every generation the manifest does not name — what a
@@ -450,44 +538,34 @@ class BucketedMaterializedView:
         no reader can reach these files.  Run between batches (the
         staging area of an in-flight batch is removed too).  Returns
         the number of generation directories removed."""
-        self._recover()
         storage.remove_tree(os.path.join(self.path, STAGING))
         if not storage.is_dir(self.path):
             return 0
-        gens = self._gens()
+        doc = self._read_manifest_dict()
+        gens = self._gens(doc)
+        dirs = doc.get("dirs") or {}
         removed = 0
         for e in storage.listdir(self.path):
-            if not e.startswith(f"{BUCKET_COL}="):
+            if e.startswith(f"{BUCKET_COL}="):
+                live = gens.get(int(e.split("=", 1)[1]))
+            elif e in dirs:
+                live = dirs[e]
+            else:
                 continue
-            b = int(e.split("=", 1)[1])
             d = os.path.join(self.path, e)
             for g in storage.listdir(d):
-                if g != gens.get(b):
+                if g != live:
                     storage.remove_tree(os.path.join(d, g))
                     removed += 1
-            if b not in gens:
+            if live is None:
                 storage.remove_tree(d)
         return removed
 
     # -- whole-store replace (VectorIndex retrains) ---------------------------
 
-    def _old_dir(self) -> str:
-        parent = os.path.dirname(os.path.abspath(self.path)) or "."
-        return os.path.join(parent, f".{os.path.basename(self.path)}.old")
-
-    def _recover(self) -> None:
-        """Restore a store torn mid :meth:`replace_with`: the live path
-        was renamed to the ``.old`` sibling and the crash hit before the
-        staged store was renamed in.  The old store is complete."""
-        old = self._old_dir()
-        if storage.is_dir(old) and not storage.exists(self.path):
-            storage.rename(old, self.path)
-
     def recover(self) -> None:
-        """Public crash-repair entry point (see :meth:`_recover`); then
-        re-read the manifest's layout state, so a long-lived handle
-        picks up a restored layout or another handle's rebucket."""
-        self._recover()
+        """Re-read the manifest's layout state, so a long-lived handle
+        picks up another handle's rebucket or retrain."""
         stored = self._read_manifest_dict()
         if stored.get("n_buckets") is not None:
             self.n_buckets = int(stored["n_buckets"])
@@ -495,45 +573,47 @@ class BucketedMaterializedView:
             self.bucket_keys = list(stored["bucket_keys"])
 
     def replace_with(self, staged_path: str) -> None:
-        """Atomically adopt a fully-staged sibling directory as the
-        view's new on-disk state — the full-replace contract index
-        retrains use (``VectorIndex.build``).
+        """Adopt a COMPLETE staged store (manifest, bucket generations,
+        named directories — written at ``staged_path`` by another
+        handle) as this view's state: the full-replace contract index
+        retrains use (``VectorIndex.build``).  A reader sees the old
+        store or the new one, never a mix.
 
-        ``staged_path`` must be a COMPLETE store (manifest, generations,
-        any sidecar files): the live view is renamed to the
-        deterministic ``.old`` sibling, the staged dir renamed in, the
-        old copy dropped.  A crash between the two renames is repaired
-        by :meth:`recover`, which restores the complete old state.
+        The staged store's live generation files move into this path
+        one file at a time under their already-unique generation names
+        (nothing names them here yet, so they are invisible); then ONE
+        manifest replace adopts the staged manifest whole, and the
+        superseded generations and the staged directory are
+        garbage-collected.  A crash before the replace leaves the old
+        store serving plus stray files for :meth:`vacuum`; the staged
+        store is consumed by the moves, so re-stage it (as a re-run
+        ``build`` does) rather than retry with it.  Concurrent
+        writers are out of contract (single maintainer per store, the
+        reference's own one-writer-loop model)."""
+        try:
+            staged = json.loads(storage.read_text(
+                os.path.join(staged_path, MANIFEST)))
+        except FileNotFoundError:
+            staged = {}
+        rels = [os.path.join(f"{BUCKET_COL}={b}", g)
+                for b, g in (staged.get("gens") or {}).items()]
+        rels += [os.path.join(n, g)
+                 for n, g in (staged.get("dirs") or {}).items()]
+        for rel in rels:
+            _move_tree(os.path.join(staged_path, rel),
+                       os.path.join(self.path, rel))
 
-        Concurrent READERS are tolerated: a reader's recover() landing
-        between the two renames restores the old layout to the live
-        path, which would make the naive second rename fail — the swap
-        loop below re-displaces and retries, so the reader observed a
-        complete old view and the writer still lands the new one.
-        Concurrent WRITERS are out of contract (single maintainer per
-        store, the reference's own one-writer-loop model)."""
-        old = self._old_dir()
-        storage.remove_tree(old)  # stale leftover post-crash
-        last_err = None
-        for _ in range(8):
-            if storage.is_dir(self.path):
-                storage.remove_tree(old)
-                storage.rename(self.path, old)
-            try:
-                storage.rename(staged_path, self.path)
-                last_err = None
-                break
-            except OSError as e:  # a reader restored .old → live; retry
-                last_err = e
-        if last_err is not None:
-            raise last_err
-        storage.remove_tree(old)
+        def adopt(doc: dict) -> None:
+            doc.clear()
+            doc.update(staged)
+        self._mutate_manifest(adopt)
+        storage.remove_tree(staged_path)
+        self.recover()
 
     # -- IO ------------------------------------------------------------------
 
     def exists(self) -> bool:
         """True once any write committed (an empty view included)."""
-        self._recover()
         return "gens" in self._read_manifest_dict()
 
     def read(self) -> DataFrame:
@@ -546,7 +626,6 @@ class BucketedMaterializedView:
         return self._with_bucket(self.spark.createDataFrame([], schema))
 
     def _read_raw(self) -> DataFrame:
-        self._recover()
         doc = self._read_manifest_dict()
         return self._read_dirs(self._live_dirs(sorted(self._gens(doc)), doc),
                                doc, self.schema)
@@ -583,7 +662,6 @@ class BucketedMaterializedView:
         matches, as in SQL ``IN``).  Small filtered reads run WITHOUT a
         Spark job — see :meth:`_read_touched_local`; the rest read
         through Spark with the same filter."""
-        self._recover()
         if where is None:
             return self._read_touched(touched, delta_schema)
         col, values = where
@@ -777,11 +855,11 @@ class BucketedMaterializedView:
 
     def merge_touched(self, delta: DataFrame, merge_fn,
                       batch_token: str | None = None,
-                      out_of_band: bool = False) -> bool:
+                      out_of_band: bool = False, mutate=None) -> bool:
         """Generic touched-bucket maintenance step with a batch replay
         fence — the primitive non-idempotent incremental view
-        maintenance (the aggregate view's ±deltas) needs from a bucketed
-        store.
+        maintenance (the aggregate view's ±deltas, the text index's
+        postings + corpus scalars) needs from a bucketed store.
 
         ``merge_fn(target, delta)`` receives the touched buckets' current
         rows and the delta rows, BOTH carrying ``_bucket``, and returns
@@ -789,51 +867,42 @@ class BucketedMaterializedView:
 
         ``batch_token`` joins ``applied_tokens`` in the same manifest
         replace that publishes the batch, so "token recorded" and
-        "batch visible" are one fact.  A replay is therefore decided
-        from the manifest alone, with no Spark job:
+        "batch visible" are one fact, and :func:`skip_replay` decides a
+        replay from the manifest alone: skipped (returns False),
+        refused (:class:`MaintenanceFenceError`) or applied whole.
 
-        - a token in ``applied_tokens`` is skipped (returns False);
-        - a sequenced token at or below its feed's ``seq_hwm`` raises
-          :class:`MaintenanceFenceError` — it committed and its record
-          was evicted from the bounded history;
-        - any other token applies the whole batch: none of it is
-          visible, whatever a crash interrupted.
+        ``mutate(doc)`` runs inside that same replace (the merged rows
+        are written by then): state a derived store keeps beside its
+        rows commits exactly when the rows do.  A delta that touches no
+        bucket commits nothing — unless ``mutate`` is given, which then
+        commits with the token alone.
 
         ``out_of_band=True`` marks a federated merge (``merge_from``):
         it bumps the manifest's ``epoch`` counter in the same commit.
 
         Returns True when a merge committed, False when the batch was
         skipped as a replay (or the delta was empty)."""
-        self._recover()
-        if batch_token is not None:
-            doc = self._read_manifest_dict()
-            if batch_token in (doc.get("applied_tokens") or []):
-                logger.info("bucketed view %s: batch token %r already "
-                            "applied; skipping replay", self.path,
-                            batch_token)
-                return False
-            mark = seq_hwm_violation(doc, batch_token)
-            if mark is not None:
-                raise MaintenanceFenceError(
-                    f"bucketed view {self.path}: token {batch_token!r} "
-                    f"carries a feed sequence at or below the committed "
-                    f"high-water mark ({mark}) but is not in the applied-"
-                    "token history — a replay of a batch that committed "
-                    "and was evicted from the bounded history (or an "
-                    "out-of-order feed, a contract violation).  "
-                    "Re-applying could double-count; converge via "
-                    "recompute.")
+        if skip_replay(self._read_manifest_dict(), batch_token,
+                       f"bucketed view {self.path}"):
+            return False
         delta_b = self._with_bucket(delta).persist()
         try:
             touched = [r[0] for r in
                        delta_b.select(BUCKET_COL).distinct().collect()]
-            if not touched:
-                return False
-            merged = merge_fn(self._read_touched(touched, delta.schema),
-                              delta_b)
-            self._commit(merged, touched, token=batch_token,
-                         out_of_band=out_of_band)
-            return True
+            if touched:
+                merged = merge_fn(self._read_touched(touched, delta.schema),
+                                  delta_b)
+                self._commit(merged, touched, token=batch_token,
+                             out_of_band=out_of_band, mutate=mutate)
+            elif mutate is not None:
+                # nothing to rewrite: the token and state still commit,
+                # with the delta's schema so the store reads typed
+                def widen_then(doc):
+                    self._widen_schema(doc, delta.schema)
+                    mutate(doc)
+                self._commit(None, [], token=batch_token,
+                             out_of_band=out_of_band, mutate=widen_then)
+            return bool(touched) or mutate is not None
         finally:
             delta_b.unpersist()
 
@@ -894,8 +963,8 @@ class BucketedMaterializedView:
                     self.path, len(fragmented))
         return len(fragmented)
 
-    def rewrite_rows(self, transform_fn, buckets: list[int] | None = None
-                     ) -> int:
+    def rewrite_rows(self, transform_fn, buckets: list[int] | None = None,
+                     mutate=None) -> int:
         """Housekeeping rewrite of the given (default: every non-empty)
         buckets through ``transform_fn(rows) -> rows`` — the primitive a
         bounded view's PRUNE sweep needs.  Like :meth:`compact` it runs
@@ -905,8 +974,9 @@ class BucketedMaterializedView:
 
         ``transform_fn`` receives and must return rows carrying
         ``_bucket`` and MUST NOT move rows between buckets (a filter /
-        column rewrite, never a re-key).  Returns the number of buckets
-        rewritten."""
+        column rewrite, never a re-key).  ``mutate(doc)`` commits in the
+        same manifest replace, as in :meth:`merge_touched`.  Returns the
+        number of buckets rewritten."""
         live = self.bucket_ids()
         if buckets is not None:
             buckets = sorted(set(buckets) & set(live))
@@ -915,7 +985,7 @@ class BucketedMaterializedView:
         if not buckets:
             return 0
         self._commit(transform_fn(self._read_touched(buckets, None)),
-                     buckets)
+                     buckets, mutate=mutate)
         logger.info("bucketed view %s: rewrote %d bucket(s) in place",
                     self.path, len(buckets))
         return len(buckets)

@@ -169,15 +169,18 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20,
         nbr = (edges.join(labels.withColumnRenamed("doc", "src"), on="src")
                .groupBy(F.col("dst").alias("doc"))
                .agg(F.min("label").alias("nbr_min")))
-        new_labels = (labels.join(nbr, on="doc", how="left")
-                      .select("doc",
-                              F.least("label", F.coalesce("nbr_min", "label"))
-                               .alias("label"))
-                      .localCheckpoint(eager=True))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), on="doc")
-                   .where(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
+        # a label changes exactly when a neighbor's is smaller: the
+        # flag rides the checkpoint, so the convergence count scans it
+        # instead of joining the new labels back to the old ones
+        step = (labels.join(nbr, on="doc", how="left")
+                .select("doc",
+                        F.least("label", F.coalesce("nbr_min", "label"))
+                         .alias("label"),
+                        F.coalesce(F.col("nbr_min") < F.col("label"),
+                                   F.lit(False)).alias("_chg"))
+                .localCheckpoint(eager=True))
+        changed = step.where("_chg").count()
+        labels = step.drop("_chg")
         if changed == 0:
             converged = True
             break

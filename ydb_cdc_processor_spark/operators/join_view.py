@@ -229,7 +229,11 @@ class JoinView:
                                        on=self.dim_pk, how="left_anti")
         self.dim_mirror.apply_batch(new_rows, deleted)
 
-        if not self.view.exists():
+        # only buckets holding stored fact rows can need a refresh; a
+        # changed key hashing to an absent bucket would otherwise cost a
+        # read, an empty rewrite and a commit that changes nothing
+        live = self.view.bucket_ids()
+        if not live:
             return
         # 2. touched-bucket refresh of the join view, FUSED into one
         # read→rewrite pass via merge_touched: rows whose fk is in the
@@ -251,7 +255,7 @@ class JoinView:
                  for df in (new_rows, old_rows) if df is not None]
         changed_df = (parts[0] if len(parts) == 1
                       else parts[0].unionByName(parts[1])) \
-            .distinct().persist()
+            .distinct().where(self.view.bucket_expr().isin(live)).persist()
         try:
             dim_cols = self.dim_cols
 

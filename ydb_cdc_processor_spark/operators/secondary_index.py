@@ -20,9 +20,9 @@ never O(|fact|) — and maintenance per batch touches only the batch's
 old+new values' buckets, both sides of a batch in ONE fused
 read-merge-rewrite pass.
 
-The entry schema is persisted beside the store on first build, so a
-lookup that misses every stored bucket (value not in the index) types
-its empty result correctly instead of guessing.
+A lookup that misses every stored bucket (value not in the index)
+types its empty result from the store manifest's stored schema minus
+``_ixv`` instead of guessing.
 
 Serving runs no Spark job when the indexed column is integral, string or
 boolean — the reference's keyed point read, answered by the YDB server
@@ -43,7 +43,6 @@ retries and checkpoint replays converge without a token fence.
 
 from __future__ import annotations
 
-import json
 import logging
 import os
 
@@ -51,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.functions.spark_hash import (
     bucket_of, cast_to_string)
 from ydb_cdc_processor_spark.operators.bucketed_view import (
@@ -91,25 +89,12 @@ class SecondaryIndex:
     def _ixv(self) -> F.Column:
         return null_safe_key(self.col, IXV)
 
-    # -- persisted entry schema (typed empty results for misses) -------------
-
-    def _schema_path(self) -> str:
-        return os.path.join(self.path, "_entry_schema.json")
-
-    def _save_schema(self, entries: DataFrame) -> None:
-        if storage.exists(self._schema_path()):
-            return
-        storage.makedirs(self.path)
-        storage.replace_text(
-            self._schema_path(),
-            json.dumps(entries.drop(IXV).schema.jsonValue()))
-
-    def _load_schema(self) -> T.StructType | None:
-        try:
-            return T.StructType.fromJson(
-                json.loads(storage.read_text(self._schema_path())))
-        except (OSError, ValueError, KeyError):
-            return None
+    def _entry_schema(self) -> T.StructType | None:
+        """The ``(col, *pk)`` entry schema: the manifest's stored schema
+        minus ``_ixv`` (None on a store without one)."""
+        stored = self.view._stored_schema()
+        return None if stored is None else T.StructType(
+            [f for f in stored.fields if f.name != IXV])
 
     # -- maintenance ---------------------------------------------------------
 
@@ -139,7 +124,6 @@ class SecondaryIndex:
         ups = None
         if new_rows is not None:
             ups = new_rows.select(self._ixv(), self.col, *self.pk)
-            self._save_schema(ups)
         self.view.apply_batch(ups, stale)
 
     # -- serving -------------------------------------------------------------
@@ -150,7 +134,7 @@ class SecondaryIndex:
         maintenance path used (Python ``str()`` disagrees with it for
         booleans, large doubles, timestamps — a str()-built probe would
         silently miss stored rows)."""
-        schema = self._load_schema()
+        schema = self._entry_schema()
         col_type = schema[self.col].dataType if schema is not None else None
         non_null = [v for v in values if v is not None]
         frames = []
@@ -180,7 +164,7 @@ class SecondaryIndex:
         (functions/spark_hash.cast_to_string), NULL as ``NULL_KEY``, and
         a store bucketed on ``_ixv`` alone, whose bucket is then
         ``pmod(xxhash64(key), n)`` of one string."""
-        schema = self._load_schema()
+        schema = self._entry_schema()
         if schema is None or self.view.bucket_keys != [IXV]:
             return None
         col_type = schema[self.col].dataType
@@ -203,8 +187,8 @@ class SecondaryIndex:
         Public so observability/bench tooling measures what serving
         does, not a private re-implementation.
 
-        Recovery runs BEFORE hashing: it may restore a ``.old`` layout
-        whose n_buckets / bucket_keys differ from this handle's, and
+        The layout is re-read BEFORE hashing: another handle's rebucket
+        may have changed n_buckets / bucket_keys, and
         :meth:`BucketedMaterializedView.recover` refreshes them.  Driver-
         rendered probes (see :meth:`_probe_keys`) are routed on the
         driver; the rest through one Spark job."""
@@ -224,7 +208,7 @@ class SecondaryIndex:
         is a bounded probe list (the point-lookup shape); use
         :meth:`read` for full scans/joins.  A miss — including probes
         whose bucket was never written — is an EMPTY result typed from
-        the persisted entry schema, never a crash.
+        the manifest's stored schema, never a crash.
 
         Probes of an integral, string or boolean column run no Spark
         job: the driver renders and routes them (:meth:`_probe_keys`)
@@ -237,11 +221,11 @@ class SecondaryIndex:
         probe = self._probe(values)
         present = self.touched_buckets(values, _probe=probe)
         if not present:
-            schema = self._load_schema()
+            schema = self._entry_schema()
             if schema is None:
                 raise FileNotFoundError(
-                    f"secondary index at {self.view.path} has no entry "
-                    "schema sidecar; re-apply a batch to heal")
+                    f"secondary index at {self.view.path} has no stored "
+                    "schema; re-apply a batch to heal")
             # from an empty Arrow table, not ``[]``: a local relation,
             # where ``createDataFrame([], schema)`` scans an RDD (1 job)
             from pyspark.sql.pandas.types import to_arrow_schema

@@ -16,15 +16,20 @@ rewritten document retracts by its OLD text's term set (terms that
 disappeared delete; survivors upsert with the new tf AND the new dl —
 dl is denormalized onto every posting row precisely so a doc rewrite
 never leaves a stale length behind), both sides in ONE fused
-touched-bucket pass (``apply_batch``, the SecondaryIndex contract).
-Posting rows are absolute state, so replays are idempotent without a
-fence; the two GLOBAL scalars BM25 needs — corpus size and total token
-count — are ±deltas kept in one tiny ATOMIC-JSON state file under a
-batch-token replay fence (the ChecksumView pattern).  They were
-originally a 1-group ``AggregateView``, but a Spark read+union+write
-store job for a single row cost a FIXED ~1.5 s per micro-batch — pure
-job latency, 35% of the whole ingest entry's wall — where the JSON
-swap costs one 1-row collect of the signed delta agg.
+touched-bucket pass.  The GLOBAL scalars BM25 needs — corpus size,
+total token count, non-empty doc count — are ±deltas from one 1-row
+collect of a signed agg over the batch, kept in the postings store's
+manifest (``corpus``).  They were originally a 1-group
+``AggregateView``, but a Spark read+union+write store job for a single
+row cost a FIXED ~1.5 s per micro-batch.
+
+Commit and replay: a batch's postings, its scalar ±delta and its token
+land in ONE manifest replace (``BucketedMaterializedView.merge_touched``
+with a ``mutate``), so the store's one replay rule covers both halves:
+a committed token is skipped whole, a sequenced token at or below its
+feed's ``seq_hwm`` refuses (:class:`MaintenanceFenceError`), and any
+other replay applies the whole batch once — a crashed batch left
+nothing visible.  :meth:`TextIndex.merge_from` commits the same way.
 
 Scoring (:meth:`topk`) is bit-replayable cross-engine, same calls as
 ``text.bm25_topk``: rational idf ``(N - df + 0.5)/(df + 0.5)`` (ln is
@@ -44,20 +49,15 @@ same discipline every posting-list engine imposes.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.bucketed_view import (
-    BUCKET_COL, TOKEN_HISTORY, BucketedMaterializedView,
-    MaintenanceFenceError, bump_seq_hwm, seq_hwm_violation)
+    BUCKET_COL, BucketedMaterializedView, add_counters, skip_replay)
 from ydb_cdc_processor_spark.operators.ivm_feed import Feed
+from ydb_cdc_processor_spark.operators.merge import compose_merge
 from ydb_cdc_processor_spark.operators.text import normalize_words
-
-logger = logging.getLogger(__name__)
 
 _ALL = "_all"   # the stats rollup's single constant group
 
@@ -78,140 +78,27 @@ class TextIndex:
             spark, f"{path}/postings", keys=["term", "doc"],
             bucket_keys=["term"], n_buckets=n_buckets)
 
-    # -- corpus-stats state ------------------------------------------------------
+    # -- corpus scalars ----------------------------------------------------------
     # (n_docs, sum_dl, sum_nz) — corpus size, total token count, and the
     # count of non-empty docs (avgdl's denominator, mirroring the batch
-    # scorer whose dl table omits token-less docs) — as one atomic JSON
-    # swapped temp+rename, with the flat-AggregateView fence semantics:
-    # a replay under the last applied token is skipped whole.
-
-    def _stats_path(self) -> str:
-        import os
-        return os.path.join(self.path, "_stats.json")
-
-    def _read_stats_doc(self) -> dict:
-        """The RAW stats document (values + the full fence bookkeeping:
-        ``batch_token``, bounded ``applied_tokens`` history, the stats
-        maintenance ``epoch``, and ``token_epochs`` first-sighting
-        records — the same manifest shape the bucketed view keeps,
-        round-12 judge item #1)."""
-        import json
-        # ONLY a genuinely-absent file means "no batch ever applied".
-        # A permission error or transient IO failure must propagate:
-        # swallowing it would silently reset n_docs/sum_dl/sum_nz to
-        # zero (corrupting BM25) AND drop the batch_token replay fence.
-        # A torn write can't produce ValueError — _write_stats commits
-        # via the storage seam's atomic replace_text — so any JSON
-        # error is real corruption.
-        try:
-            return json.loads(storage.read_text(self._stats_path()))
-        except FileNotFoundError:
-            return {}
+    # scorer whose dl table omits token-less docs) — in the postings
+    # manifest's ``corpus`` entry, committed with the postings.
 
     def _read_stats(self) -> dict:
-        s = self._read_stats_doc()
-        return {"n_docs": int(s.get("n_docs", 0)),
-                "sum_dl": int(s.get("sum_dl", 0)),
-                "sum_nz": int(s.get("sum_nz", 0)),
-                "batch_token": s.get("batch_token")}
+        c = self.view.manifest().get("corpus") or {}
+        return {k: int(c.get(k, 0)) for k in ("n_docs", "sum_dl", "sum_nz")}
 
-    def _write_stats(self, st: dict) -> None:
-        import json
-        storage.makedirs(self.path)
-        # the seam's atomic-commit primitive (POSIX: tmp + os.replace)
-        storage.replace_text(self._stats_path(), json.dumps(st))
+    @staticmethod
+    def _add_corpus(dn: int, ddl: int, dnz: int):
+        """The ``mutate`` that adds a scalar ±delta to the manifest's
+        ``corpus`` entry inside the batch's commit."""
+        return lambda doc: add_counters(doc, "corpus", n_docs=dn,
+                                        sum_dl=ddl, sum_nz=dnz)
 
-    def stats_epoch(self) -> int:
-        """The corpus-scalar maintenance epoch — bumped by every
-        fence-rotating out-of-band op (:meth:`merge_from`); 0 on
-        indexes that never saw one."""
-        try:
-            return int(self._read_stats_doc().get("epoch", 0))
-        except (TypeError, ValueError):
-            return 0
-
-    def applied_stats_tokens(self) -> list[str]:
-        """Bounded history of FULLY applied stats batch tokens."""
-        return list(self._read_stats_doc().get("applied_tokens") or [])
-
-    def _check_stats_fence(self, token: str | None) -> bool:
-        """Mechanical single-maintainer enforcement for the corpus
-        scalars, mirroring the bucketed view's epoch fence (round-12
-        judge item #1).  Returns True when ``token`` is already FULLY
-        applied (the stats ±delta must be skipped; postings re-apply
-        idempotently).  Raises :class:`MaintenanceFenceError` when the
-        token was first seen under an OLDER stats epoch — a federation
-        ``merge_from`` rotated the fence while this batch was in
-        flight, and re-applying its n_docs/sum_dl/sum_nz delta over the
-        merged-in scalars would silently corrupt BM25 idf.  A first
-        sighting is recorded (atomically, before any work) so a torn
-        batch's replay can make exactly this determination.
-
-        The aged-out window is closed for SEQUENCED feeds (round-13
-        advisor): streaming tokens are monotonic per feed
-        (``tixs:{batch_id}``), and every committed token advances a
-        per-feed high-water mark in the same atomic stats write — so a
-        replayed token whose sequence is ≤ the mark yet has no
-        applied/first-sighting record refuses mechanically (a later
-        commit on a serialized feed proves this batch completed; the
-        missing record can only mean committed-then-evicted, and
-        re-applying the ±delta would double-count).  Only unsequenced
-        ad-hoc tokens retain the contractual TOKEN_HISTORY window."""
-        if token is None:
-            return False
-        doc = self._read_stats_doc()
-        if (doc.get("batch_token") == token
-                or token in (doc.get("applied_tokens") or [])):
-            return True
-        epoch = int(doc.get("epoch", 0))
-        te = dict(doc.get("token_epochs") or {})
-        seen = te.get(token)
-        if seen is None:
-            mark = seq_hwm_violation(doc, token)
-            if mark is not None:
-                raise MaintenanceFenceError(
-                    f"text index {self.path}: stats token {token!r} "
-                    f"carries a feed sequence at or below the committed "
-                    f"high-water mark ({mark}) but has no applied/"
-                    "first-sighting record — a replay of a batch that "
-                    "committed and was evicted from the bounded token "
-                    "histories (or an out-of-order feed).  Re-applying "
-                    "its n_docs/sum_dl/sum_nz ±delta would double-count "
-                    "and corrupt BM25 idf; converge via recompute.")
-        if seen is not None and epoch > int(seen):
-            raise MaintenanceFenceError(
-                f"text index {self.path}: replay of stats token {token!r} "
-                f"(first seen at stats epoch {int(seen)}) found the fence "
-                f"rotated to epoch {epoch} — a federated merge_from ran "
-                "after this batch started; re-applying its corpus-scalar "
-                "±delta could double-count n_docs/sum_dl/sum_nz and "
-                "corrupt BM25 idf.  Converge via recompute (rebuild the "
-                "index from the document store), or restore the "
-                "pre-merge shard state and replay in order.")
-        if seen is None:
-            te[token] = epoch
-            if len(te) > TOKEN_HISTORY:
-                for k in list(te)[:len(te) - TOKEN_HISTORY]:
-                    del te[k]
-            doc["token_epochs"] = te
-            self._write_stats(doc)
-        return False
-
-    def _apply_stats_delta(self, new_docs: DataFrame | None,
-                           old_docs: DataFrame | None,
-                           batch_token: str | None) -> None:
+    def _stats_delta(self, new_docs: DataFrame | None,
+                     old_docs: DataFrame | None) -> tuple[int, int, int]:
         """+stats of upserted docs, −stats of their old images: one
-        signed agg over the batch → a 1-row collect → atomic JSON swap.
-        Crash ordering vs the postings merge: stats apply AFTER, so a
-        crash between leaves postings idempotently re-appliable and the
-        un-bumped token lets the replay land the stats exactly once."""
-        st = self._read_stats()
-        if batch_token is not None and (
-                st["batch_token"] == batch_token
-                or batch_token in self.applied_stats_tokens()):
-            logger.info("text index %s: stats token %r already applied;"
-                        " skipping replay", self.path, batch_token)
-            return
+        signed agg over the batch → a 1-row collect."""
         # sign the document frames and UNION BEFORE the explode: one
         # explode + one (doc, _sgn) agg over the concatenated batch
         # replaces two independent explode+agg subtrees feeding a
@@ -231,8 +118,6 @@ class TextIndex:
                 F.col(self.id_col).cast("long").alias("doc"),
                 F.col(self.text_col).alias("text"),
                 F.lit(-1).alias("_sgn")))
-        if not parts:
-            return
         docs = parts[0]
         for p in parts[1:]:
             docs = docs.unionByName(p)
@@ -252,35 +137,7 @@ class TextIndex:
              .alias("ddl"),
             F.coalesce(F.sum(F.col("_sgn") * F.col("nz")), F.lit(0))
              .alias("dnz")).collect()[0]
-        self._commit_stats(st["n_docs"] + int(row["dn"]),
-                           st["sum_dl"] + int(row["ddl"]),
-                           st["sum_nz"] + int(row["dnz"]),
-                           batch_token)
-
-    def _commit_stats(self, n_docs: int, sum_dl: int, sum_nz: int,
-                      batch_token: str | None,
-                      bump_epoch: bool = False) -> None:
-        """ONE atomic swap committing values + fence bookkeeping: the
-        token joins the bounded applied history in the same write that
-        lands the values, so token-recorded ⟺ fully-applied with no
-        torn window (the flat-AggregateView swap rule).  An
-        un-tokenized commit preserves the previous fence rather than
-        clobbering it (review finding, round 9)."""
-        doc = self._read_stats_doc()
-        doc["n_docs"], doc["sum_dl"], doc["sum_nz"] = \
-            int(n_docs), int(sum_dl), int(sum_nz)
-        if bump_epoch:
-            doc["epoch"] = int(doc.get("epoch", 0)) + 1
-        if batch_token is not None:
-            doc["batch_token"] = batch_token
-            hist = [t for t in (doc.get("applied_tokens") or [])
-                    if t != batch_token]
-            doc["applied_tokens"] = (hist + [batch_token])[-TOKEN_HISTORY:]
-            # committed-sequence mark advances in the SAME atomic swap
-            # that lands the values + applied token (see
-            # _check_stats_fence: hwm ≥ seq ⟺ committed)
-            bump_seq_hwm(doc, batch_token)
-        self._write_stats(doc)
+        return int(row["dn"]), int(row["ddl"]), int(row["dnz"])
 
     def feed(self) -> Feed:
         """Adapter for a CDC engine's ``agg_views`` list."""
@@ -331,67 +188,56 @@ class TextIndex:
         every touched doc.  Stale postings — deleted docs' terms, or
         terms the rewrite dropped — delete by (term, doc); surviving
         and new terms upsert with the batch's tf/dl; one fused
-        touched-bucket pass.  The scalar stats ±delta carries the
-        batch token (fenced; posting rows are idempotent state).
-
-        Single-maintainer window — MECHANICALLY ENFORCED (round-12
-        judge item #1): the stats fence is checked FIRST, so a replay
-        of a batch that tore before its stats commit refuses with
-        :class:`MaintenanceFenceError` when a federated
-        :meth:`merge_from` rotated the fence in between (re-applying
-        would double-count the corpus scalars), while a replay of a
-        COMMITTED batch converges via the applied-token history."""
+        touched-bucket pass.  The postings, the corpus-scalar ±delta and
+        the batch token commit in ONE manifest replace, so a replay is
+        decided once for all of them (see the module docstring): a
+        committed batch is skipped, a committed-then-evicted sequenced
+        one refuses with :class:`MaintenanceFenceError`, and a crashed
+        one — nothing of it visible — applies once, also after a
+        federated :meth:`merge_from` ran in between."""
         if new_rows is None and old_rows is None:
             return
         token = None if batch_token is None else f"{batch_token}:tix"
-        # fence decision BEFORE any work: fully-applied → stats skip
-        # below (postings re-apply idempotently); torn-then-merged →
-        # refuse here; first sighting → record (atomic), so a torn
-        # replay can make this determination
-        self._check_stats_fence(token)
+        # decided BEFORE any work: a committed batch costs no Spark job
+        if skip_replay(self.view.manifest(), token,
+                       f"text index {self.path}"):
+            return
         # bootstrap guard, shared by postings AND stats: old images can
         # arrive on the very first batch (fact view predating the
         # index) — the store tracked NONE of them, so there is nothing
         # stale to delete and nothing to retract (retracting would
         # leave n_docs short of the postings' doc set)
-        existed = self.view.exists()
+        if not self.view.exists():
+            old_rows = None
+            if new_rows is None:
+                return
         ups = None
         cached_ups = None
         if new_rows is not None:
             ups = self._postings(new_rows).select("term", "doc", "tf", "dl")
-        stale = None
         try:
-            if old_rows is not None and existed:
+            delta = ups
+            if old_rows is not None:
                 if ups is not None:
                     # the batch tokenization feeds the stale anti-join AND
                     # the store merge — cache it so the explode+agg forest
-                    # evaluates once.  A lazy persist (vs the former eager
-                    # localCheckpoint) saves one whole Spark job per batch:
-                    # the fused apply_batch's first job (its touched-bucket
-                    # distinct-collect over both sides) fills the cache,
-                    # and ups's lineage never reads the store directories
-                    # the merge later promotes over, so eagerness bought
-                    # nothing.
+                    # evaluates once (the merge's touched-bucket collect
+                    # fills the cache)
                     cached_ups = ups = ups.persist()
                 old_pairs = self._postings(old_rows).select("term", "doc")
                 if ups is not None:
                     old_pairs = old_pairs.join(ups.select("term", "doc"),
                                                on=["term", "doc"],
                                                how="left_anti")
-                # hand the LAZY stale frame to the fused pass: an empty
-                # delete side composes to a no-op with the identical
-                # touched set, so the former eager checkpoint + isEmpty
-                # probe (2 Spark jobs per batch) bought nothing — the
-                # frame's lineage reads only the batch images (and the
-                # cached ups), never the store dirs the merge promotes
-                # over, and apply_batch persists it before consuming it
-                # twice
-                stale = old_pairs
-            self.view.apply_batch(ups, stale)
-            self._apply_stats_delta(
-                new_rows,
-                None if old_rows is None or not existed else old_rows,
-                token)
+                # stale postings ride the same delta with a NULL tf
+                stale = old_pairs.select(
+                    "term", "doc", F.lit(None).cast("long").alias("tf"),
+                    F.lit(None).cast("long").alias("dl"))
+                delta = stale if ups is None else ups.unionByName(stale)
+            self.view.merge_touched(
+                delta, _upsert_or_delete, batch_token=token,
+                mutate=self._add_corpus(
+                    *self._stats_delta(new_rows, old_rows)))
         finally:
             if cached_ups is not None:
                 cached_ups.unpersist()
@@ -408,8 +254,7 @@ class TextIndex:
         per batch (pinned by
         test_stream_maintains_text_index_across_restart).
 
-        Replay: posting upserts are idempotent per (term, doc) and the
-        stats ±delta is fenced by the batch id, so a checkpoint replay
+        Replay: the batch id is the batch token, so a checkpoint replay
         converges — kill/restart equals one-shot ingest.  Returns the
         StreamingQuery."""
         def _batch(df, batch_id: int) -> None:
@@ -460,52 +305,29 @@ class TextIndex:
         partitioned-ownership rule every sharded search system imposes).
         Postings rows are per-(term, doc) facts, so the union is a keyed
         merge into the touched term buckets; the corpus scalars
-        (n_docs, sum_dl, sum_nz) SUM.  Crash ordering matches
-        apply_delta: postings merge first (keyed, replays converge),
-        scalars after under the stats token fence — pass ``batch_token``
-        when the caller may replay.  Key collisions (contract
+        (n_docs, sum_dl, sum_nz) SUM.  Both commit in ONE out-of-band
+        manifest replace (it bumps the postings store's ``epoch``), so
+        pass ``batch_token`` when the caller may replay: a committed
+        merge is then skipped whole.  Key collisions (contract
         violations) resolve deterministically to the higher (tf, dl)
-        row, never positionally.
-
-        Single-maintainer window — MECHANICALLY ENFORCED (round-12
-        judge item #1): this is an out-of-band fence-rotating op on
-        BOTH halves — the postings merge bumps the bucketed store's
-        maintenance epoch (``merge_touched(out_of_band=True)``), and
-        the scalar commit bumps the stats epoch — so a replay of a
-        TORN ingest batch afterward refuses with
-        :class:`MaintenanceFenceError` instead of double-applying the
-        corpus scalars, while a COMMITTED batch's replay converges via
-        the applied-token histories.  Run only between committed
-        batches of any live feed."""
+        row, never positionally.  Run between committed batches of any
+        live feed; a crashed feed batch left nothing visible, so its
+        replay after the merge applies it once."""
         if (other.id_col, other.text_col) != (self.id_col, self.text_col):
             raise ValueError("id_col and text_col must match to merge")
-        from pyspark.sql import Window
-        if other.view.exists():
-            w = Window.partitionBy("term", "doc", BUCKET_COL).orderBy(
-                F.col("tf").desc(), F.col("dl").desc())
-            self.view.merge_touched(
-                other.view.read(),
-                lambda target, d: (
-                    target.unionByName(d)
-                    .withColumn("_rn", F.row_number().over(w))
-                    .where(F.col("_rn") == 1).drop("_rn")),
-                batch_token=batch_token, out_of_band=True)
-        st = self._read_stats()
-        if batch_token is not None and (
-                st["batch_token"] == batch_token
-                or batch_token in self.applied_stats_tokens()):
-            logger.info("text index %s: merge token %r already applied;"
-                        " skipping stats", self.path, batch_token)
+        if not other.view.exists():
             return
-        ost = other._read_stats()
-        # an un-tokenized merge must not clobber the previously
-        # persisted apply_delta fence (_commit_stats preserves it);
-        # the epoch bump is what makes a torn ingest batch's later
-        # replay refuse mechanically instead of contractually
-        self._commit_stats(st["n_docs"] + ost["n_docs"],
-                           st["sum_dl"] + ost["sum_dl"],
-                           st["sum_nz"] + ost["sum_nz"],
-                           batch_token, bump_epoch=True)
+        from pyspark.sql import Window
+        w = Window.partitionBy("term", "doc", BUCKET_COL).orderBy(
+            F.col("tf").desc(), F.col("dl").desc())
+        self.view.merge_touched(
+            other.view.read(),
+            lambda target, d: (
+                target.unionByName(d)
+                .withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") == 1).drop("_rn")),
+            batch_token=batch_token, out_of_band=True,
+            mutate=self._add_corpus(*other._corpus_stats()))
 
     def _corpus_stats(self) -> tuple[int, int, int]:
         st = self._read_stats()    # zeros when no batch ever applied
@@ -519,7 +341,7 @@ class TextIndex:
         with the exact schema/semantics of ``text.bm25_topk`` over the
         index's current corpus state.  Reads ONLY the probed terms'
         buckets: postings, tf, dl, and df all come from the touched
-        read; n_docs/avgdl from the one-row stats rollup.
+        read; n_docs/avgdl from the manifest's corpus scalars.
 
         ``max_df_ratio``: the hot-term guard — query terms whose
         document frequency exceeds ``ratio·n_docs`` are DROPPED from
@@ -617,3 +439,13 @@ class TextIndex:
         bucket-count sawtooth + small-file compaction on the postings
         store."""
         self.view.maintain()
+
+
+def _upsert_or_delete(target: DataFrame, delta: DataFrame) -> DataFrame:
+    """The fused postings merge: delta rows with a tf upsert, rows with
+    a NULL tf (stale postings) delete; the two are key-disjoint."""
+    keys = ["term", "doc", BUCKET_COL]
+    tf = F.col("tf")
+    return compose_merge(target, delta.where(tf.isNotNull()),
+                         delta.where(tf.isNull()).select(*keys), keys,
+                         "upsertInto")

@@ -40,16 +40,17 @@ counting IVM per Gupta & Mumick 1995 via agg_view.py.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ydb_cdc_processor_spark import storage
-from ydb_cdc_processor_spark.operators.agg_view import AggregateView
+from ydb_cdc_processor_spark.operators.agg_view import (
+    AggregateView, _obs_metric)
+from ydb_cdc_processor_spark.operators.bucketed_view import add_counters
 from ydb_cdc_processor_spark.operators.ivm_feed import Feed
+
+_STATS = "topk_stats"   # the counters' entry in the rollup manifest
 
 
 class TopKView:
@@ -92,10 +93,13 @@ class TopKView:
         documented forfeit) — each such dropped contribution increments
         the persistent ``pruned_forfeits`` counter (see :meth:`stats`),
         so silent drift is visible in store stats instead of only in a
-        recompute diff."""
-        self.agg.apply_delta(new_rows, old_rows, batch_token=batch_token)
-        if self.agg.last_negative_drops:
-            self._bump_stats(pruned_forfeits=self.agg.last_negative_drops)
+        recompute diff.  The counter commits in the batch's own
+        manifest replace: a crash loses both or neither, and the
+        replay restores both."""
+        self.agg.apply_delta(
+            new_rows, old_rows, batch_token=batch_token,
+            mutate=lambda doc: add_counters(
+                doc, _STATS, pruned_forfeits=self.agg.last_negative_drops))
 
     def feed(self) -> Feed:
         """Adapter for a CDC engine's ``agg_views`` list — full
@@ -143,33 +147,20 @@ class TopKView:
 
     # -- observability -----------------------------------------------------------
 
-    def _stats_path(self) -> str:
-        return os.path.join(self.path, "_topk_stats.json")
-
     def stats(self) -> dict:
-        """Persistent store statistics: ``pruned_forfeits`` (delete
-        contributions dropped because their pair was already pruned —
-        the bounded mode's silent-drift counter), ``prune_sweeps`` and
-        ``rows_pruned`` (lossy-sweep history; the ``s`` in the
-        s·(prune_floor−1) under-count bound).  Counters are EXACT
-        (round-12 judge item #3): the merge and sweep writes carry a
-        never-promoted sentinel row, so the Spark AQE empty-output
-        edge — a batch retracting everything in its touched buckets —
-        can no longer make the observed metrics row unreadable."""
-        try:
-            doc = json.loads(storage.read_text(self._stats_path()))
-        except (OSError, ValueError):
-            doc = {}
-        return {"pruned_forfeits": int(doc.get("pruned_forfeits", 0)),
-                "prune_sweeps": int(doc.get("prune_sweeps", 0)),
-                "rows_pruned": int(doc.get("rows_pruned", 0))}
-
-    def _bump_stats(self, **inc: int) -> None:
-        doc = self.stats()
-        for k, v in inc.items():
-            doc[k] = doc.get(k, 0) + int(v)
-        storage.makedirs(self.path)
-        storage.replace_text(self._stats_path(), json.dumps(doc))
+        """Persistent store statistics, kept in the rollup store's
+        manifest and committed with the writes they count:
+        ``pruned_forfeits`` (delete contributions dropped because their
+        pair was already pruned — the bounded mode's silent-drift
+        counter), ``prune_sweeps`` and ``rows_pruned`` (lossy-sweep
+        history; the ``s`` in the s·(prune_floor−1) under-count bound).
+        Counters are EXACT: the merge and sweep writes carry a
+        never-promoted sentinel row, so the Spark AQE empty-output edge
+        — a batch retracting everything in its touched buckets — cannot
+        make the observed metrics row unreadable."""
+        doc = self.agg.store().manifest().get(_STATS) or {}
+        return {k: int(doc.get(k, 0))
+                for k in ("pruned_forfeits", "prune_sweeps", "rows_pruned")}
 
     # -- serving -----------------------------------------------------------------
 
@@ -257,7 +248,7 @@ class TopKView:
         bucketed_view.BucketedMaterializedView.rewrite_rows`, which
         keeps the store's applied-token history (a replay of the last
         batch stays fenced out after a prune) and drops fully-pruned
-        buckets in the same commit."""
+        buckets and records the sweep counters in the same commit."""
         if self.prune_floor is None:
             return 0
         store = self.agg.store()
@@ -286,12 +277,17 @@ class TopKView:
                 with_empty_output_sentinel)
             return with_empty_output_sentinel(self.spark, kept)
 
-        if not store.rewrite_rows(_keep):
-            return 0
-        from ydb_cdc_processor_spark.operators.agg_view import _obs_metric
-        pruned = _obs_metric(obs_in, "n") - _obs_metric(obs_out, "n")
-        self._bump_stats(prune_sweeps=1, rows_pruned=max(0, pruned))
-        return max(0, pruned)
+        pruned = 0
+
+        def _count(doc):
+            # the rewrite has run: both observations are readable
+            nonlocal pruned
+            pruned = max(0, _obs_metric(obs_in, "n")
+                         - _obs_metric(obs_out, "n"))
+            add_counters(doc, _STATS, prune_sweeps=1, rows_pruned=pruned)
+
+        store.rewrite_rows(_keep, mutate=_count)
+        return pruned
 
     def maintain(self) -> None:
         """Between-batch housekeeping on the backing rollup store —
@@ -299,3 +295,4 @@ class TopKView:
         rebucket sizing sees the post-prune state."""
         self.prune()
         self.agg.store().maintain()
+

@@ -9,11 +9,13 @@ This class persists both halves (the same continuous-maintenance
 contract the CDC engines apply to keyed tables, and NearDupIndex to LSH
 signatures):
 
-- **Centroids**: a small parquet of ``n_cells`` rows — the coarse
-  quantizer.  Deterministic seeded-sample pick (optionally Lloyd-refined
-  via ``similarity.kmeans_refine``) from the BUILD corpus, then FROZEN —
-  the standard IVF ingest contract (adding vectors never moves
-  centroids; periodic retrain = :meth:`build` again).
+- **Quantizer**: a small parquet of ``n_cells`` centroid rows — the
+  coarse quantizer — plus ``index.json`` (geometry, seed, PQ codebook,
+  the ``vec_id`` type).  Deterministic seeded-sample pick (optionally
+  Lloyd-refined via ``similarity.kmeans_refine``) from the BUILD
+  corpus, then FROZEN — the standard IVF ingest contract (adding
+  vectors never moves centroids; periodic retrain = :meth:`build`
+  again).
 - **Inverted lists**: one row per vector ``(cell, vec_id, _v, _nv)`` in
   a :class:`~ydb_cdc_processor_spark.operators.bucketed_view.
   BucketedMaterializedView` keyed ``(cell, vec_id)`` and CO-LOCATED on
@@ -25,6 +27,12 @@ an idempotent upsert touching only the batch's cells.  :meth:`query`
 reads ONLY the buckets of the probes' ``n_probe`` nearest cells —
 ``|corpus| · n_probe / n_cells`` candidate rows per probe, never a
 corpus scan.  Norms are stored, not recomputed per query.
+
+Layout: the quantizer lives in a generation directory of the list
+store, ``lists/_quantizer/<gen>/{centroids/, index.json}``, named by
+the list store's manifest (``dirs``), so the one manifest replace that
+commits a retrain (``BucketedMaterializedView.replace_with``) switches
+lists and quantizer together; the superseded generation is garbage.
 """
 
 from __future__ import annotations
@@ -41,11 +49,13 @@ from ydb_cdc_processor_spark.functions.partitioning import (
 from ydb_cdc_processor_spark.functions.vector import (
     as_double_array, dot, norm)
 from ydb_cdc_processor_spark.operators.bucketed_view import (
-    BUCKET_COL, BucketedMaterializedView)
+    BUCKET_COL, MANIFEST, BucketedMaterializedView, new_generation)
+
+QUANTIZER = "_quantizer"   # the list store's named quantizer directory
 
 
 class VectorIndex:
-    """IVF index persisted as centroids parquet + bucketed lists.
+    """IVF index persisted as a quantizer generation + bucketed lists.
 
     Two storage modes, chosen at construction and frozen into the
     layout metadata:
@@ -79,7 +89,7 @@ class VectorIndex:
         self.n_codes = n_codes
         self.dim: int | None = None   # set by build() in PQ mode
         # test seam: called by build() after the new index is fully
-        # staged but before the atomic swap (retrain-while-serving test)
+        # staged but before its commit (retrain-while-serving test)
         self._pre_swap_hook = None
         self.view = BucketedMaterializedView(
             spark, os.path.join(path, "lists"),
@@ -88,11 +98,7 @@ class VectorIndex:
         # quantizer metadata is a property of the LAYOUT (the same rule
         # the bucketed view applies to n_buckets): a store built with
         # one (n_cells, seed) reopened with another must serve the
-        # layout's values, not the constructor's.  Recover FIRST — an
-        # index torn mid-build (lists renamed aside to .old) otherwise
-        # finds no metadata and silently adopts the constructor's
-        # values, diverging from the layout the next recover restores.
-        self.view.recover()
+        # layout's values, not the constructor's.
         stored = self._read_index_meta()
         if stored:
             self.n_cells = int(stored.get("n_cells", n_cells))
@@ -110,24 +116,26 @@ class VectorIndex:
                 # hold (advisor finding)
                 self.m_sub = None
 
-    # -- centroids + metadata (INSIDE the lists dir — underscore-prefixed,
-    #    invisible to the parquet scan, and atomic with the lists swap) ------
+    # -- quantizer: centroids + metadata in the manifest-named generation ---
 
-    @property
-    def cent_path(self) -> str:
-        return os.path.join(self.view.path, "_centroids")
+    def _quantizer_dir(self) -> str:
+        """The live quantizer generation (a never-built index names
+        none: reads then fail on the absent path)."""
+        return (self.view.named_dir(QUANTIZER)
+                or os.path.join(self.view.path, QUANTIZER))
 
     def _meta_path(self) -> str:
-        return os.path.join(self.view.path, "_index.json")
+        return os.path.join(self._quantizer_dir(), "index.json")
 
     def _read_index_meta(self) -> dict:
         try:
             return json.loads(storage.read_text(self._meta_path()))
-        except (OSError, ValueError):
+        except FileNotFoundError:
             return {}
 
     def _centroids(self) -> DataFrame:
-        return self.spark.read.parquet(self.cent_path)
+        return self.spark.read.parquet(
+            os.path.join(self._quantizer_dir(), "centroids"))
 
     # -- PQ codebook (LAYOUT metadata, same contract as the centroids) -------
 
@@ -201,24 +209,23 @@ class VectorIndex:
         A RETRAIN is full-replace by contract (stale (cell, vec_id) rows
         from the old layout would double-serve and dodge remove_batch)
         and CRASH-SAFE: everything — lists, centroids, metadata — stages
-        into a temp sibling and swaps in via the view's public
-        ``replace_with`` (``recover`` restores the complete old index if
-        we die between the two renames; centroids live INSIDE the lists
-        directory so the swap is one rename, never a window where new
-        centroids serve old lists).  Serving continues during a retrain:
-        a concurrent :meth:`query` sees the complete old index until the
-        swap and the complete new one after, never a mix (pinned by
-        test_vector_index_query_during_retrain via _pre_swap_hook).
+        as a complete store in a temp sibling (the quantizer as its
+        named ``_quantizer`` generation) and commits via the view's
+        public ``replace_with``: file moves, then ONE manifest replace
+        that switches lists and quantizer together (a crash before it
+        leaves the complete old index serving).  Serving continues
+        during a retrain: a concurrent :meth:`query` sees the complete
+        old index until the commit and the complete new one after,
+        never a mix (pinned by test_vector_index_query_during_retrain
+        via _pre_swap_hook).
 
         PQ mode additionally trains the codebook here (md5-seeded
         ``n_codes``-sample of the build corpus's UNIT vectors — the
         similarity_pq pick) and stores CODES in the lists instead of
         vectors; a retrain re-encodes everything against the fresh
-        codebook inside the same atomic swap, so codes and codebook can
+        codebook inside the same commit, so codes and codebook can
         never mix generations.  ``dim`` is required in PQ mode (and
         must be divisible by ``m_sub``)."""
-        import uuid
-
         if self.pq_enabled:
             from ydb_cdc_processor_spark.operators.similarity_pq import (
                 _check_params)
@@ -246,11 +253,13 @@ class VectorIndex:
         tmp_view = BucketedMaterializedView(
             self.spark, tmp, keys=["cell", "vec_id"],
             bucket_keys=["cell"], n_buckets=self.view.n_buckets)
+        qgen = new_generation()
+        qdir = os.path.join(tmp, QUANTIZER, qgen)
         cent.coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(tmp, "_centroids"))
+            .parquet(os.path.join(qdir, "centroids"))
         rows = self._assign(
             self._prep(corpus, id_col, vec_col),
-            self.spark.read.parquet(os.path.join(tmp, "_centroids")),
+            self.spark.read.parquet(os.path.join(qdir, "centroids")),
             "vec_id", "_v", "_nv", 1)
         meta = {"n_cells": self.n_cells, "seed": self.seed,
                 "m_sub": self.m_sub}
@@ -278,11 +287,12 @@ class VectorIndex:
         vid_schema = T.StructType(
             [T.StructField("vec_id", rows.schema["vec_id"].dataType)])
         meta["vec_id_schema"] = vid_schema.jsonValue()
-        # plain write: staged inside tmp, promoted atomically by the swap
-        storage.write_text(os.path.join(tmp, "_index.json"),
+        # plain write: staged inside tmp, committed by replace_with
+        storage.write_text(os.path.join(qdir, "index.json"),
                            json.dumps(meta))
+        tmp_view.name_dir(QUANTIZER, qgen)
         if self._pre_swap_hook is not None:
-            # test seam: everything is staged, nothing swapped — a
+            # test seam: everything is staged, nothing committed — a
             # concurrent reader must still see the complete OLD index
             self._pre_swap_hook()
         self.view.replace_with(tmp)
@@ -366,34 +376,23 @@ class VectorIndex:
         union later with :meth:`merge_from`).  Copies only layout
         metadata (centroids, codebook/meta, bucket manifest) — never
         list data."""
-        from ydb_cdc_processor_spark.operators.bucketed_view import (
-            MANIFEST, STAGING)
-        self.view.recover()
         src, dst = self.view.path, os.path.join(path, "lists")
-        storage.makedirs(dst)
-        for e in storage.listdir(src):
-            if e.startswith((f"{BUCKET_COL}=", ".")) or e == STAGING:
-                continue   # list data and staged batches stay behind
-            s = os.path.join(src, e)
-            d = os.path.join(dst, e)
-            if storage.is_dir(s):
-                storage.copy_tree(s, d)
-            else:
-                storage.copy_file(s, d)
-        man = os.path.join(dst, MANIFEST)
-        try:
-            doc = json.loads(storage.read_text(man))
-        except FileNotFoundError:
-            doc = None
-        if doc is not None:
-            # keep the layout (n_buckets, bucket_keys, schema); drop the
-            # donor's list pointers and its history — a clone carrying
-            # applied_tokens / seq_hwm would SKIP or REFUSE its own first
-            # batch whenever shard engines reuse the same deterministic
-            # token sequence (stream-0, batch-0:u …)
-            for k in ("gens", "epoch", "applied_tokens", "seq_hwm"):
-                doc.pop(k, None)
-            storage.replace_text(man, json.dumps(doc))
+        doc = self.view.manifest()
+        # keep the layout (n_buckets, bucket_keys, schema, the quantizer
+        # generation); drop the donor's list pointers and its history —
+        # a clone carrying applied_tokens / seq_hwm would SKIP or REFUSE
+        # its own first batch whenever shard engines reuse the same
+        # deterministic token sequence (stream-0, batch-0:u …)
+        for k in ("gens", "epoch", "applied_tokens", "seq_hwm"):
+            doc.pop(k, None)
+        qgen = (doc.get("dirs") or {}).get(QUANTIZER)
+        if qgen is not None:
+            storage.copy_tree(os.path.join(src, QUANTIZER, qgen),
+                              os.path.join(dst, QUANTIZER, qgen))
+        if doc:
+            storage.makedirs(dst)
+            storage.replace_text(os.path.join(dst, MANIFEST),
+                                 json.dumps(doc))
         return VectorIndex(self.spark, path)
 
     def merge_from(self, other: "VectorIndex",
@@ -523,7 +522,7 @@ class VectorIndex:
         pc = self._assign(p, cent, "probe_id", "_p", "_np", n_probe) \
             .select("probe_id", "_p", "_np", "cell")
 
-        # refresh the layout first: a retrain swap may have changed it
+        # refresh the layout first: a retrain may have changed it
         self.view.recover()
         # one collect: (cell, store bucket) pairs straight off pc — no
         # driver-side re-materialization, and id_col-type-generic

@@ -70,8 +70,8 @@ ORACLES["q_storage_seam"] = ORACLES["q_distinct_view"]
 def q_text_index_hwm(spark, sf_dir):
     """q_text_index's maintained-BM25 lifecycle with the round-14
     committed-sequence fence EXERCISED mid-stream: after the second
-    sequenced batch commits, the first batch's fence records are
-    evicted from the bounded histories (simulating 16+ later commits)
+    sequenced batch commits, the first batch's record is evicted from
+    the bounded applied-token history (simulating 16+ later commits)
     and the batch is REPLAYED — the per-feed high-water mark must
     refuse it mechanically (a later commit on the serialized feed
     proves it already landed; re-applying would double-count the
@@ -105,16 +105,13 @@ def q_text_index_hwm(spark, sf_dir):
         ix.apply_delta(b, old, batch_token=f"tixh:{i}")
         mv.apply(b, action="upsertInto")
         if i == 1:
-            # evict batch 0's records from BOTH bounded stats histories
-            # (the 16-later-commits scenario, compressed) ...
-            doc = ix._read_stats_doc()
-            (doc.get("token_epochs") or {}).pop("tixh:0:tix", None)
-            doc["applied_tokens"] = [
-                t for t in (doc.get("applied_tokens") or [])
-                if t != "tixh:0:tix"]
-            if doc.get("batch_token") == "tixh:0:tix":
-                doc.pop("batch_token")
-            ix._write_stats(doc)
+            # evict batch 0's record from the postings manifest's
+            # bounded history (the 16-later-commits scenario,
+            # compressed) ...
+            ix.view._mutate_manifest(lambda doc: doc.__setitem__(
+                "applied_tokens",
+                [t for t in (doc.get("applied_tokens") or [])
+                 if t != "tixh:0:tix"]))
             # ... and replay it: the committed-sequence mark must refuse
             try:
                 ix.apply_delta(batches[0], olds[0],
@@ -155,12 +152,9 @@ def q_vector_index_hwm(spark, sf_dir):
     idx.add_batch(b1, batch_token="vixh:1")
 
     def _evict(doc):
-        (doc.get("token_epochs") or {}).pop("vixh:0", None)
         doc["applied_tokens"] = [t for t in
                                  (doc.get("applied_tokens") or [])
                                  if t != "vixh:0"]
-        if doc.get("last_token") == "vixh:0":
-            doc.pop("last_token")
     idx.view._mutate_manifest(_evict)
     try:
         idx.add_batch(b0, batch_token="vixh:0")

@@ -68,7 +68,7 @@ class ChangefeedEmitter:
         try:
             return json.loads(storage.read_text(self._state_path()))
         except (OSError, ValueError):
-            return {"bases": {}, "last_token": None}
+            return {"bases": {}, "emitted_token": None}
 
     def _write_state(self, st: dict) -> None:
         storage.makedirs(self.out_dir)
@@ -120,7 +120,8 @@ class ChangefeedEmitter:
                     old_rows: DataFrame | None,
                     batch_token: str | None = None) -> None:
         st = self._read_state()
-        if batch_token is not None and st.get("last_token") == batch_token:
+        if (batch_token is not None
+                and st.get("emitted_token") == batch_token):
             logger.info("changefeed emitter %s: token %r already emitted",
                         self.out_dir, batch_token)
             return
@@ -156,4 +157,4 @@ class ChangefeedEmitter:
          .write.mode("append").text(self.out_dir))
         for p, n in counts.items():
             bases[str(p)] = bases.get(str(p), 0) + n
-        self._write_state({"bases": bases, "last_token": batch_token})
+        self._write_state({"bases": bases, "emitted_token": batch_token})

@@ -98,16 +98,16 @@ class StorageBackend(abc.ABC):
 
     @abc.abstractmethod
     def write_text(self, path: str, text: str) -> None:
-        """Plain (non-atomic) write — ONLY for files inside a staging
-        directory that a later :meth:`rename` promotes as a unit (a
-        retrain's staged ``_index.json``)."""
+        """Plain (non-atomic) write — ONLY for files of a staged
+        generation that nothing names until a later manifest
+        :meth:`replace_text` does (a retrain's staged ``index.json``)."""
 
     @abc.abstractmethod
     def replace_text(self, path: str, text: str) -> None:
         """ATOMICALLY commit ``text`` at ``path`` — readers see the old
-        contents or the new, never a prefix.  The manifest / scalar-state
-        commit primitive (every ``_buckets.json`` / ``_stats.json``
-        write goes through here)."""
+        contents or the new, never a prefix.  The manifest commit
+        primitive: every ``_buckets.json`` write — and with it every
+        derived store's scalars and counters — goes through here."""
 
     # -- namespace ---------------------------------------------------------
 

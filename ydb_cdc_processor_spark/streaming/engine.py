@@ -291,16 +291,6 @@ class CdcStreamEngine:
                     row["maintenanceEpoch"] = ep()
                 except OSError:
                     pass
-            # index stores with a SECOND fence domain (TextIndex's
-            # corpus scalars, round-13) surface it alongside — the
-            # operator of a sharded deployment needs both epochs to
-            # reason about a refused replay; still a JSON read, no job
-            sep = getattr(owner, "stats_epoch", None)
-            if callable(sep):
-                try:
-                    row["statsEpoch"] = sep()
-                except (OSError, ValueError):
-                    pass
             if callable(getattr(owner, "stats", None)):
                 try:
                     row["stats"] = owner.stats()
