@@ -15,7 +15,8 @@ operation must equal the clean run:
   ``reshard_granule``;
 - ``VectorIndex.build`` (a retrain through ``replace_with``: lists and
   quantizer switch in one replace) and ``TextIndex.apply_delta``
-  (postings and corpus scalars in one replace).
+  (postings and corpus scalars in one replace);
+- the flat view's ``apply`` (one generation, one manifest replace).
 
 The TopK counters commit inside the rollup's own replace; a kill at
 each ``storage.replace_text`` of a counted batch or sweep, then the
@@ -226,11 +227,11 @@ def test_range_crash_recovery_reshard_granule(spark, tmp_path):
 
 
 def test_flat_view_crash_recovery_sweep(spark, tmp_path):
-    """The same exhaustive tear sweep for the FLAT view's overwrite swap
-    (merge.ParquetMaterializedView): kill at every rename boundary,
-    replay the same batch, expect the clean result every time.  (The
-    single-window test in test_merge.py hand-picks one boundary; this
-    covers them all.)"""
+    """The same exhaustive tear sweep for the FLAT view
+    (merge.ParquetMaterializedView): Spark writes the batch's
+    generation, and the ONE manifest replace is the only rename/replace
+    the commit makes.  Kill there, check a fresh handle reads the
+    pristine rows, replay the same batch, expect the clean result."""
     from ydb_cdc_processor_spark.operators.merge import (
         ParquetMaterializedView)
 
@@ -241,6 +242,7 @@ def test_flat_view_crash_recovery_sweep(spark, tmp_path):
     pristine = str(tmp_path / "pristine")
     ParquetMaterializedView(spark, pristine, ["id"]).overwrite(
         spark.createDataFrame(base, "id long, v string"))
+    before = _rows(ParquetMaterializedView(spark, pristine, ["id"]).read())
 
     clean = str(tmp_path / "clean")
     shutil.copytree(pristine, clean)
@@ -249,7 +251,7 @@ def test_flat_view_crash_recovery_sweep(spark, tmp_path):
         v.apply(delta_df)
     n_renames = rk.calls
     expected = _rows(v.read())
-    assert n_renames >= 2
+    assert n_renames == 1
 
     for kill_at in range(n_renames):
         path = str(tmp_path / f"f{kill_at}")
@@ -258,6 +260,7 @@ def test_flat_view_crash_recovery_sweep(spark, tmp_path):
         with _RenameKiller(kill_at), pytest.raises(Killed):
             v.apply(delta_df)
         v2 = ParquetMaterializedView(spark, path, ["id"])
+        assert _rows(v2.read()) == before, f"torn read at {kill_at}"
         v2.apply(delta_df)
         assert _rows(v2.read()) == expected, f"diverged at tear {kill_at}"
 

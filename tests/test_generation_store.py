@@ -2,9 +2,10 @@
 
 Every write path stages its buckets under a fresh generation and
 publishes with ONE manifest replace; superseded generations are garbage.
-The first half runs the store under ObjectStoreSimStorage, which RAISES
-on any directory rename — passing proves no path depends on the
-primitive object stores lack.  The second half leaves superseded
+The first half runs the store (and the flat view, which commits through
+the same manifest) under ObjectStoreSimStorage, which RAISES on any
+directory rename — passing proves no path depends on the primitive
+object stores lack.  The second half leaves superseded
 generations and a stray staged batch on disk (deletes disabled, a
 crash at the commit) and checks that every reader of the store's
 directories returns exactly the live rows."""
@@ -238,6 +239,38 @@ def test_every_batch_path_runs_without_directory_rename(
     assert tx.recompute_check(spark.createDataFrame(
         [(1, "red fox"), (2, "owl"), (3, "green owl")],
         "doc_id long, text string"))
+
+
+def test_flat_view_lifecycle_under_object_store_semantics(
+        spark, tmp_path, objstore):
+    """The flat view commits through the same manifest: apply,
+    apply_batch, delete-from-empty, a refused strict insert, and a
+    crash at the commit all run without a directory rename, and the
+    crash stays invisible until vacuum() removes its stray generation."""
+    from ydb_cdc_processor_spark.operators.merge import (
+        ParquetMaterializedView, StrictInsertError)
+    schema = "k int, grp string, v int"
+    mv = ParquetMaterializedView(spark, str(tmp_path / "mv"), ["k"],
+                                 schema=spark.createDataFrame([], schema)
+                                 .schema)
+    mv.apply(spark.createDataFrame([(1,)], "k int"), action="deleteFrom")
+    assert mv.exists() and mv.read().count() == 0   # committed empty
+    mv.apply(_rows(spark, [(i, "a", i) for i in range(6)]))
+    mv.apply_batch(_rows(spark, [(2, "b", 20), (7, "b", 70)]),
+                   spark.createDataFrame([(3,)], "k int"))
+    want = [(0, 0), (1, 1), (2, 20), (4, 4), (5, 5), (7, 70)]
+    assert _kv(mv.read()) == want
+    with pytest.raises(StrictInsertError):
+        mv.apply(_rows(spark, [(1, "x", -1), (8, "x", -1)]),
+                 action="insertInto")
+    with _crash_at_commit(objstore):
+        mv.apply(_rows(spark, [(0, "x", -1)]))
+    fresh = ParquetMaterializedView(spark, mv.path, ["k"])
+    assert _kv(fresh.read()) == want
+    rows_dir = os.path.join(mv.path, mv.ROWS)
+    assert len(os.listdir(rows_dir)) == 2             # live + stray
+    assert fresh.vacuum() == 1
+    assert len(os.listdir(rows_dir)) == 1 and _kv(fresh.read()) == want
 
 
 # -- every reader plans from the manifest --------------------------------------

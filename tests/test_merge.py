@@ -122,17 +122,26 @@ def test_broadcast_gated_on_small_delta(spark, base):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_view_swap_crash_recovery(spark, base, tmp_path):
-    """A crash between the swap's two renames must not lose the view: the
-    deterministic .old sibling is restored on the next read."""
-    import os
+def test_view_swap_crash_recovery(spark, base, tmp_path, monkeypatch):
+    """A crash at the manifest replace — the batch's generation is
+    written but nothing names it — must not lose or tear the view: a
+    fresh handle reads the pre-batch rows, and the replay converges."""
+    from ydb_cdc_processor_spark import storage
     path = str(tmp_path / "mv")
     mv = merge.ParquetMaterializedView(spark, path, ["k"], schema=base.schema)
     mv.apply(base, "upsertInto")
-    # simulate the crash window: view renamed away, new view not yet in place
-    os.rename(path, mv._old_dir())
-    assert not os.path.exists(path)
-    assert _as_dict(mv.read()) == {1: "a", 2: "b", 3: "c"}  # recovered
+    delta = spark.createDataFrame([Row(k=2, v="B"), Row(k=4, v="d")])
+
+    def crash(p, text):
+        raise RuntimeError("crash at the commit")
+    with monkeypatch.context() as m:
+        m.setattr(storage, "replace_text", crash)
+        with pytest.raises(RuntimeError, match="crash at the commit"):
+            mv.apply(delta, "upsertInto")
+    fresh = merge.ParquetMaterializedView(spark, path, ["k"])
+    assert _as_dict(fresh.read()) == {1: "a", 2: "b", 3: "c"}
+    fresh.apply(delta, "upsertInto")                 # the replay
+    assert _as_dict(fresh.read()) == {1: "a", 2: "B", 3: "c", 4: "d"}
 
 
 def test_parquet_view_apply_idempotent(spark, base, tmp_path):

@@ -368,9 +368,9 @@ def test_strict_insert_collision_leaves_view_and_stores_untouched(
 @pytest.mark.parametrize("n_buckets", [8, None], ids=["bucketed", "flat"])
 def test_target_promotes_after_every_store_returned(
         spark, sf_dir, tmp_path, monkeypatch, n_buckets):
-    """No target bucket rename (bucketed) or directory swap (flat)
-    happens before every derived store has returned — while the
-    target's merge did start before the slowest store returned."""
+    """No target file move (bucketed) or manifest commit (both
+    layouts) happens before every derived store has returned — while
+    the target's merge did start before the slowest store returned."""
     import itertools
     import os
 
@@ -405,15 +405,18 @@ def test_target_promotes_after_every_store_returned(
         log("target started")
         return real_apply(*a, **kw)
     mv.apply_batch = apply_batch
-    real_rename = storage.rename
     view = os.path.abspath(mv.path)
 
-    def rename(src, dst):
-        if os.path.abspath(dst) == view or \
-                os.path.abspath(dst).startswith(view + os.sep):
-            log("target promoted")
-        return real_rename(src, dst)
-    monkeypatch.setattr(storage, "rename", rename)
+    def promoting(real):
+        def write(src_or_path, dst_or_text):
+            dst = dst_or_text if real is storage.rename else src_or_path
+            if os.path.abspath(dst).startswith(view + os.sep):
+                log("target promoted")
+            return real(src_or_path, dst_or_text)
+        return write
+    real_rename, real_replace = storage.rename, storage.replace_text
+    monkeypatch.setattr(storage, "rename", promoting(real_rename))
+    monkeypatch.setattr(storage, "replace_text", promoting(real_replace))
 
     eng.apply_raw_batch(_raw_lines(spark, BATCH), batch_token="t:1")
     order = [what for _, what in sorted(events)]
@@ -424,6 +427,7 @@ def test_target_promotes_after_every_store_returned(
     assert first_promote > last_store
     assert order.index("target started") < last_store
     monkeypatch.setattr(storage, "rename", real_rename)
+    monkeypatch.setattr(storage, "replace_text", real_replace)
     assert _converged(eng, stores)
 
 

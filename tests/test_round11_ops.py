@@ -333,6 +333,54 @@ def test_maintain_every_safe_on_flat_target(spark, events_pipeline,
     assert eng.read_view().count() == n
 
 
+@pytest.mark.parametrize("layout", ["flat", "bucketed"])
+def test_maintain_stores_vacuums_torn_target_commit(
+        spark, events_pipeline, tmp_path, monkeypatch, layout):
+    """A target batch torn at its manifest replace leaves an unnamed
+    generation on disk; the engine's between-batch sweep must remove
+    it (the target's own maintain() vacuums) and leave the view as it
+    was."""
+    from ydb_cdc_processor_spark import storage
+    from ydb_cdc_processor_spark.operators.bucketed_view import (
+        BucketedMaterializedView)
+    from ydb_cdc_processor_spark.operators.merge import (
+        ParquetMaterializedView)
+
+    path = str(tmp_path / "view")
+    schema = "event_id long, v string"
+    base = spark.createDataFrame([(i, "a") for i in range(6)], schema)
+    mv = (ParquetMaterializedView(spark, path, ["event_id"],
+                                  schema=base.schema)
+          if layout == "flat" else
+          BucketedMaterializedView(spark, path, ["event_id"], n_buckets=2))
+    eng = CdcBatchEngine(spark, events_pipeline, path, target_view=mv)
+    mv.apply(base)
+    before = sorted(tuple(r) for r in mv.read().collect())
+
+    def crash(p, text):
+        raise RuntimeError("crash at the commit")
+    with monkeypatch.context() as m:
+        m.setattr(storage, "replace_text", crash)
+        with pytest.raises(RuntimeError, match="crash at the commit"):
+            mv.apply(spark.createDataFrame([(1, "b"), (9, "b")], schema))
+
+    def generations():
+        doc = mv.manifest()
+        named = set((doc.get("dirs") or {}).values()) \
+            | set((doc.get("gens") or {}).values())
+        on_disk = {g for e in os.listdir(path)
+                   if os.path.isdir(os.path.join(path, e))
+                   for g in os.listdir(os.path.join(path, e))}
+        return on_disk, named
+
+    on_disk, named = generations()
+    assert on_disk - named, "the torn batch left no stray generation"
+    eng.maintain_stores()
+    on_disk, named = generations()
+    assert on_disk == named
+    assert sorted(tuple(r) for r in mv.read().collect()) == before
+
+
 def test_read_touched_absent_buckets_on_legacy_schemaless_store(
         spark, tmp_path):
     """A pre-manifest-schema store + every touched bucket absent must

@@ -100,6 +100,25 @@ def test_committed_then_evicted_replay_refuses_on_bucketed(spark, tmp_path):
     assert got == {"x": 2, "y": 2}
 
 
+def test_committed_then_evicted_replay_refuses_on_flat(spark, tmp_path):
+    """The same replay rule on a FLAT store: the flat rollup records its
+    tokens in its own manifest, so a committed sequenced batch evicted
+    from the history refuses to replay instead of double-counting."""
+    from ydb_cdc_processor_spark.operators.agg_view import AggregateView
+    av = AggregateView(spark, str(tmp_path / "agg"), ["g"], {"s": "x"},
+                       count_col="n", backend="flat")
+    batch = spark.createDataFrame([("a", 1.0), ("b", 2.0)],
+                                  "g string, x double")
+    av.apply_delta(batch, None, batch_token="s:0")
+    av.apply_delta(batch.where("g = 'a'"), None, batch_token="s:1")
+    _age_out(av.store(), "s:0")
+    with pytest.raises(MaintenanceFenceError, match="high-water"):
+        av.apply_delta(batch, None, batch_token="s:0")
+    # the refusal left the rollup intact
+    got = {r.g: (r.n, r.s) for r in av.read().collect()}
+    assert got == {"a": (2, 2.0), "b": (1, 2.0)}
+
+
 def test_torn_replay_still_converges_on_bucketed(spark, tmp_path):
     """Control: a genuinely torn batch (never committed — the mark
     never advanced to its sequence) replays and converges exactly as

@@ -319,8 +319,8 @@ def test_scd2_view_replay_is_idempotent(spark, tmp_path):
     assert _rows_of(view.read()) == before
     view.apply_batch(b0, batch_token=None)      # unfenced replay: dedups
     assert _rows_of(view.read()) == before
-    # the fence survives an un-tokenized apply (meta carried forward)
-    assert view._store.read_meta().get("batch_token") == "b0"
+    # the fence survives an un-tokenized apply (the manifest keeps it)
+    assert view._store.manifest()["applied_tokens"] == ["b0"]
 
 
 def test_scd2_view_late_change_splices(spark, tmp_path):

@@ -14,7 +14,6 @@ from __future__ import annotations
 import contextlib
 import functools
 import logging
-import os
 import threading
 import time
 import uuid
@@ -217,7 +216,7 @@ class CdcBatchEngine:
         AggregateView` rollups maintained INCREMENTALLY alongside the row
         view — per batch, each gets +new/−old contribution deltas, with
         the old images key-pruned from the row view before the merge
-        swaps it (no rollup recompute, ever).  The contract is
+        commits (no rollup recompute, ever).  The contract is
         duck-typed ``apply_delta(new_rows, old_rows, batch_token)``:
         :class:`~ydb_cdc_processor_spark.functions.checksum.ChecksumView`
         rides the same feed to keep an O(batch)-maintained table digest.
@@ -616,7 +615,7 @@ class CdcBatchEngine:
         — a local relation or an eager checkpoint — so no store reads a
         target file lazily.  ``write_target(pre_commit)`` (the target
         merge) runs in the same :meth:`_fan_out_views` and its
-        ``pre_commit`` holds every target bucket or flat swap back until
+        ``pre_commit`` holds the target's manifest commit back until
         all stores have returned: a store that fails leaves the target
         at its pre-batch state, and the replay reads the same old images
         again.
@@ -631,7 +630,7 @@ class CdcBatchEngine:
         (upsert-only batch), "d" (delete-only batch) or "f" (fused
         batch: both sides in one ±delta step) — the `_apply_routed`
         routing guarantees at most one ``apply_delta`` per batch per
-        rollup, so each rollup swap persists exactly one token.
+        rollup, so each rollup commit records exactly one token.
 
         ``details``: the batch's ``BatchStats.details``; the old-image
         read and the fan-out record their wall times and the read path
@@ -717,24 +716,14 @@ class CdcBatchEngine:
         judge item #4): a flat target with attached derived views pays
         an O(|view|) read per micro-batch to feed them old images —
         fine for compact targets, a per-batch full-table scan at scale.
-        The check is file-metadata-only (storage walk + size, no
-        Spark job) and runs until it first fires, then never again."""
-        from ydb_cdc_processor_spark import storage
+        The check is file-metadata-only (``disk_usage``, no Spark job)
+        and runs until it first fires, then never again."""
+        from ydb_cdc_processor_spark.functions.disk import disk_usage
         if self._flat_old_image_warned:
             return
         path = getattr(tgt, "path", None)
-        if path is None or not storage.is_dir(path):
-            return
-        total = 0
-        limit = self.flat_old_image_warn_bytes
-        for root, dirs, files in storage.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            for f in files:
-                if not f.startswith((".", "_")):
-                    total += storage.file_size(os.path.join(root, f))
-            if total > limit:
-                break
-        if total > limit:
+        total = disk_usage(path)[1]
+        if total > self.flat_old_image_warn_bytes:
             self._flat_old_image_warned = True
             logger.warning(
                 "CdcBatchEngine[%s]: FLAT target %s holds %.1f MB with "
@@ -758,11 +747,11 @@ class CdcBatchEngine:
 
         ``write_target(pre_commit)``: the target merge, submitted FIRST
         on a worker of its own outside the ``max_parallel_views`` bound,
-        so its temp write overlaps the stores.  Its ``pre_commit`` waits
+        so its write overlaps the stores.  Its ``pre_commit`` waits
         for every store task and re-raises the first store error; the
-        view runs it between its temp write and its promotion, so no
-        target bucket or flat swap becomes visible before every store
-        has returned, and a store failure discards the staged output
+        view runs it between its write and its manifest commit, so no
+        target row becomes visible before every store has returned,
+        and a store failure discards the written generation
         (the reference commits only after the write succeeds,
         YqlWriter.java:181-206).
 
@@ -846,27 +835,22 @@ class CdcBatchEngine:
 
     def maintain_stores(self) -> None:
         """One housekeeping sweep over the target AND every attached
-        derived store — the rebucket/compact sawtooth (SCALING.md:
-        n_buckets ∝ |view|; small-file compaction for crash-replay and
-        per-batch file litter).  Size checks are file metadata only, so
-        a sweep where nothing crossed a threshold costs no Spark job.
-        Must run BETWEEN batches (single-maintainer contract — the same
-        rule rebucket/compact themselves carry).
+        derived store: each store's own ``maintain()`` — crash-leftover
+        GC (``vacuum``) everywhere, plus the rebucket/compact sawtooth
+        on bucketed layouts (SCALING.md: n_buckets ∝ |view|; small-file
+        compaction for crash-replay and per-batch file litter).  Size
+        checks are file metadata only, so a sweep where nothing crossed
+        a threshold costs no Spark job.  Must run BETWEEN batches
+        (single-maintainer contract — the same rule rebucket/compact
+        themselves carry).
 
-        The target sweep only applies to targets that HAVE the sawtooth
-        (bucketed/range layouts): a flat ParquetMaterializedView target
-        (the n_buckets=None default) or a duck-typed injected
-        target_view has neither method, and raising AttributeError HERE
-        — after the batch's data already landed — would make the
-        caller's retry replay an applied batch (review finding)."""
-        mv = self._target(None)
-        if (hasattr(mv, "maybe_rebucket") and hasattr(mv, "compact")
-                and mv.exists()):
-            if not mv.maybe_rebucket(
-                    target_bucket_bytes=self.target_bucket_bytes):
-                # a rebucket already rewrote every bucket to one file;
-                # compaction only matters when it didn't run
-                mv.compact()
+        An injected target_view without ``maintain`` is skipped:
+        raising AttributeError HERE — after the batch's data already
+        landed — would make the caller's retry replay an applied batch
+        (review finding)."""
+        m = getattr(self._target(None), "maintain", None)
+        if callable(m):
+            m(target_bucket_bytes=self.target_bucket_bytes)
         self.maintain_derived_stores()
 
     def maintain_derived_stores(self) -> None:

@@ -1,20 +1,18 @@
 """One directory-size walk for every consumer.
 
-The JoinView broadcast cap, the /stores endpoint, and the growth tools
-all need "how big is this store on disk" — a recursive walk that every
-copy was re-deciding edge cases for independently (review finding).
-Shared rules, decided once:
+The /stores endpoint needs "how big is this store on disk, strays
+included" — a recursive walk whose edge cases are decided once:
 
 - dot-prefixed entries are SKIPPED: staging siblings (``.name.tmp-*``,
-  ``.name.old``, ``.name.snapshots``) and hidden files are transient or
-  non-data, and counting a mid-rebuild staged duplicate would
-  double-report size (and could trip the JoinView broadcast cap
-  spuriously);
-- files racing away mid-walk (a concurrent swap) are tolerated — a
-  size probe must never crash the thing it observes;
-- ``suffix`` filters to data files (".parquet") where metadata/token
-  files shouldn't count (the JoinView cap); None counts everything
-  (capacity reporting).
+  ``.name.rebuild-*``, ``.name.snapshots``) and hidden files are
+  transient or non-data, and counting a mid-rebuild staged duplicate
+  would double-report size;
+- files racing away mid-walk (a concurrent commit's GC) are
+  tolerated — a size probe must never crash the thing it observes.
+
+A store's LIVE size (the JoinView broadcast cap) comes from the files
+its manifest names instead: ``total_bytes()`` on the flat and bucketed
+views.
 """
 
 from __future__ import annotations
@@ -24,7 +22,7 @@ import os
 from ydb_cdc_processor_spark import storage
 
 
-def disk_usage(path: str | None, suffix: str | None = None) -> tuple[int, int]:
+def disk_usage(path: str | None) -> tuple[int, int]:
     """``(n_files, total_bytes)`` under ``path`` (0, 0 if None/absent)."""
     n = b = 0
     if not path:
@@ -34,11 +32,9 @@ def disk_usage(path: str | None, suffix: str | None = None) -> tuple[int, int]:
         for f in files:
             if f.startswith("."):
                 continue
-            if suffix is not None and not f.endswith(suffix):
-                continue
             try:
                 b += storage.file_size(os.path.join(root, f))
                 n += 1
             except OSError:
-                pass   # file raced away mid-walk (concurrent swap)
+                pass   # file raced away mid-walk (concurrent GC)
     return n, b

@@ -96,8 +96,8 @@ class AggregateView:
 
     ``backend`` picks the store:
 
-    - ``"flat"`` (default): the atomic-swap parquet view the row views
-      use — per-batch cost O(|rollup|) full rewrite.  Right for compact
+    - ``"flat"`` (default): the flat parquet view the row views use —
+      per-batch cost O(|rollup|) full rewrite.  Right for compact
       rollups (≲10⁶ groups), where the rewrite is one small file set.
     - ``"bucketed"``: :class:`~ydb_cdc_processor_spark.operators.
       bucketed_view.BucketedMaterializedView` hash-partitioned on the
@@ -216,12 +216,12 @@ class AggregateView:
         streaming engine's checkpoint replays a micro-batch after a crash,
         YqlWriter.java:181-206 delivery model).  The row merge is
         idempotent per key, but ±contribution deltas are NOT — re-applying
-        one double-counts.  Flat backend: the token is persisted atomically
-        WITH the rollup swap (overwrite ``meta``) and a matching delta is
-        skipped whole.  Bucketed backend: the token commits in the same
-        manifest replace as the touched buckets, so a replay after a
-        crash re-applies the whole (invisible) batch once — still
-        exactly-once, without a view-wide rewrite.
+        one double-counts.  Both backends record the token in the same
+        manifest replace that publishes the batch (the flat rollup's
+        whole generation, or the bucketed rollup's touched buckets) and
+        decide a replay with ``bucketed_view.skip_replay``: a committed
+        token is skipped, an evicted sequenced one refused, and a torn
+        batch — never visible — re-applied whole, once.
 
         ``mutate(doc)`` (bucketed backend only): state a wrapping store
         keeps in the rollup manifest (``TopKView``'s counters), applied
@@ -248,19 +248,11 @@ class AggregateView:
 
     def _apply_delta_flat(self, delta: DataFrame,
                           batch_token: str | None) -> None:
+        from ydb_cdc_processor_spark.operators.bucketed_view import (
+            skip_replay)
         store = self._store(delta.schema)
-        prev_meta = dict(store.read_meta() or {}) if store.exists() else {}
-        history = list(prev_meta.get("token_history") or [])
-        if batch_token is not None and (
-                prev_meta.get("batch_token") == batch_token
-                or batch_token in history):
-            # the swap is view-wide ATOMIC, so token-in-history ⟺ fully
-            # applied — a replay arriving AFTER a later batch or a
-            # federated merge_rollup rotated ``batch_token`` away still
-            # short-circuits (the bucketed backend's applied_tokens
-            # analogue; without it the replay would double-apply)
-            logger.info("agg view %s: batch token %r already applied; "
-                        "skipping replay", self.path, batch_token)
+        if skip_replay(store.manifest(), batch_token,
+                       f"agg view {self.path}"):
             return
         base = store.read() if store.exists() else None
         merged = self._reagg(delta.unionByName(base) if base is not None
@@ -281,16 +273,7 @@ class AggregateView:
             F.coalesce(F.sum((F.col(self.count_col) > 0).cast("long")),
                        F.lit(0)).alias("n_groups"))
         merged = merged.where(F.col(self.count_col) > 0)
-        # an un-tokenized apply must not clobber a previously persisted
-        # replay fence: overwrite(meta=None) would drop the meta file and
-        # a later replay of the last tokenized batch would double-count
-        if batch_token is not None:
-            hist = [t for t in history if t != batch_token]
-            meta = {"batch_token": batch_token,
-                    "token_history": (hist + [batch_token])[-16:]}
-        else:
-            meta = prev_meta or None
-        store.overwrite(merged, meta=meta)
+        store.overwrite(merged, batch_token=batch_token)
         self.last_negative_drops = _obs_metric(obs, "neg")
         n_groups = _obs_metric(obs, "n_groups")
         if n_groups > self.max_groups_warn and not self._size_warned:
@@ -351,13 +334,10 @@ class AggregateView:
             self.last_negative_drops = _drops()
             mutate(doc)
 
-        applied = store.merge_touched(
+        store.merge_touched(
             delta, _merge, batch_token=batch_token, out_of_band=out_of_band,
             mutate=None if mutate is None else _on_commit)
         self.last_negative_drops = _drops()
-        if not applied and batch_token is not None:
-            logger.info("agg view %s: batch token %r already applied; "
-                        "skipping replay", self.path, batch_token)
 
     def store(self, schema=None):
         """The backing store, public — derived indexes that prune reads
@@ -382,13 +362,11 @@ class AggregateView:
         plus their ``_nn_*`` non-null counters.  Cost: one
         touched-bucket merge, O(|rollup|) — raw shard data never moves.
 
-        Run between committed batches of any live feed.  On the
-        bucketed backend the merge is one out-of-band commit (it bumps
-        the store's ``epoch`` counter): a replay of a COMMITTED feed
-        batch is skipped by the applied-token history, and a torn one
-        was never visible, so it applies once.  (Flat backend: the swap
-        is view-wide atomic, so the bounded token history alone closes
-        the window.)"""
+        Run between committed batches of any live feed.  The merge is
+        one commit (on the bucketed backend an out-of-band one that
+        bumps the store's ``epoch`` counter): a replay of a COMMITTED
+        feed batch is skipped by the applied-token history, and a torn
+        one was never visible, so it applies once."""
         need = [*self.group_cols, self.count_col]
         for out in self.sum_cols:
             need += [out, self._nn(out)]

@@ -41,10 +41,14 @@ write landed" rule (PAPER.md §0 step 5) holds per store.  Superseded
 generations are deleted after that write, as garbage collection;
 :meth:`vacuum` removes what a crash left behind.  No path renames a
 directory, so the protocol runs unchanged on object stores
-(``storage.ObjectStoreSimStorage`` enforces this in the tests).
+(``storage.ObjectStoreSimStorage`` enforces this in the tests).  The
+manifest read, commit, token record, GC and vacuum are module-level
+functions (:func:`mutate_manifest` and friends): the flat
+``ParquetMaterializedView`` commits its one named directory ``rows``
+through the same code.
 
-Replay rule (:func:`skip_replay`, used by :meth:`merge_touched`, the
-non-idempotent path):
+Replay rule (:func:`skip_replay`, used by :meth:`merge_touched` and
+every other non-idempotent path, flat stores included):
 
 - a token already in ``applied_tokens`` is skipped;
 - a sequenced token at or below its feed's ``seq_hwm`` raises
@@ -210,6 +214,99 @@ def _is_data_file(name: str) -> bool:
     return not name.startswith(("_", "."))
 
 
+# -- the manifest: every store's read, commit and GC ---------------------------
+
+def read_manifest(path: str) -> dict:
+    """The committed manifest of the store at ``path`` ({} before the
+    first commit).  ONLY an absent manifest means "nothing committed
+    yet": any other IO error propagates rather than read as an empty
+    store (whose next commit would drop every bucket and scalar)."""
+    try:
+        return json.loads(storage.read_text(os.path.join(path, MANIFEST)))
+    except FileNotFoundError:
+        return {}
+
+
+def _doc_gens(doc: dict) -> dict[int, str]:
+    """bucket id → its current generation, from a manifest ``doc``."""
+    return {int(b): g for b, g in (doc.get("gens") or {}).items()}
+
+
+def record_token(doc: dict, token: str) -> None:
+    """Record a committed batch ``token`` in ``doc``: the bounded
+    ``applied_tokens`` history and its feed's ``seq_hwm``."""
+    hist = [t for t in (doc.get("applied_tokens") or []) if t != token]
+    doc["applied_tokens"] = (hist + [token])[-TOKEN_HISTORY:]
+    bump_seq_hwm(doc, token)
+
+
+def mutate_manifest(path: str, mutate) -> None:
+    """Read-modify-replace the manifest at ``path`` atomically — THE
+    commit point, and the only write of committed state — then
+    garbage-collect every generation (bucket or named directory) the
+    old manifest named and the new one no longer does."""
+    old = read_manifest(path)
+    doc = json.loads(json.dumps(old))   # deep: mutate may nest
+    mutate(doc)
+    storage.makedirs(path)
+    storage.replace_text(os.path.join(path, MANIFEST), json.dumps(doc))
+    # everything below is garbage collection: correctness no longer
+    # depends on any of it landing
+    gens = _doc_gens(doc)
+    for b, g in _doc_gens(old).items():
+        bdir = os.path.join(path, f"{BUCKET_COL}={b}")
+        if b not in gens:
+            storage.remove_tree(bdir)
+        elif gens[b] != g:
+            storage.remove_tree(os.path.join(bdir, g))
+    dirs = doc.get("dirs") or {}
+    for name, g in (old.get("dirs") or {}).items():
+        if dirs.get(name) != g:
+            storage.remove_tree(os.path.join(path, name, g))
+
+
+def named_files(path: str, doc: dict) -> list[str]:
+    """Every data file of every generation (bucket or named directory)
+    the manifest ``doc`` names — no Spark job."""
+    dirs = [os.path.join(path, f"{BUCKET_COL}={b}", g)
+            for b, g in _doc_gens(doc).items()]
+    dirs += [os.path.join(path, n, g)
+             for n, g in (doc.get("dirs") or {}).items()]
+    return [os.path.join(root, n) for d in dirs
+            for root, _dirs, files in storage.walk(d)
+            for n in files if _is_data_file(n)]
+
+
+def vacuum(path: str, named: tuple[str, ...] = ()) -> int:
+    """Remove every generation the manifest at ``path`` does not name
+    (a crash before a commit, a post-commit delete that failed) plus
+    the staging area — pure GC, run between batches.  ``named``: named
+    directories the store owns even before a commit names one.
+    Returns the number of generation directories removed."""
+    storage.remove_tree(os.path.join(path, STAGING))
+    if not storage.is_dir(path):
+        return 0
+    doc = read_manifest(path)
+    gens = _doc_gens(doc)
+    dirs = doc.get("dirs") or {}
+    removed = 0
+    for e in storage.listdir(path):
+        if e.startswith(f"{BUCKET_COL}="):
+            live = gens.get(int(e.split("=", 1)[1]))
+        elif e in dirs or e in named:
+            live = dirs.get(e)
+        else:
+            continue
+        d = os.path.join(path, e)
+        for g in storage.listdir(d):
+            if g != live:
+                storage.remove_tree(os.path.join(d, g))
+                removed += 1
+        if live is None:
+            storage.remove_tree(d)
+    return removed
+
+
 def _move_tree(src: str, dst: str) -> None:
     """Move every data file under ``src`` to the same relative path
     under ``dst``, one file rename at a time — never a directory
@@ -307,13 +404,7 @@ class BucketedMaterializedView:
         return os.path.join(self.path, MANIFEST)
 
     def _read_manifest_dict(self) -> dict:
-        # ONLY an absent manifest means "nothing committed yet": any
-        # other IO error propagates rather than read as an empty store
-        # (whose next commit would drop every bucket and scalar)
-        try:
-            return json.loads(storage.read_text(self._manifest_path()))
-        except FileNotFoundError:
-            return {}
+        return read_manifest(self.path)
 
     def manifest(self) -> dict:
         """The committed manifest ({} before the first commit) — where
@@ -376,8 +467,7 @@ class BucketedMaterializedView:
 
     def _gens(self, doc: dict | None = None) -> dict[int, str]:
         """bucket id → its current generation, from the manifest."""
-        doc = self._read_manifest_dict() if doc is None else doc
-        return {int(b): g for b, g in (doc.get("gens") or {}).items()}
+        return _doc_gens(self._read_manifest_dict() if doc is None else doc)
 
     def _bucket_dir(self, b: int) -> str:
         return os.path.join(self.path, f"{BUCKET_COL}={b}")
@@ -427,30 +517,13 @@ class BucketedMaterializedView:
             lambda doc: doc.setdefault("dirs", {}).__setitem__(name, gen))
 
     def _mutate_manifest(self, mutate) -> None:
-        """Read-modify-replace the manifest atomically — THE commit
-        point, and the only write of committed state (layout identity
-        fields preserved via setdefault — never clobbered) — then
-        garbage-collect every generation the old manifest named and the
-        new one no longer does."""
-        old = self._read_manifest_dict()
-        doc = json.loads(json.dumps(old))   # deep: mutate may nest
-        doc.setdefault("n_buckets", self.n_buckets)
-        doc.setdefault("bucket_keys", self.bucket_keys)
-        mutate(doc)
-        storage.makedirs(self.path)
-        storage.replace_text(self._manifest_path(), json.dumps(doc))
-        # everything below is garbage collection: correctness no longer
-        # depends on any of it landing
-        gens = self._gens(doc)
-        for b, g in self._gens(old).items():
-            if b not in gens:
-                storage.remove_tree(self._bucket_dir(b))
-            elif gens[b] != g:
-                storage.remove_tree(self._gen_dir(b, g))
-        dirs = doc.get("dirs") or {}
-        for name, g in (old.get("dirs") or {}).items():
-            if dirs.get(name) != g:
-                storage.remove_tree(os.path.join(self.path, name, g))
+        """:func:`mutate_manifest` on this store, with the layout
+        identity fields preserved via setdefault — never clobbered."""
+        def with_layout(doc: dict) -> None:
+            doc.setdefault("n_buckets", self.n_buckets)
+            doc.setdefault("bucket_keys", self.bucket_keys)
+            mutate(doc)
+        mutate_manifest(self.path, with_layout)
 
     def _commit(self, rows: DataFrame | None, buckets: list[int] | None,
                 *, keep_absent: bool = False, pre_commit=None,
@@ -518,10 +591,7 @@ class BucketedMaterializedView:
             if rows is not None:
                 self._widen_schema(doc, rows.schema)
             if token is not None:
-                hist = [t for t in (doc.get("applied_tokens") or [])
-                        if t != token]
-                doc["applied_tokens"] = (hist + [token])[-TOKEN_HISTORY:]
-                bump_seq_hwm(doc, token)
+                record_token(doc, token)
             if out_of_band:
                 doc["epoch"] = int(doc.get("epoch", 0)) + 1
             if mutate is not None:
@@ -532,34 +602,8 @@ class BucketedMaterializedView:
             storage.remove_tree(staging)
 
     def vacuum(self) -> int:
-        """Remove every generation the manifest does not name — what a
-        crash before a commit left staged, or an old generation whose
-        post-commit delete failed — plus the staging area.  Pure GC:
-        no reader can reach these files.  Run between batches (the
-        staging area of an in-flight batch is removed too).  Returns
-        the number of generation directories removed."""
-        storage.remove_tree(os.path.join(self.path, STAGING))
-        if not storage.is_dir(self.path):
-            return 0
-        doc = self._read_manifest_dict()
-        gens = self._gens(doc)
-        dirs = doc.get("dirs") or {}
-        removed = 0
-        for e in storage.listdir(self.path):
-            if e.startswith(f"{BUCKET_COL}="):
-                live = gens.get(int(e.split("=", 1)[1]))
-            elif e in dirs:
-                live = dirs[e]
-            else:
-                continue
-            d = os.path.join(self.path, e)
-            for g in storage.listdir(d):
-                if g != live:
-                    storage.remove_tree(os.path.join(d, g))
-                    removed += 1
-            if live is None:
-                storage.remove_tree(d)
-        return removed
+        """:func:`vacuum` on this store."""
+        return vacuum(self.path)
 
     # -- whole-store replace (VectorIndex retrains) ---------------------------
 
@@ -590,11 +634,7 @@ class BucketedMaterializedView:
         ``build`` does) rather than retry with it.  Concurrent
         writers are out of contract (single maintainer per store, the
         reference's own one-writer-loop model)."""
-        try:
-            staged = json.loads(storage.read_text(
-                os.path.join(staged_path, MANIFEST)))
-        except FileNotFoundError:
-            staged = {}
+        staged = read_manifest(staged_path)
         rels = [os.path.join(f"{BUCKET_COL}={b}", g)
                 for b, g in (staged.get("gens") or {}).items()]
         rels += [os.path.join(n, g)

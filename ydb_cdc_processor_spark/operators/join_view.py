@@ -140,12 +140,12 @@ class JoinView:
             F.col(self.dim_pk).alias(self.fk_col), *self.dim_cols)
 
     def _dim_disk_bytes(self) -> int:
-        """On-disk parquet bytes of the dim mirror — a free (no Spark
-        job) proxy for its broadcast cost.  Parquet compresses, so the
-        in-memory relation is larger; the default 64 MB cap leaves
-        headroom against executor broadcast memory either way."""
-        from ydb_cdc_processor_spark.functions.disk import disk_usage
-        return disk_usage(self.dim_mirror.path, suffix=".parquet")[1]
+        """On-disk bytes of the dim mirror's committed generation — a
+        free (no Spark job) proxy for its broadcast cost.  Parquet
+        compresses, so the in-memory relation is larger; the default
+        64 MB cap leaves headroom against executor broadcast memory
+        either way."""
+        return self.dim_mirror.total_bytes()
 
     def _enrich(self, fact_rows: DataFrame) -> DataFrame:
         """fact rows LEFT JOIN the current dim mirror.  Enrichment-sized

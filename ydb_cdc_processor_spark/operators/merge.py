@@ -9,10 +9,12 @@ MERGE, so we provide:
    join-rewrite on (target, delta).  These are the testable, oracle-checkable
    relational definitions, and they are exactly what Delta/Iceberg MERGE
    compiles to underneath.
-2. A path-backed :class:`ParquetMaterializedView` — read-modify-write with
-   atomic directory swap.  The interface is Delta-swappable: on a real
-   deployment you'd point the same pipeline at a Delta/Iceberg table and get
-   file-level MERGE instead of full rewrite — that adapter exists as
+2. A path-backed :class:`ParquetMaterializedView` — read-modify-write of
+   the whole view into a fresh generation, committed by one manifest
+   replace (the bucketed store's protocol).  The interface is
+   Delta-swappable: on a real deployment you'd point the same pipeline at
+   a Delta/Iceberg table and get file-level MERGE instead of full
+   rewrite — that adapter exists as
    :class:`~ydb_cdc_processor_spark.operators.delta_view.
    DeltaMaterializedView` (import-guarded; the container ships no
    delta-spark).
@@ -112,8 +114,8 @@ def merge_insert(target: DataFrame, delta: DataFrame, keys: list[str],
     transform per batch), colliding delta rows are marked via a left
     join and the collision count rides the merge's own materialization
     as an observe metric.  The CALLER owns the commit protocol: after
-    materializing (e.g. writing the view to its temp directory) call
-    :func:`raise_on_collisions` BEFORE the commit/swap, and discard the
+    materializing (e.g. writing the view's next generation) call
+    :func:`raise_on_collisions` BEFORE the commit, and discard the
     materialization on failure — the view classes do exactly this, so a
     colliding batch still leaves the view untouched."""
     delta = delta.select(*target.columns)
@@ -147,7 +149,7 @@ def raise_on_collisions(collision_obs) -> None:
 
 def chain_hooks(*hooks):
     """One callable that runs every non-None hook in order, or None when
-    there is none — how a view combines its own pre-promotion check
+    there is none — how a view combines its own pre-commit check
     (strict-insert collisions) with a caller's ``pre_commit``."""
     hooks = [h for h in hooks if h is not None]
     if not hooks:
@@ -224,15 +226,23 @@ def compose_merge(target: DataFrame, ups: DataFrame | None,
 
 
 class ParquetMaterializedView:
-    """A keyed materialized view persisted as a parquet directory.
+    """A keyed materialized view persisted as one parquet directory.
 
     The reference's target is an ordinary YDB row table maintained by
     UPSERT/DELETE (README.md:37-56).  Here: read → merge (join-rewrite
-    above) → write to a fresh directory → atomic swap.  Re-applying the
-    same delta is idempotent for upsert/delete/update — that, plus
-    checkpointed offsets, reproduces the reference's effectively-exactly-
-    once delivery (YqlWriter.java:181-206).
+    above) → Spark writes the whole view to an unnamed generation
+    ``<path>/rows/<gen>/`` → ONE manifest replace (the bucketed store's
+    ``mutate_manifest``) names it, records the batch token in
+    ``applied_tokens``/``seq_hwm`` and garbage-collects the previous
+    generation.  A crash before the replace leaves the old view serving
+    plus a stray generation for :meth:`vacuum`.  Re-applying a delta is
+    idempotent for upsert/delete/update — that, plus checkpointed
+    offsets, reproduces the reference's effectively-exactly-once
+    delivery (YqlWriter.java:181-206); non-idempotent owners (the flat
+    rollup, the SCD2 history) decide replays with ``skip_replay``.
     """
+
+    ROWS = "rows"
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str],
                  schema=None):
@@ -241,94 +251,78 @@ class ParquetMaterializedView:
         self.keys = keys
         self.schema = schema
 
-    def _old_dir(self) -> str:
-        parent = os.path.dirname(os.path.abspath(self.path)) or "."
-        return os.path.join(parent, f".{os.path.basename(self.path)}.old")
+    def manifest(self) -> dict:
+        """The committed manifest ({} before the first commit)."""
+        from ydb_cdc_processor_spark.operators import bucketed_view as bv
+        return bv.read_manifest(self.path)
 
-    def _recover(self) -> None:
-        """Repair a crash between the swap's two renames: if the view
-        directory is gone but the deterministic ``.old`` sibling survives,
-        the old view is still complete — restore it.  (Without this, a
-        streaming-checkpoint replay would silently rebuild the view from
-        just the replayed delta — the accumulated state would be lost.)"""
-        old = self._old_dir()
-        if storage.is_dir(old) and not storage.exists(self.path):
-            storage.rename(old, self.path)
+    def _mutate_manifest(self, mutate) -> None:
+        from ydb_cdc_processor_spark.operators import bucketed_view as bv
+        bv.mutate_manifest(self.path, mutate)
+
+    def _rows_dir(self) -> str | None:
+        gen = (self.manifest().get("dirs") or {}).get(self.ROWS)
+        return None if gen is None else os.path.join(self.path, self.ROWS,
+                                                     gen)
 
     def exists(self) -> bool:
-        self._recover()
-        return storage.exists(os.path.join(self.path, "_SUCCESS"))
+        """True once any write committed (an empty view included)."""
+        return self._rows_dir() is not None
 
     def read(self) -> DataFrame:
-        if not self.exists():
-            if self.schema is None:
-                raise FileNotFoundError(self.path)
-            return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.parquet(self.path)
+        rows = self._rows_dir()
+        if rows is not None:
+            return self.spark.read.parquet(rows)
+        if self.schema is None:
+            raise FileNotFoundError(self.path)
+        return self.spark.createDataFrame([], self.schema)
 
-    META_FILE = "_view_meta.json"
+    def total_bytes(self) -> int:
+        """On-disk size of the committed generation, from file metadata."""
+        from ydb_cdc_processor_spark.operators import bucketed_view as bv
+        return sum(storage.file_size(f)
+                   for f in bv.named_files(self.path, self.manifest()))
 
-    def overwrite(self, df: DataFrame, meta: dict | None = None,
-                  pre_swap=None) -> None:
-        """Write ``df`` then atomically swap it into place.
-
-        The swap (write-to-temp + rename) keeps readers consistent: they see
-        either the old or the new complete view, never a partial write.  The
-        displaced view goes to a DETERMINISTIC ``.old`` sibling so
-        :meth:`_recover` can restore it if we crash mid-swap.
-
-        ``meta``: an optional small JSON dict written INTO the temp
-        directory before the swap (underscore-prefixed, so Spark's parquet
-        reader ignores it) — it becomes visible atomically WITH the data.
-        Used by the incremental aggregate view to persist the last applied
-        batch token for exactly-once replay (see agg_view.py).
-
-        ``pre_swap``: optional callable run AFTER the temp write but
-        BEFORE the swap — the hook for checks that ride the write's own
-        materialization (the single-pass strict-insert collision
-        Observation).  If it raises, the temp directory is discarded and
-        the live view stays untouched."""
-        tmp = storage.tmp_sibling(self.path, "tmp")
-        df.write.mode("overwrite").parquet(tmp)
-        if pre_swap is not None:
-            try:
-                pre_swap()
-            except BaseException:
-                storage.remove_tree(tmp)
-                raise
-        if meta is not None:
-            import json
-            # plain write: the meta file is INSIDE the staged dir and
-            # becomes visible atomically WITH the data at the swap
-            storage.write_text(os.path.join(tmp, self.META_FILE),
-                               json.dumps(meta))
-        old = self._old_dir()
-        storage.remove_tree(old)  # stale leftover post-crash
-        displaced = False
-        if storage.exists(self.path):
-            storage.rename(self.path, old)
-            displaced = True
-        storage.rename(tmp, self.path)
-        if displaced:
-            storage.remove_tree(old)
-
-    def read_meta(self) -> dict:
-        """The JSON dict last written via ``overwrite(meta=...)`` (empty if
-        none).  Atomic with the data it was swapped in with."""
-        if not self.exists():
-            return {}
-        p = os.path.join(self.path, self.META_FILE)
-        import json
+    def overwrite(self, df: DataFrame, batch_token: str | None = None,
+                  pre_commit=None) -> None:
+        """Write ``df`` as the view's next generation and commit it,
+        recording ``batch_token`` in the same manifest replace (an
+        un-tokenized write keeps the recorded tokens).  ``pre_commit``
+        runs after the write and before the commit (the strict-insert
+        collision check rides here); if it raises, the generation is
+        discarded and the live view stays untouched."""
+        from ydb_cdc_processor_spark.operators import bucketed_view as bv
+        gen = bv.new_generation()
+        out = os.path.join(self.path, self.ROWS, gen)
         try:
-            return json.loads(storage.read_text(p))
-        except FileNotFoundError:
-            return {}
+            df.write.mode("overwrite").parquet(out)
+            if pre_commit is not None:
+                pre_commit()
+        except BaseException:
+            storage.remove_tree(out)
+            raise
+
+        def commit(doc: dict) -> None:
+            doc.setdefault("dirs", {})[self.ROWS] = gen
+            if batch_token is not None:
+                bv.record_token(doc, batch_token)
+        self._mutate_manifest(commit)
+
+    def vacuum(self) -> int:
+        """Remove the generations a crash left unnamed; returns how many."""
+        from ydb_cdc_processor_spark.operators import bucketed_view as bv
+        return bv.vacuum(self.path, named=(self.ROWS,))
+
+    def maintain(self, target_bucket_bytes: int | None = None) -> None:
+        """Between-batch housekeeping: :meth:`vacuum` (no buckets to
+        grow or compact, so ``target_bucket_bytes`` does not apply)."""
+        self.vacuum()
 
     def _insert_obs(self, action: str, ups) -> "Observation | None":
         """Single-pass strict insert: the collision count rides the view
         write as an Observation (one job per batch instead of a separate
-        count() pass — see merge_insert); checked pre-swap so a colliding
-        batch still leaves the view untouched."""
+        count() pass — see merge_insert); checked before the commit so a
+        colliding batch still leaves the view untouched."""
         if action != "insertInto" or ups is None:
             return None
         from pyspark.sql import Observation
@@ -343,10 +337,10 @@ class ParquetMaterializedView:
               small_delta: bool | None = None,
               pre_commit=None) -> None:
         """Merge ``delta`` into the view.  ``pre_commit``: optional
-        callable run after the temp write and before the swap (chained
-        after the strict-insert check into :meth:`overwrite`'s
-        ``pre_swap``); if it raises, the temp output is discarded and the
-        live view stays untouched."""
+        callable run after the write and before the commit (chained
+        after the strict-insert check into :meth:`overwrite`); if it
+        raises, the written generation is discarded and the live view
+        stays untouched."""
         target = self.read()
         if action != "deleteFrom":   # delete side is keys-only
             target, delta = widen_to_union(target, delta)
@@ -360,12 +354,11 @@ class ParquetMaterializedView:
         else:
             merged = MERGE_FNS[action](target, delta, self.keys, order_col,
                                        small_delta)
-        # No pre-materialization needed: ``overwrite`` writes to a TEMP
-        # sibling directory while ``merged`` still reads the old files, and
-        # only then swaps — one materialization total.  (The bucketed view
-        # can't do this: dynamic partition overwrite writes into the same
-        # directory tree it reads, so it localCheckpoints first.)
-        self.overwrite(merged, pre_swap=chain_hooks(
+        # No pre-materialization needed: ``overwrite`` writes a FRESH
+        # generation while ``merged`` still reads the committed one, and
+        # the old generation is deleted only after the commit — one
+        # materialization total.
+        self.overwrite(merged, pre_commit=chain_hooks(
             self._collision_check(obs), pre_commit))
 
     def apply_batch(self, ups: DataFrame | None, dels: DataFrame | None,
@@ -383,5 +376,5 @@ class ParquetMaterializedView:
             target, ups = widen_to_union(target, ups)
         merged = compose_merge(target, ups, dels, self.keys, action,
                                order_col, small_delta, collision_obs=obs)
-        self.overwrite(merged, pre_swap=chain_hooks(
+        self.overwrite(merged, pre_commit=chain_hooks(
             self._collision_check(obs), pre_commit))

@@ -110,9 +110,9 @@ class Scd2View:
       version set — no per-key monotonicity contract needed.
     - **Scale shape**: per-batch compute is O(|batch| + raw rows of
       touched keys); the flat parquet store rewrites O(|view|) files per
-      batch — same caveat and same answer as the aggregate view: at
-      large history sizes back it with the bucketed store
-      (``view_cls=``, `merge.py` interface); compute is unchanged.
+      batch — the aggregate view's caveat.  A bucketed history would
+      need a touched-key ``merge_touched`` path (the rebuild reads
+      whole keys), which this class does not have.
 
     Why not "close current row + append": that's O(1) per key but
     silently corrupts on replay and on late data — both routine in CDC.
@@ -122,17 +122,15 @@ class Scd2View:
     SEQ_COL = "_seq"
 
     def __init__(self, spark, path: str, key_cols: list[str], ts_col: str,
-                 attr_cols: list[str], tiebreak_col: str,
-                 view_cls=None):
+                 attr_cols: list[str], tiebreak_col: str):
         from ydb_cdc_processor_spark.operators.merge import (
             ParquetMaterializedView)
         self.key_cols = list(key_cols)
         self.ts_col = ts_col
         self.attr_cols = list(attr_cols)
         self.tiebreak_col = tiebreak_col
-        cls = view_cls or ParquetMaterializedView
-        self._store = cls(spark, path,
-                          keys=self.key_cols + [ts_col, self.SEQ_COL])
+        self._store = ParquetMaterializedView(
+            spark, path, keys=self.key_cols + [ts_col, self.SEQ_COL])
 
     def _raw_of(self, hist: DataFrame) -> DataFrame:
         """Reconstruct raw change rows from the stored version log."""
@@ -165,10 +163,12 @@ class Scd2View:
     def apply_batch(self, changes: DataFrame,
                     batch_token: str | None = None) -> None:
         """Fold one micro-batch of change rows into the history."""
+        from ydb_cdc_processor_spark.operators.bucketed_view import (
+            skip_replay)
         store = self._store
-        if (batch_token is not None and store.exists()
-                and store.read_meta().get("batch_token") == batch_token):
-            return  # replay fence: already applied (atomic with the swap)
+        if skip_replay(store.manifest(), batch_token,
+                       f"scd2 view {store.path}"):
+            return  # committed in the same manifest replace as its rows
         ch = changes.select(*self.key_cols, self.ts_col,
                             self.tiebreak_col, *self.attr_cols)
         if store.exists():
@@ -183,11 +183,7 @@ class Scd2View:
             self.key_cols + [self.ts_col, self.tiebreak_col])
         rebuilt = self._rebuild(combined)
         out = rebuilt if keep is None else keep.unionByName(rebuilt)
-        if batch_token is not None:
-            meta = {"batch_token": batch_token}
-        else:  # carry the fence forward — never silently drop it
-            meta = (store.read_meta() or None) if store.exists() else None
-        store.overwrite(out, meta=meta)
+        store.overwrite(out, batch_token=batch_token)
 
     def read(self) -> DataFrame:
         """The current history (public schema — change rows only)."""

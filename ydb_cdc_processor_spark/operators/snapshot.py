@@ -4,29 +4,30 @@ zero data cost.
 The reference's target is a mutable row table: once a batch lands, the
 pre-batch state is gone (``YqlWriter.java:118-147`` upserts in place).
 Warehouse users expect better — "what did the view hold before this
-morning's backfill?" — and the flat view's immutable-parquet + atomic
-swap design makes snapshots nearly free: every ``overwrite`` writes a
-FRESH directory of files that are never mutated afterwards, so a
-snapshot is one ``os.link`` per file (inode refs, no data copy), taken
-atomically via the same temp+rename discipline as the swap itself.  A
-later swap deletes the live directory's entries, but the snapshot's
-hardlinks keep the inodes alive — a version reads identically forever,
-or until retention prunes it.
+morning's backfill?" — and every store's commit protocol makes
+snapshots nearly free: a store's state is its manifest plus the
+immutable generation files it names (operators/bucketed_view.py), so a
+snapshot is a copy of the manifest and one ``link_or_copy`` per named
+file (inode refs, no data copy on POSIX), built in a temp directory
+and renamed in.  A later commit garbage-collects the superseded
+generations, but the snapshot's hardlinks keep the inodes alive — a
+version reads identically forever, or until retention prunes it.  A
+version is read through a view of the same kind opened on it, flat and
+bucketed alike.
 
 Cost model at scale: O(#files) metadata ops per snapshot, zero bytes
 copied (the 100 TB analogue is a manifest pointing at immutable
 object-store keys — Delta/Iceberg's snapshot design; hardlinks are the
 local-filesystem spelling of the same idea).  Disk retention: a flat
 view rewrites every file per batch, so budget ``keep_last × |view|``
-bytes — the feature fits compact serving views, not the fact store
-(which is the bucketed view's territory; its touched-bucket rewrites
-would share MOST files across versions, the natural extension).
+bytes; a bucketed view's untouched buckets share their files across
+versions, so its snapshots grow with churn, not with view size.
 
-Replay interaction: versions are stamped with the view's current meta
-(including any batch token the owner wrote), so a checkpoint replay
-that re-applies a batch and re-snapshots produces a DUPLICATE version
-of identical content — harmless for reads, and ``snapshot(label=...)``
-with a stable label collapses it (same label → same version slot).
+Replay interaction: a checkpoint replay that re-applies a batch and
+re-snapshots produces a DUPLICATE version of identical content —
+harmless for reads, and ``snapshot(label=...)`` with a stable label
+collapses it (same label → same version slot).  Each version's copy of
+the manifest carries the store's applied tokens as of that version.
 """
 
 from __future__ import annotations
@@ -39,16 +40,17 @@ from pyspark.sql import DataFrame
 
 from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.bucketed_view import (
-    MANIFEST, BucketedMaterializedView)
+    MANIFEST, BucketedMaterializedView, named_files, read_manifest)
 from ydb_cdc_processor_spark.operators.merge import ParquetMaterializedView
 
 _SNAP_META = "_snap.json"
 
 
 class SnapshotView:
-    """Hardlink-based version history for a :class:`ParquetMaterializedView`."""
+    """Hardlink-based version history for a flat or bucketed view."""
 
-    def __init__(self, view: ParquetMaterializedView, keep_last: int = 5):
+    def __init__(self, view: ParquetMaterializedView | BucketedMaterializedView,
+                 keep_last: int = 5):
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         self.view = view
@@ -65,7 +67,7 @@ class SnapshotView:
         path).  Returns the version number.  Atomic AGAINST CRASHES:
         links build in a temp sibling and rename in; a crash
         mid-snapshot leaves only an ignorable temp directory.  NOT safe
-        against a CONCURRENT writer: a swap racing the link walk could
+        against a CONCURRENT writer: a commit racing the link walk could
         freeze a cross-bucket torn version (or ENOENT mid-link) — call
         snapshot() from the same maintenance loop that calls apply(),
         between batches, exactly like maintain(); the engines'
@@ -89,31 +91,23 @@ class SnapshotView:
                           default=0)
         tmp = os.path.join(self.snap_dir,
                            f".v{version}.tmp-{uuid.uuid4().hex[:8]}")
-        # a BUCKETED view links its manifest and the files of the
-        # generations it names (never a superseded or staged one); buckets
-        # the next batches never touch keep pointing at the SAME inodes
-        # across versions — snapshot storage grows with churn, not with
-        # view size (the manifest-sharing property Delta/Iceberg get from
-        # immutable object keys).  A flat view links its whole directory.
-        # link_or_copy is the seam primitive: hardlink on POSIX, byte
-        # copy on backends without links (HDFS/object stores)
-        if isinstance(self.view, BucketedMaterializedView):
-            files = [os.path.join(self.view.path, MANIFEST)] + [
-                f for fs in self.view.bucket_files().values() for f in fs]
-        else:
-            files = [os.path.join(root, name) for root, _dirs, names
-                     in storage.walk(self.view.path) for name in names]
+        # the manifest and the files of the generations it names (never
+        # a superseded or uncommitted one); link_or_copy is the seam
+        # primitive: hardlink on POSIX, byte copy on backends without
+        # links (HDFS/object stores)
+        doc = read_manifest(self.view.path)
+        files = named_files(self.view.path, doc)
+        storage.makedirs(tmp)
         for f in files:
             dst = os.path.join(tmp, os.path.relpath(f, self.view.path))
             storage.makedirs(os.path.dirname(dst))
             storage.link_or_copy(f, dst)
+        storage.write_text(os.path.join(tmp, MANIFEST), json.dumps(doc))
         n_files = len(files)
-        view_meta = (self.view.read_meta()
-                     if hasattr(self.view, "read_meta") else {})
         storage.write_text(
             os.path.join(tmp, _SNAP_META),
             json.dumps({"version": version, "label": label,
-                        "n_files": n_files, "view_meta": view_meta}))
+                        "n_files": n_files}))
         storage.rename(tmp, os.path.join(self.snap_dir, f"v{version}"))
         self._prune()
         return version
@@ -139,17 +133,16 @@ class SnapshotView:
         return sorted(out, key=lambda v: v["version"])
 
     def read_as_of(self, version: int) -> DataFrame:
-        """The view exactly as it stood when ``version`` was taken.
-        A bucketed snapshot reads through its own copy of the manifest
-        (only the generations it names); the internal bucket column is
-        dropped, matching the live view's public ``read()``."""
+        """The view exactly as it stood when ``version`` was taken,
+        read through a view of the same kind opened on the version's
+        own copy of the manifest (only the generations it names)."""
         path = os.path.join(self.snap_dir, f"v{version}")
         if not storage.is_dir(path):
             have = [v["version"] for v in self.versions()]
             raise FileNotFoundError(
                 f"no snapshot v{version} at {self.snap_dir} "
                 f"(retained: {have} — keep_last={self.keep_last})")
-        if isinstance(self.view, BucketedMaterializedView):
-            return BucketedMaterializedView(self.view.spark, path,
-                                            self.view.keys).read()
-        return self.view.spark.read.parquet(path)
+        opener = (BucketedMaterializedView
+                  if isinstance(self.view, BucketedMaterializedView)
+                  else ParquetMaterializedView)
+        return opener(self.view.spark, path, self.view.keys).read()

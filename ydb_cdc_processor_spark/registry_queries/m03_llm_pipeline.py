@@ -265,8 +265,8 @@ def q_agg_view_bucketed(spark, sf_dir):
     """Same IVM scenario on the BUCKETED store (agg_view.py
     backend="bucketed" → bucketed_view.merge_touched): maintenance cost
     is O(delta + touched buckets) instead of an O(|rollup|) rewrite per
-    batch, with the store manifest's batch-token fence instead of the
-    flat swap's meta file.  Identical oracle — storage must never change results."""
+    batch, under the same manifest batch-token fence as the flat store.
+    Identical oracle — storage must never change results."""
     return _agg_view_scenario(spark, sf_dir, backend="bucketed")
 
 

@@ -106,7 +106,7 @@ class CdcStreamEngine:
         continuous view maintenance (YqlWriter.java:163-215); here each
         micro-batch feeds the rollups their ±contribution deltas before
         the row merge.  The streaming batch id is the rollups' replay
-        fence (persisted with each rollup swap), so checkpoint replay
+        fence (committed with each rollup batch), so checkpoint replay
         after a crash, and R1 retries, stay exactly-once.
 
         ``rebucket_every`` (bucketed targets only): every N successful
