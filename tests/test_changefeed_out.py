@@ -156,6 +156,56 @@ def test_same_key_changes_stay_in_one_partition(spark, sf_dir, tmp_path):
     assert bad == 0
 
 
+_FLAT = "event_id long, ts timestamp, user_id long, event_type string, " \
+        "value double"
+
+
+def _feed_rows(spark, ids):
+    return spark.createDataFrame([(i, None, i, "t", 1.0) for i in ids],
+                                 _FLAT)
+
+
+def test_emitter_replay_of_earlier_token_is_skipped(spark, tmp_path):
+    """The emitter follows every store's replay rule: a token anywhere
+    in the applied history is skipped — emitting t:0, t:1 and then
+    replaying t:0 must not append t:0's envelopes again."""
+    feed = str(tmp_path / "feed")
+    em = ChangefeedEmitter(spark, feed, keys=["event_id"], n_partitions=2)
+    em.apply_delta(_feed_rows(spark, range(4)), None, batch_token="t:0")
+    em.apply_delta(_feed_rows(spark, range(4, 7)), None, batch_token="t:1")
+    assert spark.read.json(feed).count() == 7
+    em.apply_delta(_feed_rows(spark, range(4)), None, batch_token="t:0")
+    assert spark.read.json(feed).count() == 7
+
+
+def test_emitter_state_read_error_raises(spark, tmp_path, monkeypatch):
+    """Only an ABSENT manifest means "no offsets yet": a failing state
+    read must raise before anything is appended, never restart the
+    emitted offsets at 0."""
+    from ydb_cdc_processor_spark import storage
+    from ydb_cdc_processor_spark.operators.bucketed_view import MANIFEST
+    feed = str(tmp_path / "feed")
+    em = ChangefeedEmitter(spark, feed, keys=["event_id"], n_partitions=2)
+    em.apply_delta(_feed_rows(spark, range(4)), None, batch_token="t:0")
+    manifest = os.path.join(feed, MANIFEST)
+    with open(manifest) as fh:
+        committed = fh.read()
+    real = storage.read_text
+
+    def denied(path):
+        if path == manifest:
+            raise PermissionError(path)
+        return real(path)
+    monkeypatch.setattr(storage, "read_text", denied)
+    with pytest.raises(PermissionError):
+        em.apply_delta(_feed_rows(spark, range(4, 7)), None,
+                       batch_token="t:1")
+    monkeypatch.setattr(storage, "read_text", real)
+    with open(manifest) as fh:
+        assert fh.read() == committed
+    assert spark.read.json(feed).count() == 4
+
+
 def test_streaming_chain_with_restart(spark, sf_dir, tmp_path):
     """The FULL streaming chain: stream engine A maintains view A and
     emits the feed; stream engine B consumes the feed as its own

@@ -1,73 +1,47 @@
-"""Delta adapter (operators/delta_view.py): the SQL-shaped pieces are
-pure functions tested without Delta; the behavioral contract runs
-against every available store implementation (parquet always, Delta
-only where delta-spark is installed — not in this container)."""
+"""The store contract the engines rely on (``apply`` K1-K4 modes,
+idempotent re-apply, strict-insert refusal, fused ``apply_batch``),
+pinned on the parquet store any alternative backend must match."""
 
 import pytest
 from pyspark.sql import Row
 
-from ydb_cdc_processor_spark.operators import delta_view
 from ydb_cdc_processor_spark.operators.merge import (
     ParquetMaterializedView, StrictInsertError)
 
 
-def test_merge_condition_null_safe_multi_key():
-    assert delta_view.merge_condition(["k"]) == "t.`k` <=> s.`k`"
-    assert delta_view.merge_condition(["a", "b"], "tgt", "src") == \
-        "tgt.`a` <=> src.`a` AND tgt.`b` <=> src.`b`"
-    with pytest.raises(ValueError):
-        delta_view.merge_condition([])
-
-
-def test_delta_guard_without_package(spark, tmp_path):
-    if delta_view.delta_available():
-        pytest.skip("delta-spark installed; guard not applicable")
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        delta_view.DeltaMaterializedView(spark, str(tmp_path), ["k"])
-
-
-def _stores(tmp_path, spark, schema):
-    yield ParquetMaterializedView(spark, str(tmp_path / "pq"), ["k"],
-                                  schema=schema)
-    if delta_view.delta_available():
-        yield delta_view.DeltaMaterializedView(
-            spark, str(tmp_path / "dl"), ["k"], schema=schema)
-
-
 def test_store_contract_all_backends(spark, tmp_path):
     """The engine-facing contract every store must satisfy: K1-K4
-    semantics, idempotent re-apply, fused apply_batch equivalence.
-    Runs on parquet here; on a Delta-equipped deployment the same loop
-    exercises DeltaMaterializedView unchanged."""
+    semantics, idempotent re-apply, fused apply_batch equivalence."""
     base = spark.createDataFrame(
         [Row(k=i, v=f"v{i}") for i in range(8)])
-    for mv in _stores(tmp_path, spark, base.schema):
-        assert not mv.exists()
-        mv.apply(base, "upsertInto")
-        assert mv.exists()
-        assert mv.read().count() == 8
+    mv = ParquetMaterializedView(spark, str(tmp_path / "pq"), ["k"],
+                                 schema=base.schema)
+    assert not mv.exists()
+    mv.apply(base, "upsertInto")
+    assert mv.exists()
+    assert mv.read().count() == 8
 
-        ups = spark.createDataFrame([Row(k=2, v="B"), Row(k=100, v="new")])
-        mv.apply(ups, "upsertInto")
-        got = {r.k: r.v for r in mv.read().collect()}
-        assert got[2] == "B" and got[100] == "new" and len(got) == 9
+    ups = spark.createDataFrame([Row(k=2, v="B"), Row(k=100, v="new")])
+    mv.apply(ups, "upsertInto")
+    got = {r.k: r.v for r in mv.read().collect()}
+    assert got[2] == "B" and got[100] == "new" and len(got) == 9
 
-        mv.apply(spark.createDataFrame([Row(k=100), Row(k=999)]),
-                 "deleteFrom")
-        got = {r.k: r.v for r in mv.read().collect()}
-        assert 100 not in got and len(got) == 8
+    mv.apply(spark.createDataFrame([Row(k=100), Row(k=999)]),
+             "deleteFrom")
+    got = {r.k: r.v for r in mv.read().collect()}
+    assert 100 not in got and len(got) == 8
 
-        mv.apply(spark.createDataFrame([Row(k=3, v="C"), Row(k=500, v="x")]),
-                 "updateOn")
-        got = {r.k: r.v for r in mv.read().collect()}
-        assert got[3] == "C" and 500 not in got
+    mv.apply(spark.createDataFrame([Row(k=3, v="C"), Row(k=500, v="x")]),
+             "updateOn")
+    got = {r.k: r.v for r in mv.read().collect()}
+    assert got[3] == "C" and 500 not in got
 
-        with pytest.raises(StrictInsertError):
-            mv.apply(spark.createDataFrame([Row(k=3, v="boom")]),
-                     "insertInto")
-        assert {r.k: r.v for r in mv.read().collect()} == got  # untouched
+    with pytest.raises(StrictInsertError):
+        mv.apply(spark.createDataFrame([Row(k=3, v="boom")]),
+                 "insertInto")
+    assert {r.k: r.v for r in mv.read().collect()} == got  # untouched
 
-        mv.apply_batch(spark.createDataFrame([Row(k=200, v="y")]),
-                       spark.createDataFrame([Row(k=1)]), "upsertInto")
-        got = {r.k: r.v for r in mv.read().collect()}
-        assert got[200] == "y" and 1 not in got
+    mv.apply_batch(spark.createDataFrame([Row(k=200, v="y")]),
+                   spark.createDataFrame([Row(k=1)]), "upsertInto")
+    got = {r.k: r.v for r in mv.read().collect()}
+    assert got[200] == "y" and 1 not in got

@@ -86,50 +86,6 @@ def test_group_types_are_layout_metadata(spark, tmp_path):
         reopened.merge_from(other)
 
 
-def test_legacy_meta_backfills_group_types_from_store(spark, tmp_path):
-    """A pre-round-10 store (meta lacking group_types) with NON-STRING
-    group cols: reopening must sniff the live store's schema — the
-    registers were built with the SOURCE types — not default to
-    all-string (which would fail every subsequent merge with dead-end
-    advice, advisor finding), and must persist the resolved types."""
-    import json
-    import os
-    rows = spark.createDataFrame(
-        [(i % 3, f"v{i}") for i in range(200)], "grp int, val string")
-    hv = HllView(spark, str(tmp_path / "leg"), ["grp"], "val", p=8,
-                 group_types=["int"])
-    hv.apply_delta(rows)
-    meta_path = os.path.join(str(tmp_path / "leg"), "_hll.json")
-    with open(meta_path) as fh:
-        doc = json.load(fh)
-    del doc["group_types"]          # simulate the legacy meta format
-    with open(meta_path, "w") as fh:
-        json.dump(doc, fh)
-
-    reopened = HllView(spark, str(tmp_path / "leg"), ["grp"], "val", p=8)
-    assert reopened.group_types == ["int"]       # sniffed, not "string"
-    more = spark.createDataFrame(
-        [(i % 3, f"w{i}") for i in range(50)], "grp int, val string")
-    reopened.apply_delta(more)                   # merge type check passes
-    with open(meta_path) as fh:
-        assert json.load(fh)["group_types"] == ["int"]   # backfilled once
-    # empty legacy store (meta exists, nothing ingested): the
-    # constructor declaration survives the backfill
-    e = HllView(spark, str(tmp_path / "leg_e"), ["grp"], "val", p=8,
-                group_types=["bigint"])
-    epath = os.path.join(str(tmp_path / "leg_e"), "_hll.json")
-    with open(epath) as fh:
-        doc = json.load(fh)
-    del doc["group_types"]
-    with open(epath, "w") as fh:
-        json.dump(doc, fh)
-    e2 = HllView(spark, str(tmp_path / "leg_e"), ["grp"], "val", p=8,
-                 group_types=["bigint"])
-    assert e2.group_types == ["bigint"]
-    with open(epath) as fh:
-        assert json.load(fh)["group_types"] == ["bigint"]
-
-
 def test_p_is_layout_metadata(spark, tmp_path):
     hv = HllView(spark, str(tmp_path / "p"), ["grp"], "val", p=12)
     hv.apply_delta(_rows(spark, 0, 200))

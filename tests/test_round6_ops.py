@@ -448,9 +448,10 @@ def test_checksum_view_format_fence(spark, tmp_path):
     import os as _os
 
     from ydb_cdc_processor_spark.functions.checksum import ChecksumView
+    from ydb_cdc_processor_spark.operators.bucketed_view import MANIFEST
     cv = ChecksumView(spark, str(tmp_path / "ck"), ["id"])
     _os.makedirs(cv.path, exist_ok=True)
-    with open(cv._state_path(), "w") as fh:
+    with open(_os.path.join(cv.path, MANIFEST), "w") as fh:
         _json.dump({"n_rows": 5, "digest": "123", "fmt": "cksum-v1"}, fh)
     with pytest.raises(ValueError, match="incomparable"):
         cv.read()
@@ -541,11 +542,62 @@ def test_checksum_replay_check_respects_format_fence(spark, tmp_path):
     import os as _os
 
     from ydb_cdc_processor_spark.functions.checksum import ChecksumView
+    from ydb_cdc_processor_spark.operators.bucketed_view import MANIFEST
     cv = ChecksumView(spark, str(tmp_path / "ck"), ["id"])
     _os.makedirs(cv.path, exist_ok=True)
-    with open(cv._state_path(), "w") as fh:
+    with open(_os.path.join(cv.path, MANIFEST), "w") as fh:
         _json.dump({"n_rows": 5, "digest": "123", "fmt": "cksum-v1",
-                    "batch_token": "t"}, fh)
+                    "applied_tokens": ["t"]}, fh)
     df = spark.createDataFrame([(1,)], "id long")
     with pytest.raises(ValueError, match="incomparable"):
         cv.apply_delta(df, None, batch_token="t")
+
+
+def test_checksum_replay_of_earlier_token_is_skipped(spark, tmp_path):
+    """The checksum follows every store's replay rule: a token anywhere
+    in the applied history is skipped, not only the last one — applying
+    t:0, t:1 and then replaying t:0 must not count t:0's rows twice."""
+    from ydb_cdc_processor_spark.functions.checksum import ChecksumView
+    cv = ChecksumView(spark, str(tmp_path / "ck"), ["id", "v"])
+    b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    b1 = spark.createDataFrame([(3, "c")], "id long, v string")
+    cv.apply_delta(b0, None, batch_token="t:0")
+    cv.apply_delta(b1, None, batch_token="t:1")
+    before = cv.read()
+    cv.apply_delta(b0, None, batch_token="t:0")
+    assert cv.read() == before
+    assert before["batch_token"] == "t:1"
+    assert cv.matches(b0.unionByName(b1))
+    full = table_checksum(b0.unionByName(b1), ["id", "v"]).collect()[0]
+    assert (before["n_rows"], before["digest"]) == (3, full["digest"])
+
+
+def test_checksum_state_read_error_raises(spark, tmp_path, monkeypatch):
+    """Only an ABSENT manifest is the zero state: any other read error
+    must propagate out of apply_delta and leave the committed state
+    alone, never restart the running digest from zero."""
+    import os as _os
+
+    from ydb_cdc_processor_spark import storage
+    from ydb_cdc_processor_spark.functions.checksum import ChecksumView
+    from ydb_cdc_processor_spark.operators.bucketed_view import MANIFEST
+    cv = ChecksumView(spark, str(tmp_path / "ck"), ["id"])
+    cv.apply_delta(spark.createDataFrame([(1,), (2,)], "id long"), None,
+                   batch_token="t:0")
+    manifest = _os.path.join(cv.path, MANIFEST)
+    with open(manifest) as fh:
+        committed = fh.read()
+    real = storage.read_text
+
+    def denied(path):
+        if path == manifest:
+            raise PermissionError(path)
+        return real(path)
+    monkeypatch.setattr(storage, "read_text", denied)
+    with pytest.raises(PermissionError):
+        cv.apply_delta(spark.createDataFrame([(3,)], "id long"), None,
+                       batch_token="t:1")
+    monkeypatch.setattr(storage, "read_text", real)
+    with open(manifest) as fh:
+        assert fh.read() == committed
+    assert cv.read()["n_rows"] == 2

@@ -115,3 +115,54 @@ def test_bucketed_snapshot_shares_untouched_inodes(spark, tmp_path):
     # only the rewritten bucket's files (and any manifest) may differ
     touched_dirs = {p.split(os.sep)[0] for p in changed}
     assert len(touched_dirs) <= 2, (touched_dirs)
+
+
+def test_snapshots_under_object_store_semantics(spark, tmp_path,
+                                                monkeypatch):
+    """Snapshots publish without a directory rename, so they run under
+    ObjectStoreSimStorage (which refuses one) over a flat and a bucketed
+    view: a version torn before its _snap.json is not listed, and the
+    next snapshot clears and reuses that slot."""
+    import os
+
+    from ydb_cdc_processor_spark import storage
+    from ydb_cdc_processor_spark.operators.bucketed_view import (
+        BucketedMaterializedView)
+    from ydb_cdc_processor_spark.storage import ObjectStoreSimStorage
+
+    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    b2 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
+    b3 = spark.createDataFrame([(4, "d")], "k long, v string")
+    real = storage.replace_text
+
+    def torn(path, text):
+        if path.endswith("_snap.json"):
+            raise OSError("crash before the version is published")
+        real(path, text)
+
+    with storage.backend_scope(ObjectStoreSimStorage()):
+        for mv in (_mv(spark, tmp_path, "flat"),
+                   BucketedMaterializedView(spark, str(tmp_path / "bkt"),
+                                            ["k"], n_buckets=4)):
+            snap = SnapshotView(mv, keep_last=3)
+            mv.apply(b1)
+            v1 = snap.snapshot()
+            mv.apply(b2)
+            monkeypatch.setattr(storage, "replace_text", torn)
+            with pytest.raises(OSError, match="crash"):
+                snap.snapshot()
+            monkeypatch.setattr(storage, "replace_text", real)
+            assert [v["version"] for v in snap.versions()] == [v1]
+            assert os.path.isdir(os.path.join(snap.snap_dir, f"v{v1 + 1}"))
+            with pytest.raises(FileNotFoundError):
+                snap.read_as_of(v1 + 1)
+            mv.apply(b3)
+            v2 = snap.snapshot()
+            assert v2 == v1 + 1
+            assert _rows(snap.read_as_of(v1)) == [(1, "a"), (2, "b")]
+            assert _rows(snap.read_as_of(v2)) == \
+                [(1, "a"), (2, "B"), (3, "c"), (4, "d")]
+            slot = os.path.join(snap.snap_dir, f"v{v2}")
+            n_data = sum(1 for _r, _d, fs in os.walk(slot) for f in fs
+                         if f.endswith(".parquet"))
+            assert n_data == snap.versions()[-1]["n_files"]

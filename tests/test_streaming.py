@@ -644,6 +644,33 @@ def test_stream_rebucket_growth_policy(spark, sf_dir, fixture_dir, tmp_path):
     assert a == b
 
 
+def test_flat_target_stream_runs_housekeeping(spark, sf_dir, tmp_path):
+    """The housekeeping cadence applies to a FLAT target too: a stray
+    ``rows/<gen>/`` (a commit that never named it) is vacuumed after the
+    next batch, and the view is unchanged by it."""
+    import json
+    import shutil
+
+    src = str(tmp_path / "src")
+    cdc_json.write_events_cdc_fixture(spark, sf_dir, src, limit=200)
+    se = CdcStreamEngine(spark, _pipeline(spark, sf_dir),
+                         str(tmp_path / "view"), str(tmp_path / "ckpt"),
+                         rebucket_every=1)
+    assert se.run_available(src).ok
+    mv = se.batch_engine._target(None)
+    before = sorted(map(tuple, mv.read().collect()))
+    live = mv._rows_dir()
+    stray = os.path.join(os.path.dirname(live), "g-stray")
+    shutil.copytree(live, stray)
+    # one more batch: an erase of a key the view never held
+    with open(os.path.join(src, "part-late.json"), "w") as f:
+        f.write(json.dumps({"value": cdc_json.envelope([-1], erase=True),
+                            "_partition": 0, "_offset": 90_000}) + "\n")
+    assert se.run_available(src).ok
+    assert not os.path.exists(stray)
+    assert sorted(map(tuple, mv.read().collect())) == before
+
+
 def test_streaming_anomalies_match_batch_operator(spark, sf_dir, tmp_path):
     """Stateful streaming anomaly detection == the batch Window operator
     when events arrive in event-time order: the ring-buffer state must
@@ -769,6 +796,30 @@ def test_status_dict_surfaces_checksum_integrity(spark, sf_dir, tmp_path):
                             str(tmp_path / "ckpt2"))
     plain.run_available(src)
     assert "integrity" not in plain.status_dict()
+
+
+def test_status_dict_surfaces_unreadable_checksum_state(spark, sf_dir,
+                                                       tmp_path,
+                                                       monkeypatch):
+    """An unreadable checksum manifest shows on /status as an error —
+    neither a crash of the status endpoint nor a silent zero digest."""
+    from ydb_cdc_processor_spark import storage
+    from ydb_cdc_processor_spark.functions.checksum import ChecksumView
+
+    cv = ChecksumView(spark, str(tmp_path / "ck"), ["id"])
+    cv.apply_delta(spark.createDataFrame([(1,)], "id long"), None,
+                   batch_token="t:0")
+    se = CdcStreamEngine(spark, _pipeline(spark, sf_dir),
+                         str(tmp_path / "view"), str(tmp_path / "ckpt"),
+                         agg_views=[cv])
+    real = storage.read_text
+
+    def denied(path):
+        if path.startswith(cv.path):
+            raise PermissionError(path)
+        return real(path)
+    monkeypatch.setattr(storage, "read_text", denied)
+    assert "error" in se.status_dict()["integrity"]
 
 
 def test_status_lists_derived_views(spark, sf_dir, tmp_path):

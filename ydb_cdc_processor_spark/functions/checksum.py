@@ -33,16 +33,11 @@ string, never a native numeric.
 
 from __future__ import annotations
 
-import json
-import logging
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ydb_cdc_processor_spark import storage
-
-logger = logging.getLogger(__name__)
+from ydb_cdc_processor_spark.operators.bucketed_view import (
+    mutate_manifest, read_manifest, record_token, skip_replay)
 
 #: 32-char NULL block — 'N' is outside md5's hex output alphabet, so no
 #: field digest can ever equal it.  Must match the oracle's repeat('N',32).
@@ -111,12 +106,16 @@ class ChecksumView:
     [...])`` and it rides the identical key-pruned old-image lookup and
     per-batch ``apply_delta`` call (duck-typed contract).
 
-    State: one tiny JSON ``(n_rows, digest, fmt, batch_token)`` swapped
-    atomically (temp + rename); the running digest is an arbitrary-
-    precision Python int, so it never overflows no matter the table
-    size.  Replay fence: an at-least-once caller re-delivering a batch
-    under the same token is skipped whole — the same flat-AggregateView
-    fence semantics.
+    State: ``(n_rows, digest, fmt)`` in the manifest
+    ``<path>/_buckets.json``, committed with the batch token by one
+    ``storage.replace_text``
+    (:func:`~ydb_cdc_processor_spark.operators.bucketed_view.
+    mutate_manifest`); the running digest is an arbitrary-precision
+    Python int, so it never overflows no matter the table size.  Replays
+    follow every store's rule (:func:`~ydb_cdc_processor_spark.operators.
+    bucketed_view.skip_replay`): an applied token is skipped whole, a
+    committed-then-evicted sequenced token raises.  Only an absent
+    manifest reads as the zero state; any other read error propagates.
 
     Verification (:meth:`matches`) compares against a FULL recompute via
     :func:`table_checksum` — run it on whatever cadence a full sink
@@ -132,37 +131,31 @@ class ChecksumView:
 
     # -- state ---------------------------------------------------------------
 
-    def _state_path(self) -> str:
-        return os.path.join(self.path, "_checksum.json")
+    def _manifest(self) -> dict:
+        """The committed manifest, behind the format fence: a state
+        written under another digest format raises before any caller —
+        the replay decision in :meth:`apply_delta` included — can use
+        it (a replayed token must not silently keep an incomparable
+        old-format digest alive)."""
+        doc = read_manifest(self.path)
+        fmt = doc.get("fmt")
+        if doc and fmt != DIGEST_FORMAT:
+            raise ValueError(
+                f"checksum state at {self.path} has format {fmt!r},"
+                f" this build writes {DIGEST_FORMAT!r} — digests across"
+                " formats are incomparable; drop the state and re-baseline")
+        return doc
 
     def read(self) -> dict:
         """``{"n_rows": int, "digest": str, "fmt": str, "batch_token":
         str | None}`` of the maintained state (zeros for a never-written
-        view).  Raises on a format-tag mismatch — EVERY consumer of the
-        state goes through this fence, including the replay check in
-        :meth:`apply_delta` (a replayed token must not silently keep an
-        incomparable old-format digest alive)."""
-        try:
-            s = json.loads(storage.read_text(self._state_path()))
-        except (OSError, ValueError):
-            return {"n_rows": 0, "digest": "0", "fmt": DIGEST_FORMAT,
-                    "batch_token": None}
-        if s.get("fmt") != DIGEST_FORMAT:
-            raise ValueError(
-                f"checksum state at {self.path} has format {s.get('fmt')!r},"
-                f" this build writes {DIGEST_FORMAT!r} — digests across"
-                " formats are incomparable; drop the state and re-baseline")
-        return {"n_rows": int(s["n_rows"]), "digest": str(s["digest"]),
-                "fmt": s["fmt"], "batch_token": s.get("batch_token")}
-
-    def _write(self, n_rows: int, digest: int,
-               batch_token: str | None) -> None:
-        storage.makedirs(self.path)
-        storage.replace_text(
-            self._state_path(),
-            json.dumps({"n_rows": n_rows, "digest": str(digest),
-                        "fmt": DIGEST_FORMAT,
-                        "batch_token": batch_token}))
+        view); ``batch_token`` is the last applied token.  Raises on a
+        format-tag mismatch."""
+        doc = self._manifest()
+        tokens = doc.get("applied_tokens") or [None]
+        return {"n_rows": int(doc.get("n_rows", 0)),
+                "digest": str(doc.get("digest", "0")),
+                "fmt": DIGEST_FORMAT, "batch_token": tokens[-1]}
 
     # -- maintenance ---------------------------------------------------------
 
@@ -174,10 +167,8 @@ class ChecksumView:
         upserted rows, −digests of the PREVIOUS images of every touched
         key (read from the row view before its merge).  One signed agg
         over |batch| + |old images| rows → a 1-row collect."""
-        cur = self.read()   # format fence applies to replays too
-        if batch_token is not None and cur["batch_token"] == batch_token:
-            logger.info("checksum view %s: batch token %r already "
-                        "applied; skipping replay", self.path, batch_token)
+        if skip_replay(self._manifest(), batch_token,
+                       f"checksum view {self.path}"):
             return
         parts = []
         d = row_digest([F.col(c) for c in self.cols]).cast("decimal(38,0)")
@@ -195,8 +186,15 @@ class ChecksumView:
         row = contrib.agg(
             F.sum("_sgn").cast("long").alias("dn"),
             F.sum(F.col("_sgn") * F.col("_d")).alias("dd")).collect()[0]
-        self._write(cur["n_rows"] + int(row["dn"] or 0),
-                    int(cur["digest"]) + int(row["dd"] or 0), batch_token)
+
+        def commit(doc: dict) -> None:
+            doc["n_rows"] = int(doc.get("n_rows", 0)) + int(row["dn"] or 0)
+            doc["digest"] = str(int(doc.get("digest", "0"))
+                                + int(row["dd"] or 0))
+            doc["fmt"] = DIGEST_FORMAT
+            if batch_token is not None:
+                record_token(doc, batch_token)
+        mutate_manifest(self.path, commit)
 
     # -- verification --------------------------------------------------------
 

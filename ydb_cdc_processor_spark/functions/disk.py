@@ -3,10 +3,10 @@
 The /stores endpoint needs "how big is this store on disk, strays
 included" — a recursive walk whose edge cases are decided once:
 
-- dot-prefixed entries are SKIPPED: staging siblings (``.name.tmp-*``,
-  ``.name.rebuild-*``, ``.name.snapshots``) and hidden files are
-  transient or non-data, and counting a mid-rebuild staged duplicate
-  would double-report size;
+- dot-prefixed entries are SKIPPED: staging siblings
+  (``.name.rebuild-*``), snapshot histories (``.name.snapshots``) and
+  hidden files are transient or non-data, and counting a mid-rebuild
+  staged duplicate would double-report size;
 - files racing away mid-walk (a concurrent commit's GC) are
   tolerated — a size probe must never crash the thing it observes.
 

@@ -16,7 +16,9 @@ State: ``depth · 16^width_hex`` counter cells — FIXED size regardless
 of vocabulary (the |vocab|-independence that distinguishes it from the
 exact q_top_terms rollup), stored as a bucketed
 :class:`~ydb_cdc_processor_spark.operators.agg_view.AggregateView`
-keyed ``(_d, _b)`` under the standard batch-token replay fence.
+keyed ``(_d, _b)`` under the standard batch-token replay fence.  The
+geometry ``(depth, width_hex)`` is layout state in that store's own
+manifest (``cells/_buckets.json``).
 Per-batch cost: one map-side-combined ±contribution agg over the batch
 (exchange ≤ partitions·depth·width rows) + a merge touching only the
 batch cells' buckets.  Serving: point estimates for a probe term set
@@ -31,15 +33,15 @@ Reference anchor for the maintained-store contract:
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.agg_view import AggregateView
+from ydb_cdc_processor_spark.operators.bucketed_view import (
+    mutate_manifest, read_manifest)
 from ydb_cdc_processor_spark.operators.ivm_feed import Feed
 
 #: counter-store row schema — read_touched types empty results from it
@@ -69,35 +71,22 @@ class CmsView:
             sum_cols={}, count_col="c", backend="bucketed",
             n_buckets=n_buckets)
         # (depth, width_hex) are LAYOUT properties: cells of a store
-        # built at one geometry are meaningless at another.  Written
-        # HERE, before any data — a first-batch crash between the
-        # counter merge and a post-merge meta write would leave a
-        # populated store whose reopen could silently probe at a
-        # different geometry and UNDERcount (the one error class CMS
-        # must never make; review finding)
-        stored = self._read_meta()
+        # built at one geometry are meaningless at another.  They live
+        # in the counter store's manifest ("cms"), written HERE, before
+        # any data — a first-batch crash before a post-merge layout
+        # write would leave a populated store whose reopen could
+        # silently probe at a different geometry and UNDERcount (the
+        # one error class CMS must never make); on reopen the manifest
+        # wins over the constructor
+        cells = self.counts.path
+        stored = read_manifest(cells).get("cms")
         if stored:
             self.depth = int(stored["depth"])
             self.width_hex = int(stored["width_hex"])
         else:
-            self._write_meta()
-
-    # -- layout metadata -------------------------------------------------------
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "_cms.json")
-
-    def _read_meta(self) -> dict:
-        try:
-            return json.loads(storage.read_text(self._meta_path()))
-        except FileNotFoundError:
-            return {}
-
-    def _write_meta(self) -> None:
-        storage.makedirs(self.path)
-        storage.replace_text(self._meta_path(),
-                             json.dumps({"depth": self.depth,
-                                         "width_hex": self.width_hex}))
+            layout = {"depth": self.depth, "width_hex": self.width_hex}
+            mutate_manifest(cells,
+                            lambda doc: doc.__setitem__("cms", layout))
 
     # -- hashing (the cms_top_terms rule, verbatim) ----------------------------
 

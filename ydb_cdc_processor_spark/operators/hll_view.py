@@ -21,12 +21,13 @@ test_hll_view_replay_and_any_batching.
 Per-batch cost: one map-side-combined agg over the batch (exchange
 carries ≤ |batch groups|·m register partials), then a merge touching
 ONLY the batch groups' store buckets (the view is keyed ``(group, _j)``
-and CO-LOCATED on group).  Serving (:meth:`read`) is the
-``sketches.hll_estimate`` rollup over the register table — identical
-output contract to the one-shot ``hll_grouped``, and after any
-insert-only ingest history the state EQUALS the one-shot sketch of the
-union (max-merge associativity), which is what the shared SQL oracle
-replays.
+and CO-LOCATED on group).  The layout — ``p`` and the group-column
+types — is state in that store's own manifest (``regs/_buckets.json``).
+Serving (:meth:`read`) is the ``sketches.hll_estimate`` rollup over the
+register table — identical output contract to the one-shot
+``hll_grouped``, and after any insert-only ingest history the state
+EQUALS the one-shot sketch of the union (max-merge associativity),
+which is what the shared SQL oracle replays.
 
 Reference anchors: the maintained-store contract mirrors
 ``YqlWriter.java:118-147`` (per-batch idempotent merge into a keyed
@@ -36,7 +37,6 @@ functions/sketches.py.
 
 from __future__ import annotations
 
-import json
 import logging
 import os
 
@@ -44,11 +44,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.functions.sketches import (
     hll_estimate, hll_registers)
 from ydb_cdc_processor_spark.operators.bucketed_view import (
-    BucketedMaterializedView)
+    BucketedMaterializedView, mutate_manifest)
 from ydb_cdc_processor_spark.operators.ivm_feed import Feed
 
 logger = logging.getLogger(__name__)
@@ -72,10 +71,8 @@ class HllView:
         # group-col TYPES are layout metadata too: the empty-store
         # registers() frame must carry the same schema the store will
         # hold after first ingest, or read()/merge_from/recompute_check
-        # on a not-yet-ingested store diverge from the ingested one
-        # (advisor finding).  Declared at construction (DDL strings,
-        # default "string"), persisted alongside p, layout wins on
-        # reopen like p does.
+        # on a not-yet-ingested store diverge from the ingested one.
+        # Declared at construction (DDL strings, default "string").
         if group_types is not None and len(group_types) != len(group_cols):
             raise ValueError("group_types must match group_cols 1:1")
         self.group_types = [
@@ -85,68 +82,21 @@ class HllView:
             spark, os.path.join(path, "regs"),
             keys=self.group_cols + ["_j"], bucket_keys=self.group_cols,
             n_buckets=n_buckets)
-        # p is a LAYOUT property (register indices are p-dependent): a
-        # store built at one p reopened with another must serve the
-        # layout's p — the VectorIndex n_cells/seed rule.  The meta is
+        # p is a LAYOUT property too (register indices are
+        # p-dependent): a store built at one p reopened with another
+        # must serve the layout's p — the VectorIndex n_cells/seed
+        # rule.  Both live in the register store's manifest ("hll"),
         # written HERE, before any data, so no crash window can leave a
-        # populated store without its geometry (review finding), and it
-        # lives OUTSIDE view.path, which belongs to the bucketed store
-        # (CmsView's layout is one level up too).
-        self.view.recover()
-        stored = self._read_meta()
+        # populated store without its geometry; on reopen the manifest
+        # wins over the constructor.
+        stored = self.view.manifest().get("hll")
         if stored:
             self.p = int(stored["p"])
-            gt = stored.get("group_types")
-            if gt is not None:
-                self.group_types = list(gt)
-            else:
-                # meta written before group_types existed: the ingested
-                # registers carry the SOURCE column types
-                # (hll_registers preserves them), so an all-string
-                # default would fail every _merge_registers type check
-                # on a non-string-grouped legacy store — and the
-                # error's "declare group_types" advice would be a dead
-                # end, because stored meta wins over the constructor
-                # (advisor finding).  Resolve from the live store's
-                # schema; an empty/never-ingested store keeps the
-                # constructor declaration.  Persist so the backfill
-                # runs once.
-                sniffed = self._sniff_group_types()
-                if sniffed is not None:
-                    if sniffed != self.group_types:
-                        logger.info(
-                            "HllView %s: backfilled legacy group_types=%s"
-                            " from the live store schema", path, sniffed)
-                    self.group_types = sniffed
-                self._write_meta()
+            self.group_types = list(stored["group_types"])
         else:
-            self._write_meta()
-
-    # -- layout metadata -------------------------------------------------------
-
-    def _sniff_group_types(self) -> list[str] | None:
-        """Group-col types as the live store actually holds them —
-        manifest-stored schema when present (free), else one parquet
-        read-schema inference; None when nothing was ever ingested."""
-        if not self.view.exists():
-            return None
-        schema = self.view._stored_schema() or self.view.read().schema
-        return [schema[c].dataType.simpleString() for c in self.group_cols]
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "_hll.json")
-
-    def _read_meta(self) -> dict:
-        try:
-            return json.loads(storage.read_text(self._meta_path()))
-        except FileNotFoundError:
-            return {}
-
-    def _write_meta(self) -> None:
-        storage.makedirs(self.path)
-        storage.replace_text(self._meta_path(),
-                             json.dumps({"p": self.p,
-                                         "group_types": self.group_types}))
+            layout = {"p": self.p, "group_types": self.group_types}
+            mutate_manifest(self.view.path,
+                            lambda doc: doc.__setitem__("hll", layout))
 
     # -- maintenance -------------------------------------------------------------
 

@@ -11,13 +11,11 @@ MERGE, so we provide:
    compiles to underneath.
 2. A path-backed :class:`ParquetMaterializedView` — read-modify-write of
    the whole view into a fresh generation, committed by one manifest
-   replace (the bucketed store's protocol).  The interface is
-   Delta-swappable: on a real deployment you'd point the same pipeline at
-   a Delta/Iceberg table and get file-level MERGE instead of full
-   rewrite — that adapter exists as
-   :class:`~ydb_cdc_processor_spark.operators.delta_view.
-   DeltaMaterializedView` (import-guarded; the container ships no
-   delta-spark).
+   replace (the bucketed store's protocol).  The engine reaches the
+   view only through its store contract (``apply`` / ``apply_batch`` /
+   ``read`` / ``exists``, pinned by ``tests/test_delta_view.py``), so a
+   Delta/Iceberg table with file-level MERGE could stand in for the full
+   rewrite behind the same interface.
 
 Scale notes (100 TB):
 - Every mode is a single equi-join on the PK — shuffle-on-key both sides, or

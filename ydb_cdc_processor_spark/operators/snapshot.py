@@ -8,10 +8,13 @@ morning's backfill?" — and every store's commit protocol makes
 snapshots nearly free: a store's state is its manifest plus the
 immutable generation files it names (operators/bucketed_view.py), so a
 snapshot is a copy of the manifest and one ``link_or_copy`` per named
-file (inode refs, no data copy on POSIX), built in a temp directory
-and renamed in.  A later commit garbage-collects the superseded
-generations, but the snapshot's hardlinks keep the inodes alive — a
-version reads identically forever, or until retention prunes it.  A
+file (inode refs, no data copy on POSIX), built directly in its
+version directory ``v<N>/`` and published by writing that directory's
+``_snap.json`` LAST: only a directory holding one is a version, so no
+directory is ever renamed and snapshots run on object stores too.  A
+later commit garbage-collects the superseded generations, but the
+snapshot's hardlinks keep the inodes alive — a version reads
+identically forever, or until retention prunes it.  A
 version is read through a view of the same kind opened on it, flat and
 bucketed alike.
 
@@ -34,7 +37,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 
@@ -65,8 +67,10 @@ class SnapshotView:
         """Capture the CURRENT view state as the next version (or re-use
         the version already carrying ``label`` — the replay-collapse
         path).  Returns the version number.  Atomic AGAINST CRASHES:
-        links build in a temp sibling and rename in; a crash
-        mid-snapshot leaves only an ignorable temp directory.  NOT safe
+        links build in ``v<N>/`` and its ``_snap.json`` is written last
+        (one ``replace_text``), so a crash mid-snapshot leaves a partial
+        ``v<N>/`` that :meth:`versions` does not list and the next
+        snapshot clears before it reuses the slot.  NOT safe
         against a CONCURRENT writer: a commit racing the link walk could
         freeze a cross-bucket torn version (or ENOENT mid-link) — call
         snapshot() from the same maintenance loop that calls apply(),
@@ -89,26 +93,24 @@ class SnapshotView:
         storage.makedirs(self.snap_dir)
         version = 1 + max((v["version"] for v in self.versions()),
                           default=0)
-        tmp = os.path.join(self.snap_dir,
-                           f".v{version}.tmp-{uuid.uuid4().hex[:8]}")
+        vdir = os.path.join(self.snap_dir, f"v{version}")
+        storage.remove_tree(vdir)   # a torn earlier attempt at this slot
         # the manifest and the files of the generations it names (never
         # a superseded or uncommitted one); link_or_copy is the seam
         # primitive: hardlink on POSIX, byte copy on backends without
         # links (HDFS/object stores)
         doc = read_manifest(self.view.path)
         files = named_files(self.view.path, doc)
-        storage.makedirs(tmp)
+        storage.makedirs(vdir)
         for f in files:
-            dst = os.path.join(tmp, os.path.relpath(f, self.view.path))
+            dst = os.path.join(vdir, os.path.relpath(f, self.view.path))
             storage.makedirs(os.path.dirname(dst))
             storage.link_or_copy(f, dst)
-        storage.write_text(os.path.join(tmp, MANIFEST), json.dumps(doc))
-        n_files = len(files)
-        storage.write_text(
-            os.path.join(tmp, _SNAP_META),
+        storage.write_text(os.path.join(vdir, MANIFEST), json.dumps(doc))
+        storage.replace_text(
+            os.path.join(vdir, _SNAP_META),
             json.dumps({"version": version, "label": label,
-                        "n_files": n_files}))
-        storage.rename(tmp, os.path.join(self.snap_dir, f"v{version}"))
+                        "n_files": len(files)}))
         self._prune()
         return version
 
@@ -137,7 +139,7 @@ class SnapshotView:
         read through a view of the same kind opened on the version's
         own copy of the manifest (only the generations it names)."""
         path = os.path.join(self.snap_dir, f"v{version}")
-        if not storage.is_dir(path):
+        if not storage.is_file(os.path.join(path, _SNAP_META)):
             have = [v["version"] for v in self.versions()]
             raise FileNotFoundError(
                 f"no snapshot v{version} at {self.snap_dir} "

@@ -13,12 +13,15 @@ feed (the ``agg_views`` protocol — upserts are the batch's new rows,
 deletes are old images whose key has no new row).
 
 Delivery matches the reference end to end: AT-LEAST-ONCE with dense
-per-partition offsets.  A crash between the file append and the state
-save replays the batch with the SAME offsets and content, which the
+per-partition offsets.  The per-partition offset bases live in the feed
+directory's manifest ``<out_dir>/_buckets.json`` (Spark's file source
+skips ``_``-prefixed names), committed with the batch token in one
+replace after the append.  A crash between the append and that commit
+replays the batch with the SAME offsets and content, which the
 downstream consumer collapses exactly like any redelivery
 (streaming/dedup.py, or simply the keyed idempotent merge).  A
-batch-token fence short-circuits engine-level replays so the steady
-state emits once.
+committed batch's replay is skipped by every store's replay rule
+(``bucketed_view.skip_replay``), so the steady state emits once.
 
 Everything stays distributed: envelopes serialize via ``to_json`` over
 Catalyst expressions (timestamps as UTC ISO micros — the decoder's
@@ -30,17 +33,12 @@ bases.
 
 from __future__ import annotations
 
-import json
-import logging
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ydb_cdc_processor_spark import storage
-
-logger = logging.getLogger(__name__)
+from ydb_cdc_processor_spark.operators.bucketed_view import (
+    mutate_manifest, read_manifest, record_token, skip_replay)
 
 _ISO_MICROS = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
@@ -58,21 +56,6 @@ class ChangefeedEmitter:
         self.out_dir = out_dir
         self.keys = list(keys)
         self.n_partitions = n_partitions
-
-    # -- offset state --------------------------------------------------------
-
-    def _state_path(self) -> str:
-        return os.path.join(self.out_dir, "_emitter.json")
-
-    def _read_state(self) -> dict:
-        try:
-            return json.loads(storage.read_text(self._state_path()))
-        except (OSError, ValueError):
-            return {"bases": {}, "emitted_token": None}
-
-    def _write_state(self, st: dict) -> None:
-        storage.makedirs(self.out_dir)
-        storage.replace_text(self._state_path(), json.dumps(st))
 
     # -- serialization -------------------------------------------------------
 
@@ -119,11 +102,9 @@ class ChangefeedEmitter:
     def apply_delta(self, new_rows: DataFrame | None,
                     old_rows: DataFrame | None,
                     batch_token: str | None = None) -> None:
-        st = self._read_state()
-        if (batch_token is not None
-                and st.get("emitted_token") == batch_token):
-            logger.info("changefeed emitter %s: token %r already emitted",
-                        self.out_dir, batch_token)
+        doc = read_manifest(self.out_dir)
+        if skip_replay(doc, batch_token,
+                       f"changefeed emitter {self.out_dir}"):
             return
         env = self._envelopes(new_rows, old_rows)
         if env is None:
@@ -138,7 +119,7 @@ class ChangefeedEmitter:
         part = F.pmod(F.xxhash64(F.get_json_object(F.col("env"), "$.key")),
                       F.lit(self.n_partitions)).cast("int")
         w = Window.partitionBy("_partition").orderBy("env")
-        bases = {str(p): int(b) for p, b in st.get("bases", {}).items()}
+        bases = {str(p): int(b) for p, b in doc.get("bases", {}).items()}
         base_map = F.create_map(*[x for p, b in bases.items()
                                   for x in (F.lit(int(p)), F.lit(b))]) \
             if bases else F.create_map().cast("map<int,bigint>")
@@ -157,4 +138,9 @@ class ChangefeedEmitter:
          .write.mode("append").text(self.out_dir))
         for p, n in counts.items():
             bases[str(p)] = bases.get(str(p), 0) + n
-        self._write_state({"bases": bases, "emitted_token": batch_token})
+
+        def commit(d: dict) -> None:
+            d["bases"] = bases
+            if batch_token is not None:
+                record_token(d, batch_token)
+        mutate_manifest(self.out_dir, commit)

@@ -109,11 +109,14 @@ class CdcStreamEngine:
         fence (committed with each rollup batch), so checkpoint replay
         after a crash, and R1 retries, stay exactly-once.
 
-        ``rebucket_every`` (bucketed targets only): every N successful
-        batches, apply the bucket-growth policy (SCALING.md: n_buckets ∝
-        |view|) — a metadata-only size check, and a one-off full rewrite
-        when mean bucket size crossed ``target_bucket_bytes × 4``.  None
-        disables."""
+        ``rebucket_every``: every N successful batches, run the
+        between-batch housekeeping sweep over the target and every
+        attached derived store (``CdcBatchEngine.maintain_stores``): the
+        target's ``vacuum`` of crash leftovers on every layout, plus on
+        a bucketed target the bucket-growth policy (SCALING.md:
+        n_buckets ∝ |view|) — a metadata-only size check, and a one-off
+        full rewrite when mean bucket size crossed
+        ``target_bucket_bytes × 4``.  None disables."""
         self.spark = spark
         self.pipeline = pipeline
         # streaming micro-batches are trigger-bounded (B1/B3) → the merge
@@ -123,7 +126,7 @@ class CdcStreamEngine:
             small_delta=True, agg_views=agg_views, scd2_views=scd2_views,
             dlq_path=dlq_path, target_bucket_bytes=target_bucket_bytes)
         self.checkpoint_dir = checkpoint_dir
-        self.rebucket_every = rebucket_every if n_buckets else None
+        self.rebucket_every = rebucket_every
         self.target_bucket_bytes = target_bucket_bytes
         self.error_threshold = (pipeline.error_threshold
                                 if error_threshold is None else error_threshold)
@@ -255,10 +258,11 @@ class CdcStreamEngine:
             if isinstance(v, ChecksumView) and "integrity" not in out:
                 try:
                     out["integrity"] = v.read()
-                except ValueError as e:
-                    # a digest-format break must surface AS STATUS — the
-                    # monitoring endpoint crashing is the worst possible
-                    # behavior during exactly the upgrade it describes
+                except (OSError, ValueError) as e:
+                    # a digest-format break or an unreadable manifest
+                    # must surface AS STATUS — the monitoring endpoint
+                    # crashing is the worst possible behavior during
+                    # exactly the incident it describes
                     out["integrity"] = {"error": str(e)}
             # inventory every attached derived artifact (rollup,
             # checksum, index, join view, outbound feed adapters) so an
@@ -269,7 +273,7 @@ class CdcStreamEngine:
             path = next((getattr(owner, a) for a in ("path", "out_dir")
                          if getattr(owner, a, None) is not None), None)
             row = {"type": type(owner).__name__, "path": path}
-            # maintenance-epoch + store stats are manifest/sidecar JSON
+            # maintenance-epoch + store stats are manifest JSON
             # reads — the round-12 fence/forfeit state an operator of a
             # multi-shard deployment needs on the status page (still no
             # Spark job on this path)
@@ -300,17 +304,6 @@ class CdcStreamEngine:
         if derived:
             out["derivedViews"] = derived
         return out
-
-    def _maintain_derived_stores(self) -> None:
-        """Between-batch housekeeping for every attached derived store —
-        delegates to the batch engine's shared implementation
-        (:meth:`~ydb_cdc_processor_spark.engine.CdcBatchEngine.
-        maintain_derived_stores`), which hand-driven batch loops reach
-        via ``maintain_every`` so both engines get the same sawtooth.
-        Runs at the target's ``rebucket_every`` cadence: a long-lived
-        pipeline's derived stores fragment exactly like the target
-        (per-batch files, crash-replay leftovers)."""
-        self.batch_engine.maintain_derived_stores()
 
     def store_stats(self) -> list[dict]:
         """Disk inventory of the pipeline's target view and every
