@@ -231,18 +231,3 @@ def test_agg_view_untokenized_apply_keeps_fence(spark, tmp_path):
     # the b0 fence survived the un-tokenized apply → replay is a no-op
     av.apply_delta(new_rows=rows, old_rows=None, batch_token="b0:u")
     assert {(r.g, r.n_rows, r.sv) for r in av.read().collect()} == mid
-
-
-def test_agg_view_compact_rollup_guard(spark, tmp_path, caplog):
-    """The documented compact-rollup assumption is enforced, not just
-    stated: exceeding max_groups_warn logs a warning."""
-    import logging
-
-    rows = spark.range(50).select(
-        F.col("id").alias("g"), F.lit(1.0).alias("v"))
-    av = AggregateView(spark, str(tmp_path / "agg"), ["g"], {"sv": "v"},
-                       max_groups_warn=10)
-    with caplog.at_level(logging.WARNING,
-                         logger="ydb_cdc_processor_spark.operators.agg_view"):
-        av.apply_delta(new_rows=rows, old_rows=None)
-    assert any("compact-rollup" in r.message for r in caplog.records)

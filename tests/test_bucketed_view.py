@@ -333,3 +333,101 @@ def test_rewrite_rows_preserves_tokens_and_fences_empty_buckets(
     assert mv.merge_touched(df, lambda target, d: d.unionByName(target),
                             batch_token="tok-a") is False
     assert mv.read().where("v >= 2").count() == 0
+
+
+# -- the flat view is the one-bucket store ------------------------------------
+
+def _kv_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_one_bucket_write_publishes_bucket_zero_only(spark, tmp_path):
+    """A one-bucket commit writes bucket 0's rows alone: the ``-1``
+    sentinel row a maintenance merge appends (and any other stray
+    bucket id) never reaches the store, on disk or in the manifest."""
+    import os
+
+    from ydb_cdc_processor_spark.operators.bucketed_view import (
+        with_empty_output_sentinel)
+    path = str(tmp_path / "one")
+    mv = ParquetMaterializedView(spark, path, ["id"])
+    batch = spark.createDataFrame([(i, f"v{i}") for i in range(10)],
+                                  "id long, v string")
+
+    def merge_fn(target, d):
+        stray = d.limit(1).withColumn(BUCKET_COL, F.lit(3))
+        return with_empty_output_sentinel(
+            spark, d.unionByName(target).unionByName(stray))
+
+    assert mv.merge_touched(batch, merge_fn, batch_token="t0")
+    assert _kv_rows(mv.read()) == _kv_rows(batch)
+    assert list(mv.manifest()["gens"]) == ["0"]
+    assert sorted(e for e in os.listdir(path)
+                  if e.startswith(f"{BUCKET_COL}=")) == [f"{BUCKET_COL}=0"]
+
+
+def test_one_bucket_empty_output_drops_the_bucket(spark, tmp_path):
+    """Deleting every row of a one-bucket store drops its bucket, as a
+    partitioned write that produced no rows does: the view still exists
+    and reads empty with its schema, and no empty file is named."""
+    import os
+
+    path = str(tmp_path / "one")
+    rows = spark.createDataFrame([(i, f"v{i}") for i in range(5)],
+                                 "id long, v string")
+    mv = ParquetMaterializedView(spark, path, ["id"], schema=rows.schema)
+    mv.apply(rows)
+    assert mv.bucket_ids() == [0]
+    mv.apply(rows.select("id"), action="deleteFrom")
+    assert mv.exists() and mv.bucket_ids() == []
+    assert mv.read().count() == 0
+    assert mv.read().columns == ["id", "v"]
+    assert not os.path.exists(os.path.join(path, f"{BUCKET_COL}=0"))
+    mv.apply(rows.limit(2))              # and it fills again
+    assert _kv_rows(mv.read()) == _kv_rows(rows.limit(2))
+
+
+def test_one_bucket_apply_batch_collects_nothing(spark, tmp_path,
+                                                 monkeypatch):
+    """A one-bucket apply_batch neither collects the touched buckets to
+    the driver nor caches the delta: the merge reads each side once."""
+    from pyspark.sql import DataFrame
+
+    rows = spark.createDataFrame([(i, f"v{i}") for i in range(8)],
+                                 "id long, v string")
+    mv = ParquetMaterializedView(spark, str(tmp_path / "one"), ["id"],
+                                 schema=rows.schema)
+    mv.apply(rows)
+    calls = []
+    real_collect, real_persist = DataFrame.collect, DataFrame.persist
+    monkeypatch.setattr(DataFrame, "collect", lambda self: calls.append(
+        "collect") or real_collect(self))
+    monkeypatch.setattr(DataFrame, "persist", lambda self, *a: calls.append(
+        "persist") or real_persist(self, *a))
+    touched = mv.apply_batch(
+        spark.createDataFrame([(1, "new"), (20, "ins")], "id long, v string"),
+        spark.createDataFrame([(2,)], "id long"))
+    assert touched == [0] and calls == []
+    monkeypatch.undo()
+    want = sorted([(0, "v0"), (1, "new"), (20, "ins")]
+                  + [(i, f"v{i}") for i in range(3, 8)])
+    assert _kv_rows(mv.read()) == want
+
+
+def test_one_bucket_compact_bounds_files(spark, tmp_path):
+    """compact() of a one-bucket store holding more than 4 files rewrites
+    it to 4 or fewer, content and replay history unchanged."""
+    path = str(tmp_path / "one")
+    mv = ParquetMaterializedView(spark, path, ["id"])
+    batch = spark.createDataFrame([(i, f"v{i}") for i in range(64)],
+                                  "id long, v string")
+    mv.merge_touched(batch, lambda target, d: d.unionByName(target),
+                     batch_token="tok-keep")
+    live = mv._live_dirs([0])[0]
+    rows = spark.read.parquet(live).localCheckpoint(eager=True)
+    rows.repartition(8).write.mode("overwrite").parquet(live)
+    assert len(mv.bucket_files()[0]) > 4
+    assert mv.compact() == 1
+    assert len(mv.bucket_files()[0]) <= 4
+    assert _kv_rows(mv.read()) == _kv_rows(batch)
+    assert mv.applied_tokens() == ["tok-keep"]

@@ -267,7 +267,7 @@ def test_flat_view_lifecycle_under_object_store_semantics(
         mv.apply(_rows(spark, [(0, "x", -1)]))
     fresh = ParquetMaterializedView(spark, mv.path, ["k"])
     assert _kv(fresh.read()) == want
-    rows_dir = os.path.join(mv.path, mv.ROWS)
+    rows_dir = os.path.join(mv.path, "_bucket=0")   # its one bucket
     assert len(os.listdir(rows_dir)) == 2             # live + stray
     assert fresh.vacuum() == 1
     assert len(os.listdir(rows_dir)) == 1 and _kv(fresh.read()) == want

@@ -182,3 +182,25 @@ def test_store_without_stored_schema_falls_back_to_spark(
     assert how == "spark"
     assert sorted(got, key=str) == _expected(mv, keys, ["k"])
     assert len(got) == 3
+
+
+def test_default_target_old_images_read_on_driver(spark, sf_dir, pipeline,
+                                                  tmp_path):
+    """The default (flat) target is a one-bucket store, so a batch with
+    attached rollups reads its old images on the driver like any
+    bucketed target — and the rollup still equals a recompute."""
+    from ydb_cdc_processor_spark.operators.agg_view import AggregateView
+
+    fixture = str(tmp_path / "cdc")
+    cdc_json.write_events_cdc_fixture(spark, sf_dir, fixture)
+    av = AggregateView(spark, str(tmp_path / "agg"), ["event_type"],
+                       {"total": "value"}, count_col="n")
+    eng = CdcBatchEngine(spark, pipeline, str(tmp_path / "view"),
+                         agg_views=[av])
+    raw = cdc_json.read_cdc_batch(spark, fixture)
+    first = eng.apply_raw_batch(raw, batch_token="b0")
+    assert first.details["old_image_read"] == "none"   # no target yet
+    st = eng.apply_raw_batch(raw, batch_token="b1")
+    assert st.details["old_image_read"] == "driver"
+    assert st.details["touched_buckets"] == 1
+    assert av.recompute_check(eng.read_view())

@@ -456,7 +456,7 @@ def test_batch_stats_details_carry_phase_times(spark, sf_dir, tmp_path):
     st = flat.apply_raw_batch(_raw_lines(spark, BOOT))
     assert keys <= set(st.details)
     assert st.details["old_image_read"] == "none"
-    assert st.details["touched_buckets"] == 0
+    assert st.details["touched_buckets"] == 1     # the flat view's one bucket
     assert st.details["fan_out_s"] == 0.0
     assert st.details["target_write_s"] > 0
 

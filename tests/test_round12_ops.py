@@ -355,54 +355,6 @@ def test_reshard_with_retention_and_drop(spark, tmp_path):
     assert not any(rv._id_to_pid(b) == pid for b in rv.bucket_ids())
 
 
-# -- flat-target old-image guard (round-11 judge item #4) ----------------------
-
-def test_flat_target_old_image_warning(spark, sf_dir, tmp_path, caplog):
-    """A FLAT target with attached derived views past the size
-    threshold logs the named O(|view|) warning exactly once; behavior
-    is unchanged (the rollup still matches a recompute)."""
-    import logging
-
-    from ydb_cdc_processor_spark.engine import CdcBatchEngine
-    from ydb_cdc_processor_spark.plans.pipeline import CdcPipeline
-    from ydb_cdc_processor_spark.sources import cdc_json
-    from ydb_cdc_processor_spark.sources.catalog import describe_table
-
-    schema, pk = describe_table(spark, sf_dir, "events")
-    p = CdcPipeline(
-        name="flatwarn", source_schema=schema, pk=pk,
-        members=cdc_json.EVENTS_MEMBERS,
-        update_sql="SELECT event_id, ts, user_id, event_type, value"
-                   " FROM rows",
-        delete_sql="SELECT event_id FROM rows").validate(spark)
-    fixture = str(tmp_path / "cdc")
-    cdc_json.write_events_cdc_fixture(spark, sf_dir, fixture)
-    av = AggregateView(spark, str(tmp_path / "agg"), ["event_type"], {},
-                       count_col="n")
-    eng = CdcBatchEngine(spark, p, str(tmp_path / "view"), agg_views=[av])
-    raw = cdc_json.read_cdc_batch(spark, fixture)
-    eng.apply_raw_batch(raw, batch_token="w0")      # bootstrap, no target yet
-    eng.flat_old_image_warn_bytes = 1               # force the threshold
-
-    with caplog.at_level(logging.WARNING,
-                         logger="ydb_cdc_processor_spark.engine"):
-        eng.apply_raw_batch(raw, batch_token="w1")
-    hits = [r for r in caplog.records if "FLAT target" in r.getMessage()]
-    assert len(hits) == 1 and "bucketed layout" in hits[0].getMessage()
-
-    caplog.clear()
-    with caplog.at_level(logging.WARNING,
-                         logger="ydb_cdc_processor_spark.engine"):
-        eng.apply_raw_batch(raw, batch_token="w2")
-    assert not [r for r in caplog.records
-                if "FLAT target" in r.getMessage()]   # once per engine
-    got = {r.event_type: r.n for r in av.read().collect()}
-    exp = {r.event_type: r.n for r in eng.read_view()
-           .groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-           .collect()}
-    assert got == exp
-
-
 # -- bounded TopKView under delete-heavy feeds (round-11 judge item #5) --------
 
 def test_bounded_topk_delete_heavy_drift_bound(spark, tmp_path):

@@ -175,6 +175,24 @@ def test_negative_drops_exact_when_batch_empties_buckets(spark, tmp_path):
     assert not os.path.isdir(os.path.join(store.path, "_bucket=-1"))
 
 
+def test_negative_drops_exact_on_one_bucket_rollup(spark, tmp_path):
+    """The same edge on a flat (one-bucket) rollup, whose write drops
+    the sentinel row instead of routing it to a partition: the counter
+    stays exact, and the emptied bucket leaves the store."""
+    import os
+    av = AggregateView(spark, str(tmp_path / "agg"), ["g"], {},
+                       count_col="n", backend="flat")
+    av.apply_delta(spark.createDataFrame([("x", "1")], "g string, v string"),
+                   None, batch_token="b0")
+    dbl = spark.createDataFrame([("x", "1"), ("x", "1")],
+                                "g string, v string")
+    av.apply_delta(None, dbl, batch_token="b1")
+    assert av.last_negative_drops == 1
+    assert av.read().count() == 0 and av.store().bucket_ids() == []
+    assert [e for e in os.listdir(av.store().path)
+            if e.startswith("_bucket=")] == []
+
+
 def test_topk_forfeit_counter_exact_on_full_retraction(spark, tmp_path):
     """Bounded TopKView, the judge's scenario: a post-sweep delete
     batch retracts every surviving pair in the touched bucket AND hits

@@ -646,7 +646,7 @@ def test_stream_rebucket_growth_policy(spark, sf_dir, fixture_dir, tmp_path):
 
 def test_flat_target_stream_runs_housekeeping(spark, sf_dir, tmp_path):
     """The housekeeping cadence applies to a FLAT target too: a stray
-    ``rows/<gen>/`` (a commit that never named it) is vacuumed after the
+    ``_bucket=0/<gen>/`` (a commit that never named it) is vacuumed after the
     next batch, and the view is unchanged by it."""
     import json
     import shutil
@@ -659,7 +659,7 @@ def test_flat_target_stream_runs_housekeeping(spark, sf_dir, tmp_path):
     assert se.run_available(src).ok
     mv = se.batch_engine._target(None)
     before = sorted(map(tuple, mv.read().collect()))
-    live = mv._rows_dir()
+    live = mv._live_dirs(mv.bucket_ids())[0]   # its one bucket
     stray = os.path.join(os.path.dirname(live), "g-stray")
     shutil.copytree(live, stray)
     # one more batch: an erase of a key the view never held

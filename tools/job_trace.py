@@ -1,7 +1,7 @@
 """Trace every Spark job of ONE registry entry: duration + callsite.
 
-Like profile_entry, but prints the per-job timeline (submission order,
-duration, task count, first-stage callsite) so the job COUNT of a
+Prints the per-job timeline (submission order, duration, task count,
+first-stage callsite) so the job COUNT of a
 lifecycle entry can be attributed line-by-line to the store operations
 that issue them.
 

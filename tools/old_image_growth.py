@@ -103,8 +103,7 @@ def main() -> None:
             mv.apply(view_rows(n))  # build (one-off O(n))
             av = AggregateView(spark, os.path.join(work, f"agg_{tag}"),
                                ["g"], {"sv": "v"}, count_col="nn",
-                               backend="bucketed", n_buckets=64,
-                               max_groups_warn=10**12)
+                               backend="bucketed", n_buckets=64)
             av.apply_delta(new_rows=view_rows(n), old_rows=None)
             eng = CdcBatchEngine(spark, pipeline, vpath,
                                  n_buckets=n_buckets, agg_views=[av])

@@ -35,8 +35,8 @@ ROWS_VIEW = "rows"
 
 #: per-phase wall times every ``BatchStats.details`` carries (seconds;
 #: 0.0 for a phase the batch skipped), beside ``old_image_read`` (which
-#: old-image path ran: "driver", "spark", "full" or "none") and
-#: ``touched_buckets`` (target buckets the merge rewrote; 0 for a flat
+#: old-image path ran: "driver", "spark" or "none") and
+#: ``touched_buckets`` (target buckets the merge rewrote; 1 for a flat
 #: target)
 PHASE_KEYS = ("decode_s", "old_image_s", "fan_out_s", "target_write_s",
               "promote_wait_s")
@@ -160,8 +160,7 @@ def run_transform(spark: SparkSession, batch_df: DataFrame, sql: str,
 
 
 def two_phase(spark: SparkSession, batch_df: DataFrame, select_sql: str,
-              view_cls: type = ParquetMaterializedView, *,
-              target_path: str, keys: list[str],
+              *, target_path: str, keys: list[str],
               action: str = "upsertInto",
               timeout_seconds: int | None = None) -> DataFrame:
     """T2 — two-phase read-then-act (YqlQuery.java:198-247).
@@ -179,7 +178,8 @@ def two_phase(spark: SparkSession, batch_df: DataFrame, select_sql: str,
     :class:`BatchTimeoutError` raises."""
     with query_timeout(spark, timeout_seconds, "two_phase"):
         result = run_transform(spark, batch_df, select_sql)
-        mv = view_cls(spark, target_path, keys, schema=result.schema)
+        mv = ParquetMaterializedView(spark, target_path, keys,
+                                     schema=result.schema)
         mv.apply(result, action=action)
     return result
 
@@ -200,10 +200,11 @@ class CdcBatchEngine:
                  target_view=None,
                  maintain_every: int | None = None,
                  target_bucket_bytes: int = 128 << 20):
-        """``n_buckets`` switches the target to the hash-bucketed view
+        """``n_buckets``: the target's bucket count
         (operators/bucketed_view.py): per-batch cost O(touched buckets)
-        instead of O(|view|) — the right choice for any view that outgrows
-        a single rewrite.  Default stays the flat view for small targets.
+        instead of O(|view|).  None (default) starts the flat view — one
+        bucket, which :meth:`maintain_stores` rebuckets once it
+        outgrows it.
 
         ``small_delta=True`` asserts every batch fed to this engine is
         bounded (e.g. a trigger-capped streaming micro-batch ≙ the
@@ -256,7 +257,8 @@ class CdcBatchEngine:
         ``target_view``: a PRE-BUILT materialized view object to use as
         the merge target instead of the default flat/bucketed one — any
         object with the view contract (``apply_batch/read/exists`` + a
-        ``schema`` attribute), e.g. a
+        ``schema`` attribute; with ``agg_views``, also ``bucket_expr``
+        and ``read_touched`` for the old images), e.g. a
         :class:`~ydb_cdc_processor_spark.operators.range_view.
         RangePartitionedView` for time-partitioned fact targets.  The
         engine calls ``apply_batch(ups, dels, action=, small_delta=,
@@ -307,14 +309,6 @@ class CdcBatchEngine:
         self.maintain_every = maintain_every
         self.target_bucket_bytes = target_bucket_bytes
         self._batches_applied = 0
-        self._flat_old_image_warned = False
-
-    #: flat-target old-image guard: when a FLAT (non-bucketed) target
-    #: with attached derived views grows past this many on-disk bytes,
-    #: every micro-batch's old-image feed is an O(|view|) full read —
-    #: warn loudly once, naming the fix (bucket the target).  256 MB is
-    #: well past "compact rollup" and well before "pain".
-    flat_old_image_warn_bytes: int = 256 << 20
 
     # -- target plumbing ----------------------------------------------------
 
@@ -663,9 +657,10 @@ class CdcBatchEngine:
         """The batch keys' CURRENT target rows, materialized and read as
         cheaply as the target's layout allows, with the path taken.
 
-        Bucketed/range targets (anything exposing ``bucket_expr`` +
-        ``read_touched``): the key frame is hashed through the view's
-        OWN bucket expression and only the touched buckets are read.
+        Every target exposes ``bucket_expr`` + ``read_touched`` (the
+        flat view is one bucket): the key frame is hashed through the
+        view's OWN bucket expression and only the touched buckets are
+        read.
 
         - "driver": a one-column key of integral, boolean or plain
           string type (values that filter the same in pyarrow as in a
@@ -682,15 +677,9 @@ class CdcBatchEngine:
           target promoted would read post-merge rows.  The key frame is
           checkpointed first, because it feeds two evaluations and its
           lineage may include the not-yet-persisted delete-side
-          transform.
-        - "full": flat targets read the whole view (semi-join +
-          checkpoint)."""
+          transform."""
         from ydb_cdc_processor_spark.operators.bucketed_view import BUCKET_COL
         tgt = self._target(None)
-        if not (hasattr(tgt, "bucket_expr") and hasattr(tgt, "read_touched")):
-            self._warn_flat_old_image(tgt)
-            return (tgt.read().join(key_rows, on=keys, how="left_semi")
-                    .localCheckpoint(eager=True)), "full"
         bucket = tgt.bucket_expr().alias(BUCKET_COL)
         if len(keys) == 1 and _driver_filterable(
                 key_rows.schema[keys[0]].dataType):
@@ -710,30 +699,6 @@ class CdcBatchEngine:
         old = tgt.read_touched(touched).join(key_rows, on=keys,
                                              how="left_semi")
         return old.drop(BUCKET_COL).localCheckpoint(eager=True), "spark"
-
-    def _warn_flat_old_image(self, tgt) -> None:
-        """Named guard on the flat-target old-image fallback (round-11
-        judge item #4): a flat target with attached derived views pays
-        an O(|view|) read per micro-batch to feed them old images —
-        fine for compact targets, a per-batch full-table scan at scale.
-        The check is file-metadata-only (``disk_usage``, no Spark job)
-        and runs until it first fires, then never again."""
-        from ydb_cdc_processor_spark.functions.disk import disk_usage
-        if self._flat_old_image_warned:
-            return
-        path = getattr(tgt, "path", None)
-        total = disk_usage(path)[1]
-        if total > self.flat_old_image_warn_bytes:
-            self._flat_old_image_warned = True
-            logger.warning(
-                "CdcBatchEngine[%s]: FLAT target %s holds %.1f MB with "
-                "%d attached derived view(s) — every micro-batch's "
-                "old-image feed re-reads the whole view (O(|view|)). "
-                "Switch the target to a bucketed layout (n_buckets=..., "
-                "or inject a BucketedMaterializedView/RangePartitionedView "
-                "target_view) so the feed prunes to the batch keys' "
-                "touched buckets.", self.p.name, path, total / (1 << 20),
-                len(self.agg_views))
 
     def _fan_out_views(self, views: list, apply_one,
                        write_target=None) -> None:

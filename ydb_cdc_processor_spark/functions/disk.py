@@ -11,8 +11,7 @@ included" — a recursive walk whose edge cases are decided once:
   tolerated — a size probe must never crash the thing it observes.
 
 A store's LIVE size (the JoinView broadcast cap) comes from the files
-its manifest names instead: ``total_bytes()`` on the flat and bucketed
-views.
+its manifest names instead: the keyed store's ``total_bytes()``.
 """
 
 from __future__ import annotations

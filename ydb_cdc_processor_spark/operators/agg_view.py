@@ -43,8 +43,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ydb_cdc_processor_spark.operators.merge import ParquetMaterializedView
-
 logger = logging.getLogger(__name__)
 
 _DEC = "decimal(38,6)"
@@ -62,7 +60,7 @@ def _obs_metric(obs, key: str) -> int:
     counters are EXACT (round-12 judge item #3).  The handler is kept
     as a narrow last-ditch guard — metrics are observability, never
     correctness — but logs at WARNING: a persistently unreadable
-    metric would silently disable the group-cardinality guard
+    metric would silently zero the negative-drop counter
     (round-12 advisor: a bare except at info level hid genuine Py4J
     failures forever)."""
     try:
@@ -94,54 +92,37 @@ class AggregateView:
     ``sum_cols``: ``{output_name: source_column}``.  ``count_col`` names
     the row-count measure.
 
-    ``backend`` picks the store:
-
-    - ``"flat"`` (default): the flat parquet view the row views use —
-      per-batch cost O(|rollup|) full rewrite.  Right for compact
-      rollups (≲10⁶ groups), where the rewrite is one small file set.
-    - ``"bucketed"``: :class:`~ydb_cdc_processor_spark.operators.
-      bucketed_view.BucketedMaterializedView` hash-partitioned on the
-      group columns — per-batch cost O(delta + touched buckets), the
-      bounded-maintenance shape a 10⁷+-group rollup (per-URL-domain
-      stats over a web corpus) needs.  The batch token is recorded in
-      the same manifest replace that publishes the batch, so
-      exactly-once holds across a crash anywhere in the write; bucket-
-      count evolution (``rebucket``/``maybe_rebucket``) keeps the
-      token history.
+    ``backend`` picks the bucket count of the backing
+    :class:`~ydb_cdc_processor_spark.operators.bucketed_view.
+    BucketedMaterializedView`, hash-partitioned on the group columns:
+    ``"flat"`` (default) one bucket, ``"bucketed"`` ``n_buckets``.  A
+    batch reads, re-aggregates and rewrites only the buckets its groups
+    touch, and records its batch token in the same manifest replace
+    that publishes them, so exactly-once holds across a crash anywhere
+    in the write.  A rollup that outgrows its buckets rebuckets itself
+    in :meth:`maintain` (``maybe_rebucket``), keeping the token history.
     """
-
-    #: compact-rollup guard (flat backend only): warn when the rollup's
-    #: group cardinality exceeds this — a rollup approaching fact-table
-    #: size defeats the flat store's O(|view|)-rewrite-per-batch
-    #: assumption; switch to backend="bucketed", or keep the row view
-    #: and aggregate at query time.
-    max_groups_warn: int = 1_000_000
 
     def __init__(self, spark: SparkSession, path: str,
                  group_cols: list[str], sum_cols: dict[str, str],
                  count_col: str = "n_rows",
-                 max_groups_warn: int | None = None,
                  backend: str = "flat", n_buckets: int = 64,
                  bucket_keys: list[str] | None = None):
-        """``bucket_keys`` (bucketed backend): co-location key — a
-        subset of ``group_cols`` to hash for bucket placement, so a
-        serving read keyed by that prefix prunes to one bucket (the
-        TopKView shape: rollup rows keyed (group, value), co-located on
-        group).  Default: all group columns."""
+        """``bucket_keys``: co-location key — a subset of
+        ``group_cols`` to hash for bucket placement, so a serving read
+        keyed by that prefix prunes to one bucket (the TopKView shape:
+        rollup rows keyed (group, value), co-located on group).
+        Default: all group columns."""
         if backend not in ("flat", "bucketed"):
             raise ValueError(f"unknown AggregateView backend {backend!r}")
         self.spark = spark
         self.group_cols = list(group_cols)
         self.sum_cols = dict(sum_cols)
         self.count_col = count_col
-        self._mv = None  # lazily created store (flat or bucketed)
+        self._mv = None  # lazily created store
         self.path = path
-        self.backend = backend
-        self.n_buckets = n_buckets
+        self.n_buckets = 1 if backend == "flat" else n_buckets
         self.bucket_keys = list(bucket_keys) if bucket_keys else None
-        if max_groups_warn is not None:
-            self.max_groups_warn = max_groups_warn
-        self._size_warned = False
         #: per-apply observability: the total NEGATIVE count dropped by
         #: the last maintenance step's ``count > 0`` filter.  Under a
         #: correct CDC feed a merged count can only go negative when a
@@ -174,16 +155,12 @@ class AggregateView:
         """The backing store, created lazily (``schema`` lets a first
         read/merge against a not-yet-written store plan an empty frame)."""
         if self._mv is None or (schema is not None
-                                and getattr(self._mv, "schema", None) is None):
-            if self.backend == "bucketed":
-                from ydb_cdc_processor_spark.operators.bucketed_view import (
-                    BucketedMaterializedView)
-                self._mv = BucketedMaterializedView(
-                    self.spark, self.path, self.group_cols, schema=schema,
-                    n_buckets=self.n_buckets, bucket_keys=self.bucket_keys)
-            else:
-                self._mv = ParquetMaterializedView(
-                    self.spark, self.path, self.group_cols, schema=schema)
+                                and self._mv.schema is None):
+            from ydb_cdc_processor_spark.operators.bucketed_view import (
+                BucketedMaterializedView)
+            self._mv = BucketedMaterializedView(
+                self.spark, self.path, self.group_cols, schema=schema,
+                n_buckets=self.n_buckets, bucket_keys=self.bucket_keys)
         return self._mv
 
     def _reagg(self, contrib: DataFrame,
@@ -216,20 +193,17 @@ class AggregateView:
         streaming engine's checkpoint replays a micro-batch after a crash,
         YqlWriter.java:181-206 delivery model).  The row merge is
         idempotent per key, but ±contribution deltas are NOT — re-applying
-        one double-counts.  Both backends record the token in the same
-        manifest replace that publishes the batch (the flat rollup's
-        whole generation, or the bucketed rollup's touched buckets) and
-        decide a replay with ``bucketed_view.skip_replay``: a committed
-        token is skipped, an evicted sequenced one refused, and a torn
-        batch — never visible — re-applied whole, once.
+        one double-counts.  The token is recorded in the same manifest
+        replace that publishes the batch's buckets, and a replay is
+        decided with ``bucketed_view.skip_replay``: a committed token is
+        skipped, an evicted sequenced one refused, and a torn batch —
+        never visible — re-applied whole, once.
 
-        ``mutate(doc)`` (bucketed backend only): state a wrapping store
-        keeps in the rollup manifest (``TopKView``'s counters), applied
-        in the batch's commit — :attr:`last_negative_drops` is already
-        set for this batch when it runs.
+        ``mutate(doc)``: state a wrapping store keeps in the rollup
+        manifest (``TopKView``'s counters), applied in the batch's
+        commit — :attr:`last_negative_drops` is already set for this
+        batch when it runs.
         """
-        if mutate is not None and self.backend != "bucketed":
-            raise ValueError("mutate needs the bucketed backend")
         parts = []
         if new_rows is not None:
             parts.append(self._contributions(new_rows, +1))
@@ -240,51 +214,8 @@ class AggregateView:
         contrib = parts[0]
         for p in parts[1:]:
             contrib = contrib.unionByName(p)
-        delta = self._reagg(contrib)
-        if self.backend == "bucketed":
-            self._apply_delta_bucketed(delta, batch_token, mutate=mutate)
-        else:
-            self._apply_delta_flat(delta, batch_token)
-
-    def _apply_delta_flat(self, delta: DataFrame,
-                          batch_token: str | None) -> None:
-        from ydb_cdc_processor_spark.operators.bucketed_view import (
-            skip_replay)
-        store = self._store(delta.schema)
-        if skip_replay(store.manifest(), batch_token,
-                       f"agg view {self.path}"):
-            return
-        base = store.read() if store.exists() else None
-        merged = self._reagg(delta.unionByName(base) if base is not None
-                             else delta)
-        # group-cardinality guard + negative-drop counter ride the write
-        # as observe metrics — no extra job (same pattern as the engine's
-        # decode counters); observe sits BEFORE the >0 filter so dropped
-        # negatives are still counted
-        from pyspark.sql import Observation
-        obs = Observation(f"agg_view_size_{uuid.uuid4().hex[:8]}")
-        merged = merged.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_rows_preclip"),
-            F.coalesce(F.sum(F.when(F.col(self.count_col) < 0,
-                                    -F.col(self.count_col))
-                             .otherwise(F.lit(0))), F.lit(0))
-            .cast("long").alias("neg"),
-            F.coalesce(F.sum((F.col(self.count_col) > 0).cast("long")),
-                       F.lit(0)).alias("n_groups"))
-        merged = merged.where(F.col(self.count_col) > 0)
-        store.overwrite(merged, batch_token=batch_token)
-        self.last_negative_drops = _obs_metric(obs, "neg")
-        n_groups = _obs_metric(obs, "n_groups")
-        if n_groups > self.max_groups_warn and not self._size_warned:
-            self._size_warned = True
-            logger.warning(
-                "AggregateView %s holds %d groups (> max_groups_warn=%d): "
-                "the per-batch rollup rewrite is O(groups) — this view is "
-                "outgrowing the compact-rollup assumption; switch to "
-                "backend=\"bucketed\", or keep the row view and aggregate "
-                "at query time",
-                self.path, n_groups, self.max_groups_warn)
+        self._apply_delta_bucketed(self._reagg(contrib), batch_token,
+                                   mutate=mutate)
 
     def _apply_delta_bucketed(self, delta: DataFrame,
                               batch_token: str | None,
@@ -293,8 +224,7 @@ class AggregateView:
         """O(delta + touched buckets) maintenance: the per-group delta is
         bucketed on the group columns, ONLY the touched buckets are read,
         re-aggregated with the delta, and promoted — never an O(|rollup|)
-        rewrite.  (No group-cardinality guard here: unbounded group counts
-        are exactly what this backend is for.)
+        rewrite.
 
         ``out_of_band=True`` (the :meth:`merge_rollup` federation path)
         bumps the store's maintenance epoch, mechanically enforcing the
@@ -346,6 +276,12 @@ class AggregateView:
         bucketed view's public ``read_touched``)."""
         return self._store(schema)
 
+    def maintain(self, target_bucket_bytes: int = 128 << 20) -> None:
+        """Between-batch housekeeping: the backing store's
+        ``maintain()`` (vacuum, then rebucket once the rollup outgrows
+        its buckets, else compact)."""
+        self._store().maintain(target_bucket_bytes=target_bucket_bytes)
+
     def merge_rollup(self, rollup: DataFrame,
                      batch_token: str | None = None) -> None:
         """Merge a PRE-AGGREGATED (±) contribution frame into this view —
@@ -363,10 +299,10 @@ class AggregateView:
         touched-bucket merge, O(|rollup|) — raw shard data never moves.
 
         Run between committed batches of any live feed.  The merge is
-        one commit (on the bucketed backend an out-of-band one that
-        bumps the store's ``epoch`` counter): a replay of a COMMITTED
-        feed batch is skipped by the applied-token history, and a torn
-        one was never visible, so it applies once."""
+        one out-of-band commit that bumps the store's ``epoch``
+        counter: a replay of a COMMITTED feed batch is skipped by the
+        applied-token history, and a torn one was never visible, so it
+        applies once."""
         need = [*self.group_cols, self.count_col]
         for out in self.sum_cols:
             need += [out, self._nn(out)]
@@ -376,11 +312,8 @@ class AggregateView:
                 f"rollup frame is missing state columns {missing} — "
                 "pass the shard's store().read() (raw state), not its "
                 "public read()")
-        delta = rollup.select(*need)
-        if self.backend == "bucketed":
-            self._apply_delta_bucketed(delta, batch_token, out_of_band=True)
-        else:
-            self._apply_delta_flat(delta, batch_token)
+        self._apply_delta_bucketed(rollup.select(*need), batch_token,
+                                   out_of_band=True)
 
     # -- reads ---------------------------------------------------------------
 

@@ -1,10 +1,10 @@
-"""Hash-bucketed materialized view — the at-scale merge target.
+"""Hash-bucketed materialized view — the one keyed store.
 
-:class:`~ydb_cdc_processor_spark.operators.merge.ParquetMaterializedView`
-rewrites the whole directory per batch: O(|view|) work for a 1000-row
-micro-batch (XmlConfig.java:18 default), which cannot survive a 100 TB
-view.  This variant hash-partitions the view by PK into ``n_buckets``
-partitions (``_bucket = pmod(xxhash64(pk...), n)``) so a batch:
+A keyed view that rewrites itself whole per batch pays O(|view|) work
+for a 1000-row micro-batch (XmlConfig.java:18 default), which cannot
+survive a 100 TB view.  This store hash-partitions the view by PK into
+``n_buckets`` partitions (``_bucket = pmod(xxhash64(pk...), n)``) so a
+batch:
 
 1. computes the distinct buckets its keys touch — at most
    ``min(|delta|, n_buckets)``;
@@ -13,6 +13,12 @@ partitions (``_bucket = pmod(xxhash64(pk...), n)``) so a batch:
 3. merges and rewrites ONLY those buckets.
 
 Per-batch cost drops from O(|view|) to O(touched_buckets × bucket_size).
+The flat view (``merge.ParquetMaterializedView``: the stream target,
+the join view's dim mirror, the SCD2 history, ``backend="flat"``
+rollups) is this store with ONE bucket: its batches skip the bucket
+collect and the delta cache, and write bucket 0 without an exchange;
+once it outgrows a bucket, :meth:`~BucketedMaterializedView.maintain`
+rebuckets it like any other store.
 
 Layout and commit protocol (one for every write path)::
 
@@ -43,12 +49,12 @@ generations are deleted after that write, as garbage collection;
 directory, so the protocol runs unchanged on object stores
 (``storage.ObjectStoreSimStorage`` enforces this in the tests).  The
 manifest read, commit, token record, GC and vacuum are module-level
-functions (:func:`mutate_manifest` and friends): the flat
-``ParquetMaterializedView`` commits its one named directory ``rows``
-through the same code.
+functions (:func:`mutate_manifest` and friends), which the stores that
+keep no buckets (the checksum, the changefeed emitter) commit through
+too.
 
 Replay rule (:func:`skip_replay`, used by :meth:`merge_touched` and
-every other non-idempotent path, flat stores included):
+every other non-idempotent path):
 
 - a token already in ``applied_tokens`` is skipped;
 - a sequenced token at or below its feed's ``seq_hwm`` raises
@@ -58,6 +64,7 @@ every other non-idempotent path, flat stores included):
 
 ``apply`` / ``apply_batch`` carry no token: every action mode is
 idempotent per key, so a replay converges by re-merging.
+``overwrite`` records its caller's token (the SCD2 history's).
 
 Bucket-count evolution (SCALING.md: n_buckets ∝ |view|): the count is
 layout state in the manifest, :meth:`rebucket` rewrites the view at a
@@ -67,6 +74,7 @@ bucket size trigger from file metadata only.
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
@@ -77,9 +85,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ydb_cdc_processor_spark import storage
-from ydb_cdc_processor_spark.operators.merge import (
-    MERGE_FNS, chain_hooks, compose_merge, merge_delete, merge_insert,
-    raise_on_collisions, widen_to_union)
 
 logger = logging.getLogger(__name__)
 
@@ -277,12 +282,11 @@ def named_files(path: str, doc: dict) -> list[str]:
             for n in files if _is_data_file(n)]
 
 
-def vacuum(path: str, named: tuple[str, ...] = ()) -> int:
+def vacuum(path: str) -> int:
     """Remove every generation the manifest at ``path`` does not name
     (a crash before a commit, a post-commit delete that failed) plus
-    the staging area — pure GC, run between batches.  ``named``: named
-    directories the store owns even before a commit names one.
-    Returns the number of generation directories removed."""
+    the staging area — pure GC, run between batches.  Returns the
+    number of generation directories removed."""
     storage.remove_tree(os.path.join(path, STAGING))
     if not storage.is_dir(path):
         return 0
@@ -293,7 +297,7 @@ def vacuum(path: str, named: tuple[str, ...] = ()) -> int:
     for e in storage.listdir(path):
         if e.startswith(f"{BUCKET_COL}="):
             live = gens.get(int(e.split("=", 1)[1]))
-        elif e in dirs or e in named:
+        elif e in dirs:
             live = dirs.get(e)
         else:
             continue
@@ -305,6 +309,26 @@ def vacuum(path: str, named: tuple[str, ...] = ()) -> int:
         if live is None:
             storage.remove_tree(d)
     return removed
+
+
+def _write_one_bucket(rows: DataFrame, out: str) -> bool:
+    """Write the rows of bucket 0 alone to its generation directory
+    ``out`` (a generation nothing names yet, so invisible), in the
+    plan's own tasks: no exchange.  Rows of any other bucket (the ``-1``
+    row of :func:`with_empty_output_sentinel`) are never written.
+    Returns whether the output holds a row, from the file footers (only
+    an empty output can leave a file without rows, so the first footer
+    usually decides); an empty output is removed, so the commit drops
+    the bucket, as after a partitioned write that produced none."""
+    (rows.where(F.col(BUCKET_COL) == 0).drop(BUCKET_COL)
+     .write.mode("overwrite").parquet(out))
+    import pyarrow.parquet as pq
+    fs = storage.arrow_filesystem()
+    if any(pq.read_metadata(os.path.join(out, n), filesystem=fs).num_rows
+           for n in storage.listdir(out) if _is_data_file(n)):
+        return True
+    storage.remove_tree(out)
+    return False
 
 
 def _move_tree(src: str, dst: str) -> None:
@@ -537,9 +561,12 @@ class BucketedMaterializedView:
         repoints those buckets and drops the ones the staged output left
         empty (unless ``keep_absent``: a physical rewrite never deletes
         a bucket).  ``buckets=None`` replaces the whole map with what
-        was staged (a full rewrite).  The same write records ``token``
-        in ``applied_tokens``/``seq_hwm``, widens the stored schema,
-        bumps ``epoch`` for an out-of-band operation and applies
+        was staged (a full rewrite).  A one-bucket store writes its
+        bucket's rows straight into the new generation directory instead
+        (:func:`_write_one_bucket`): no exchange, no staging, no file
+        moves.  The same write records
+        ``token`` in ``applied_tokens``/``seq_hwm``, widens the stored
+        schema, bumps ``epoch`` for an out-of-band operation and applies
         ``mutate(doc)`` (layout changes, a derived store's scalars and
         counters — the staged write has run, so Observations riding
         ``rows`` are readable there).
@@ -554,7 +581,19 @@ class BucketedMaterializedView:
         gen = new_generation()
         staging = os.path.join(self.path, STAGING, gen)
         placed: set[int] = set()
-        if rows is not None:
+        in_place = rows is not None and buckets == [0] and self.n_buckets == 1
+        if in_place:
+            # the one bucket: written in place, no exchange, no moves
+            out = self._gen_dir(0, gen)
+            try:
+                if _write_one_bucket(rows, out):
+                    placed.add(0)
+                if pre_commit is not None:
+                    pre_commit()
+            except BaseException:
+                storage.remove_tree(out)
+                raise
+        elif rows is not None:
             try:
                 (rebalance_by_bucket(rows).write.mode("overwrite")
                  .partitionBy(BUCKET_COL).parquet(staging))
@@ -598,7 +637,7 @@ class BucketedMaterializedView:
                 mutate(doc)
 
         self._mutate_manifest(commit)
-        if rows is not None:
+        if rows is not None and not in_place:
             storage.remove_tree(staging)
 
     def vacuum(self) -> int:
@@ -780,56 +819,26 @@ class BucketedMaterializedView:
               order_col: str | None = None,
               small_delta: bool | None = None,
               pre_commit=None) -> list[int]:
-        """Merge ``delta`` into the view.  Returns the TOUCHED bucket
-        ids — the same list the merge collected anyway — so a caller
-        whose next step reads the batch's buckets (index lookups over
-        just-ingested rows) reuses it instead of paying a second
-        driver-side distinct-collect over the delta.
+        """Merge ``delta`` into the view: :meth:`apply_batch` with
+        ``delta`` as the upsert side, or as the delete side for
+        ``deleteFrom``."""
+        if action == "deleteFrom":
+            return self.apply_batch(None, delta, small_delta=small_delta,
+                                    pre_commit=pre_commit)
+        return self.apply_batch(delta, None, action=action,
+                                order_col=order_col, small_delta=small_delta,
+                                pre_commit=pre_commit)
 
-        ``pre_commit``: optional callable run after the staged write and
-        before the commit (chained after the strict-insert check); if
-        it raises, the staged output is discarded and no bucket
-        changes.  A batch that touches no bucket commits nothing and
-        skips it."""
-        existed = self.exists()
-        if not existed and action == "deleteFrom":
-            if self.schema is None:
-                raise FileNotFoundError(self.path)
-            # deleting from nothing → commit the empty view
-            self._commit(None, [], pre_commit=pre_commit,
-                         mutate=lambda d: self._widen_schema(d, self.schema))
-            return []
-
-        delta = self._with_bucket(delta).persist()
-        try:
-            touched = [r[0] for r in
-                       delta.select(BUCKET_COL).distinct().collect()]
-            if not touched:
-                return touched
-            target = self._base(existed, touched, delta)
-            if action != "deleteFrom":   # delete side is keys-only
-                target, delta = widen_to_union(target, delta)
-            keys_b = self.keys + [BUCKET_COL]
-            pre = None
-            if action == "deleteFrom":
-                merged = merge_delete(target, delta, keys_b,
-                                      small_delta=small_delta)
-            elif action == "insertInto":
-                # single-pass strict insert: the collision count rides
-                # the staged write, checked before the commit
-                from pyspark.sql import Observation
-                obs = Observation(f"strict_insert_{uuid.uuid4().hex[:8]}")
-                merged = merge_insert(target, delta, keys_b, strict=True,
-                                      collision_obs=obs)
-                pre = (lambda: raise_on_collisions(obs))
-            else:
-                merged = MERGE_FNS[action](target, delta, keys_b, order_col,
-                                           small_delta)
-            self._commit(merged, touched,
-                         pre_commit=chain_hooks(pre, pre_commit))
-            return touched
-        finally:
-            delta.unpersist()
+    def _touched(self, *deltas: DataFrame) -> list[int]:
+        """The buckets the bucketed ``deltas`` touch: ONE distinct-collect
+        over all of them (bucket fan-out is bounded by ``n_buckets``, and
+        per-batch job count is the fixed cost that dominates small
+        micro-batches) — or, on a one-bucket store, ``[0]`` with no job."""
+        if self.n_buckets == 1:
+            return [0]
+        ids = functools.reduce(DataFrame.unionByName,
+                               [d.select(BUCKET_COL) for d in deltas])
+        return [r[0] for r in ids.distinct().collect()]
 
     def _base(self, existed: bool, touched: list[int],
               delta: DataFrame) -> DataFrame:
@@ -848,50 +857,70 @@ class BucketedMaterializedView:
                     order_col: str | None = None,
                     small_delta: bool | None = None,
                     pre_commit=None) -> list[int]:
-        """One batch's upsert + delete sides in a SINGLE touched-bucket
-        read → merge → commit pass (sides are key-disjoint by the
-        engine's last-wins routing — see merge.compose_merge).  Halves
-        per-batch bucket IO vs two apply() calls.  Returns the touched
-        bucket ids; ``pre_commit`` as in :meth:`apply`."""
+        """One batch's upsert + delete sides (either may be None) in a
+        SINGLE touched-bucket read → merge → commit pass (sides are
+        key-disjoint by the engine's last-wins routing — see
+        merge.compose_merge).  Returns the TOUCHED bucket ids, so a
+        caller whose next step reads the batch's buckets (index lookups
+        over just-ingested rows) reuses them instead of paying a second
+        driver-side distinct-collect over the delta.
+
+        ``pre_commit``: optional callable run after the staged write and
+        before the commit (chained after the strict-insert check); if
+        it raises, the staged output is discarded and no bucket
+        changes.  A batch that touches no bucket commits nothing;
+        deleting from a store nothing was committed to commits the empty
+        view."""
+        from ydb_cdc_processor_spark.operators.merge import (
+            chain_hooks, compose_merge, raise_on_collisions, widen_to_union)
         if ups is None and dels is None:
             return []
-        if ups is None:
-            return self.apply(dels, action="deleteFrom",
-                              small_delta=small_delta, pre_commit=pre_commit)
-        if dels is None:
-            return self.apply(ups, action=action, order_col=order_col,
-                              small_delta=small_delta, pre_commit=pre_commit)
-
         existed = self.exists()
-        ups = self._with_bucket(ups).persist()
-        dels = self._with_bucket(dels).persist()
+        if not existed and ups is None:
+            if self.schema is None:
+                raise FileNotFoundError(self.path)
+            self._commit(None, [], pre_commit=pre_commit,
+                         mutate=lambda d: self._widen_schema(d, self.schema))
+            return []
+        sides = [None if s is None else self._with_bucket(s)
+                 for s in (ups, dels)]
+        # a one-bucket store reads each side once, in the merge: no
+        # collect, so nothing to cache
+        cached = ([] if self.n_buckets == 1
+                  else [s.persist() for s in sides if s is not None])
+        ups, dels = sides
         try:
-            # ONE collect for both sides' bucket set — bucket fan-out is
-            # bounded by n_buckets, and per-batch job count is the fixed
-            # cost that dominates small micro-batches
-            touched = [r[0] for r in
-                       ups.select(BUCKET_COL).unionByName(
-                           dels.select(BUCKET_COL)).distinct().collect()]
+            touched = self._touched(*[s for s in sides if s is not None])
             if not touched:
                 return touched
-            target, ups = widen_to_union(self._base(existed, touched, ups),
-                                         ups)
-            keys_b = self.keys + [BUCKET_COL]
-            pre = None
-            obs = None
-            if action == "insertInto":
+            target = self._base(existed, touched,
+                                dels if ups is None else ups)
+            if ups is not None:   # the delete side is keys-only
+                target, ups = widen_to_union(target, ups)
+            pre = obs = None
+            if action == "insertInto" and ups is not None:
+                # single-pass strict insert: the collision count rides
+                # the staged write, checked before the commit
                 from pyspark.sql import Observation
                 obs = Observation(f"strict_insert_{uuid.uuid4().hex[:8]}")
                 pre = (lambda: raise_on_collisions(obs))
-            merged = compose_merge(target, ups, dels, keys_b, action,
-                                   order_col, small_delta,
+            merged = compose_merge(target, ups, dels, self.keys + [BUCKET_COL],
+                                   action, order_col, small_delta,
                                    collision_obs=obs)
             self._commit(merged, touched,
                          pre_commit=chain_hooks(pre, pre_commit))
             return touched
         finally:
-            ups.unpersist()
-            dels.unpersist()
+            for s in cached:
+                s.unpersist()
+
+    def overwrite(self, df: DataFrame, batch_token: str | None = None,
+                  pre_commit=None) -> None:
+        """Replace the whole view with ``df`` in one commit, recording
+        ``batch_token`` in the same manifest replace.  ``pre_commit`` as
+        in :meth:`apply_batch`."""
+        self._commit(self._with_bucket(df), None, pre_commit=pre_commit,
+                     token=batch_token)
 
     def merge_touched(self, delta: DataFrame, merge_fn,
                       batch_token: str | None = None,
@@ -925,10 +954,11 @@ class BucketedMaterializedView:
         if skip_replay(self._read_manifest_dict(), batch_token,
                        f"bucketed view {self.path}"):
             return False
-        delta_b = self._with_bucket(delta).persist()
+        delta_b = self._with_bucket(delta)
+        if self.n_buckets > 1:
+            delta_b = delta_b.persist()
         try:
-            touched = [r[0] for r in
-                       delta_b.select(BUCKET_COL).distinct().collect()]
+            touched = self._touched(delta_b)
             if touched:
                 merged = merge_fn(self._read_touched(touched, delta.schema),
                                   delta_b)
@@ -995,9 +1025,11 @@ class BucketedMaterializedView:
                       if len(files) > max_files_per_bucket]
         if not fragmented:
             return 0
-        # one output file per bucket: the bucket-keyed exchange puts each
+        # one output file per bucket: one read task per bucket, and the
+        # bucket-keyed exchange (none in a one-bucket store) keeps each
         # bucket's rows in one task
-        self._commit(self._read_touched(fragmented, None), fragmented,
+        self._commit(self._read_touched(fragmented, None)
+                     .coalesce(len(fragmented)), fragmented,
                      keep_absent=True)
         logger.info("bucketed view %s: compacted %d fragmented bucket(s)",
                     self.path, len(fragmented))

@@ -9,13 +9,15 @@ MERGE, so we provide:
    join-rewrite on (target, delta).  These are the testable, oracle-checkable
    relational definitions, and they are exactly what Delta/Iceberg MERGE
    compiles to underneath.
-2. A path-backed :class:`ParquetMaterializedView` — read-modify-write of
-   the whole view into a fresh generation, committed by one manifest
-   replace (the bucketed store's protocol).  The engine reaches the
-   view only through its store contract (``apply`` / ``apply_batch`` /
-   ``read`` / ``exists``, pinned by ``tests/test_delta_view.py``), so a
-   Delta/Iceberg table with file-level MERGE could stand in for the full
-   rewrite behind the same interface.
+2. :class:`ParquetMaterializedView`, the flat keyed view: a
+   :class:`~ydb_cdc_processor_spark.operators.bucketed_view.
+   BucketedMaterializedView` of one bucket.  There is one keyed store;
+   "flat" is its one-bucket layout, which merges without a bucket
+   collect and writes without an exchange, and ``maintain()`` rebuckets
+   it once it outgrows one bucket.  The engine reaches a store only
+   through its contract (``apply`` / ``apply_batch`` / ``read`` /
+   ``exists``, pinned by ``tests/test_delta_view.py``), so a table with
+   file-level MERGE could stand in behind the same interface.
 
 Scale notes (100 TB):
 - Every mode is a single equi-join on the PK — shuffle-on-key both sides, or
@@ -34,13 +36,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ydb_cdc_processor_spark import storage
+from ydb_cdc_processor_spark.operators.bucketed_view import (
+    BucketedMaterializedView)
 
 
 class StrictInsertError(Exception):
@@ -223,156 +223,11 @@ def compose_merge(target: DataFrame, ups: DataFrame | None,
     return merged
 
 
-class ParquetMaterializedView:
-    """A keyed materialized view persisted as one parquet directory.
-
-    The reference's target is an ordinary YDB row table maintained by
-    UPSERT/DELETE (README.md:37-56).  Here: read → merge (join-rewrite
-    above) → Spark writes the whole view to an unnamed generation
-    ``<path>/rows/<gen>/`` → ONE manifest replace (the bucketed store's
-    ``mutate_manifest``) names it, records the batch token in
-    ``applied_tokens``/``seq_hwm`` and garbage-collects the previous
-    generation.  A crash before the replace leaves the old view serving
-    plus a stray generation for :meth:`vacuum`.  Re-applying a delta is
-    idempotent for upsert/delete/update — that, plus checkpointed
-    offsets, reproduces the reference's effectively-exactly-once
-    delivery (YqlWriter.java:181-206); non-idempotent owners (the flat
-    rollup, the SCD2 history) decide replays with ``skip_replay``.
-    """
-
-    ROWS = "rows"
+class ParquetMaterializedView(BucketedMaterializedView):
+    """The flat keyed view: a one-bucket
+    :class:`~ydb_cdc_processor_spark.operators.bucketed_view.
+    BucketedMaterializedView`."""
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str],
                  schema=None):
-        self.spark = spark
-        self.path = path
-        self.keys = keys
-        self.schema = schema
-
-    def manifest(self) -> dict:
-        """The committed manifest ({} before the first commit)."""
-        from ydb_cdc_processor_spark.operators import bucketed_view as bv
-        return bv.read_manifest(self.path)
-
-    def _mutate_manifest(self, mutate) -> None:
-        from ydb_cdc_processor_spark.operators import bucketed_view as bv
-        bv.mutate_manifest(self.path, mutate)
-
-    def _rows_dir(self) -> str | None:
-        gen = (self.manifest().get("dirs") or {}).get(self.ROWS)
-        return None if gen is None else os.path.join(self.path, self.ROWS,
-                                                     gen)
-
-    def exists(self) -> bool:
-        """True once any write committed (an empty view included)."""
-        return self._rows_dir() is not None
-
-    def read(self) -> DataFrame:
-        rows = self._rows_dir()
-        if rows is not None:
-            return self.spark.read.parquet(rows)
-        if self.schema is None:
-            raise FileNotFoundError(self.path)
-        return self.spark.createDataFrame([], self.schema)
-
-    def total_bytes(self) -> int:
-        """On-disk size of the committed generation, from file metadata."""
-        from ydb_cdc_processor_spark.operators import bucketed_view as bv
-        return sum(storage.file_size(f)
-                   for f in bv.named_files(self.path, self.manifest()))
-
-    def overwrite(self, df: DataFrame, batch_token: str | None = None,
-                  pre_commit=None) -> None:
-        """Write ``df`` as the view's next generation and commit it,
-        recording ``batch_token`` in the same manifest replace (an
-        un-tokenized write keeps the recorded tokens).  ``pre_commit``
-        runs after the write and before the commit (the strict-insert
-        collision check rides here); if it raises, the generation is
-        discarded and the live view stays untouched."""
-        from ydb_cdc_processor_spark.operators import bucketed_view as bv
-        gen = bv.new_generation()
-        out = os.path.join(self.path, self.ROWS, gen)
-        try:
-            df.write.mode("overwrite").parquet(out)
-            if pre_commit is not None:
-                pre_commit()
-        except BaseException:
-            storage.remove_tree(out)
-            raise
-
-        def commit(doc: dict) -> None:
-            doc.setdefault("dirs", {})[self.ROWS] = gen
-            if batch_token is not None:
-                bv.record_token(doc, batch_token)
-        self._mutate_manifest(commit)
-
-    def vacuum(self) -> int:
-        """Remove the generations a crash left unnamed; returns how many."""
-        from ydb_cdc_processor_spark.operators import bucketed_view as bv
-        return bv.vacuum(self.path, named=(self.ROWS,))
-
-    def maintain(self, target_bucket_bytes: int | None = None) -> None:
-        """Between-batch housekeeping: :meth:`vacuum` (no buckets to
-        grow or compact, so ``target_bucket_bytes`` does not apply)."""
-        self.vacuum()
-
-    def _insert_obs(self, action: str, ups) -> "Observation | None":
-        """Single-pass strict insert: the collision count rides the view
-        write as an Observation (one job per batch instead of a separate
-        count() pass — see merge_insert); checked before the commit so a
-        colliding batch still leaves the view untouched."""
-        if action != "insertInto" or ups is None:
-            return None
-        from pyspark.sql import Observation
-        return Observation(f"strict_insert_{uuid.uuid4().hex[:8]}")
-
-    @staticmethod
-    def _collision_check(obs):
-        return None if obs is None else (lambda: raise_on_collisions(obs))
-
-    def apply(self, delta: DataFrame, action: str = "upsertInto",
-              order_col: str | None = None,
-              small_delta: bool | None = None,
-              pre_commit=None) -> None:
-        """Merge ``delta`` into the view.  ``pre_commit``: optional
-        callable run after the write and before the commit (chained
-        after the strict-insert check into :meth:`overwrite`); if it
-        raises, the written generation is discarded and the live view
-        stays untouched."""
-        target = self.read()
-        if action != "deleteFrom":   # delete side is keys-only
-            target, delta = widen_to_union(target, delta)
-        obs = self._insert_obs(action, delta)
-        if action == "deleteFrom":
-            merged = merge_delete(target, delta, self.keys,
-                                  small_delta=small_delta)
-        elif action == "insertInto":
-            merged = merge_insert(target, delta, self.keys, strict=True,
-                                  collision_obs=obs)
-        else:
-            merged = MERGE_FNS[action](target, delta, self.keys, order_col,
-                                       small_delta)
-        # No pre-materialization needed: ``overwrite`` writes a FRESH
-        # generation while ``merged`` still reads the committed one, and
-        # the old generation is deleted only after the commit — one
-        # materialization total.
-        self.overwrite(merged, pre_commit=chain_hooks(
-            self._collision_check(obs), pre_commit))
-
-    def apply_batch(self, ups: DataFrame | None, dels: DataFrame | None,
-                    action: str = "upsertInto",
-                    order_col: str | None = None,
-                    small_delta: bool | None = None,
-                    pre_commit=None) -> None:
-        """One batch's upsert + delete sides in a SINGLE read→merge→write
-        pass (see :func:`compose_merge`; sides are key-disjoint by the
-        engine's last-wins routing).  ``pre_commit`` as in
-        :meth:`apply`."""
-        obs = self._insert_obs(action, ups)
-        target = self.read()
-        if ups is not None:
-            target, ups = widen_to_union(target, ups)
-        merged = compose_merge(target, ups, dels, self.keys, action,
-                               order_col, small_delta, collision_obs=obs)
-        self.overwrite(merged, pre_commit=chain_hooks(
-            self._collision_check(obs), pre_commit))
+        super().__init__(spark, path, keys, schema=schema, n_buckets=1)

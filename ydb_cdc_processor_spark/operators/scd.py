@@ -109,10 +109,11 @@ class Scd2View:
       interval position, because the rebuild re-sorts the key's full raw
       version set — no per-key monotonicity contract needed.
     - **Scale shape**: per-batch compute is O(|batch| + raw rows of
-      touched keys); the flat parquet store rewrites O(|view|) files per
-      batch — the aggregate view's caveat.  A bucketed history would
-      need a touched-key ``merge_touched`` path (the rebuild reads
-      whole keys), which this class does not have.
+      touched keys), but the flat (one-bucket) store is replaced whole
+      per batch (``overwrite``) — O(|history|) IO.  A touched-bucket
+      history would need a ``merge_touched`` path that buckets on the
+      key columns alone (the rebuild reads whole keys), which this
+      class does not have.
 
     Why not "close current row + append": that's O(1) per key but
     silently corrupts on replay and on late data — both routine in CDC.

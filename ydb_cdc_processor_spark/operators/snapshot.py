@@ -15,16 +15,17 @@ directory is ever renamed and snapshots run on object stores too.  A
 later commit garbage-collects the superseded generations, but the
 snapshot's hardlinks keep the inodes alive — a version reads
 identically forever, or until retention prunes it.  A
-version is read through a view of the same kind opened on it, flat and
-bucketed alike.
+version is read through a keyed store opened on it: a flat view is one
+bucket, so one reader serves every layout.
 
 Cost model at scale: O(#files) metadata ops per snapshot, zero bytes
 copied (the 100 TB analogue is a manifest pointing at immutable
 object-store keys — Delta/Iceberg's snapshot design; hardlinks are the
 local-filesystem spelling of the same idea).  Disk retention: a flat
-view rewrites every file per batch, so budget ``keep_last × |view|``
-bytes; a bucketed view's untouched buckets share their files across
-versions, so its snapshots grow with churn, not with view size.
+(one-bucket) view rewrites its one bucket per batch, so budget
+``keep_last × |view|`` bytes; a many-bucket view's untouched buckets
+share their files across versions, so its snapshots grow with churn,
+not with view size.
 
 Replay interaction: a checkpoint replay that re-applies a batch and
 re-snapshots produces a DUPLICATE version of identical content —
@@ -43,16 +44,15 @@ from pyspark.sql import DataFrame
 from ydb_cdc_processor_spark import storage
 from ydb_cdc_processor_spark.operators.bucketed_view import (
     MANIFEST, BucketedMaterializedView, named_files, read_manifest)
-from ydb_cdc_processor_spark.operators.merge import ParquetMaterializedView
 
 _SNAP_META = "_snap.json"
 
 
 class SnapshotView:
-    """Hardlink-based version history for a flat or bucketed view."""
+    """Hardlink-based version history for a keyed view (flat, bucketed
+    or range-partitioned)."""
 
-    def __init__(self, view: ParquetMaterializedView | BucketedMaterializedView,
-                 keep_last: int = 5):
+    def __init__(self, view: BucketedMaterializedView, keep_last: int = 5):
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         self.view = view
@@ -136,15 +136,14 @@ class SnapshotView:
 
     def read_as_of(self, version: int) -> DataFrame:
         """The view exactly as it stood when ``version`` was taken,
-        read through a view of the same kind opened on the version's
-        own copy of the manifest (only the generations it names)."""
+        read through a keyed store opened on the version's own copy of
+        the manifest (only the generations it names; the bucket count
+        is the manifest's)."""
         path = os.path.join(self.snap_dir, f"v{version}")
         if not storage.is_file(os.path.join(path, _SNAP_META)):
             have = [v["version"] for v in self.versions()]
             raise FileNotFoundError(
                 f"no snapshot v{version} at {self.snap_dir} "
                 f"(retained: {have} — keep_last={self.keep_last})")
-        opener = (BucketedMaterializedView
-                  if isinstance(self.view, BucketedMaterializedView)
-                  else ParquetMaterializedView)
-        return opener(self.view.spark, path, self.view.keys).read()
+        return BucketedMaterializedView(self.view.spark, path,
+                                        self.view.keys).read()

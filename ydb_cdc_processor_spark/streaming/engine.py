@@ -112,11 +112,11 @@ class CdcStreamEngine:
         ``rebucket_every``: every N successful batches, run the
         between-batch housekeeping sweep over the target and every
         attached derived store (``CdcBatchEngine.maintain_stores``): the
-        target's ``vacuum`` of crash leftovers on every layout, plus on
-        a bucketed target the bucket-growth policy (SCALING.md:
-        n_buckets ∝ |view|) — a metadata-only size check, and a one-off
-        full rewrite when mean bucket size crossed
-        ``target_bucket_bytes × 4``.  None disables."""
+        target's ``vacuum`` of crash leftovers, its bucket-growth policy
+        (SCALING.md: n_buckets ∝ |view|; a flat target is one bucket) —
+        a metadata-only size check, and a one-off full rewrite when mean
+        bucket size crossed ``target_bucket_bytes × 4`` — and otherwise
+        its small-file compaction.  None disables."""
         self.spark = spark
         self.pipeline = pipeline
         # streaming micro-batches are trigger-bounded (B1/B3) → the merge
