@@ -431,3 +431,25 @@ def test_one_bucket_compact_bounds_files(spark, tmp_path):
     assert len(mv.bucket_files()[0]) <= 4
     assert _kv_rows(mv.read()) == _kv_rows(batch)
     assert mv.applied_tokens() == ["tok-keep"]
+
+
+def test_one_bucket_overwrite_writes_in_place(spark, tmp_path, monkeypatch):
+    """overwrite() of a one-bucket store (the SCD2 history's write)
+    writes its bucket in place, never through the bucket exchange, and
+    records the token in the same commit; an empty overwrite drops the
+    bucket."""
+    from ydb_cdc_processor_spark.operators import bucketed_view
+
+    def no_exchange(rows):
+        raise AssertionError("one-bucket overwrite went through the "
+                             "bucket exchange")
+    monkeypatch.setattr(bucketed_view, "rebalance_by_bucket", no_exchange)
+    rows = spark.createDataFrame([(i, f"v{i}") for i in range(6)],
+                                 "id long, v string")
+    mv = ParquetMaterializedView(spark, str(tmp_path / "one"), ["id"])
+    mv.overwrite(rows, batch_token="b0")
+    mv.overwrite(rows.where("id < 3"), batch_token="b1")
+    assert _kv_rows(mv.read()) == _kv_rows(rows.where("id < 3"))
+    assert mv.applied_tokens() == ["b0", "b1"]
+    mv.overwrite(rows.limit(0), batch_token="b2")
+    assert mv.bucket_ids() == [] and mv.read().count() == 0

@@ -276,11 +276,11 @@ class AggregateView:
         bucketed view's public ``read_touched``)."""
         return self._store(schema)
 
-    def maintain(self, target_bucket_bytes: int = 128 << 20) -> None:
+    def maintain(self) -> None:
         """Between-batch housekeeping: the backing store's
         ``maintain()`` (vacuum, then rebucket once the rollup outgrows
         its buckets, else compact)."""
-        self._store().maintain(target_bucket_bytes=target_bucket_bytes)
+        self._store().maintain()
 
     def merge_rollup(self, rollup: DataFrame,
                      batch_token: str | None = None) -> None:

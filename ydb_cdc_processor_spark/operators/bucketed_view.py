@@ -316,16 +316,21 @@ def _write_one_bucket(rows: DataFrame, out: str) -> bool:
     ``out`` (a generation nothing names yet, so invisible), in the
     plan's own tasks: no exchange.  Rows of any other bucket (the ``-1``
     row of :func:`with_empty_output_sentinel`) are never written.
-    Returns whether the output holds a row, from the file footers (only
-    an empty output can leave a file without rows, so the first footer
-    usually decides); an empty output is removed, so the commit drops
-    the bucket, as after a partitioned write that produced none."""
+    Returns whether the output holds a row.  Spark writes a file for
+    each task that had rows, plus one from task 0 even when it had none
+    (the schema of an empty output), so more than one file means rows
+    and only a lone file's footer is read.  An empty output is removed,
+    so the commit drops the bucket, as after a partitioned write that
+    produced none."""
     (rows.where(F.col(BUCKET_COL) == 0).drop(BUCKET_COL)
      .write.mode("overwrite").parquet(out))
+    files = [n for n in storage.listdir(out) if _is_data_file(n)]
+    if len(files) > 1:
+        return True
     import pyarrow.parquet as pq
-    fs = storage.arrow_filesystem()
-    if any(pq.read_metadata(os.path.join(out, n), filesystem=fs).num_rows
-           for n in storage.listdir(out) if _is_data_file(n)):
+    if files and pq.read_metadata(os.path.join(out, files[0]),
+                                  filesystem=storage.arrow_filesystem()
+                                  ).num_rows:
         return True
     storage.remove_tree(out)
     return False
@@ -919,8 +924,12 @@ class BucketedMaterializedView:
         """Replace the whole view with ``df`` in one commit, recording
         ``batch_token`` in the same manifest replace.  ``pre_commit`` as
         in :meth:`apply_batch`."""
-        self._commit(self._with_bucket(df), None, pre_commit=pre_commit,
-                     token=batch_token)
+        # a one-bucket store names its bucket, so the rows write in
+        # place; None (a full rewrite) would stage them through the
+        # bucket exchange into one task
+        self._commit(self._with_bucket(df),
+                     [0] if self.n_buckets == 1 else None,
+                     pre_commit=pre_commit, token=batch_token)
 
     def merge_touched(self, delta: DataFrame, merge_fn,
                       batch_token: str | None = None,
@@ -1025,12 +1034,13 @@ class BucketedMaterializedView:
                       if len(files) > max_files_per_bucket]
         if not fragmented:
             return 0
-        # one output file per bucket: one read task per bucket, and the
-        # bucket-keyed exchange (none in a one-bucket store) keeps each
-        # bucket's rows in one task
-        self._commit(self._read_touched(fragmented, None)
-                     .coalesce(len(fragmented)), fragmented,
-                     keep_absent=True)
+        # one output file per bucket: the bucket-keyed exchange puts each
+        # bucket's rows in one task; a one-bucket store writes without
+        # that exchange, so its rows are read in one task
+        rows = self._read_touched(fragmented, None)
+        if self.n_buckets == 1:
+            rows = rows.coalesce(1)
+        self._commit(rows, fragmented, keep_absent=True)
         logger.info("bucketed view %s: compacted %d fragmented bucket(s)",
                     self.path, len(fragmented))
         return len(fragmented)
